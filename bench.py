@@ -13,7 +13,7 @@ Headline workloads (per BASELINE.json metric):
     plans/queries.py at $SPARK_GRAFT_SF_DIR.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 Each query fully materializes via the noop sink (count() would let
 Catalyst prune the interesting columns).
 """
@@ -37,7 +37,7 @@ from news_combinator_spark.datagen import (  # noqa: E402
 from news_combinator_spark.operators.clustering import cluster_documents  # noqa: E402
 from news_combinator_spark.operators.frontier import crawl  # noqa: E402
 from news_combinator_spark.plans import queries as Q  # noqa: E402
-from news_combinator_spark.session import get_spark  # noqa: E402
+from news_combinator_spark.session import default_cores, get_spark  # noqa: E402
 
 BENCH_HOSTS = 4096
 BENCH_BUDGET = 400
@@ -215,7 +215,6 @@ def bench_crawl(spark, sf_dir: str) -> tuple[float, int]:
         use_bloom=True,
         bloom_expected=600_000,
         salt_buckets=8,
-        collect_lineage=False,
     )
     n_fetched = res.fetched.count()
     return time.time() - t0, n_fetched
@@ -412,7 +411,7 @@ def _round_tag() -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     spark = get_spark(app_name="nc-bench", cores=cpus)
 

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .urls import canonicalize_url
+
 # Elements with no closing tag (HTML void elements).
 _VOID = {
     "area", "base", "br", "col", "embed", "hr", "img", "input",
@@ -164,6 +166,18 @@ def title_udf(html: pd.Series) -> pd.Series:
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def links_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda v: extract_links(_decode(v)))
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def canonical_links_udf(html: pd.Series) -> pd.Series:
+    """`links_udf` and `urls.canonicalize_udf` fused: each page's href
+    targets in canonical form, document order, duplicates kept. One
+    Arrow crossing per page instead of one per page plus one per link,
+    and a filter on the exploded url cannot be pushed back under the
+    canonicalize kernel (it sits above a Generate)."""
+    return html.map(
+        lambda v: [canonicalize_url(u) for u in extract_links(_decode(v))]
+    )
 
 
 @F.pandas_udf(T.MapType(T.StringType(), T.StringType()))

@@ -8,24 +8,19 @@ keeps that shuffle small: candidates that miss the bloom are
 DEFINITELY new (skip the anti-join); only bloom hits go to the exact
 check, so no false drops ever (SURVEY.md §7 risk 3).
 
-Two representations:
-
-- ``ShardedBloom`` (the flagship, 10^10-scale path): the bit space is
-  partitioned by url-hash into ``n_shards`` independent blooms, held
-  as a DataFrame of (shard, bits) rows that lives on the executors.
-  All k probes of a url land in its one shard, so build is
-  ``repartition(shard) -> mapInPandas`` (per-task memory = shards
-  owned by that partition x m_shard/8 bytes), probe is a cogrouped
-  ``applyInPandas`` of candidates against their shard's bitset, and
-  the per-round delta merge is a shard-keyed OR. At the north_rule's
-  10^10 URLs / fp 1e-6 the total bit space is ~36 GB — with 4096
-  shards no task, no broadcast, and no driver message ever holds more
-  than ~9 MB of it. Nothing is collect()ed.
-
-- (removed) the legacy single-bitset driver-merged ``Bloom`` now
-  lives in tests/bloom_legacy.py as a cross-check fixture only — a
-  10^10-url seen bloom cannot be driver-merged (VERDICT r2 #1, r4
-  residual nit).
+``ShardedBloom`` (the 10^10-scale representation): the bit space is
+partitioned by url-hash into ``n_shards`` independent blooms, held as
+a DataFrame of (shard, bits) rows that lives on the executors. All k
+probes of a url land in its one shard, so build is
+``repartition(shard) -> mapInPandas`` (per-task memory = shards owned
+by that partition x m_shard/8 bytes), probe is a cogrouped
+``applyInPandas`` of candidates against their shard's bitset, and the
+per-round delta merge is a shard-keyed OR. At the north_rule's 10^10
+URLs / fp 1e-6 the total bit space is ~36 GB — with 4096 shards no
+task, no broadcast, and no driver message ever holds more than ~9 MB
+of it. Nothing is collect()ed. (A driver-merged single bitset cannot
+hold a 10^10-url seen set; tests/bloom_legacy.py keeps one only as a
+cross-check fixture.)
 
 Hashing uses pandas' vectorized, deterministic hash_array with double
 hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher); shard assignment is
@@ -81,34 +76,9 @@ def optimal_params(expected_n: int, fp_rate: float = 1e-6) -> tuple[int, int]:
     return m, k
 
 
-# The legacy single-bitset driver-merged path (Bloom / build_bloom /
-# maybe_seen_udf) was relocated to tests/bloom_legacy.py (VERDICT r4:
-# no production caller) — the engine exposes only the sharded,
-# executor-resident representations below.
-
-
 # ---------------------------------------------------------------------------
 # Sharded bloom: the 10^10-scale seen-set representation
 # ---------------------------------------------------------------------------
-
-# A/B toggle: when True, the per-round or_delta/insert_delta fold is a
-# LAZY localCheckpoint — the fold computes inside the next round's
-# probe job instead of as its own driver barrier, and the final
-# round's fold (whose result is never probed) is never computed at
-# all. Lineage is still truncated at first materialization, and the
-# fold's inputs are themselves eagerly checkpointed frames, so the
-# recompute window is one shard-keyed exchange. Module flag, not API,
-# so the effect is measurable inside one process.
-#
-# MEASURED (interleaved E/L/L/E/L/E bench_crawl cells, one JVM,
-# sf0.1 local[32], 254,868 URLs fetched, identical output hashes):
-# lazy drops exactly the 2 never-probed final folds (61 -> 59 jobs)
-# but min-basis wall is a wash — eager 14.25s vs lazy 15.10s — the
-# fold work just moves inside the probe job. Default stays EAGER:
-# same speed, and a cuckoo-overflow error surfaces at the fold call
-# that caused it instead of one round later inside a probe.
-_LAZY_DELTA_FOLD = False
-
 
 def _shard_col(col: str, n_shards: int):
     """JVM-side shard assignment; pmod keeps negatives non-negative."""
@@ -199,7 +169,7 @@ class ShardedBloom:
         merged = _fold_mixed(
             keys.unionByName(existing), self.n_shards, self.m_per_shard,
             self.k,
-        ).localCheckpoint(eager=not _LAZY_DELTA_FOLD)
+        ).localCheckpoint()
         return ShardedBloom(merged, self.n_shards, self.m_per_shard, self.k)
 
     def max_shard_bytes(self) -> int:

@@ -236,13 +236,11 @@ class ShardedCuckoo:
                 delta.sparkSession.sparkContext.defaultParallelism,
             ),
         )
-        from .bloom import _LAZY_DELTA_FOLD
-
         merged = (
             keys.unionByName(existing)
             .repartition(n_part, "shard")
             .mapInPandas(fold, schema="shard int, slots binary")
-            .localCheckpoint(eager=not _LAZY_DELTA_FOLD)
+            .localCheckpoint()
         )
         return ShardedCuckoo(merged, self.n_shards, self.n_buckets)
 

@@ -27,10 +27,18 @@ Scale notes (10^10-URL frontier):
   applyInPandas — no driver merge, no broadcast, so the ~36 GB bitset
   a 10^10-URL seen-set implies never materializes in one place. Only
   *maybe-seen* candidates reach the exact anti-join.
-- frontier is localCheckpoint'ed each round (constant-depth lineage);
-  seen is a lazy union of per-round checkpointed deltas, so no O(total
-  seen) rewrite happens per round. On a cluster both are Iceberg
-  snapshot commits / appends, which also give resumability — here we
+- each non-final round evaluates its discovery pipeline (link
+  extraction + canonicalize in ONE Arrow UDF, robots gate, prefilter
+  probe) exactly once, inside the round's single materialization: the
+  checkpoint write, or a localCheckpoint without a checkpoint dir. The
+  probed candidates are persisted for the round so the fresh/suspect
+  split reads them instead of re-running the pipeline per branch.
+- per-round lineage rides `DataFrame.observe` on frames that are
+  computed once anyway, so it costs no extra Spark job; the final
+  round's counts fill when its fetched rows are first computed.
+- seen is a lazy union of per-round checkpointed deltas, so no O(total
+  seen) rewrite happens per round. On a cluster the round snapshot is
+  an Iceberg commit / append, which also gives resumability — here we
   expose save/load parquet checkpoints.
 """
 
@@ -39,13 +47,13 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.extract import links_udf
-from ..functions.urls import canonicalize_udf
-from .bloom import ShardedBloom, build_sharded_bloom
+from ..functions.extract import canonical_links_udf
+from .bloom import build_sharded_bloom
 from .ranking import partitioned_global_rank
 
 FRONTIER_COLS = ["url", "host", "priority"]
@@ -63,14 +71,46 @@ class RoundMetrics:
     enqueued: int = 0
 
 
+def _n() -> Column:  # the row count every lineage Observation records
+    return F.count(F.lit(1)).alias("n")
+
+
+def _count(obs: Observation) -> int:
+    return int(obs.get["n"])
+
+
 @dataclass
 class CrawlResult:
     fetched: DataFrame  # round, url, host, priority, fetch_order
-    lineage: list[RoundMetrics] = field(default_factory=list)
     # per-(round, host) scheduled/deferred counts — the north_rule's
     # per-partition lineage (host IS the politeness partition key).
     # None unless crawl(host_lineage=True).
     host_lineage: DataFrame | None = None
+    # every round but the last is counted by its own checkpoint
+    # materialization; the last round's (round, frontier obs, fetched
+    # obs, persisted fetched frame) wait for an action on the output
+    _lineage: list[RoundMetrics] = field(default_factory=list, repr=False)
+    _last: tuple | None = field(default=None, repr=False)
+
+    @property
+    def lineage(self) -> list[RoundMetrics]:
+        if self._last is not None:
+            r, sched_obs, fetch_obs, fetched = self._last
+            done = fetch_obs._jo.future().isCompleted
+            if not done():
+                # an action that returned may still have its
+                # Observation event queued on the listener bus
+                fetched.sparkSession.sparkContext._jsc.sc() \
+                    .listenerBus().waitUntilEmpty()
+            if not done():
+                # nothing read the output yet: the one job that fills
+                # both counts, on the frame later actions reuse
+                fetched.count()
+            m = RoundMetrics(r, _count(sched_obs), _count(fetch_obs))
+            m.deferred = m.frontier - m.scheduled
+            self._lineage.append(m)
+            self._last = None
+        return self._lineage
 
     def lineage_df(self, spark: SparkSession) -> DataFrame:
         rows = [
@@ -99,13 +139,6 @@ class CrawlResult:
             )
             .orderBy("round", "host")
         )
-
-
-# A/B toggle for the per-round checkpoint shape (fold = one combined
-# materialization; unfold = the pre-fold new+frontier pair). Module
-# flag, not API: exists so the fold's effect is measurable inside one
-# process (this box forbids cross-process timing comparisons).
-_FOLD_ROUND_CHECKPOINTS = True
 
 
 def schedule_per_host(
@@ -429,6 +462,52 @@ def apply_robots(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
     )
 
 
+def discover_candidates(
+    fetched: DataFrame,
+    web_meta: DataFrame,
+    robots: DataFrame | None = None,
+    robots_mode: str = "prefix",
+    allowed_host_suffix: str | None = None,
+    prefilter=None,
+    observe: tuple[Observation, Observation] | None = None,
+) -> DataFrame:
+    """One round's discovery step: fetched (url, html, ...) -> gated,
+    deduped candidates (url, host, priority), plus `maybe` when a seen
+    `prefilter` (ShardedBloom / ShardedCuckoo) is given. Links cross
+    into Python once per page, and the host filter stays above the
+    explode. `observe` = (discovered, robots-allowed) Observations,
+    each filled with a row count `n` by the first action.
+    """
+    cand = fetched.select(
+        F.explode(canonical_links_udf(F.col("html"))).alias("url")
+    )
+    if allowed_host_suffix:
+        cand = cand.filter(
+            F.parse_url("url", F.lit("HOST")).endswith(allowed_host_suffix)
+        )
+    cand = cand.dropDuplicates(["url"]).hint("shuffle_hash").join(
+        web_meta, "url", "inner"
+    )
+    if observe is not None:
+        cand = cand.observe(observe[0], _n())
+    # gate mode: 'prefix' = conservative disallow-only (the
+    # oracle-pinned default); 'rfc9309' = longest-match with Allow
+    # overrides; 'rfc9309-wildcards' additionally honors the spec's
+    # * / $ special characters — for both rfc modes, robots must be
+    # functions/robots.allow_disallow_rules output
+    if robots_mode == "rfc9309-wildcards":
+        cand = apply_robots_rfc9309(cand, robots)
+    elif robots_mode == "rfc9309":
+        cand = apply_robots_longest_match(cand, robots)
+    else:
+        cand = apply_robots(cand, robots)
+    if observe is not None:
+        cand = cand.observe(observe[1], _n())
+    if prefilter is None:
+        return cand
+    return prefilter.probe(cand, "url", out_col="maybe")
+
+
 def crawl(
     spark: SparkSession,
     pages: DataFrame | None,
@@ -477,25 +556,18 @@ def crawl(
     is the production layout for a store shared across crawl jobs.
 
     Scale notes:
-    - candidate (host, priority) are looked up from the web once per
-      round via a join in which the SMALL deduped candidate batch is
-      broadcast, so the big web side is never re-shuffled or re-sorted.
-      On a real cluster this lookup does not exist at all — priority is
-      a policy over the url and existence surfaces at fetch time.
-    - the bloom is a PREFILTER: its false positives fall through to the
-      exact anti-join, so fp=1e-3 is plenty. No false negatives are
-      possible, so no URL is ever re-fetched. The bloom is SHARDED by
-      url-hash into `bloom_shards` executor-resident (shard, bits)
-      rows — built, delta-merged, and probed shard-locally (cogrouped
-      applyInPandas), never driver-merged or broadcast, so the design
-      holds at the north_rule's 10^10-URL seen-set where the total bit
-      space (~36 GB at fp 1e-6) cannot live in any one JVM.
+    - each non-final round runs `discover_candidates` once; the
+      bloom/cuckoo seen PREFILTER is semantics-neutral (false
+      positives fall through to the exact anti-join, no false
+      negatives) and sharded by url-hash, never driver-merged.
     - `robots_mode='rfc9309'` switches the discovered-candidate gate
       to longest-match Allow/Disallow evaluation
       (`apply_robots_longest_match`); `robots` must then carry
       (host, path_prefix, allow) rows from
       `functions/robots.allow_disallow_rules`. The default 'prefix'
       mode is the oracle-pinned conservative gate.
+    - lineage is always collected (Observations, no extra jobs);
+      `collect_lineage` is accepted and ignored.
     - `aging_every > 0` turns on starvation-free scheduling: frontier
       rows carry a `wait` counter and the per-host selection orders
       by aged priority (see `schedule_per_host`); the counter rides
@@ -537,14 +609,12 @@ def crawl(
         )
         web = web.persist()
         web.count()
-        web_meta = pages.select("url", "host", "priority").repartition(
-            spark.sparkContext.defaultParallelism, "url"
-        ).persist()
+        # a projection of the persisted web keeps its url partitioning
+        web_meta = web.select("url", "host", "priority")
+    # the caller's budgets frame is often built from Python rows; every
+    # round broadcasts it, so deserialize it once
+    budgets = F.broadcast(budgets.localCheckpoint(eager=False))
 
-    # aging_every > 0: frontier rows carry a `wait` counter (rounds
-    # sat unscheduled) and the scheduler orders by aged priority —
-    # starvation-free, at the DOCUMENTED cost of diverging from the
-    # default mode's oracle-pinned (priority, url) crawl order
     fcols = FRONTIER_COLS + (["wait"] if aging_every > 0 else [])
 
     def _with_wait(df: DataFrame) -> DataFrame:
@@ -552,13 +622,20 @@ def crawl(
             return df.withColumn("wait", F.lit(0))
         return df
 
+    # the seen set and its prefilter are read only by a round that
+    # discovers links: a run (or resume) of just the final round
+    # builds neither
+    discovers = start_round < rounds - 1
     if initial_frontier is not None:
+        # lazy: no job of its own, its first reader materializes it
         _have = [c for c in fcols if c in initial_frontier.columns]
         frontier = _with_wait(initial_frontier.select(*_have)) \
-            .select(*fcols).localCheckpoint()
+            .select(*fcols).localCheckpoint(eager=False)
         init_seen = (
             initial_seen if initial_seen is not None else frontier
-        ).select("url").localCheckpoint()
+        ).select("url")
+        if discovers:
+            init_seen = init_seen.localCheckpoint()
     else:
         frontier = _with_wait(seeds.select(*FRONTIER_COLS)) \
             .select(*fcols).localCheckpoint()
@@ -569,23 +646,17 @@ def crawl(
     seen_parts: list[DataFrame] = [init_seen]
 
     def seen_df() -> DataFrame:
-        out = seen_parts[0]
-        for p in seen_parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, seen_parts)
 
-    # the prefilter (bloom or cuckoo — the north-star names both) is
-    # semantics-neutral: false positives fall through to the exact
-    # anti-join, false negatives are impossible, so the same crawl
-    # oracle pins either kind. Cuckoo additionally supports deletion
-    # (recrawl invalidation) at ~2x the bits/key.
+    # either prefilter kind is semantics-neutral, so the same crawl
+    # oracle pins both; cuckoo also supports deletion at ~2x bits/key
     if prefilter_kind not in ("bloom", "cuckoo"):
         raise ValueError(
             f"prefilter_kind must be 'bloom' or 'cuckoo', got "
             f"{prefilter_kind!r}"
         )
     bloom = None
-    if use_bloom:
+    if use_bloom and discovers:
         if prefilter_kind == "cuckoo":
             from .cuckoo import build_sharded_cuckoo
 
@@ -603,16 +674,17 @@ def crawl(
 
     fetched_rounds: list[DataFrame] = []
     lineage: list[RoundMetrics] = []
+    last = None
     host_lineage_rounds: list[DataFrame] = []
     fetched_total = fetch_order_base
 
     for r in range(start_round, rounds):
-        metrics = RoundMetrics(round=r)
+        sched_obs, fetch_obs = Observation(), Observation()
         sched = schedule_per_host(
             frontier, budgets, salt_buckets,
             wait_col="wait" if aging_every > 0 else None,
             aging_every=aging_every if aging_every > 0 else 2,
-        ).persist()
+        ).observe(sched_obs, _n()).persist()
         taken = sched.filter("taken").drop("taken")
         deferred = sched.filter("NOT taken").drop("taken")
         if host_lineage:
@@ -644,165 +716,81 @@ def crawl(
             F.lit(r).alias("round"), "url",
             F.col("t_host").alias("host"),
             F.col("t_priority").alias("priority"), "html",
-        )
-        fetch_obs = None
-        if (
-            not collect_lineage
-            and checkpoint_dir is not None
-            and r < rounds - 1
-        ):
-            # The checkpoint's cumulative fetched count (resume
-            # numbering) used to cost a dedicated count() barrier per
-            # round (frontier.py r4, VERDICT #4). An Observation rides
-            # the round's ONE materialization instead: the metric is
-            # folded while the checkpoint write streams the fetch
-            # join, so the count is free. (In lineage mode the audit
-            # counts below still run explicitly; in the final round
-            # nothing consumes the cumulative count, so no
-            # observation and no barrier at all.)
-            from pyspark.sql import Observation
-
-            fetch_obs = Observation(f"nc_fetched_round_{r}")
-            fetched = fetched.observe(
-                fetch_obs, F.count(F.lit(1)).alias("n")
-            )
-        fetched = fetched.persist()
+        ).observe(fetch_obs, _n()).persist()
         fetched_rounds.append(fetched.drop("html"))
 
-        if collect_lineage:
-            metrics.frontier = frontier.count()
-            metrics.scheduled = fetched.count()
-            metrics.deferred = metrics.frontier - metrics.scheduled
-            fetched_total += metrics.scheduled
+        if r == rounds - 1:
+            # nothing below reads the last round's discoveries; its
+            # counts fill when the output is first computed
+            last = (r, sched_obs, fetch_obs, fetched)
+            sched.unpersist()
+            break
 
-        if r < rounds - 1:
-            links = fetched.select(
-                F.explode(links_udf(F.col("html"))).alias("raw_url")
+        disc_obs, gate_obs, new_obs = Observation(), Observation(), Observation()
+        # persisted for the round: the fresh and suspect branches
+        # below both read it, and a Python-UDF plan is not reused
+        # across branches, so without it the round would run the
+        # whole discovery pipeline once per branch
+        flagged = discover_candidates(
+            fetched, web_meta, robots, robots_mode, allowed_host_suffix,
+            bloom, observe=(disc_obs, gate_obs),
+        ).persist()
+        if bloom is not None:
+            fresh = flagged.filter("NOT maybe").drop("maybe")
+            suspect = flagged.filter("maybe").drop("maybe")
+            new = fresh.unionByName(
+                suspect.join(seen_df(), "url", "left_anti")
             )
-            cand = links.select(
-                canonicalize_udf(F.col("raw_url")).alias("url")
+        else:
+            new = flagged.join(seen_df(), "url", "left_anti")
+        # ONE materialization per round for both frames: the next
+        # frontier (deferred + new) and the seen delta (new) are the
+        # same rows modulo a flag. With a checkpoint dir it is the
+        # round snapshot itself — written once as parquet (frontier =
+        # all rows, seen delta = is_new rows) and read back as the
+        # next round's lineage cut, which unlike a localCheckpoint
+        # survives an executor loss.
+        combined = (
+            deferred.select(*fcols)
+            .withColumn("is_new", F.lit(False))
+            .unionByName(
+                _with_wait(new.select(*FRONTIER_COLS)).withColumn(
+                    "is_new", F.lit(True)
+                )
             )
-            if allowed_host_suffix:
-                cand = cand.filter(
-                    F.parse_url("url", F.lit("HOST")).endswith(
-                        allowed_host_suffix
-                    )
-                )
-            # resolve target host/priority (and existence) from the
-            # web; deduped candidates shuffle-hash against the
-            # pre-partitioned web_meta (no sort / broadcast build)
-            cand = cand.dropDuplicates(["url"]).hint("shuffle_hash").join(
-                web_meta, "url", "inner"
-            )
-            n_cand = cand.count() if collect_lineage else None
-            # gate mode: 'prefix' = conservative disallow-only (the
-            # oracle-pinned default); 'rfc9309' = longest-match with
-            # Allow overrides; 'rfc9309-wildcards' additionally honors
-            # the spec's * / $ special characters — for both rfc
-            # modes, robots must be functions/robots.
-            # allow_disallow_rules output
-            if robots_mode == "rfc9309-wildcards":
-                cand = apply_robots_rfc9309(cand, robots)
-            elif robots_mode == "rfc9309":
-                cand = apply_robots_longest_match(cand, robots)
-            else:
-                cand = apply_robots(cand, robots)
-            if collect_lineage:
-                metrics.discovered = n_cand
-                after_robots = cand.count()
-                metrics.robots_blocked = n_cand - after_robots
-
-            if bloom is not None:
-                flagged = bloom.probe(cand, "url", out_col="maybe")
-                fresh = flagged.filter("NOT maybe").drop("maybe")
-                suspect = flagged.filter("maybe").drop("maybe")
-                new = fresh.unionByName(
-                    suspect.join(seen_df(), "url", "left_anti")
-                )
-            else:
-                new = cand.join(seen_df(), "url", "left_anti")
-            # ONE materialization per round for both frames: the next
-            # frontier (deferred + new) and the seen delta (new) are
-            # the same rows modulo a flag, so checkpointing the
-            # flagged union halves the per-round action count vs
-            # checkpointing `new` and `frontier` separately — at
-            # sandbox scale the sequential driver barriers ARE the
-            # crawl's critical path (BENCH/BASELINE.md), and on a real
-            # cluster it's one fewer job submission per round.
-            if _FOLD_ROUND_CHECKPOINTS:
-                combined = (
-                    deferred.select(*fcols)
-                    .withColumn("is_new", F.lit(False))
-                    .unionByName(
-                        _with_wait(new.select(*FRONTIER_COLS)).withColumn(
-                            "is_new", F.lit(True)
-                        )
-                    )
-                )
-                if checkpoint_dir is not None:
-                    # Fold the round snapshot INTO the round's single
-                    # materialization (VERDICT r4 #4): the flagged
-                    # union is written ONCE as the checkpoint parquet
-                    # (frontier = all rows, seen delta = is_new rows —
-                    # same O(new)+O(frontier) bytes the two separate
-                    # files held) and read back as the next round's
-                    # lineage cut. vs the old shape this deletes two
-                    # jobs per round (localCheckpoint + second parquet
-                    # write), and the durable file is also the safer
-                    # cut — localCheckpoint state dies with an
-                    # executor, a checkpoint parquet does not.
-                    cpath = os.path.join(
-                        checkpoint_dir, f"round={r + 1}", "combined"
-                    )
-                    combined.write.mode("overwrite").parquet(cpath)
-                    combined = spark.read.parquet(cpath)
-                else:
-                    combined = combined.localCheckpoint()
-                frontier = combined.drop("is_new")
-                new = combined.filter("is_new").drop("is_new")
-            else:  # pre-fold shape, kept for A/B measurement
-                new = _with_wait(
-                    new.select(*FRONTIER_COLS)
-                ).localCheckpoint()
-                frontier = deferred.select(*fcols).unionByName(
-                    new
-                ).localCheckpoint()
-            if collect_lineage:
-                metrics.enqueued = new.count()
-                metrics.deduped = metrics.discovered - metrics.robots_blocked - metrics.enqueued
-
-            seen_parts.append(new.select("url"))
-            if bloom is not None:
-                # shard-keyed fold of the round's seen delta; still no
-                # driver-side bitset
-                if prefilter_kind == "cuckoo":
-                    bloom = bloom.insert_delta(new, "url")
-                else:
-                    bloom = bloom.or_delta(new, "url")
-            if checkpoint_dir is not None:
-                if fetch_obs is not None:
-                    # materialized by the combined write above
-                    fetched_total += int(fetch_obs.get["n"])
-                if _FOLD_ROUND_CHECKPOINTS:
-                    # data already on disk via the combined write;
-                    # only the meta record remains
-                    _write_checkpoint_meta(
-                        checkpoint_dir, r + 1, fetched_total
-                    )
-                else:
-                    # O(new) per round: only this round's seen DELTA
-                    # is written; load_checkpoint unions deltas
-                    # 0..round
-                    save_checkpoint(
-                        frontier, new.select("url"), checkpoint_dir,
-                        r + 1, n_fetched=fetched_total,
-                    )
+            .observe(new_obs, F.count_if("is_new").alias("n"))
+        )
+        if checkpoint_dir is not None:
+            cpath = os.path.join(checkpoint_dir, f"round={r + 1}", "combined")
+            combined.write.mode("overwrite").parquet(cpath)
+            combined = spark.read.parquet(cpath)
+        else:
+            combined = combined.localCheckpoint()
+        flagged.unpersist()
         sched.unpersist()
-        lineage.append(metrics)
+        frontier = combined.drop("is_new")
+        new = combined.filter("is_new").drop("is_new")
 
-    all_fetched = fetched_rounds[0]
-    for df in fetched_rounds[1:]:
-        all_fetched = all_fetched.unionByName(df)
+        m = RoundMetrics(r, _count(sched_obs), _count(fetch_obs),
+                         discovered=_count(disc_obs), enqueued=_count(new_obs))
+        m.deferred = m.frontier - m.scheduled
+        m.robots_blocked = m.discovered - _count(gate_obs)
+        m.deduped = m.discovered - m.robots_blocked - m.enqueued
+        lineage.append(m)
+        fetched_total += m.scheduled
+
+        seen_parts.append(new.select("url"))
+        if bloom is not None and r + 2 < rounds:
+            # shard-keyed fold of the round's seen delta (no driver-side
+            # bitset); the final round probes nothing, so skip its fold
+            fold = bloom.insert_delta if prefilter_kind == "cuckoo" else bloom.or_delta
+            bloom = fold(new, "url")
+        if checkpoint_dir is not None:
+            # data already on disk via the combined write; only the
+            # meta record remains
+            _write_checkpoint_meta(checkpoint_dir, r + 1, fetched_total)
+
+    all_fetched = reduce(DataFrame.unionByName, fetched_rounds)
     # Total crawl order = row_number over (round, priority, host, url),
     # decomposed so no data-sized frame ever coalesces to one partition
     # (the old bare Window.orderBy was the 100x-scale killer): rank
@@ -819,12 +807,9 @@ def crawl(
         base=fetch_order_base,
         cast_to="int",
     ).select("round", "url", "host", "priority", "fetch_order")
-    hl: DataFrame | None = None
-    if host_lineage_rounds:
-        hl = host_lineage_rounds[0]
-        for df in host_lineage_rounds[1:]:
-            hl = hl.unionByName(df)
-    return CrawlResult(fetched=result, lineage=lineage, host_lineage=hl)
+    hl = (reduce(DataFrame.unionByName, host_lineage_rounds)
+          if host_lineage_rounds else None)
+    return CrawlResult(result, hl, _lineage=lineage, _last=last)
 
 
 def apply_priority_boosts(

@@ -165,7 +165,6 @@ def q_crawl_frontier(spark, sf_dir):
         robots=robots_df(spark),
         rounds=CRAWL_ROUNDS,
         allowed_host_suffix=".test",
-        collect_lineage=False,
     )
     return res.fetched.select(
         F.col("round").cast("int").alias("round"),
@@ -198,7 +197,6 @@ def q_crawl_frontier_cuckoo(spark, sf_dir):
         use_bloom=True,
         bloom_expected=100_000,
         prefilter_kind="cuckoo",
-        collect_lineage=False,
     )
     return res.fetched.select(
         F.col("round").cast("int").alias("round"),
@@ -223,7 +221,6 @@ def q_crawl_host_lineage(spark, sf_dir):
         robots=robots_df(spark),
         rounds=CRAWL_ROUNDS,
         allowed_host_suffix=".test",
-        collect_lineage=False,
         host_lineage=True,
     )
     return res.host_lineage.select(
@@ -250,7 +247,6 @@ def q_crawl_seen_set(spark, sf_dir):
         allowed_host_suffix=".test",
         use_bloom=True,
         bloom_expected=100_000,
-        collect_lineage=False,
     )
     # fetched ∪ still-enqueued == seen; engine exposes fetched here and
     # the seen set equals the oracle's enqueue closure.

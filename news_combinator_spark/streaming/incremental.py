@@ -218,8 +218,9 @@ def streaming_politeness_scheduler(
     ``budget`` backlog rows (the production path: an idle host's
     deferred URLs keep flowing at the politeness rate instead of
     starving). State layout and the (priority, url) selection rule
-    are identical in both modes; state is removed once a host's
-    backlog fully drains. Operational note: with a timeout configured
+    are identical in both modes; a host's state is removed only when
+    its timer fires and leaves no backlog, so a host that keeps
+    sending input keeps a cumulative ``batch_seq``. Operational note: with a timeout configured
     the micro-batch engine polls CONTINUOUSLY (it must run batches to
     check timer expiry even with no new data), so
     ``query.processAllAvailable()`` never settles — harnesses poll
@@ -268,12 +269,11 @@ def streaming_politeness_scheduler(
         ) if take else pd.DataFrame(
             {"url": [], "host": [], "priority": [], "batch_seq": []}
         )
-        if drain_timeout_ms is not None and not keep:
-            # fully drained: drop the host's state row entirely (the
-            # batch_seq counter restarts if the host reappears — a
-            # reappearing host is a NEW politeness session, and
-            # unbounded idle-host state rows are exactly what the
-            # timeout mode exists to evict)
+        if st.hasTimedOut and not keep:
+            # an idle host's timer fired with its backlog drained:
+            # evict its row (a reappearing host is a NEW politeness
+            # session, batch_seq restarts). A host with input this
+            # batch keeps its row, so its batch_seq stays cumulative.
             st.remove()
         else:
             st.update((
@@ -281,10 +281,10 @@ def streaming_politeness_scheduler(
                 [int(p) for p, _ in keep],
                 n_emitted + len(take),
             ))
-            if drain_timeout_ms is not None and keep:
-                # timers clear when they fire — re-arm while any
-                # backlog remains so the drain continues batch by
-                # batch at the politeness rate
+            if drain_timeout_ms is not None:
+                # timers clear when they fire: re-arm so a backlog
+                # drains at the politeness rate and an idle host's row
+                # is evicted one timeout after its last input
                 st.setTimeoutDuration(drain_timeout_ms)
         yield out
 

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from news_combinator_spark.datagen import pages_from_documents  # noqa: E402
 from news_combinator_spark.operators.frontier import crawl  # noqa: E402
-from news_combinator_spark.session import get_spark  # noqa: E402
+from news_combinator_spark.session import default_cores, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -111,7 +111,7 @@ def main() -> None:
     if args.resume_from >= 0 and not args.out:
         ap.error("--resume-from requires --out (the checkpoint location)")
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     spark = get_spark(app_name="nc-crawl-job", cores=cpus)
 
     pages = pages_from_documents(spark, args.sf_dir, n_hosts=args.hosts)
@@ -183,7 +183,6 @@ def main() -> None:
             use_bloom=True,
             bloom_expected=1_000_000,
             salt_buckets=args.salt_buckets,
-            collect_lineage=True,
             web_table=web_table,
             robots=robots_rules,
             robots_mode=args.robots_mode,
@@ -200,22 +199,24 @@ def main() -> None:
             use_bloom=True,
             bloom_expected=1_000_000,
             salt_buckets=args.salt_buckets,
-            collect_lineage=True,
             checkpoint_dir=os.path.join(args.out, "ckpt") if args.out else None,
             web_table=web_table,
             robots=robots_rules,
             robots_mode=args.robots_mode,
             aging_every=args.aging_every,
         )
-    n = res.fetched.count()
-    wall = time.time() - t0
     if args.out:
         # a resumed run holds only rounds >= --resume-from; keep it
         # next to (not over) the interrupted run's rounds
         suffix = "_resumed" if args.resume_from >= 0 else ""
-        res.fetched.write.mode("overwrite").parquet(
-            os.path.join(args.out, f"fetched{suffix}")
-        )
+        fetched_path = os.path.join(args.out, f"fetched{suffix}")
+        # the crawl output is computed once, by this write; the count
+        # and the host lineage read the written table
+        res.fetched.write.mode("overwrite").parquet(fetched_path)
+        res.fetched = spark.read.parquet(fetched_path)
+    n = res.fetched.count()
+    wall = time.time() - t0
+    if args.out:
         res.host_lineage_df().write.mode("overwrite").parquet(
             os.path.join(args.out, f"host_lineage{suffix}")
         )

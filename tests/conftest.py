@@ -16,7 +16,8 @@ SF_LARGE = "/root/testdata/sf0.1"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="nc-tests", cores=8, shuffle_partitions=8)
+    # cores: $SPARK_GRAFT_CPUS, else the machine's (session.default_cores)
+    s = get_spark(app_name="nc-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -625,6 +625,93 @@ def test_host_lineage_budget_and_conservation(spark):
         assert agg.loc[m.round, "n_deferred"] == m.deferred
 
 
+# Per-round lineage (frontier, scheduled, deferred, discovered,
+# robots_blocked, deduped, enqueued) of the SF_SMALL crawl under
+# `robots_df` plus a whole-host rule for h2.test, as reported by the
+# earlier implementation that ran one count() per lineage point. The
+# extra rule makes every count non-trivial (robots blocks in rounds 0
+# and 1, dedup in round 0, a deferral in round 2).
+_PINNED_LINEAGE = {
+    0: (4, 4, 0, 7, 1, 2, 4),
+    1: (4, 4, 0, 8, 2, 0, 6),
+    2: (6, 5, 1, 0, 0, 0, 0),
+}
+
+
+def _lineage_tuples(res):
+    return {
+        m.round: (m.frontier, m.scheduled, m.deferred, m.discovered,
+                  m.robots_blocked, m.deduped, m.enqueued)
+        for m in res.lineage
+    }
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_observation_lineage_matches_count_lineage(spark, tmp_path, kind):
+    """Lineage collected from Observations equals the pinned
+    count-based lineage for a full crawl and for resumes from rounds 1
+    and 2, under either seen prefilter; frontier and enqueued also
+    agree with the rows of each round's `combined` checkpoint."""
+    import json
+
+    from news_combinator_spark.operators.frontier import resume_crawl
+
+    pages = pages_from_documents(spark, SF_SMALL)
+    robots = robots_df(spark).unionByName(spark.createDataFrame(
+        [("h2.test", "http://h2.test/")],
+        "host string, disallow_prefix string",
+    ))
+    ckpt = str(tmp_path / "ck")
+    kw = dict(
+        robots=robots, allowed_host_suffix=".test", use_bloom=True,
+        bloom_expected=100_000, prefilter_kind=kind,
+    )
+    full = crawl(
+        spark, pages, seeds_df(spark, pages), budgets_df(spark),
+        rounds=CRAWL_ROUNDS, checkpoint_dir=ckpt, **kw,
+    )
+    assert _lineage_tuples(full) == _PINNED_LINEAGE
+    n_fetched = 0
+    for r in range(1, CRAWL_ROUNDS):
+        comb = spark.read.parquet(f"{ckpt}/round={r}/combined")
+        assert comb.count() == _PINNED_LINEAGE[r][0]
+        assert comb.filter("is_new").count() == _PINNED_LINEAGE[r - 1][6]
+        with open(f"{ckpt}/round={r}/meta.json") as f:
+            n_fetched += _PINNED_LINEAGE[r - 1][1]
+            assert json.load(f)["n_fetched"] == n_fetched
+    for start in range(1, CRAWL_ROUNDS):
+        resumed = resume_crawl(
+            spark, pages, budgets_df(spark), ckpt, from_round=start,
+            rounds=CRAWL_ROUNDS, **kw,
+        )
+        assert _lineage_tuples(resumed) == {
+            r: v for r, v in _PINNED_LINEAGE.items() if r >= start
+        }
+
+
+def test_lineage_read_before_output_does_not_block(spark):
+    """The last round's counts fill when its fetched rows are first
+    computed. Reading `lineage` when no action has touched the output
+    (only the separately checkpointed host lineage) must run that
+    computation itself, not wait forever for it."""
+    import threading
+
+    pages = pages_from_documents(spark, SF_SMALL)
+    res = crawl(
+        spark, pages, seeds_df(spark, pages), budgets_df(spark),
+        robots=robots_df(spark), rounds=2, allowed_host_suffix=".test",
+        host_lineage=True,
+    )
+    res.host_lineage.toPandas()
+    got = []
+    t = threading.Thread(target=lambda: got.append(res.lineage), daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "reading lineage blocked"
+    assert [m.round for m in got[0]] == [0, 1]
+    assert got[0][1].scheduled == res.fetched.filter("round = 1").count()
+
+
 def test_crawl_rfc9309_wildcards_mode(spark):
     """robots_mode='rfc9309-wildcards': a `*`-rule blocks discovered
     candidates across every day directory of the host (the exact-

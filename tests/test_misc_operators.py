@@ -353,6 +353,56 @@ def test_streaming_politeness_drain_timeout(spark, tmp_path):
         q.stop()
 
 
+def test_streaming_politeness_drain_keeps_busy_host_seq(spark, tmp_path):
+    """Drain mode evicts a host's state only when its timer fires with
+    no backlog left. A host that sends input every batch and is fully
+    served each time keeps its state row, so its batch_seq stays
+    cumulative across batches instead of restarting at 0."""
+    import time
+
+    from news_combinator_spark.streaming.incremental import (
+        streaming_politeness_scheduler,
+    )
+
+    in_dir = str(tmp_path / "cand")
+    schema = "url string, host string, priority int"
+
+    def write_batch(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+
+    def b_rows(n, deadline_s=45):
+        t0 = time.time()
+        while time.time() - t0 < deadline_s:
+            rows = [
+                (r.url, r.batch_seq)
+                for r in spark.sql(
+                    "SELECT url, batch_seq FROM t_busy ORDER BY batch_seq"
+                ).collect()
+            ]
+            if len(rows) >= n:
+                return rows
+            time.sleep(0.5)
+        raise AssertionError(f"sink never reached {n} rows: {rows}")
+
+    write_batch([("http://b.test/1", "b.test", 0),
+                 ("http://b.test/2", "b.test", 0)])
+    # a timeout far longer than the test: no timer fires in between
+    q = streaming_politeness_scheduler(
+        spark, in_dir, budget=2, query_name="t_busy",
+        drain_timeout_ms=600_000,
+    )
+    try:
+        assert b_rows(2) == [("http://b.test/1", 0), ("http://b.test/2", 1)]
+        write_batch([("http://b.test/3", "b.test", 0),
+                     ("http://b.test/4", "b.test", 0)])
+        got = b_rows(4)
+        assert got[2:] == [("http://b.test/3", 2), ("http://b.test/4", 3)], got
+    finally:
+        q.stop()
+
+
 def test_streaming_admission_filter(spark, tmp_path):
     """The batch page-health gates run unchanged on a stream: an
     error page drops, a mojibake page repairs and admits, a short

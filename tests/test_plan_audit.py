@@ -325,6 +325,37 @@ def test_frontier_fetch_order_no_global_window(spark):
     assert not viols, f"unbounded single-partition stages: {viols}\n{plan}"
 
 
+def test_crawl_discovery_step_runs_python_once(spark):
+    """A non-final crawl round's discovery step plans exactly one
+    ArrowEvalPython (link extraction and canonicalize fused, with the
+    allowed-host filter kept above the explode instead of pushed under
+    a second canonicalize evaluation) and exactly one
+    FlatMapCoGroupsInPandas (the sharded seen-prefilter probe)."""
+    from news_combinator_spark.datagen import (
+        pages_from_documents,
+        robots_df,
+        seeds_df,
+    )
+    from news_combinator_spark.operators.bloom import build_sharded_bloom
+    from news_combinator_spark.operators.frontier import discover_candidates
+
+    from conftest import SF_SMALL
+
+    pages = pages_from_documents(spark, SF_SMALL)
+    seeds = seeds_df(spark, pages)
+    fetched = seeds.join(pages.select("url", "html"), "url")
+    bloom = build_sharded_bloom(seeds, "url", 1_000, 1e-3, 8)
+    flagged = discover_candidates(
+        fetched, pages.select("url", "host", "priority"),
+        robots=robots_df(spark), allowed_host_suffix=".test",
+        prefilter=bloom,
+    )
+    plan = _simple(flagged)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert flagged.count() > 0
+
+
 def test_partial_aggregation_before_shuffle(spark):
     """groupBy must map-side combine (two HashAggregate levels around
     the exchange), or the shuffle carries every input row at 100 TB."""
