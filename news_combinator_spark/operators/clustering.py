@@ -301,10 +301,11 @@ def candidate_pairs(
     # one bus this box has is the resource added cores don't bring).
     # Here the banded frame takes a single hash-partitioned exchange
     # into an object-hash aggregate that collects each bucket's
-    # members (bounded by max_bucket), and the a<b pairs are expanded
-    # INLINE by JVM array lambdas over the doc-id-sorted member list
-    # — no sort anywhere, no second pass over the banded frame, and
-    # the s^2/2 blow-up stays bounded per bucket exactly as before.
+    # members, and the a<b pairs are expanded INLINE by JVM array
+    # lambdas over the doc-id-sorted member list — no sort anywhere,
+    # no second pass over the banded frame. max_bucket bounds the
+    # s^2/2 blow-up per bucket, but filters AFTER collect_list: a
+    # boilerplate bucket is still built whole in one buffer row.
     # Identical candidate SET: same bucket membership, same
     # <=max_bucket guard, same a<b + size-ratio conditions, same
     # final dropDuplicates.

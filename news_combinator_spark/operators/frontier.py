@@ -38,8 +38,8 @@ Scale notes (10^10-URL frontier):
   round's counts fill when its fetched rows are first computed.
 - seen is a lazy union of per-round checkpointed deltas, so no O(total
   seen) rewrite happens per round. On a cluster the round snapshot is
-  an Iceberg commit / append, which also gives resumability — here we
-  expose save/load parquet checkpoints.
+  an Iceberg commit / append, which also gives resumability — here
+  save/load_checkpoint publish one parquet directory per round.
 """
 
 from __future__ import annotations
@@ -48,12 +48,14 @@ import json
 import os
 from dataclasses import dataclass, field
 from functools import reduce
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.extract import canonical_links_udf
 from .bloom import build_sharded_bloom
+from .commit import commit_dir, sweep
 from .ranking import partitioned_global_rank
 
 FRONTIER_COLS = ["url", "host", "priority"]
@@ -536,6 +538,10 @@ def crawl(
     """Run `rounds` micro-rounds; return every fetched URL with its
     round and the deterministic global fetch_order.
 
+    Checkpoints: with `checkpoint_dir`, each round N (0 = the seeds,
+    written only when starting from them) is one directory
+    ``round=N/{combined, meta.json}`` published whole (`save_checkpoint`).
+
     Resume: pass `start_round` plus the (frontier, seen) pair from
     `load_checkpoint` to continue a crawl after the driver died —
     rounds start_round..rounds-1 replay exactly as the uninterrupted
@@ -668,9 +674,11 @@ def crawl(
                 seen_df(), "url", bloom_expected, bloom_fp, bloom_shards
             )
 
-    if checkpoint_dir is not None and start_round == 0:
-        # base snapshot: seeds are seen-delta 0, nothing fetched yet
-        save_checkpoint(frontier, init_seen, checkpoint_dir, 0, n_fetched=0)
+    # base snapshot (every seed is seen-delta 0), written only when
+    # starting from seeds: a resume from round 0 reads the committed one
+    if checkpoint_dir and start_round == 0 and initial_frontier is None:
+        save_checkpoint(frontier.withColumn("is_new", F.lit(True)),
+                        checkpoint_dir, 0, 0)
 
     fetched_rounds: list[DataFrame] = []
     lineage: list[RoundMetrics] = []
@@ -746,7 +754,7 @@ def crawl(
         # ONE materialization per round for both frames: the next
         # frontier (deferred + new) and the seen delta (new) are the
         # same rows modulo a flag. With a checkpoint dir it is the
-        # round snapshot itself — written once as parquet (frontier =
+        # round snapshot itself — committed once as parquet (frontier =
         # all rows, seen delta = is_new rows) and read back as the
         # next round's lineage cut, which unlike a localCheckpoint
         # survives an executor loss.
@@ -760,12 +768,12 @@ def crawl(
             )
             .observe(new_obs, F.count_if("is_new").alias("n"))
         )
-        if checkpoint_dir is not None:
-            cpath = os.path.join(checkpoint_dir, f"round={r + 1}", "combined")
-            combined.write.mode("overwrite").parquet(cpath)
-            combined = spark.read.parquet(cpath)
-        else:
+        if checkpoint_dir is None:
             combined = combined.localCheckpoint()
+        else:
+            combined = save_checkpoint(
+                combined, checkpoint_dir, r + 1,
+                lambda: fetched_total + _count(fetch_obs))
         flagged.unpersist()
         sched.unpersist()
         frontier = combined.drop("is_new")
@@ -785,10 +793,6 @@ def crawl(
             # bitset); the final round probes nothing, so skip its fold
             fold = bloom.insert_delta if prefilter_kind == "cuckoo" else bloom.or_delta
             bloom = fold(new, "url")
-        if checkpoint_dir is not None:
-            # data already on disk via the combined write; only the
-            # meta record remains
-            _write_checkpoint_meta(checkpoint_dir, r + 1, fetched_total)
 
     all_fetched = reduce(DataFrame.unionByName, fetched_rounds)
     # Total crawl order = row_number over (round, priority, host, url),
@@ -1014,77 +1018,49 @@ def resolve_redirects(
 # Checkpoint / resume (Iceberg-snapshot stand-in; SURVEY.md §2.9)
 # --------------------------------------------------------------------------
 
-def _write_checkpoint_meta(path: str, rnd: int, n_fetched: int) -> None:
-    """Atomic meta record: the cumulative fetched count a resume needs
-    to continue the global fetch_order numbering."""
-    base = os.path.join(path, f"round={rnd}")
-    os.makedirs(base, exist_ok=True)
-    tmp = os.path.join(base, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"round": rnd, "n_fetched": n_fetched}, f)
-    os.replace(tmp, os.path.join(base, "meta.json"))
+def save_checkpoint(combined: DataFrame, path: str, rnd: int,
+                    n_fetched: int | Callable[[], int]) -> DataFrame:
+    """Commit round `rnd` as ONE directory (`commit.commit_dir`):
+    ``combined``, the full frontier, inherently O(frontier), whose
+    is_new rows are the round's seen DELTA, O(new) — the full seen set
+    is the union of deltas 0..rnd, never rewritten; and ``meta.json``
+    with the cumulative fetched count that continues fetch_order on
+    resume (`n_fetched` may be a callable, read after the data write).
+    Returns the committed frame, read back."""
+    dest = os.path.join(path, f"round={rnd}")
 
+    def write(staging: str) -> dict:
+        combined.write.parquet(os.path.join(staging, "combined"))
+        n = n_fetched() if callable(n_fetched) else n_fetched
+        return {"round": rnd, "n_fetched": n}
 
-def save_checkpoint(
-    frontier: DataFrame,
-    seen_delta: DataFrame,
-    path: str,
-    rnd: int,
-    n_fetched: int = 0,
-):
-    """Snapshot for round `rnd`: the full frontier (inherently
-    O(frontier)), this round's seen DELTA only (O(new) — the full seen
-    set is the union of deltas 0..rnd, never rewritten), and a meta
-    record with the cumulative fetched count so a resume can continue
-    the global fetch_order numbering.
-
-    This two-file layout is the explicit-API path (base snapshots,
-    external callers). The crawl loop itself writes the fused
-    single-file layout instead — one `combined` parquet whose is_new
-    flag splits frontier from seen delta (see the loop comment);
-    load_checkpoint reads either."""
-    base = os.path.join(path, f"round={rnd}")
-    frontier.write.mode("overwrite").parquet(os.path.join(base, "frontier"))
-    seen_delta.select("url").write.mode("overwrite").parquet(
-        os.path.join(base, "seen_delta")
-    )
-    _write_checkpoint_meta(path, rnd, n_fetched)
+    commit_dir(dest, write)
+    spark, cpath = combined.sparkSession, os.path.join(dest, "combined")
+    # persisted frames over a replaced round (an earlier run's, before
+    # a resume) re-plan against its new files, as after an overwrite
+    spark.catalog.refreshByPath(cpath)
+    return spark.read.parquet(cpath)
 
 
 def load_checkpoint(spark: SparkSession, path: str, rnd: int):
-    """-> (frontier, seen, meta). seen = union of the per-round deltas
-    0..rnd (each delta was written once; nothing is re-read at
-    O(total) write cost — this is the read side of the O(new)/round
-    design). Per round either layout is accepted: the fused
-    `combined` parquet (is_new flag splits frontier from delta) or
-    the legacy `frontier`/`seen_delta` pair."""
-    base = os.path.join(path, f"round={rnd}")
-    combined_path = os.path.join(base, "combined")
-    if os.path.exists(combined_path):
-        combined = spark.read.parquet(combined_path)
-        frontier = combined.drop("is_new")
-    else:
-        frontier = spark.read.parquet(os.path.join(base, "frontier"))
-    deltas = []
-    for r in range(rnd + 1):
-        rbase = os.path.join(path, f"round={r}")
-        cpath = os.path.join(rbase, "combined")
-        spath = os.path.join(rbase, "seen_delta")
-        if os.path.exists(cpath):
-            deltas.append(
-                spark.read.parquet(cpath).filter("is_new").select("url")
-            )
-        elif os.path.exists(spath):
-            deltas.append(spark.read.parquet(spath).select("url"))
-    seen = deltas[0]
-    for d in deltas[1:]:
-        seen = seen.unionByName(d)
-    meta_path = os.path.join(base, "meta.json")
-    meta = {"round": rnd, "n_fetched": 0}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-    return frontier, seen, meta
+    """-> (frontier, seen, meta) for round `rnd`. seen = union of the
+    is_new deltas of rounds 0..rnd, each written once (the read side
+    of the O(new)/round design). Rounds 0..rnd must all be committed,
+    else FileNotFoundError names the committed ones. A dead writer's
+    half-done publish is rolled back first (`commit.sweep`)."""
+    sweep(path)
+    dirs = os.listdir(path) if os.path.isdir(path) else []
+    committed = sorted(int(d[6:]) for d in dirs if d.startswith("round=")
+                       and os.path.isfile(f"{path}/{d}/meta.json"))
+    if not set(range(rnd + 1)) <= set(committed):
+        raise FileNotFoundError(f"{path}: rounds 0..{rnd} not all "
+                                f"committed; committed rounds: {committed}")
+    parts = [spark.read.parquet(f"{path}/round={r}/combined")
+             for r in range(rnd + 1)]
+    seen = reduce(DataFrame.unionByName,
+                  (p.filter("is_new").select("url") for p in parts))
+    with open(f"{path}/round={rnd}/meta.json") as f:
+        return parts[-1].drop("is_new"), seen, json.load(f)
 
 
 def merge_frontiers(*frontiers: DataFrame) -> DataFrame:
@@ -1126,8 +1102,9 @@ def resume_crawl(
     **crawl_kwargs,
 ) -> CrawlResult:
     """Continue a checkpointed crawl from `from_round` (the round the
-    checkpoint was written FOR, i.e. save_checkpoint's rnd). The
-    resumed rounds execute exactly as the uninterrupted run would:
+    checkpoint was written FOR, i.e. save_checkpoint's rnd; 0 = the
+    seeds; only committed rounds are read). The resumed rounds
+    execute exactly as the uninterrupted run would:
     same frontier, same seen set, same schedule/fetch set/lineage, and
     — via the checkpointed cumulative fetched count — the same global
     fetch_order values, so unioning the pre-crash output with the
@@ -1149,7 +1126,7 @@ def resume_crawl(
         initial_frontier=frontier,
         initial_seen=seen,
         checkpoint_dir=checkpoint_dir,
-        fetch_order_base=int(meta.get("n_fetched", 0)),
+        fetch_order_base=int(meta["n_fetched"]),
         **crawl_kwargs,
     )
 

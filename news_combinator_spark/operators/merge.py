@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import commit
+
 
 def merge_into(
     target: DataFrame,
@@ -93,11 +95,10 @@ def merge_into(
 
 
 class SnapshotTable:
-    """Versioned parquet table with an atomically-swapped latest
-    pointer — the sandbox stand-in for an Iceberg table's snapshot
-    chain. Each commit writes a new immutable ``v=N`` directory and
-    re-points ``_latest`` via os.replace (atomic on POSIX), so readers
-    never observe a half-written snapshot and any historical version
+    """Versioned parquet table — the sandbox stand-in for an Iceberg
+    table's snapshot chain. Each commit publishes an immutable ``v=N``
+    and re-points ``_latest`` (`commit.commit_version`); readers see
+    only versions at or below the pointer, and every retained version
     stays readable (time travel / resume-from-snapshot)."""
 
     def __init__(self, spark: SparkSession, path: str):
@@ -106,53 +107,25 @@ class SnapshotTable:
         os.makedirs(path, exist_ok=True)
 
     def latest_version(self) -> int:
-        ptr = os.path.join(self.path, "_latest")
-        if not os.path.exists(ptr):
-            return 0
-        with open(ptr) as f:
-            return json.load(f)["version"]
+        return commit.latest_version(self.path)
 
     def read(self, version: int | None = None) -> DataFrame | None:
-        v = self.latest_version() if version is None else version
+        latest = self.latest_version()
+        v = latest if version is None else version
         if v == 0:
             return None
         vdir = os.path.join(self.path, f"v={v}")
-        if not os.path.isdir(vdir):
+        if v > latest or not os.path.isdir(vdir):
             raise FileNotFoundError(
-                f"snapshot v={v} of {self.path} was expired (or never "
-                "committed) — time travel reaches only retained versions"
-            )
+                f"snapshot v={v} of {self.path} was expired or never "
+                f"committed (latest v={latest})")
         return self.spark.read.parquet(vdir)
 
     def commit(self, df: DataFrame, commit_ts: float | None = None) -> int:
-        """Unconditional commit (single-writer path): next version,
-        pointer swap. Multi-writer callers use merge()/try_commit."""
-        v = self.latest_version() + 1
-        self._write_version(df, v, commit_ts)
-        self._swap_pointer(v)
-        return v
-
-    def _write_version(
-        self, df: DataFrame, v: int, commit_ts: float | None
-    ) -> None:
-        import time
-
-        vdir = os.path.join(self.path, f"v={v}")
-        df.write.mode("overwrite").parquet(vdir)
-        with open(os.path.join(vdir, "_commit_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": v,
-                    "ts": time.time() if commit_ts is None else commit_ts,
-                },
-                f,
-            )
-
-    def _swap_pointer(self, v: int) -> None:
-        tmp = os.path.join(self.path, "_latest.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"version": v}, f)
-        os.replace(tmp, os.path.join(self.path, "_latest"))
+        """Unconditional commit: the version after the latest one when
+        the commit lock is taken, so it never loses a race."""
+        return commit.commit_version(
+            self.path, df.write.parquet, None, commit_ts)
 
     def commit_ts(self, v: int) -> float | None:
         meta = os.path.join(self.path, f"v={v}", "_commit_meta.json")
@@ -161,68 +134,15 @@ class SnapshotTable:
         with open(meta) as f:
             return json.load(f)["ts"]
 
-    def try_commit(
-        self,
-        df: DataFrame,
-        base_version: int,
-        commit_ts: float | None = None,
-    ) -> int | None:
-        """Optimistic-concurrency commit, the Iceberg protocol: the
-        new snapshot's data files are written first (safe — nothing
-        references them), then the pointer swaps ONLY IF the table is
-        still at ``base_version``; a concurrent writer who advanced it
-        makes this return None and the caller re-merges against the
-        new base (see merge()). The check-and-swap critical section is
-        serialized by an O_CREAT|O_EXCL lock file — the stand-in for
-        the catalog's atomic compare-and-swap; the data write, like
-        Iceberg's, happens OUTSIDE the lock, so writers never hold the
-        lock during the heavy work."""
-        import shutil
-        import time
-
-        v = base_version + 1
-        # Data files land in a writer-unique staging dir (two racing
-        # writers sharing a base would otherwise overwrite each
-        # other's identically-named v-dir); the version NAME is
-        # claimed only inside the lock, by an atomic directory
-        # rename — Iceberg's uniquely-named-data-files +
-        # metadata-swap split.
-        staging = os.path.join(
-            self.path, f"_staging-{os.getpid()}-{time.monotonic_ns()}"
+    def try_commit(self, df: DataFrame, base_version: int,
+                   commit_ts: float | None = None) -> int | None:
+        """Optimistic-concurrency commit, the Iceberg protocol: data
+        files are written first, outside the lock; the pointer swaps
+        only if the table is still at ``base_version``, else None is
+        returned and the caller re-merges on the new base (merge())."""
+        return commit.commit_version(
+            self.path, df.write.parquet, base_version, commit_ts
         )
-        df.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, "_commit_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": v,
-                    "ts": time.time() if commit_ts is None else commit_ts,
-                },
-                f,
-            )
-        lock = os.path.join(self.path, "_commit.lock")
-        deadline = time.time() + 30.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.time() > deadline:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise TimeoutError(
-                        f"commit lock {lock} held too long — a crashed "
-                        "writer left it behind; remove it to recover"
-                    )
-                time.sleep(0.01)
-        try:
-            if self.latest_version() != base_version:
-                shutil.rmtree(staging, ignore_errors=True)
-                return None  # lost the race
-            os.rename(staging, os.path.join(self.path, f"v={v}"))
-            self._swap_pointer(v)
-            return v
-        finally:
-            os.close(fd)
-            os.unlink(lock)
 
     def merge(
         self,
@@ -232,25 +152,17 @@ class SnapshotTable:
         max_retries: int = 5,
         **kwargs,
     ) -> int:
-        """MERGE INTO this table: read latest snapshot, merge, commit —
-        with Iceberg-style optimistic retry under concurrent writers.
-        A racing MERGE that commits first simply becomes part of this
-        writer's next base snapshot, so both writers' rows land and
-        the when_matched policy (e.g. the crawler.php:143-190
-        'dup' => timestamp-refresh as "update_ts") is applied in
-        commit order — last committer's timestamps win, exactly the
-        serializable outcome two racing crawler.php inserts produce
-        through MySQL's row locks. First commit just writes the
-        source."""
+        """MERGE INTO this table: read latest snapshot, merge, commit,
+        with Iceberg-style optimistic retry. A racing MERGE that
+        commits first becomes this writer's next base, so both
+        writers' rows land and the when_matched policy (e.g. the
+        crawler.php:143-190 'dup' timestamp refresh, "update_ts")
+        applies in commit order — last committer's timestamps win."""
         for _ in range(max_retries + 1):
             base = self.latest_version()
             current = self.read(base) if base else None
-            merged = (
-                source
-                if current is None
-                else merge_into(
-                    current, source, key_cols, when_matched, **kwargs
-                )
+            merged = source if current is None else merge_into(
+                current, source, key_cols, when_matched, **kwargs
             )
             v = self.try_commit(merged, base_version=base)
             if v is not None:
@@ -260,22 +172,14 @@ class SnapshotTable:
             "raise max_retries or reduce writer contention"
         )
 
-    def expire_snapshots(
-        self,
-        keep_last: int | None = None,
-        older_than_ts: float | None = None,
-    ) -> list[int]:
-        """Snapshot expiry / GC — the engine's analog of the
-        reference's retention job (clearpic.php:38-77: delete
-        news pictures whose day_time is past a 5-day cutoff, storage
-        object first, then the DB record, tolerating already-deleted
-        objects). Here: drop historical ``v=N`` snapshot directories
-        that are (a) older than ``older_than_ts`` (commit-time cutoff,
-        the clearpic rule) and/or (b) beyond the newest ``keep_last``
-        versions — but NEVER the latest snapshot, which time-travel
-        reads and resumes may still pin. Idempotent: an
-        already-removed version is skipped silently (the err 612
-        branch). Returns the versions removed."""
+    def expire_snapshots(self, keep_last: int | None = None,
+                         older_than_ts: float | None = None) -> list[int]:
+        """Snapshot expiry, the reference's retention job
+        (clearpic.php:38-77): drop historical ``v=N`` older than
+        ``older_than_ts`` (commit time) and/or beyond the newest
+        ``keep_last`` — NEVER the latest, nor by age a version with no
+        ``_commit_meta.json`` (age unknown). Idempotent; returns the
+        versions removed."""
         import shutil
 
         if keep_last is None and older_than_ts is None:
@@ -294,7 +198,7 @@ class SnapshotTable:
                 continue
             if older_than_ts is not None:
                 ts = self.commit_ts(v)
-                if ts is not None and ts >= older_than_ts:
+                if ts is None or ts >= older_than_ts:
                     continue
             shutil.rmtree(vdir)
             removed.append(v)

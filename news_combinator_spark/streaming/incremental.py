@@ -28,6 +28,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.commit import write_json
+
 
 class WatermarkStore:
     """File-backed high-water mark (the `magicnumber`/`lastmtime`
@@ -44,16 +46,8 @@ class WatermarkStore:
             return json.load(f)["watermark"]
 
     def write(self, watermark: int, run_id: str | None = None) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "watermark": watermark,
-                    "run_id": run_id or str(int(time.time())),
-                },
-                f,
-            )
-        os.replace(tmp, self.path)
+        run_id = run_id or str(int(time.time()))
+        write_json(self.path, {"watermark": watermark, "run_id": run_id})
 
 
 def incremental_scan(

@@ -174,18 +174,103 @@ def test_checkpoint_roundtrip(spark, tmp_path, crawl_result):
         save_checkpoint,
     )
 
-    frontier = spark.createDataFrame(
-        [("u1", "h", 1)], "url string, host string, priority int"
-    )
-    seen0 = frontier.select("url")
-    delta1 = spark.createDataFrame([("u2",)], "url string")
-    save_checkpoint(frontier, seen0, str(tmp_path), 0, n_fetched=0)
-    save_checkpoint(frontier, delta1, str(tmp_path), 1, n_fetched=7)
+    schema = "url string, host string, priority int, is_new boolean"
+    # round 0: two seeds, each its own seen delta; round 1: u0 was
+    # fetched, u1 deferred, u2 discovered (the round's seen delta)
+    save_checkpoint(spark.createDataFrame(
+        [("u0", "h", 0, True), ("u1", "h", 1, True)], schema,
+    ), str(tmp_path), 0, 0)
+    save_checkpoint(spark.createDataFrame(
+        [("u1", "h", 1, False), ("u2", "h", 1, True)], schema,
+    ), str(tmp_path), 1, 7)
     f2, s2, meta = load_checkpoint(spark, str(tmp_path), 1)
-    assert f2.collect()[0].url == "u1"
+    assert sorted(r.url for r in f2.collect()) == ["u1", "u2"]
+    assert "is_new" not in f2.columns
     # seen = union of deltas 0..1 (O(new)-per-round checkpointing)
-    assert {r.url for r in s2.collect()} == {"u1", "u2"}
+    assert sorted(r.url for r in s2.collect()) == ["u0", "u1", "u2"]
     assert meta["n_fetched"] == 7
+
+
+def test_load_checkpoint_reads_only_committed_rounds(spark, tmp_path):
+    """A round directory without meta.json (data written, meta not) or
+    a missing round is never read: resume fails loudly, naming the
+    committed rounds, instead of restarting fetch_order at 0. A dead
+    writer's staging dir is swept; a live one is left alone."""
+    import os
+    import subprocess
+    import sys
+
+    from news_combinator_spark.operators.frontier import (
+        load_checkpoint,
+        resume_crawl,
+        save_checkpoint,
+    )
+
+    ck = str(tmp_path)
+    df = spark.createDataFrame(
+        [("u0", "h", 0, True)], "url string, host string, priority int, "
+        "is_new boolean",
+    )
+    for r in range(3):
+        save_checkpoint(df, ck, r, r)
+    os.remove(f"{ck}/round=2/meta.json")
+    with pytest.raises(FileNotFoundError, match=r"committed rounds: \[0, 1\]"):
+        load_checkpoint(spark, ck, 2)
+    with pytest.raises(FileNotFoundError, match="committed rounds"):
+        resume_crawl(spark, None, budgets_df(spark), ck, 2, 3)
+    assert load_checkpoint(spark, ck, 1)[2]["n_fetched"] == 1
+
+    dead = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True,
+    ).stdout.strip()
+    live = f"_staging-{os.getpid()}-1"
+    os.makedirs(f"{ck}/_staging-{dead}-1/combined")
+    os.makedirs(f"{ck}/{live}")
+    assert load_checkpoint(spark, ck, 1)[0].count() == 1
+    save_checkpoint(df, ck, 2, 2)
+    assert load_checkpoint(spark, ck, 2)[2]["n_fetched"] == 2
+    assert sorted(os.listdir(ck)) == [live, "round=0", "round=1", "round=2"]
+
+
+def test_resume_from_each_round_matches_full_run(spark, tmp_path):
+    """Resuming from every committed round, the seed round 0 included,
+    reproduces the uninterrupted fetch table, fetch_order included. A
+    budget of 1 per host makes rounds defer, so each checkpoint's
+    fetched count differs from its frontier size. The resume from
+    round 0 must not rewrite the snapshot its frontier is reading."""
+    from news_combinator_spark.datagen import N_HOSTS
+    from news_combinator_spark.operators.frontier import (
+        load_checkpoint,
+        resume_crawl,
+    )
+
+    pages = pages_from_documents(spark, SF_SMALL)
+    budgets = spark.createDataFrame(
+        [(f"h{i}.test", 1) for i in range(N_HOSTS)], "host string, budget int"
+    )
+    ckpt = str(tmp_path / "ck")
+    kw = dict(robots=robots_df(spark), allowed_host_suffix=".test")
+    cols = ["round", "url", "host", "priority", "fetch_order"]
+
+    def table(res):
+        return (res.fetched.toPandas().sort_values("fetch_order")[cols]
+                .reset_index(drop=True))
+
+    full = crawl(spark, pages, seeds_df(spark, pages), budgets,
+                 rounds=CRAWL_ROUNDS, checkpoint_dir=ckpt, **kw)
+    exp = table(full)
+    assert any(m.deferred for m in full.lineage[:-1])
+    for start in range(CRAWL_ROUNDS):
+        got = table(resume_crawl(spark, pages, budgets, ckpt,
+                                 from_round=start, rounds=CRAWL_ROUNDS, **kw))
+        want = exp[exp["round"] >= start].reset_index(drop=True)
+        assert got.equals(want), f"from {start}\ngot:\n{got}\nexp:\n{want}"
+    frontier, seen, meta = load_checkpoint(spark, ckpt, 0)
+    seeds = sorted(r.url for r in seeds_df(spark, pages).collect())
+    assert sorted(r.url for r in frontier.collect()) == seeds
+    assert sorted(r.url for r in seen.collect()) == seeds
+    assert meta["n_fetched"] == 0
 
 
 def test_resume_from_checkpoint_matches_full_run(spark, tmp_path):

@@ -412,6 +412,34 @@ def test_snapshot_try_commit_stale_base_returns_none(spark, tmp_path):
     assert t.try_commit(df, base_version=2) == 3
 
 
+def test_snapshot_recovers_from_dead_writer(spark, tmp_path):
+    """A dead writer's orphan ``v=N`` (published, pointer never
+    swapped), built on disk, is not readable and is replaced by the
+    next commit."""
+    loc = str(tmp_path / "tbl")
+    t = SnapshotTable(spark, loc)
+    schema = "url string, ts long"
+    assert t.commit(spark.createDataFrame([("a", 1)], schema)) == 1
+    spark.createDataFrame([("orphan", 2)], schema).write.parquet(f"{loc}/v=2")
+    with pytest.raises(FileNotFoundError, match="never committed"):
+        t.read(2)
+    assert t.merge(spark.createDataFrame([("b", 3)], schema), ["url"]) == 2
+    assert {r.url for r in t.read(2).collect()} == {"a", "b"}
+    assert sorted(os.listdir(loc)) == ["_latest", "v=1", "v=2"]
+
+
+def test_snapshot_expiry_never_ages_out_metaless_version(spark, tmp_path):
+    """A version without ``_commit_meta.json`` has no known age: the
+    age rule keeps it, keep_last still expires it."""
+    loc = str(tmp_path / "tbl")
+    t = SnapshotTable(spark, loc)
+    for ts in (1000.0, 2000.0, 3000.0):
+        t.commit(spark.createDataFrame([("u",)], "url string"), commit_ts=ts)
+    os.remove(f"{loc}/v=1/_commit_meta.json")
+    assert t.expire_snapshots(older_than_ts=9e9) == [2]
+    assert t.expire_snapshots(keep_last=1) == [1]
+
+
 def test_snapshot_expiry_gc(spark, tmp_path):
     """clearpic.php:38-77 retention on the snapshot chain: age-cutoff
     and keep-last expiry, never the latest, idempotent re-run, and
