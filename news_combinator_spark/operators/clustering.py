@@ -3,25 +3,30 @@
 Replaces the reference's O(N²) nested-loop similarity join
 (categorize.cpp:94-127; SURVEY.md J1/J2/J3) with the scale path:
 
-1. tokenize (Arrow mapInPandas, shared kernel with the oracle)
+1. featurize: ONE Arrow mapInPandas pass per doc yields its tokens
+   (shared kernel with the oracle), MinHash signature and per-doc
+   (word, tf) counts
 2. tag selection: top-K per doc by (tf desc, doc-freq asc, word asc)
-   — pure window ranking, integers only (see oracle/reference_impl.py
-   for why the ordering is integer-typed)
-3. MinHash signatures over token sets (pandas UDF, numpy-vectorized)
-4. LSH banding: explode (band_id, band_hash) -> groupBy bucket ->
-   emit candidate pairs (a < b) inside each bucket (applyInPandas,
-   bucket size capped — a 10^6-doc bucket must not emit 10^12 pairs)
-5. exact verify: the reference's directional seed-vocab cosine at
-   tau = 0.85 (>=), computed per candidate pair in Arrow batches
-6. connected components over verified edges (iterative hash-min label
+   — one hash aggregation per doc over its counts, integers only (see
+   oracle/reference_impl.py for why the ordering is integer-typed)
+3. LSH banding: signature slices exploded per band, ONE JVM hash
+   aggregation per (band_id, band_key) bucket, candidate pairs (a < b)
+   expanded inline by array lambdas (bucket size capped — a
+   10^6-doc bucket must not emit 10^12 pairs)
+4. exact verify: the reference's directional seed-vocab cosine at
+   tau = 0.85 (>=), one projection per candidate pair over per-doc
+   word -> tf maps
+5. connected components over verified edges (iterative hash-min label
    propagation, DataFrame joins, constant-depth lineage via
    localCheckpoint)
-7. per-component greedy relabel (applyInPandas) reproducing the
+6. per-component greedy relabel (applyInPandas) reproducing the
    reference's scan-order star clusters EXACTLY — overlap semantics,
    noise cap > 5 dropped without consuming members, singleton seeds
    silent (categorize.cpp:120,148-165). Greedy never crosses a
    component boundary, so per-component greedy == the reference's
    global sequential loop, but runs in parallel across components.
+   Edge lists under greedy_membership's size gate skip 5-6: one
+   driver greedy over the collected edges.
 
 Output matches the `news_category` shape (reetsee_news.sql:37-45):
 cluster_id (seed doc), title, source_names (csv, seed first then
@@ -354,17 +359,17 @@ def verify_pairs(
     edges with sim >= bound. Seed = lower doc_id (scan order), exactly
     the pair the reference's j>i loop would inspect.
 
-    Shuffle shape: the similarity terms only ever need the 15 seed-tag
-    counts per side, so the verification runs over narrow
-    (doc, word, tf) rows — (pair, tag) rows equi-join the per-doc term
-    counts twice (seed side, probe side) and a map-side-combined
-    groupBy(a, b) folds the exact int64 dot product and norms. The
-    token arrays themselves NEVER shuffle: an earlier shape shipped
-    both full token arrays per candidate pair and scanned them once
-    per tag (O(tags x tokens) comparisons per pair — ~200M string
-    equality checks at 14k candidates); this shape's join traffic is
-    candidate-vocabulary-sized, which is what survives at 10^8
-    candidates.
+    Shuffle shape: each candidate pair is verified in ONE projection
+    over its own row. Every doc's term counts become a word -> tf map
+    (``map_from_entries(wc)`` on a `featurize_docs` frame, one
+    groupBy(doc_id) over the raw tokens otherwise); the seed side
+    looks its <= TAG_NUM tags up once per doc (docs-sized), pair rows
+    pick up the seed's tags and counts by `a` and the probe doc's map
+    by `b`, and array lambdas fold the dot product and norms. No
+    (pair, tag) explode, no group-by on (a, b), no distinct over the
+    pair ids: per pair the shuffle carries the seed's tags and counts,
+    and a doc's map moves once per side (seed lookup, probe join),
+    never once per pair.
 
     The arithmetic is bit-identical to the oracle kernel
     (oracle/reference_impl.seed_similarity): every term is an exact
@@ -374,45 +379,44 @@ def verify_pairs(
     num/denom — happen in the same order as the Python kernel, and
     IEEE-754 sqrt/divide are correctly rounded in both runtimes.
     """
-    ids_in_pairs = (
-        pairs.select(F.col("a").alias("doc_id"))
-        .union(pairs.select(F.col("b").alias("doc_id")))
-        .distinct()
+    if "wc" in tokens_df.columns:
+        wc = tokens_df.select("doc_id", F.map_from_entries("wc").alias("wc"))
+    else:
+        wc = _tf_rows(tokens_df).groupBy("doc_id").agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("word", "tf"))
+            ).alias("wc")
+        )
+    # a doc whose tokens are all 1-char has no map row: its counts are 0
+    counts = "transform(tags, t -> coalesce(wc[t], 0L))"
+    sq_sum = "aggregate({}, 0L, (s, x) -> s + x * x)"
+    seed = (
+        tags_df.join(wc, "doc_id", "left")
+        .select(F.col("doc_id").alias("a"), "tags", F.expr(counts).alias("ca"))
+        .withColumn("d1", F.expr(sq_sum.format("ca")))
     )
-    tf = _tf_rows(tokens_df.join(ids_in_pairs, "doc_id", "semi"))
-    # (a, b, word): one row per (candidate pair, seed tag). Tag arrays
-    # are <= TAG_NUM long and non-empty by doc_tags construction, so
-    # the explode is a bounded fan-out and never drops a pair the old
-    # inner-join-on-tags shape kept.
-    pt = pairs.join(
-        tags_df.select(F.col("doc_id").alias("a"), "tags"), "a"
-    ).select("a", "b", F.explode("tags").alias("word"))
-    ca = tf.select(
-        F.col("doc_id").alias("a"), "word", F.col("tf").alias("ca")
-    )
-    cb = tf.select(
-        F.col("doc_id").alias("b"), "word", F.col("tf").alias("cb")
-    )
+    probe = wc.select(F.col("doc_id").alias("b"), "wc")
     terms = (
-        pt.join(ca, ["a", "word"], "left")
-        .join(cb, ["b", "word"], "left")
+        pairs.select("a", "b")
+        .join(seed, "a")
+        .join(probe, "b", "left")
+        .select("a", "b", "ca", "d1", F.expr(counts).alias("cb"))
         .select(
             "a",
             "b",
-            F.coalesce(F.col("ca"), F.lit(0)).cast("long").alias("ca"),
-            F.coalesce(F.col("cb"), F.lit(0)).cast("long").alias("cb"),
+            "d1",
+            F.expr(
+                "aggregate(zip_with(ca, cb, (x, y) -> x * y), 0L, "
+                "(s, x) -> s + x)"
+            ).alias("num"),
+            F.expr(sq_sum.format("cb")).alias("d2"),
         )
-    )
-    agg = terms.groupBy("a", "b").agg(
-        F.sum(F.col("ca") * F.col("cb")).alias("num"),
-        F.sum(F.col("ca") * F.col("ca")).alias("d1"),
-        F.sum(F.col("cb") * F.col("cb")).alias("d2"),
     )
     denom = F.sqrt(F.col("d1").cast("double") * F.col("d2").cast("double"))
     sim = F.when(denom < F.lit(1e-5), F.lit(0.0)).otherwise(
         F.col("num").cast("double") / denom
     )
-    sims = agg.select("a", "b", sim.alias("sim"))
+    sims = terms.select("a", "b", sim.alias("sim"))
     return sims.filter(F.col("sim") >= sim_bound)
 
 
@@ -811,7 +815,11 @@ def greedy_membership(
                 T.StructField("member_rank", T.IntegerType(), False),
             ]
         )
-        return spark.createDataFrame(rows, schema)
+        # a pandas frame plans as an Arrow LocalTableScan; a list of
+        # tuples would parallelize pickled rows and start Python workers
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=schema.fieldNames()), schema
+        )
     comps = connected_components(edges.select("a", "b"))
     if mode == "v1":
         return greedy_relabel_v1(edges, comps)

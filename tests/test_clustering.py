@@ -71,6 +71,52 @@ def test_verified_edges_match_oracle(spark, docs_df, corpus):
     assert got == expected
 
 
+@pytest.mark.parametrize("k", [15, 10], ids=["v2", "v1"])
+@pytest.mark.parametrize("frame", ["featurize", "tokenize"])
+def test_verify_sims_equal_oracle_kernel(spark, docs_df, corpus, frame, k):
+    """verify_pairs' sim is bit-identical (==) to seed_similarity for
+    every candidate pair, plus pairs whose probe doc holds none of the
+    seed's tags (sim 0.0), over both token-frame shapes."""
+    from news_combinator_spark.operators.clustering import featurize_docs
+    from news_combinator_spark.oracle.reference_impl import seed_similarity
+
+    texts, _ = corpus
+    token_lists = [tokenize(t) for t in texts]
+    df = doc_freq(token_lists)
+    seed_tags = [select_tags(t, df, k=k) for t in token_lists]
+    toks = (featurize_docs if frame == "featurize" else tokenize_docs)(
+        docs_df
+    )
+    cands = {
+        (r["a"], r["b"])
+        for r in candidate_pairs(minhash_df(tokenize_docs(docs_df)))
+        .select("a", "b")
+        .collect()
+    }
+    disjoint = [
+        (a, b)
+        for a in range(len(texts))
+        for b in range(a + 1, len(texts))
+        if not set(seed_tags[a]) & set(token_lists[b])
+    ][:5]
+    assert disjoint
+    pairs = spark.createDataFrame(
+        sorted(cands | set(disjoint)), "a long, b long"
+    )
+    got = {
+        (r["a"], r["b"]): r["sim"]
+        for r in verify_pairs(
+            pairs, toks, doc_tags(toks, k), sim_bound=-1.0
+        ).collect()
+    }
+    expected = {
+        (a, b): seed_similarity(token_lists[a], token_lists[b], seed_tags[a])
+        for a, b in cands | set(disjoint)
+    }
+    assert got == expected
+    assert all(got[p] == 0.0 for p in disjoint)
+
+
 def test_clusters_match_reference_greedy_exactly(spark, docs_df, corpus):
     texts, hosts = corpus
     oracle = greedy_clusters(texts)

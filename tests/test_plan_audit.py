@@ -356,6 +356,49 @@ def test_crawl_discovery_step_runs_python_once(spark):
     assert flagged.count() > 0
 
 
+def test_verify_pairs_is_one_projection_per_pair(spark):
+    """Over a featurize_docs frame, verify_pairs reads each doc's term
+    counts as a map and folds a pair's seed-tag terms with array
+    lambdas: no Generate (no (pair, tag) explode) and no aggregation
+    (no groupBy(a, b), no distinct over the pair ids)."""
+    from news_combinator_spark.datagen import reference_grammar_pages
+    from news_combinator_spark.operators.clustering import (
+        candidate_pairs,
+        doc_tags,
+        featurize_docs,
+        verify_pairs,
+    )
+
+    pages = reference_grammar_pages(n_pages=60, seed=3, dup_rate=0.4)
+    docs = spark.createDataFrame(
+        [(i, p["text"]) for i, p in enumerate(pages)], "doc_id long, text string"
+    )
+    feat = featurize_docs(docs)
+    # the inputs' own plans (tag ranking, banding) are cut off
+    tags = doc_tags(feat).localCheckpoint()
+    pairs = candidate_pairs(feat.select("doc_id", "sig")).localCheckpoint()
+    edges = verify_pairs(pairs, feat, tags)
+    plan = _simple(edges)
+    for node in ("Generate", "HashAggregate", "ObjectHashAggregate"):
+        assert node not in plan, plan
+    assert edges.count() > 0
+
+
+def test_greedy_membership_small_graph_is_local_table_scan(spark):
+    """The driver greedy's membership frame is built from Arrow: it
+    plans as a LocalTableScan, not a scan of parallelized rows."""
+    from news_combinator_spark.operators.clustering import greedy_membership
+
+    edges = spark.createDataFrame(
+        [(0, 1, 0.9), (0, 2, 0.9), (5, 6, 0.9)], "a long, b long, sim double"
+    )
+    for mode in ("v2", "v1"):
+        members = greedy_membership(edges, mode=mode)
+        plan = _simple(members)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert members.count() > 0
+
+
 def test_partial_aggregation_before_shuffle(spark):
     """groupBy must map-side combine (two HashAggregate levels around
     the exchange), or the shuffle carries every input row at 100 TB."""
