@@ -17,6 +17,13 @@ WHERE timestamp > %d). Two Spark re-expressions:
    same input (readStream + event-time window + watermark) for
    late-data-tolerant aggregation — the scale path the reference
    lacks.
+
+The crawl frontier's streaming slice: `streaming_seen_filter` is the
+C1 "URL seen?" test as Spark's native `StreamingDeduplicate` (exact,
+one state key per url, no Python stage); `streaming_politeness_scheduler`
+is the C2 per-host budget on `applyInPandasWithState`, since no JVM
+operator expresses a per-batch budget. `streaming_warc_ingest` and
+`streaming_admission_filter` reuse the batch path's JVM expressions.
 """
 
 from __future__ import annotations
@@ -101,76 +108,36 @@ def streaming_seen_filter(
     spark: SparkSession,
     input_dir: str,
     schema: str = "url string, host string, priority int",
-    n_buckets: int = 64,
     query_name: str = "seen_filter",
-    state: str = "hash",
 ):
     """Stateful streaming URL-seen dedup: the frontier's C1 operator
-    as a Structured Streaming stage (applyInPandasWithState).
+    as Spark's native `StreamingDeduplicate` (`dropDuplicates` on
+    ``url``), running in the JVM with no Python stage.
 
-    Discovered URLs arrive as a stream; per hash-bucket key the state
-    is the seen set (n_buckets keys spread state across the cluster
-    exactly like the frontier's salted partitioning). Only
-    first-ever-seen URLs are emitted, across micro-batches. At
-    10^10-URL scale the same operator runs with a state-store TTL and
-    RocksDB state backend; here NoTimeout keeps state for the test's
-    lifetime.
+    Discovered URLs arrive as a stream; only first-ever-seen URLs are
+    emitted, across micro-batches and within one, carrying the
+    ``host``/``priority`` of the first row the operator meets for that
+    url (a row of the earliest batch that named it). The filter
+    is exact, like the batch frontier's anti-join: state is keyed on
+    the url string itself, so no hash collision can drop a new URL.
 
-    ``state`` picks the membership representation — an ACCEPTED
-    DEVIATION from the batch frontier, where the bloom is only a
-    prefilter backed by an exact anti-join:
-
-    - ``"hash"`` (default): 64-bit xxhash64 values, 8 bytes/url. A
-      hash collision permanently conflates two distinct URLs and the
-      later one is silently DROPPED (a false negative the batch path
-      cannot produce). Collision probability ~ n^2 / 2^65: negligible
-      below ~10^8 urls/bucket (n=10^8 -> ~3e-4), material at 10^10
-      unbucketed — size n_buckets so per-key n stays ~10^8, or use
-      exact mode.
-    - ``"exact"``: the url strings themselves — no false negatives,
-      exact parity with the batch frontier's seen semantics, at
-      ~len(url) bytes/url state cost.
+    State is one state-store key per distinct url (~len(url) bytes
+    plus row overhead), and a micro-batch costs one lookup per input
+    row, not a rewrite of everything seen so far. Without a watermark
+    that state grows with the number of distinct urls for the query's
+    lifetime. At 10^10-URL scale the same operator runs on the RocksDB
+    state store provider, and bounding state means deduplicating
+    within a watermark (`dropDuplicatesWithinWatermark` on a
+    discovery timestamp): a url first seen longer ago than the
+    watermark delay counts as new again, which is a recrawl policy,
+    not a seen test.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if state not in ("hash", "exact"):
-        raise ValueError(f"state must be 'hash' or 'exact', got {state!r}")
-    exact = state == "exact"
-
     urls = (
         spark.readStream.format("parquet").schema(schema).load(input_dir)
-        .withColumn("url_hash", F.xxhash64("url"))
-        .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)))
-    )
-
-    def _dedup(key, pdf_iter, st):
-        seen = set(st.get[0]) if st.exists else set()
-        rows = {"url": [], "host": [], "priority": []}
-        for pdf in pdf_iter:
-            for url, host, prio, h in zip(
-                pdf["url"], pdf["host"], pdf["priority"], pdf["url_hash"]
-            ):
-                member = url if exact else int(h)
-                if member not in seen:
-                    seen.add(member)
-                    rows["url"].append(url)
-                    rows["host"].append(host)
-                    rows["priority"].append(prio)
-        st.update((list(seen),))
-        yield pd.DataFrame(rows)
-
-    out = urls.groupBy("bucket").applyInPandasWithState(
-        _dedup,
-        outputStructType="url string, host string, priority int",
-        stateStructType=(
-            "seen array<string>" if exact else "seen array<long>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        .dropDuplicates(["url"])
     )
     return (
-        out.writeStream.outputMode("append")
+        urls.writeStream.outputMode("append")
         .format("memory")
         .queryName(query_name)
         .start()
@@ -228,6 +195,8 @@ def streaming_politeness_scheduler(
 
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
+    if max_backlog < 0:
+        raise ValueError(f"max_backlog must be >= 0, got {max_backlog}")
     if drain_timeout_ms is not None and drain_timeout_ms <= 0:
         raise ValueError(
             f"drain_timeout_ms must be positive, got {drain_timeout_ms}"
@@ -360,9 +329,10 @@ def streaming_admission_filter(
     per-row JVM expressions the batch `admission_funnel` uses
     (pagehealth is pure select/filter, so the code path is literally
     shared; nothing is reimplemented for streaming). Emits admitted
-    (url, host, lang, norm_text, n_words) rows; exact-dedup across
-    batches composes downstream via `streaming_seen_filter` keyed on
-    the text fingerprint instead of the url.
+    (url, host, lang, norm_text, n_words) rows; exact text dedup
+    across batches composes downstream as ``dropDuplicates`` on a
+    fingerprint column of ``norm_text`` (`streaming_seen_filter` is
+    keyed on ``url``).
     """
     from ..functions import pagehealth as ph
 

@@ -128,9 +128,10 @@ def test_structured_streaming_windowed_counts(spark):
 
 
 def test_streaming_seen_filter_exact_mode(spark, tmp_path):
-    """state='exact' stores urls, not 64-bit hashes: no collision can
-    drop a never-seen URL (parity with the batch frontier's exact
-    anti-join semantics)."""
+    """The seen filter has one mode and it is exact: state is keyed on
+    the url string, so no collision can drop a never-seen URL (parity
+    with the batch frontier's exact anti-join semantics). The removed
+    ``state=`` knob is rejected."""
     from news_combinator_spark.streaming.incremental import (
         streaming_seen_filter,
     )
@@ -143,17 +144,70 @@ def test_streaming_seen_filter_exact_mode(spark, tmp_path):
          ("http://x.test/1", "x.test", 1)],
         schema,
     ).coalesce(1).write.mode("append").parquet(in_dir)
-    q = streaming_seen_filter(
-        spark, in_dir, query_name="t_seen_exact", state="exact"
-    )
+    q = streaming_seen_filter(spark, in_dir, query_name="t_seen_exact")
     try:
         q.processAllAvailable()
         urls = [r["url"] for r in spark.sql("SELECT url FROM t_seen_exact").collect()]
         assert sorted(urls) == ["http://x.test/1", "http://x.test/2"]
     finally:
         q.stop()
-    with pytest.raises(ValueError):
-        streaming_seen_filter(spark, in_dir, state="bogus")
+    with pytest.raises(TypeError):
+        streaming_seen_filter(spark, in_dir, state="exact")
+
+
+def test_streaming_seen_filter_matches_set_simulation(spark, tmp_path):
+    """Five micro-batches with within-batch and cross-batch repeats:
+    the sink equals a Python-set simulation, each url exactly once,
+    with the host and priority of the batch that first named it (a
+    cross-batch repeat carries a different priority, which must not
+    win)."""
+    from news_combinator_spark.streaming.incremental import (
+        streaming_seen_filter,
+    )
+
+    in_dir = str(tmp_path / "disc_sim")
+    schema = "url string, host string, priority int"
+    batches = [
+        [("http://a.test/1", "a.test", 1), ("http://a.test/2", "a.test", 2),
+         ("http://a.test/1", "a.test", 1), ("http://b.test/1", "b.test", 3)],
+        [("http://a.test/2", "a.test", 9), ("http://c.test/1", "c.test", 0),
+         ("http://c.test/1", "c.test", 0)],
+        [("http://b.test/1", "b.test", 7), ("http://a.test/1", "a.test", 8)],
+        [("http://d.test/1", "d.test", 4), ("http://b.test/2", "b.test", 5),
+         ("http://d.test/1", "d.test", 4), ("http://c.test/1", "c.test", 6)],
+        [("http://e.test/1", "e.test", 2), ("http://a.test/3", "a.test", 1),
+         ("http://e.test/1", "e.test", 2), ("http://d.test/1", "d.test", 9)],
+    ]
+    seen, expected = set(), []
+    for rows in batches:
+        for url, host, prio in rows:
+            if url not in seen:
+                seen.add(url)
+                expected.append((url, host, prio))
+
+    def write_batch(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+
+    write_batch(batches[0])
+    q = streaming_seen_filter(spark, in_dir, query_name="t_seen_sim")
+    try:
+        q.processAllAvailable()
+        for rows in batches[1:]:
+            write_batch(rows)
+            q.processAllAvailable()
+        got = [
+            tuple(r)
+            for r in spark.sql(
+                "SELECT url, host, priority FROM t_seen_sim"
+            ).collect()
+        ]
+    finally:
+        q.stop()
+    # expected holds each url once, so equality also rules out repeats
+    assert sorted(got) == sorted(expected)
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) >= 4
 
 
 def test_streaming_stateful_seen_filter(spark, tmp_path):
@@ -273,6 +327,11 @@ def test_streaming_politeness_scheduler(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="budget"):
         streaming_politeness_scheduler(spark, in_dir, budget=0)
+    # a negative cap would slice the backlog silently: -1 drops it
+    # all, -10 keeps an arbitrary middle slice
+    for bad in (-1, -10):
+        with _pytest.raises(ValueError, match="max_backlog"):
+            streaming_politeness_scheduler(spark, in_dir, max_backlog=bad)
 
 
 def test_streaming_politeness_drain_timeout(spark, tmp_path):

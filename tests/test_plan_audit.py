@@ -356,6 +356,30 @@ def test_crawl_discovery_step_runs_python_once(spark):
     assert flagged.count() > 0
 
 
+def test_streaming_seen_filter_is_native_dedup(spark, tmp_path):
+    """The streaming seen filter runs as the JVM's StreamingDeduplicate:
+    its executed plan has no Python stateful node and no Python stage
+    of any kind."""
+    from news_combinator_spark.streaming.incremental import (
+        streaming_seen_filter,
+    )
+
+    in_dir = str(tmp_path / "discovered")
+    spark.createDataFrame(
+        [("http://a.test/1", "a.test", 1), ("http://a.test/1", "a.test", 1)],
+        "url string, host string, priority int",
+    ).coalesce(1).write.parquet(in_dir)
+    q = streaming_seen_filter(spark, in_dir, query_name="t_seen_plan")
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    assert "StreamingDeduplicate" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+    assert "Python" not in plan, plan
+
+
 def test_verify_pairs_is_one_projection_per_pair(spark):
     """Over a featurize_docs frame, verify_pairs reads each doc's term
     counts as a map and folds a pair's seed-tag terms with array
