@@ -1,11 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark):   flagship crawl-frontier query on sf0.001.
-queries():      every implemented operator from SURVEY.md §2 plus the
-                training-data ops (see news_combinator_spark/plans/queries.py).
+queries():      every implemented operator from SURVEY.md §2 (see
+                news_combinator_spark/plans/queries.py).
 oracle_sql():   matching DuckDB SQL for EVERY queries() entry — the
-                approximate dedup/ANN operators are hash-checked via
-                lossless banding / pigeonhole blocking / full probing,
+                approximate dedup operators are hash-checked via
+                lossless banding / pigeonhole blocking,
                 and the two sequential-consume greedy clusterings are
                 replayed in DuckDB as recursive-CTE state machines
                 (consumed set carried as a list column), so nothing

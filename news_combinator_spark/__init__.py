@@ -1,7 +1,7 @@
 """news_combinator_spark — a PySpark-native crawl + combine analytics engine.
 
 A from-scratch re-expression of the capability surface of the reference
-repo fanfank/news-combinator (see /root/repo/SURVEY.md) as an idiomatic
+repo fanfank/news-combinator (see SURVEY.md) as an idiomatic
 Apache Spark DataFrame engine:
 
 - URL-frontier + fetch scheduler over Common-Crawl-style page tables
@@ -12,9 +12,9 @@ Apache Spark DataFrame engine:
   (reproduces reference cluster assignment, categorize.cpp:94-158).
 - Serving-layer queries (date-range index, FK entry lookup, comment
   ranking, extractive summarization).
-- Training-data pipeline ops: dedup (exact/MinHash/SimHash/Jaccard),
-  ANN similarity search, text quality/language-id/fingerprint,
-  multimodal binary-column plumbing.
+- Dedup (exact/MinHash/SimHash/Jaccard), text quality /
+  language-id / fingerprint operators, multimodal binary-column
+  plumbing.
 
 Everything is DataFrame-first; Python appears only inside Arrow-batched
 pandas UDFs. No RDD API in the hot path.

@@ -155,7 +155,7 @@ def wet_blob(
     order separated by a blank line (the WARC record separator).
     One map-side-combined groupBy per shard; shard sizing is the
     caller's partitioning decision (a real export writes one file
-    per task via write_training_shards' machinery)."""
+    per shard)."""
     return (
         records.groupBy(F.col(shard_col).alias("shard"))
         .agg(

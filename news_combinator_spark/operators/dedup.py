@@ -14,7 +14,6 @@ JVM-side where the semantics allow (exact paths are pure built-ins).
                       blocks (lossless: a pair within radius agrees
                       on at least one block)
 - ngram_jaccard_pairs: character n-gram Jaccard for candidate pairs
-- embedding_near_dups: cosine >= tau over an embedding column
 - near_dup_groups / dedup_keep_canonical: pairs -> connected
                       components -> min-id canonical keep-one
 - duplicated_spans / dup_span_stats: substring-level dedup via hashed
@@ -276,87 +275,6 @@ def ngram_jaccard_pairs(
 
     return joined.mapInPandas(
         _jac, schema="a long, b long, ngram_jaccard double"
-    )
-
-
-def embedding_near_dups(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str | None = None,
-    auto_bucket_rows: int = 100_000,
-    n_cells: int = 64,
-    n_probe: int = 2,
-) -> DataFrame:
-    """(a, b, cos_sim) pairs with cosine >= threshold.
-
-    JVM-side vector math (zip_with + aggregate — no Python). The join
-    is always within-bucket; what supplies the bucket:
-
-    - ``bucket_col`` given: caller's bucketing (e.g. a precomputed IVF
-      cell or LSH bucket) — one bucket per row, exact within buckets.
-    - ``bucket_col`` None and the corpus has <= ``auto_bucket_rows``
-      rows: a single bucket — the EXACT all-pairs path, acceptable
-      only at this bounded size (this is the oracle-checkable path).
-    - ``bucket_col`` None above the guard: the corpus is automatically
-      bucketed by an IVF coarse quantizer (similarity.assign_cells),
-      each vector MULTI-PROBED into its ``n_probe`` nearest cells, and
-      pairs meet iff they share any cell (then exact-cosine verified,
-      duplicates from shared cells dropped). This bounds the pair
-      blow-up to ~n_probe^2/n_cells of the cross join; recall is
-      near-1 for the high thresholds near-dup detection uses (near-dup
-      vectors quantize to the same top cells) but not guaranteed 1.0 —
-      pass an explicit bucket_col (or raise n_probe) to control it.
-
-    The guard means no caller silently runs an O(n^2) cross join on a
-    web-scale corpus — the round-1 default did exactly that.
-    """
-    base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    if bucket_col is not None:
-        bucketed = emb.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            F.col(bucket_col).alias("bkt"),
-        )
-        multi = False
-    elif base.count() <= auto_bucket_rows:
-        bucketed = base.withColumn("bkt", F.lit(0))
-        multi = False
-    else:
-        from .similarity import assign_cells_multi
-
-        assign = assign_cells_multi(
-            emb, n_cells=n_cells, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col,
-        )
-        bucketed = base.join(assign, "id").withColumnRenamed("cell", "bkt")
-        multi = True
-    norm = bucketed.withColumn(
-        "nrm",
-        F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-    )
-    a = norm.select(
-        F.col("id").alias("a"), F.col("v").alias("va"),
-        F.col("nrm").alias("na"), "bkt",
-    )
-    b = norm.select(
-        F.col("id").alias("b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"), "bkt",
-    )
-    pairs = a.join(b, "bkt").filter(F.col("a") < F.col("b"))
-    if multi:
-        # a pair sharing several probed cells meets once per shared cell
-        pairs = pairs.dropDuplicates(["a", "b"])
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pairs.withColumn("cos_sim", dot / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("a", "b", "cos_sim")
     )
 
 

@@ -109,44 +109,3 @@ def ranked_prefix(
         out_col, F.row_number().over(w).cast(cast_to)
     )
 
-
-def partitioned_global_cumsum(
-    df: DataFrame,
-    bucket: Column,
-    order_cols: list[Column | str],
-    val_col: str,
-    out_col: str = "cumsum",
-) -> DataFrame:
-    """Running sum of ``val_col`` over the TOTAL order (bucket asc,
-    *order_cols) without coalescing the data to one partition — the
-    two-level prefix sum: local cumsum within each bucket, per-bucket
-    totals prefix-summed over the (one-row-per-bucket) frame, offsets
-    broadcast-joined back.
-
-    ``bucket`` must COARSEN the order: every row of bucket k precedes
-    every row of bucket k+1 in the intended total order (e.g.
-    ``floor(id / width)`` when ordering by ``id``). The offsets frame
-    has n/width rows — size ``width`` so that stays in the millions at
-    worst (10^10 rows / 2^20 width = ~10^4 offset rows)."""
-    b = df.withColumn("_bkt", bucket)
-    w_local = (
-        Window.partitionBy("_bkt")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = b.withColumn("_lcs", F.sum(val_col).over(w_local))
-    totals = b.groupBy("_bkt").agg(F.sum(val_col).alias("_n"))
-    # frame bounded: one row per bucket
-    w_off = (
-        Window.partitionBy(bounded_part_key())
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn(
-        "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-    ).select("_bkt", "_off")
-    return (
-        local.join(F.broadcast(offsets), "_bkt")
-        .withColumn(out_col, F.col("_off") + F.col("_lcs"))
-        .drop("_bkt", "_lcs", "_off")
-    )

@@ -27,16 +27,10 @@ lowercase hex strings).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "keep_hash",
-    "stratified_sample",
-    "token_budget_mix",
-    "alpha_mix_shares",
-    "dsir_select",
-]
+__all__ = ["keep_hash", "stratified_sample"]
 
 # 13 hex digits = 52 bits: exact in a double, so the threshold
 # floor(rate * 2**52) is reproducible anywhere IEEE doubles are.
@@ -99,225 +93,3 @@ def stratified_sample(
     )
     return kept
 
-
-def token_budget_mix(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    tokens_col: str,
-    shares: dict[str, float],
-    budget_frac: float,
-) -> DataFrame:
-    """Token-weighted mix targeting: sample each group so its share of
-    the kept TOKENS approaches `shares[group]` of a total budget of
-    `budget_frac * sum(tokens)` — the "X% web, Y% code, Z% books by
-    token count" recipe of LLM pre-training mixes.
-
-    Per-group rate = min(1, share * budget_frac * total_tokens /
-    group_tokens); groups absent from `shares` are dropped (weight
-    zero). Membership is the same md5-threshold test as
-    `stratified_sample`, so the exact kept set is reproducible and a
-    group whose rate clamps at 1 keeps every row. Two tiny
-    aggregations + broadcast joins; the row decision is pure JVM.
-    """
-    spark = df.sparkSession
-    shares_df = spark.createDataFrame(
-        list(shares.items()), f"{group_col} string, share double"
-    )
-    tok_g = df.groupBy(group_col).agg(F.sum(tokens_col).alias("tok_g"))
-    total = df.agg(F.sum(tokens_col).alias("tok_all"))
-    rates = (
-        tok_g.join(F.broadcast(shares_df), group_col, "inner")
-        .crossJoin(F.broadcast(total))
-        .select(
-            group_col,
-            F.least(
-                F.lit(1.0),
-                F.col("share") * F.lit(budget_frac) * F.col("tok_all")
-                / F.col("tok_g"),
-            ).alias("rate"),
-        )
-    )
-    return df.join(F.broadcast(rates), group_col).filter(
-        (F.col("rate") >= 1.0) | (keep_hash(id_col) < _threshold(F.col("rate")))
-    )
-
-
-def alpha_mix_shares(
-    df: DataFrame,
-    group_col: str,
-    tokens_col: str,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Temperature-scaled mixture shares per group: the POLICY side
-    of corpus mixing, producing the `shares` dict token_budget_mix
-    consumes.
-
-    share_g = tok_g^alpha / sum_h(tok_h^alpha) — the alpha-sampling
-    rule of multilingual/multi-domain pre-training recipes (alpha=1
-    keeps the natural distribution, alpha=0 flattens it uniform;
-    0.2-0.7 are the published sweet spots for upweighting the tail
-    without drowning the head). `epochs` = share_g * total_tokens /
-    tok_g is the implied pass count over each group under a budget of
-    exactly the corpus size — the number a curator reads to see
-    which tail domains would repeat (>1) and which head domains are
-    subsampled (<1).
-
-    Shape: one map-side-combined groupBy to group-token counts, a
-    1-row scalar sum broadcast back — zero shuffles over the data
-    beyond the group agg, O(groups) output.
-    """
-    tok_g = df.groupBy(group_col).agg(
-        F.sum(tokens_col).cast("double").alias("tok_g")
-    )
-    powed = tok_g.select(
-        group_col, "tok_g", F.pow("tok_g", F.lit(alpha)).alias("pw")
-    )
-    tot = powed.agg(
-        F.sum("pw").alias("z"), F.sum("tok_g").alias("tok_all")
-    )
-    share = F.col("pw") / F.col("z")
-    return powed.crossJoin(F.broadcast(tot)).select(
-        group_col,
-        F.col("tok_g").cast("long").alias("tokens"),
-        F.round(share, 6).alias("share"),
-        F.round(share * F.col("tok_all") / F.col("tok_g"), 6).alias(
-            "epochs"
-        ),
-    )
-
-
-def dsir_select(
-    docs: DataFrame,
-    target_pred,
-    n_buckets: int = 1024,
-    k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """DSIR-style importance resampling (Xie et al. 2023, "Data
-    Selection for Language Models via Importance Resampling"): pick
-    the k candidate documents whose hashed-n-gram feature profile
-    looks most like a target domain.
-
-    - features: word unigrams + adjacent bigrams, hashed into
-      ``n_buckets`` via the engine's cross-engine md5 idiom (first 13
-      hex digits parsed as an integer — 52 bits, exact in a double
-      and reproducible in ANSI SQL).
-    - bucket weights: Laplace-smoothed log-ratio
-      ln(((ct_b + 1) * (Tr + B)) / ((cr_b + 1) * (Tt + B))) where
-      ct/cr are target/raw bucket counts and Tt/Tr their totals —
-      SCALED TO AN INTEGER (round(scale * lr)) so every per-doc
-      weight below is an exact BIGINT sum: selection order and output
-      carry no cross-engine float (the single ln per bucket is pinned
-      away from rounding boundaries by
-      tests/test_snapshots_sampling.py).
-    - per-doc weight: sum(count_b * lr_b); top-k by
-      (weight DESC, id ASC). The paper's Gumbel-top-k sampling
-      variant is this with per-doc Gumbel noise added to the
-      log-weights; the deterministic form is the reproducible one a
-      resumable pipeline needs (same argument as `stratified_sample`).
-
-    Scale shape: the feature explode is immediately map-side-combined
-    into per-(doc, bucket) counts (shuffle is bounded by
-    docs x min(doc_features, n_buckets), not corpus tokens); both
-    bucket-distribution frames are <= n_buckets rows, broadcast onto
-    the count frame; top-k is a TakeOrdered (per-partition heads +
-    driver merge of k rows), never a global sort.
-
-    ``target_pred`` is a boolean Column: rows where it is true define
-    the target distribution; rows where it is false are the candidate
-    pool being selected from (targets are never returned). Pass a
-    NULL-proof predicate (e.g. ``isin(...).eqNullSafe(True)``) — a
-    row where the predicate evaluates NULL is neither target nor
-    candidate and silently drops out. Candidates with EMPTY text
-    (zero features after tokenization) likewise never appear in the
-    result, even when the candidate pool is smaller than k: the
-    feature explode produces no rows for them, which matches DSIR
-    semantics (an empty doc has no evidence of target resemblance)
-    but means callers must not assume exactly-k output (ADVICE r4).
-    """
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != F.lit("")
-    )
-    feats = F.concat(
-        toks,
-        F.zip_with(
-            F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-            F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        target_pred.alias("is_target"),
-        F.explode(feats).alias("feat"),
-    ).select(
-        "doc_id",
-        "is_target",
-        F.pmod(
-            F.conv(F.substring(F.md5("feat"), 1, 13), 16, 10).cast("long"),
-            F.lit(n_buckets),
-        ).alias("bucket"),
-    )
-    counts = base.groupBy("doc_id", "is_target", "bucket").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    raw_b = (
-        counts.filter(~F.col("is_target"))
-        .groupBy("bucket")
-        .agg(F.sum("cnt").alias("cr"))
-    )
-    tgt_b = (
-        counts.filter(F.col("is_target"))
-        .groupBy("bucket")
-        .agg(F.sum("cnt").alias("ct"))
-    )
-    totals = (
-        counts.groupBy("is_target")
-        .agg(F.sum("cnt").alias("t"))
-        .groupBy()
-        .pivot("is_target", [True, False])
-        .agg(F.first("t"))
-        .select(
-            F.coalesce(F.col("true"), F.lit(0)).alias("tt"),
-            F.coalesce(F.col("false"), F.lit(0)).alias("tr"),
-        )
-    )
-    # only buckets that occur in SOME candidate doc matter (weights
-    # sum over candidate-doc buckets), and those all have cr >= 1
-    lr = (
-        raw_b.join(tgt_b, "bucket", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "bucket",
-            F.round(
-                F.lit(float(scale))
-                * F.log(
-                    (
-                        (F.coalesce(F.col("ct"), F.lit(0)) + 1)
-                        * (F.col("tr") + F.lit(n_buckets))
-                    ).cast("double")
-                    / (
-                        (F.col("cr") + 1) * (F.col("tt") + F.lit(n_buckets))
-                    ).cast("double")
-                ),
-                0,
-            )
-            .cast("long")
-            .alias("lr"),
-        )
-    )
-    weights = (
-        counts.filter(~F.col("is_target"))
-        .join(F.broadcast(lr), "bucket")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("cnt") * F.col("lr")).alias("weight"))
-    )
-    w = Window.orderBy(F.desc("weight"), F.asc("doc_id"))
-    return (
-        weights.orderBy(F.desc("weight"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )

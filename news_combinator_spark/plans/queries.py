@@ -1,10 +1,12 @@
 """The driver-facing query battery: Spark callable + DuckDB oracle SQL.
 
-Every SQL-expressible operator from SURVEY.md §2 (plus the
-training-data-pipeline ops) appears here twice: once as a PySpark
-DataFrame program, once as ANSI SQL DuckDB runs on the same parquet
-views. Column names and dtypes are aligned pairwise; float outputs are
-rounded so cross-engine summation-order ulps can't flip the hash.
+Every SQL-expressible operator from SURVEY.md §2 appears here twice:
+once as a PySpark DataFrame program, once as ANSI SQL DuckDB runs on
+the same parquet views. COVERAGE.md's Registry table names the §2 row
+each entry cites; the engine additions that cite none are marked there
+as next-diet candidates. Column names and dtypes are aligned pairwise;
+float outputs are rounded so cross-engine summation-order ulps can't
+flip the hash.
 
 Since round 4 every registry entry has a DuckDB hash oracle — the two
 former rows-only entries (the sequential-consume greedy clusterings)
@@ -30,7 +32,6 @@ from ..datagen import (
 )
 from ..functions.extract import links_udf, markers_udf, passage_udf, title_udf
 from ..operators import dedup as dd
-from ..operators import similarity as sim
 from ..functions.posfilter import _FUNCTION_WORDS, _PRONOUNS, doc_pos_tags
 from ..operators import linkgraph as lg
 from ..operators import sampling
@@ -43,7 +44,6 @@ from ..operators import frontier as fr
 from ..operators import hoststats as hs
 from ..operators import indexing as ix
 from ..operators.bucketing import reshard_moves
-from ..operators.sampling import alpha_mix_shares
 from ..operators.frontier import crawl
 from ..operators.merge import merge_into
 from ..operators.multimodal import (
@@ -1142,54 +1142,6 @@ def q_repetition_score(spark, sf_dir):
     )
 
 
-def q_lm_nll(spark, sf_dir):
-    """CCNet-style perplexity filter with a corpus-trained unigram LM:
-    p(w) = count(w) / total over the corpus itself (no external LM
-    data), doc score = mean negative log-likelihood of its words —
-    high avg_nll flags out-of-distribution documents. All JVM
-    expressions. Shuffle shape: one map-side-combined groupBy(word)
-    builds the vocab-sized LM, the total is a 1-row broadcast cross
-    join, the words-to-LM join shuffles on the same word key the LM
-    was built on (co-located; broadcastable when the vocab fits), and
-    the final groupBy(doc_id) is partial-aggregated — no global
-    single-partition stage at any corpus size."""
-    words = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    )
-    lm = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    total = lm.agg(F.sum("c").alias("n"))
-    logp = lm.crossJoin(F.broadcast(total)).select(
-        "w", F.log(F.col("c") / F.col("n")).alias("logp")
-    )
-    return (
-        words.join(logp, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            # +1e-9 shifts exact grid points off the rounding boundary
-            # identically in both engines (see q_quality_score)
-            F.round(-F.avg("logp") + 1e-9, 4).alias("avg_nll"),
-        )
-    )
-
-
-SQL_LM_NLL = """
-    WITH wd AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-    ), lm AS (
-      SELECT w, count(*) AS c FROM wd GROUP BY w
-    ), tot AS (
-      SELECT sum(c) AS n FROM lm
-    )
-    SELECT wd.doc_id,
-           count(*) AS n_words,
-           round(-avg(ln(lm.c / CAST(tot.n AS DOUBLE))) + 1e-9, 4)
-             AS avg_nll
-    FROM wd JOIN lm USING (w) CROSS JOIN tot
-    GROUP BY wd.doc_id
-"""
-
-
 SQL_REPETITION_SCORE = """
     WITH w AS (
       SELECT doc_id, string_split(text, ' ') AS ws FROM documents
@@ -1226,7 +1178,7 @@ SQL_REPETITION_SCORE = """
 
 def _word_4grams(docs):
     """doc_id -> exploded word 4-grams over a pre-split `ws` column.
-    Shared by decontaminate and filter_funnel."""
+    Used by filter_funnel."""
     return docs.filter(F.size("ws") >= 4).select(
         "doc_id",
         F.explode(
@@ -1235,36 +1187,6 @@ def _word_4grams(docs):
                 " (x, i) -> concat_ws(' ', slice(ws, i + 1, 4)))"
             )
         ).alias("g"),
-    )
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appx-C / PaLM style): docs
-    with doc_id % 20 == 0 form the held-out eval set; every training
-    doc sharing any word 4-gram with any eval doc is flagged with its
-    distinct-hit count. Eval n-gram sets are tiny relative to the
-    corpus (benchmarks, not the crawl), so the distinct eval grams are
-    BROADCAST and the training side streams through explode ->
-    broadcast-hash-semi-join -> per-doc groupBy: the only shuffle is
-    the final map-side-combined count, and the full training n-gram
-    set is never materialized."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
-    )
-    grams = _word_4grams(docs)
-    is_eval = F.col("doc_id") % 20 == 0
-    eval_grams = grams.filter(is_eval).select("g").distinct()
-    hits = (
-        grams.filter(~is_eval)
-        .join(F.broadcast(eval_grams), "g")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("g").alias("n_hits"))
-    )
-    train = docs.select("doc_id").filter(~is_eval)
-    return train.join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-        (F.coalesce("n_hits", F.lit(0)) > 0).cast("int").alias("contaminated"),
     )
 
 
@@ -1388,86 +1310,6 @@ SQL_FILTER_FUNNEL = f"""
            f.pass_lang * f.pass_len * f.pass_repetition
              * CAST(h.doc_id IS NULL AS INTEGER) AS keep
     FROM flags f LEFT JOIN hits h ON h.doc_id = f.doc_id
-"""
-
-
-SQL_DECONTAMINATE = """
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-    ), idx AS (
-      SELECT doc_id, ws, unnest(range(1, len(ws) - 2)) AS i
-      FROM w WHERE len(ws) >= 4
-    ), grams AS (
-      SELECT doc_id, array_to_string(list_slice(ws, i, i + 3), ' ') AS g
-      FROM idx
-    ), eval AS (
-      SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0
-    ), hits AS (
-      SELECT grams.doc_id, count(DISTINCT grams.g) AS n_hits
-      FROM grams JOIN eval USING (g)
-      WHERE grams.doc_id % 20 <> 0
-      GROUP BY grams.doc_id
-    )
-    SELECT d.doc_id,
-           coalesce(h.n_hits, 0) AS n_hits,
-           CAST(coalesce(h.n_hits, 0) > 0 AS INTEGER) AS contaminated
-    FROM documents d LEFT JOIN hits h USING (doc_id)
-    WHERE d.doc_id % 20 <> 0
-"""
-
-
-# ===========================================================================
-# Embedding family
-# ===========================================================================
-
-def q_ann_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-    )
-    queries = emb.filter(F.col("vec_id") < 5)
-    out = sim.brute_force_topk(emb, queries, k=5)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.col("rank").cast("int").alias("rank"),
-        F.round("cos_sim", 4).alias("cos_sim"),
-    )
-
-
-SQL_ANN_TOPK = """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-    s AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             list_cosine_similarity(q.qv, e.v) AS sim
-      FROM e, q WHERE e.vec_id != q.query_id
-    ), r AS (
-      SELECT query_id, neighbor_id, sim,
-             cast(row_number() OVER (PARTITION BY query_id
-                  ORDER BY sim DESC, neighbor_id) as int) AS rank
-      FROM s
-    )
-    SELECT query_id, neighbor_id, rank, round(sim, 4) AS cos_sim
-    FROM r WHERE rank <= 5
-"""
-
-
-def q_label_centroids(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return (
-        emb.select(
-            "label", F.posexplode("embedding").alias("dim", "val")
-        )
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg(F.col("val").cast("double")), 4).alias("mean_val"))
-    )
-
-
-SQL_LABEL_CENTROIDS = """
-    SELECT label, cast(i as int) AS dim,
-           round(avg(CAST(embedding[i + 1] AS DOUBLE)), 4) AS mean_val
-    FROM embeddings, range(0, 64) t(i)
-    GROUP BY label, i
 """
 
 
@@ -1938,39 +1780,6 @@ SQL_DUPLICATED_SPANS = r"""
 """
 
 
-def q_pack_sequences(spark, sf_dir):
-    """Concat-and-chunk sequence packing (training-batch prep): each
-    document's place in the packed token stream at a 512-token budget.
-    Engine side is the two-level prefix sum (no single-partition
-    window); the oracle is the plain SQL window cumsum it must equal.
-    bucket_width=64 forces multiple buckets at sf0.01 so the
-    offset-join path is actually exercised."""
-    from ..operators.packing import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    return pack_sequences(docs, budget=512, bucket_width=64)
-
-
-SQL_PACK_SEQUENCES = r"""
-    WITH toks AS (
-      SELECT doc_id,
-             len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS n_tok
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, n_tok,
-             sum(n_tok) OVER (ORDER BY doc_id) - n_tok AS cum_before
-      FROM toks
-    )
-    SELECT doc_id, n_tok,
-           (cum_before // 512)::BIGINT AS seq_id,
-           (cum_before % 512)::BIGINT AS seq_offset,
-           ((cum_before + n_tok - 1) // 512 - cum_before // 512
-            + 1)::BIGINT AS n_seqs
-    FROM c
-"""
-
-
 def q_dup_span_stats(spark, sf_dir):
     """Per-document duplicated-window fraction — the curation signal
     consumed from duplicated_spans (boilerplate/template docs score
@@ -2003,50 +1812,6 @@ SQL_DUP_SPAN_STATS = r"""
     FROM spans s LEFT JOIN dups d ON s.span = d.span
     GROUP BY s.doc_id
 """
-
-
-def q_embedding_near_dups(spark, sf_dir):
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 200)
-        .withColumn(
-            "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-        )
-    )
-    return dd.embedding_near_dups(emb, threshold=0.3).select(
-        "a", "b", F.round("cos_sim", 4).alias("cos_sim")
-    )
-
-
-SQL_EMBEDDING_NEAR_DUPS = """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE vec_id < 200)
-    SELECT x.vec_id AS a, y.vec_id AS b,
-           round(list_cosine_similarity(x.v, y.v), 4) AS cos_sim
-    FROM e x, e y
-    WHERE x.vec_id < y.vec_id
-      AND list_cosine_similarity(x.v, y.v) >= 0.3
-"""
-
-
-def q_ivf_ann(spark, sf_dir):
-    """IVF top-k with FULL probing (n_probe = n_cells): every cell is
-    probed, so the cell-bucketed join enumerates exactly the brute-force
-    pair set and the output is provably identical to exhaustive search
-    (the exactness invariant pinned in tests/test_dedup_similarity.py).
-    That makes the whole IVF machinery — centroid training, cell
-    assignment, probe ranking, bucketed scoring, top-k — hash-checkable
-    against the brute-force DuckDB oracle. Sub-full probing (the scale
-    path, n_probe << n_cells) is recall-gated in pytest instead."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-    )
-    queries = emb.filter(F.col("vec_id") < 5)
-    return sim.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=8).select(
-        "query_id", "neighbor_id",
-        F.col("rank").cast("int").alias("rank"),
-        F.round("cos_sim", 4).alias("cos_sim"),
-    )
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -2742,61 +2507,6 @@ SQL_SITEMAP_URLS = (
 )
 
 
-_MIX_SHARES = {"en": 0.2, "zh": 0.4, "es": 0.2, "de": 0.1, "fr": 0.1}
-_MIX_BUDGET = 0.5
-
-
-def q_token_budget_mix(spark, sf_dir):
-    """LLM pre-training mix targeting by TOKENS: sample each language
-    toward a target share of a 50%-of-corpus token budget
-    (operators/sampling.token_budget_mix). At sf0.01 zh's rate clamps
-    at 1 (its target exceeds its volume) while the others sample down
-    — both branches under the hash gate. Identifier-hash membership:
-    the oracle recomputes the exact kept set."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    with_tok = docs.select(
-        "doc_id",
-        "lang",
-        F.size(F.split("text", " ")).cast("long").alias("n_tok"),
-        F.col("doc_id").cast("string").alias("id_str"),
-    )
-    kept = sampling.token_budget_mix(
-        with_tok,
-        group_col="lang",
-        id_col="id_str",
-        tokens_col="n_tok",
-        shares=_MIX_SHARES,
-        budget_frac=_MIX_BUDGET,
-    )
-    return kept.select(
-        "doc_id", "lang", "n_tok", F.round("rate", 6).alias("rate")
-    )
-
-
-SQL_TOKEN_BUDGET_MIX = """
-    WITH t AS (
-        SELECT doc_id, lang,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-               CAST(doc_id AS VARCHAR) AS id_str
-        FROM documents
-    )
-    , shares(lang, share) AS (VALUES
-        ('en', 0.2), ('zh', 0.4), ('es', 0.2), ('de', 0.1), ('fr', 0.1))
-    , tok_g AS (SELECT lang, sum(n_tok) AS tok_g FROM t GROUP BY lang)
-    , total AS (SELECT sum(n_tok) AS tok_all FROM t)
-    , rates AS (
-        SELECT g.lang,
-               least(1.0, s.share * 0.5 * tok_all / tok_g) AS rate
-        FROM tok_g g JOIN shares s ON g.lang = s.lang CROSS JOIN total
-    )
-    SELECT doc_id, t.lang, n_tok, round(rate, 6) AS rate
-    FROM t JOIN rates r ON t.lang = r.lang
-    WHERE rate >= 1.0
-       OR substr(md5(id_str), 1, 13) <
-          lpad(lower(to_hex(CAST(floor(rate * 4503599627370496.0) AS BIGINT))), 13, '0')
-"""
-
-
 def q_fetch_retries(spark, sf_dir):
     """Transient-failure retry scheduling (frontier.fetch_with_retry):
     3 attempts, 20% deterministic per-attempt failure, exponential
@@ -3347,94 +3057,6 @@ SQL_BOILERPLATE_REMOVAL = (
     FROM assembled a JOIN totals t ON a.doc_id = t.doc_id
 """
 )
-
-
-_GOPHER_STOPS = (
-    "the", "a", "of", "and", "to", "in", "be", "that", "with", "have",
-)
-
-
-def q_gopher_rules(spark, sf_dir):
-    """Gopher-style quality-rule battery (Rae et al. 2021, the
-    de-facto public filtering baseline): per-doc word count bounds,
-    mean word length 3-10, symbol(#/ellipsis)-to-word ratio <= 0.1,
-    >= 80% words containing an alphabetic char, and >= 2 distinct
-    English stop words — the subset expressible without line
-    structure (the bullet/ellipsis line rules need line-delimited
-    text; see boilerplate_removal for the line-level machinery).
-    All rules are per-row JVM array/regexp expressions — zero
-    shuffles; the word-count and stop-word rules split this corpus so
-    both keep outcomes are under the hash gate."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    ws = F.split(F.trim("text"), " ")
-    n = F.size(ws)
-    sum_len = F.expr(
-        "aggregate(transform(split(trim(text), ' '), x -> length(x)),"
-        " 0, (a, x) -> a + x)"
-    )
-    n_alpha = F.expr(
-        "size(filter(split(trim(text), ' '), x -> x rlike '[a-zA-Z]'))"
-    )
-    stops = ", ".join(f"'{s}'" for s in _GOPHER_STOPS)
-    n_stops = F.expr(
-        "size(array_intersect(array_distinct(split(trim(text), ' ')),"
-        f" array({stops})))"
-    )
-    n_sym = F.regexp_count("text", F.lit("#")) + F.regexp_count(
-        "text", F.lit(r"\.\.\.")
-    )
-    mean_wlen = sum_len / n
-    alpha_frac = n_alpha / n
-    sym_ratio = n_sym / n
-    keep = (
-        (n >= 50) & (n <= 100000)
-        & (mean_wlen >= 3) & (mean_wlen <= 10)
-        & (sym_ratio <= 0.1)
-        & (alpha_frac >= 0.8)
-        & (n_stops >= 2)
-    )
-    return docs.select(
-        "doc_id", "lang",
-        n.alias("n_words"),
-        F.round(mean_wlen, 4).alias("mean_word_len"),
-        F.round(alpha_frac, 4).alias("alpha_word_frac"),
-        n_stops.alias("n_stop_words"),
-        keep.alias("keep"),
-    )
-
-
-SQL_GOPHER_RULES = r"""
-    WITH w AS (
-        SELECT doc_id, lang,
-               string_split(trim(text), ' ') AS ws,
-               len(regexp_extract_all(text, '#', 0))
-               + len(regexp_extract_all(text, '\.\.\.', 0)) AS n_sym
-        FROM documents
-    )
-    , m AS (
-        SELECT doc_id, lang,
-               len(ws) AS n_words,
-               list_sum(list_transform(ws, x -> len(x)))
-                   / CAST(len(ws) AS DOUBLE) AS mean_wlen,
-               len(list_filter(ws, x -> regexp_matches(x, '[a-zA-Z]')))
-                   / CAST(len(ws) AS DOUBLE) AS alpha_frac,
-               len(list_intersect(list_distinct(ws),
-                   ['the','a','of','and','to','in','be','that','with',
-                    'have'])) AS n_stops,
-               n_sym / CAST(len(ws) AS DOUBLE) AS sym_ratio
-        FROM w
-    )
-    SELECT doc_id, lang, n_words,
-           round(mean_wlen, 4) AS mean_word_len,
-           round(alpha_frac, 4) AS alpha_word_frac,
-           n_stops AS n_stop_words,
-           (n_words >= 50 AND n_words <= 100000
-            AND mean_wlen >= 3 AND mean_wlen <= 10
-            AND sym_ratio <= 0.1
-            AND alpha_frac >= 0.8
-            AND n_stops >= 2) AS keep
-    FROM m
-"""
 
 
 def q_priority_boosts(spark, sf_dir):
@@ -4353,74 +3975,6 @@ SQL_CONTENT_SNIFF = (
 )
 
 
-def q_pq_ann(spark, sf_dir):
-    """Product-quantization ANN, ADC path (similarity.pq_topk with
-    seed codebooks, train_iters=0 so the whole index build is
-    SQL-replayable): dim 64 split into m=4 subspaces, 16 codes per
-    subspace seeded from the 16 lowest-id subvectors; every corpus
-    vector becomes 4 small ints and each query's distance is the sum
-    of 4 broadcast-table lookups, rounded before ranking. The oracle
-    rebuilds codebooks, encodes, builds the distance tables, and
-    re-ranks — the full PQ index lifecycle hash-checked. (The recall
-    story — Lloyd-refined codebooks + exact shortlist re-rank — is
-    engine-side and pinned by pytest instead.)"""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-    )
-    queries = emb.filter(F.col("vec_id") < 5)
-    out = sim.pq_topk(emb, queries, k=5, m=4, n_codes=16, train_iters=0)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.col("rank").cast("int").alias("rank"),
-        "adc_dist",
-    )
-
-
-SQL_PQ_ANN = """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    subs AS (
-        SELECT vec_id, s.sub, (v)[s.sub*16+1 : s.sub*16+16] AS sv
-        FROM e CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS sub) s
-    ),
-    cb AS (
-        SELECT sub,
-               CAST(row_number() OVER (PARTITION BY sub ORDER BY vec_id)
-                    - 1 AS INT) AS code,
-               sv AS centroid
-        FROM subs WHERE vec_id < 16
-    ),
-    d2 AS (
-        SELECT s.vec_id, s.sub, c.code,
-               list_sum(list_transform(list_zip(s.sv, c.centroid),
-                   x -> (x[1] - x[2]) * (x[1] - x[2]))) AS d
-        FROM subs s JOIN cb c ON s.sub = c.sub
-    ),
-    enc AS (
-        SELECT vec_id, sub, code FROM d2
-        QUALIFY row_number() OVER (PARTITION BY vec_id, sub
-                                   ORDER BY d, code) = 1
-    ),
-    tabs AS (
-        SELECT vec_id AS query_id, sub, code, d AS dt
-        FROM d2 WHERE vec_id < 5
-    ),
-    scored AS (
-        SELECT t.query_id, n.vec_id AS neighbor_id,
-               round(sum(t.dt), 6) AS adc_dist
-        FROM enc n JOIN tabs t ON n.sub = t.sub AND n.code = t.code
-        WHERE n.vec_id <> t.query_id
-        GROUP BY t.query_id, n.vec_id
-    )
-    SELECT query_id, neighbor_id, CAST(rn AS INT) AS rank, adc_dist
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY adc_dist, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 5
-"""
-
-
 def q_request_rate_budgets(spark, sf_dir):
     """Request-rate directive parsing + politest-delay composition
     (robots.request_rates_from_robots_txt / effective_delays): each
@@ -4889,69 +4443,6 @@ SQL_WET_EXPORT = (
 )
 
 
-def q_shard_manifest(spark, sf_dir):
-    """Training-export integrity manifest (packing.shard_manifest):
-    documents shard into 64-record chunks of the doc_id total order;
-    each shard reports row count, rank range, whitespace-token sum,
-    and an order-insensitive 52-bit md5-XOR content checksum over
-    (doc_id, md5(text)) — the loader-side verification record for a
-    multi-terabyte export. The Spark side ranks via the two-level
-    prefix sum (no global window); the oracle uses a plain
-    row_number and replays digest, XOR, and sums in SQL."""
-    from ..operators.packing import shard_manifest
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.md5("text").alias("text_fp"),
-        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tok"),
-    )
-    return shard_manifest(
-        docs,
-        shard_records=64,
-        order_cols=["doc_id"],
-        token_col="n_tok",
-        digest_cols=["doc_id", "text_fp"],
-    )
-
-
-def _hex13_to_bigint_sql(expr: str) -> str:
-    """Version-stable 13-hex-char -> BIGINT parse for DuckDB: positional
-    strpos('0123456789abcdef', ...) arithmetic instead of the
-    ('0x' || ...)::BIGINT cast, whose support varies across DuckDB
-    releases (round-3 driver hash mismatch suspect)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({expr}, {i + 1}, 1)) - 1)"
-        f" * CAST({16 ** (12 - i)} AS BIGINT)"
-        for i in range(13)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-SQL_SHARD_MANIFEST = f"""
-    WITH d AS (
-        SELECT doc_id, md5(text) AS text_fp,
-               CAST(len(string_split_regex(trim(text), '\\s+'))
-                    AS BIGINT) AS n_tok,
-               row_number() OVER (ORDER BY doc_id) AS rnk
-        FROM documents
-    )
-    , g AS (
-        SELECT CAST(floor((rnk - 1) / 64) AS INT) AS shard,
-               rnk, n_tok,
-               {_hex13_to_bigint_sql(
-                   "md5(CAST(doc_id AS VARCHAR) || ':' || text_fp)")} AS dg
-        FROM d
-    )
-    SELECT shard, count(*) AS n_rows,
-           min(rnk) AS first_rank, max(rnk) AS last_rank,
-           bit_xor(dg) AS content_xor,
-           -- BIGINT cast: DuckDB sum() -> HUGEINT -> pandas float64,
-           -- which a value-stringifying driver hashes as "N.0" != "N".
-           CAST(sum(n_tok) AS BIGINT) AS n_tokens
-    FROM g GROUP BY shard
-"""
-
-
 def q_ip_politeness(spark, sf_dir):
     """Per-IP budget splitting (frontier.ip_budgets): hosts map onto
     two IPs (hn%2 — virtual hosting), each IP's budget of 10 splits
@@ -5050,90 +4541,6 @@ SQL_MIRROR_HOSTS = (
     JOIN sizes sa ON s.host_a = sa.host
     JOIN sizes sb ON s.host_b = sb.host
     WHERE s.n_shared / CAST(sa.n + sb.n - s.n_shared AS DOUBLE) >= 0.4
-"""
-)
-
-
-def q_parallel_corpus(spark, sf_dir):
-    """Parallel-text mining from declared translations: docs with
-    doc_id%3==0 declare the NEXT doc (doc_id+1, a real page) as their
-    'fr' hreflang alternate; joining both sides of the declaration
-    back to the page store yields aligned (src, tgt) document pairs —
-    the MT-training counterpart of dedup (language variants become
-    training PAIRS instead of near-dup discards). Pairs whose target
-    was never crawled drops at the join (including the last doc's
-    out-of-corpus alternate — no boundary special-case). Output
-    carries both texts' fingerprints and token counts; the oracle
-    derives the same declarations arithmetically (tag extraction
-    itself is hash-pinned by hreflang_alternates) and replays the
-    two-way join in SQL."""
-    from ..functions.urls import hreflang_links
-
-    pages = pages_from_documents(spark, sf_dir)
-    nxt = F.concat(
-        F.lit("http://h"), ((F.col("doc_id") + 1) % 4).cast("string"),
-        F.lit(".test/a/"),
-        (F.lit(20240101) + (F.col("doc_id") + 1) % 14).cast("string"),
-        F.lit("/"), F.lpad((F.col("doc_id") + 1).cast("string"), 9, "0"),
-        F.lit(".htm"),
-    )
-    inj = F.concat(
-        F.lit('<link rel="alternate" hreflang="fr" href="'), nxt,
-        F.lit('"/></head>'),
-    )
-    fx = pages.select(
-        "url", "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.replace("html_str", F.lit("</head>"), inj),
-        ).otherwise(F.col("html_str")).alias("html_str"),
-    )
-    links = hreflang_links(fx)
-    texts = pages.select("url", F.col("text").alias("t"))
-    return (
-        links.join(texts.withColumnRenamed("t", "src_text"), "url")
-        .join(
-            texts.withColumnRenamed("url", "alt_url")
-            .withColumnRenamed("t", "tgt_text"),
-            "alt_url",
-        )
-        .select(
-            F.col("url").alias("src_url"),
-            F.col("alt_url").alias("tgt_url"),
-            "hreflang",
-            F.md5("src_text").alias("src_fp"),
-            F.md5("tgt_text").alias("tgt_fp"),
-            F.size(F.split(F.trim("src_text"), r"\s+"))
-            .cast("long").alias("src_tokens"),
-            F.size(F.split(F.trim("tgt_text"), r"\s+"))
-            .cast("long").alias("tgt_tokens"),
-        )
-    )
-
-
-SQL_PARALLEL_CORPUS = (
-    _pages_cte()
-    + r"""
-    , decl AS (
-        SELECT url AS src_url,
-               'http://h' || CAST((doc_id + 1) % 4 AS VARCHAR)
-               || '.test/a/'
-               || CAST(20240101 + (doc_id + 1) % 14 AS VARCHAR) || '/'
-               || lpad(CAST(doc_id + 1 AS VARCHAR), 9, '0') || '.htm'
-                   AS tgt_url,
-               'fr' AS hreflang
-        FROM pages
-        WHERE doc_id % 3 = 0
-    )
-    SELECT d.src_url, d.tgt_url, d.hreflang,
-           md5(s.text) AS src_fp, md5(t.text) AS tgt_fp,
-           CAST(len(string_split_regex(trim(s.text), '\s+')) AS BIGINT)
-               AS src_tokens,
-           CAST(len(string_split_regex(trim(t.text), '\s+')) AS BIGINT)
-               AS tgt_tokens
-    FROM decl d
-    JOIN pages s ON d.src_url = s.url
-    JOIN pages t ON d.tgt_url = t.url
 """
 )
 
@@ -5520,8 +4927,7 @@ SQL_FRONTIER_MERGE = (
 
 # ===========================================================================
 # Round-3 additions, second batch: inverted index + term search,
-# rendezvous resharding, renewal-corrected revisit scheduling,
-# temperature-scaled mixture shares
+# rendezvous resharding, renewal-corrected revisit scheduling
 # ===========================================================================
 
 def q_inverted_index(spark, sf_dir):
@@ -5701,46 +5107,6 @@ SQL_FRESHNESS_REVISIT = (
 )
 
 
-def q_alpha_mix(spark, sf_dir):
-    """Temperature-scaled mixture shares (sampling.alpha_mix_shares,
-    alpha=0.5): per-host token counts -> share_h = tok_h^0.5 /
-    sum(tok^0.5) and the implied per-host epoch count under a
-    corpus-sized budget — the policy table token_budget_mix consumes.
-    The oracle replays pow/sum/round in SQL; all math is IEEE double
-    on exact integer token counts."""
-    pages = pages_from_documents(spark, sf_dir)
-    toks = pages.select(
-        "host",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("long")
-        .alias("n_tok"),
-    )
-    return alpha_mix_shares(toks, "host", "n_tok", alpha=0.5)
-
-
-SQL_ALPHA_MIX = (
-    _pages_cte()
-    + r"""
-    , toks AS (
-        SELECT host,
-               CAST(len(regexp_split_to_array(trim(text), '\s+'))
-                    AS BIGINT) AS n_tok
-        FROM pages
-    )
-    , g AS (
-        SELECT host, CAST(sum(n_tok) AS DOUBLE) AS tok_g
-        FROM toks GROUP BY host
-    )
-    , p AS (SELECT host, tok_g, pow(tok_g, 0.5) AS pw FROM g)
-    , tot AS (SELECT sum(pw) AS z, sum(tok_g) AS tok_all FROM p)
-    SELECT host, CAST(tok_g AS BIGINT) AS tokens,
-           round(pw / z, 6) AS share,
-           round((pw / z) * tok_all / tok_g, 6) AS epochs
-    FROM p CROSS JOIN tot
-"""
-)
-
-
 def q_cdx_export(spark, sf_dir):
     """CDXJ index lines (warc.cdx_records): per-capture
     `<surt> <ts14> <json>` with SURT host-reversal keys — the lookup
@@ -5839,8 +5205,6 @@ SQL_DISCOVERY_YIELD = (
     FROM per p LEFT JOIN newl n ON p.host = n.host
 """
 )
-
-
 
 
 # ===========================================================================
@@ -6156,8 +5520,6 @@ SQL_PARAM_SIGNIFICANCE = (
 )
 
 
-
-
 # ===========================================================================
 # Round-3 additions, fourth batch: phrase search, site-structure
 # profile, link-exchange detection, robots TTL refresh gate
@@ -6352,8 +5714,6 @@ SQL_STALE_ROBOTS = (
 )
 
 
-
-
 # ===========================================================================
 # Round-3 additions, fifth batch: containment dedup, host clusters,
 # frontier drain forecast
@@ -6534,8 +5894,6 @@ SQL_DRAIN_FORECAST = (
 )
 
 
-
-
 # ===========================================================================
 # Round-3 additions, sixth batch: PII scrubbing
 # ===========================================================================
@@ -6632,8 +5990,6 @@ SQL_PII_SCRUB = r"""
 """
 
 
-
-
 # ===========================================================================
 # Round-3 additions, seventh batch: RFC 9309 wildcard rules
 # ===========================================================================
@@ -6717,8 +6073,6 @@ SQL_ROBOTS_WILDCARDS = (
     WHERE g.allow IS NULL OR g.allow
 """
 )
-
-
 
 
 # ===========================================================================
@@ -6843,8 +6197,6 @@ SQL_CONTENT_DRIFT = (
 )
 
 
-
-
 # ===========================================================================
 # Round-3 additions, ninth batch: incremental index maintenance
 # ===========================================================================
@@ -6882,88 +6234,6 @@ SQL_INDEX_DELTA_MERGE = r"""
            string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
                AS postings
     FROM per GROUP BY term HAVING count(*) >= 3
-"""
-
-
-def q_dsir_select(spark, sf_dir):
-    """DSIR-style importance resampling (Xie et al. 2023): select the
-    100 candidate docs whose hashed uni+bigram profile best matches a
-    target domain (sources src0/src1 are the target; everything else
-    is the candidate pool). Weights are exact BIGINTs — each bucket's
-    Laplace-smoothed log-ratio is scaled to an integer
-    (round(1e6 * ln)), so selection order and output carry no
-    cross-engine float; the single ln per bucket is margin-pinned by
-    tests/test_snapshots_sampling.py. Slice doc_id < 500 keeps the
-    cost SF-invariant."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return sampling.dsir_select(
-        docs,
-        F.col("source").isin("src0", "src1"),
-        n_buckets=1024,
-        k=100,
-    )
-
-
-SQL_DSIR_SELECT = f"""
-    WITH docs0 AS (
-      SELECT doc_id, text, source IN ('src0', 'src1') AS is_target
-      FROM documents WHERE doc_id < 500
-    ),
-    toks AS (
-      SELECT doc_id, is_target,
-             list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                         x -> length(x) > 0) AS tk
-      FROM docs0
-    ),
-    feats AS (
-      SELECT doc_id, is_target,
-             unnest(list_concat(
-               tk,
-               list_transform(range(1, greatest(len(tk), 1)),
-                              i -> tk[i] || ' ' || tk[i + 1]))) AS feat
-      FROM toks
-    ),
-    b AS (
-      SELECT doc_id, is_target,
-             {_hex13_to_bigint_sql("md5(feat)")} % 1024 AS bucket
-      FROM feats
-    ),
-    counts AS (
-      SELECT doc_id, is_target, bucket, CAST(count(*) AS BIGINT) AS cnt
-      FROM b GROUP BY doc_id, is_target, bucket
-    ),
-    rawb AS (
-      SELECT bucket, CAST(sum(cnt) AS BIGINT) AS cr
-      FROM counts WHERE NOT is_target GROUP BY bucket
-    ),
-    tgtb AS (
-      SELECT bucket, CAST(sum(cnt) AS BIGINT) AS ct
-      FROM counts WHERE is_target GROUP BY bucket
-    ),
-    tot AS (
-      SELECT CAST(coalesce(sum(CASE WHEN is_target THEN cnt END), 0)
-                  AS BIGINT) AS tt,
-             CAST(coalesce(sum(CASE WHEN NOT is_target THEN cnt END), 0)
-                  AS BIGINT) AS tr
-      FROM counts
-    ),
-    lr AS (
-      SELECT r.bucket,
-             CAST(round(1000000.0 * ln(
-               CAST((coalesce(t.ct, 0) + 1) * (tot.tr + 1024) AS DOUBLE)
-               / CAST((r.cr + 1) * (tot.tt + 1024) AS DOUBLE)), 0)
-               AS BIGINT) AS lr
-      FROM rawb r LEFT JOIN tgtb t USING (bucket) CROSS JOIN tot
-    ),
-    wts AS (
-      SELECT c.doc_id, CAST(sum(c.cnt * l.lr) AS BIGINT) AS weight
-      FROM counts c JOIN lr l USING (bucket)
-      WHERE NOT c.is_target GROUP BY c.doc_id
-    )
-    SELECT doc_id, weight,
-           CAST(row_number() OVER (ORDER BY weight DESC, doc_id) AS INT)
-             AS rank
-    FROM wts ORDER BY weight DESC, doc_id LIMIT 100
 """
 
 
@@ -7010,7 +6280,6 @@ _QUERIES_BY_FAMILY = {
     "merge_upsert": (q_merge_upsert, SQL_MERGE_UPSERT),
     "pos_tags": (q_pos_tags, SQL_POS_TAGS),
     "repetition_score": (q_repetition_score, SQL_REPETITION_SCORE),
-    "lm_nll": (q_lm_nll, SQL_LM_NLL),
     "sentence_dedup": (q_sentence_dedup, SQL_SENTENCE_DEDUP),
     # "pii_scrub" is registered ONCE, in the round-3 additions below
     # (the duplicate key that used to sit here silently shadowed it).
@@ -7018,12 +6287,8 @@ _QUERIES_BY_FAMILY = {
     "adaptive_length": (q_adaptive_length, SQL_ADAPTIVE_LENGTH),
     "content_drift": (q_content_drift, SQL_CONTENT_DRIFT),
     "index_delta_merge": (q_index_delta_merge, SQL_INDEX_DELTA_MERGE),
-    "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
     "corpus_stats": (q_corpus_stats, SQL_CORPUS_STATS),
     "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
-    # embeddings
-    "ann_topk": (q_ann_topk, SQL_ANN_TOPK),
-    "label_centroids": (q_label_centroids, SQL_LABEL_CENTROIDS),
     # sequential-consume clusterings — recursive-CTE oracles since r4
     "news_clusters_lsh": (q_news_clusters_lsh, SQL_NEWS_CLUSTERS_LSH),
     "v1_cross_source_clusters": (
@@ -7035,9 +6300,6 @@ _QUERIES_BY_FAMILY = {
     "simhash_near_dups": (q_simhash_near_dups, SQL_SIMHASH_NEAR_DUPS),
     "duplicated_spans": (q_duplicated_spans, SQL_DUPLICATED_SPANS),
     "dup_span_stats": (q_dup_span_stats, SQL_DUP_SPAN_STATS),
-    "pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
-    "embedding_near_dups": (q_embedding_near_dups, SQL_EMBEDDING_NEAR_DUPS),
-    "ivf_ann": (q_ivf_ann, SQL_ANN_TOPK),
     # link-graph centrality + skew telemetry
     "link_rank": (q_link_rank, SQL_LINK_RANK),
     "hot_hosts": (q_hot_hosts, SQL_HOT_HOSTS),
@@ -7049,7 +6311,6 @@ _QUERIES_BY_FAMILY = {
     "crawl_delay_budgets": (q_crawl_delay_budgets, SQL_CRAWL_DELAY_BUDGETS),
     "host_quality_filter": (q_host_quality_filter, SQL_HOST_QUALITY_FILTER),
     "sitemap_urls": (q_sitemap_urls, SQL_SITEMAP_URLS),
-    "token_budget_mix": (q_token_budget_mix, SQL_TOKEN_BUDGET_MIX),
     "fetch_retries": (q_fetch_retries, SQL_FETCH_RETRIES),
     "redirect_resolution": (q_redirect_resolution, SQL_REDIRECT_RESOLUTION),
     "anchor_texts": (q_anchor_texts, SQL_ANCHOR_TEXTS),
@@ -7058,7 +6319,6 @@ _QUERIES_BY_FAMILY = {
     "robots_sitemaps": (q_robots_sitemaps, SQL_ROBOTS_SITEMAPS),
     "conditional_fetch": (q_conditional_fetch, SQL_CONDITIONAL_FETCH),
     "boilerplate_removal": (q_boilerplate_removal, SQL_BOILERPLATE_REMOVAL),
-    "gopher_rules": (q_gopher_rules, SQL_GOPHER_RULES),
     "priority_boosts": (q_priority_boosts, SQL_PRIORITY_BOOSTS),
     "global_cap": (q_global_cap, SQL_GLOBAL_CAP),
     "url_templates": (q_url_templates, SQL_URL_TEMPLATES),
@@ -7074,7 +6334,6 @@ _QUERIES_BY_FAMILY = {
     "politeness_composition": (q_politeness_composition,
                                SQL_POLITENESS_COMPOSITION),
     "content_sniff": (q_content_sniff, SQL_CONTENT_SNIFF),
-    "pq_ann": (q_pq_ann, SQL_PQ_ANN),
     "request_rate_budgets": (q_request_rate_budgets,
                              SQL_REQUEST_RATE_BUDGETS),
     "meta_robots_gate": (q_meta_robots_gate, SQL_META_ROBOTS_GATE),
@@ -7082,10 +6341,8 @@ _QUERIES_BY_FAMILY = {
     "sitemap_index": (q_sitemap_index, SQL_SITEMAP_INDEX),
     "etag_gate": (q_etag_gate, SQL_ETAG_GATE),
     "wet_export": (q_wet_export, SQL_WET_EXPORT),
-    "shard_manifest": (q_shard_manifest, SQL_SHARD_MANIFEST),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
     "mirror_hosts": (q_mirror_hosts, SQL_MIRROR_HOSTS),
-    "parallel_corpus": (q_parallel_corpus, SQL_PARALLEL_CORPUS),
     "multimodal_features": (
         q_multimodal_features,
         SQL_MULTIMODAL_FEATURES,
@@ -7105,8 +6362,6 @@ _QUERIES_BY_FAMILY = {
     "term_search": (q_term_search, SQL_TERM_SEARCH),
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
     "freshness_revisit": (q_freshness_revisit, SQL_FRESHNESS_REVISIT),
-    "alpha_mix": (q_alpha_mix, SQL_ALPHA_MIX),
-    "dsir_select": (q_dsir_select, SQL_DSIR_SELECT),
     "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
     "discovery_yield": (q_discovery_yield, SQL_DISCOVERY_YIELD),
     "bm25_search": (q_bm25_search, SQL_BM25_SEARCH),
@@ -7174,22 +6429,28 @@ _R5_ROTATION = [
     "minhash_near_dups", "near_dup_groups", "canonical_best",
     "crawl_frontier_cuckoo", "crawl_host_lineage",
     #
-    # Oldest-first refill: 36 of the 37 entries whose latest green
-    # row is CORRECTNESS_r02.json. snapshot_asof yields its slot to
-    # the changed-implementation set above (hard rule beats the soft
-    # age bound); it keeps its r2 green row — earned by the
-    # implementation it still has — plus the always-on local
-    # all-pairs gate, and heads the r6-style refill if one ever runs.
+    # Oldest-first refill: the 29 entries still registered whose
+    # latest green row was CORRECTNESS_r02.json when this window was
+    # first drawn (the registry diet deleted 7 of the original 36:
+    # the LM-training and embedding-ANN entries).
     "index_daterange", "front_page_ranking", "entry_lookup",
     "comments_sort", "group_by_day", "pricing_summary",
     "top_revenue_customers", "order_priority", "running_total",
     "sessionize", "event_type_pivot", "distinct_users", "lang_id",
     "quality_score", "token_count", "fingerprint", "dedup_stats",
     "dedup_first", "ngram_overlap", "merge_upsert", "pos_tags",
-    "repetition_score", "lm_nll", "sentence_dedup", "decontaminate",
-    "corpus_stats", "filter_funnel", "ann_topk", "label_centroids",
-    "duplicated_spans", "dup_span_stats", "pack_sequences",
-    "embedding_near_dups", "ivf_ann", "link_rank", "hot_hosts",
+    "repetition_score", "sentence_dedup", "corpus_stats",
+    "filter_funnel", "duplicated_spans", "dup_span_stats",
+    "link_rank", "hot_hosts",
+    #
+    # The 7 freed slots refill by the same rule. snapshot_asof goes
+    # first: its latest green row is still CORRECTNESS_r02.json (it
+    # yielded its r5 slot to the changed-implementation set above).
+    # Then the 6 oldest after it: every other remaining entry's
+    # latest green row is r03 or newer, and the r03 ties are taken
+    # in _QUERIES_BY_FAMILY order.
+    "snapshot_asof", "domain_mix", "robots_rules", "crawl_diff",
+    "crawl_delay_budgets", "host_quality_filter", "sitemap_urls",
 ]
 
 QUERIES = {

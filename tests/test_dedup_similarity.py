@@ -1,14 +1,10 @@
-"""Dedup + ANN operators: correctness vs brute-force ground truth."""
+"""Dedup operators: correctness vs brute-force ground truth."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from news_combinator_spark.datagen import reference_grammar_pages
 from news_combinator_spark.functions.textfns import jaccard, tokenize
 from news_combinator_spark.operators import dedup as dd
-from news_combinator_spark.operators import similarity as sim
-
-from conftest import SF_MED
 
 
 @pytest.fixture(scope="module")
@@ -65,141 +61,6 @@ def test_ngram_jaccard_pairs(spark):
            for r in dd.ngram_jaccard_pairs(df, pairs, n=5).collect()}
     assert out[(1, 2)] > 0.3
     assert out[(1, 3)] == 0.0
-
-
-def test_embedding_near_dups_threshold(spark):
-    emb = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0, 0.0]),
-            (2, [0.999, 0.01, 0.0]),
-            (3, [0.0, 1.0, 0.0]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = dd.embedding_near_dups(emb, threshold=0.95).collect()
-    assert {(r["a"], r["b"]) for r in out} == {(1, 2)}
-
-
-def test_embedding_near_dups_auto_bucket_matches_bruteforce(spark):
-    """Above the row guard the default path blocks by multi-probed IVF
-    cells instead of an all-pairs cross join; on a clustered corpus the
-    bucketed pair set must equal brute force exactly (near-dup vectors
-    share their top cells), and every pair is exact-cosine verified."""
-    import math
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    vid = 0
-    for c in range(20):  # 20 well-separated direction clusters
-        base = [rng.gauss(0, 1) for _ in range(16)]
-        nb = math.sqrt(sum(x * x for x in base))
-        base = [x / nb for x in base]
-        for _ in range(10):  # 10 near-identical members each
-            v = [x + rng.gauss(0, 0.01) for x in base]
-            rows.append((vid, v))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact = {
-        (r["a"], r["b"])
-        for r in dd.embedding_near_dups(
-            emb, threshold=0.95, auto_bucket_rows=10_000
-        ).collect()
-    }
-    bucketed = {
-        (r["a"], r["b"])
-        for r in dd.embedding_near_dups(
-            emb, threshold=0.95, auto_bucket_rows=0, n_cells=8, n_probe=2
-        ).collect()
-    }
-    assert len(exact) > 0
-    assert bucketed == exact
-
-
-def test_ivf_recall_vs_bruteforce(spark):
-    emb = spark.read.parquet(f"{SF_MED}/embeddings.parquet").withColumn(
-        "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-    )
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = sim.brute_force_topk(emb, queries, k=5).collect()
-    # r3 defaults (multi-assign 2): gate tightened 0.5 -> 0.9 per the
-    # bench sweep (0.94 measured at 8 cells / 4 probes / ca=2)
-    approx = sim.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / 5 for q in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.9, recalls
-
-
-def test_ivf_corpus_multi_assign_improves_recall(spark):
-    """corpus_assign=2 replicates each corpus vector into its 2 nearest
-    cells; boundary neighbors become reachable through either cell, so
-    recall at the same n_probe must not drop and should clear a higher
-    floor than the single-assignment gate above."""
-    emb = spark.read.parquet(f"{SF_MED}/embeddings.parquet").withColumn(
-        "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-    )
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = sim.brute_force_topk(emb, queries, k=5).collect()
-
-    def mean_recall(corpus_assign):
-        approx = sim.ivf_topk(
-            emb, queries, k=5, n_cells=8, n_probe=4,
-            corpus_assign=corpus_assign,
-        ).collect()
-        exact_sets, approx_sets = {}, {}
-        for r in exact:
-            exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        for r in approx:
-            approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        rs = [
-            len(exact_sets[q] & approx_sets.get(q, set())) / 5
-            for q in exact_sets
-        ]
-        return sum(rs) / len(rs)
-
-    r1, r2 = mean_recall(1), mean_recall(2)
-    assert r2 >= r1, (r1, r2)
-    assert r2 >= 0.9, (r1, r2)
-
-
-def test_ivf_full_probe_equals_bruteforce(spark):
-    """Exactness invariant: probing EVERY cell (n_probe == n_cells)
-    removes the approximation entirely, so IVF's top-k neighbor sets
-    must equal brute force — the recall knob really does buy back
-    exactness at full cost."""
-    emb = spark.read.parquet(f"{SF_MED}/embeddings.parquet").withColumn(
-        "embedding", F.expr("transform(embedding, x -> cast(x as double))")
-    )
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = sim.brute_force_topk(emb, queries, k=5).collect()
-    full = sim.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=8).collect()
-    exact_sets, full_sets = {}, {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in full:
-        full_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    assert full_sets == exact_sets
-
-
-def test_bruteforce_topk_self_excluded_and_ranked(spark):
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [0.9, 0.1]),
-            (2, [0.0, 1.0]),
-            (3, [1.0, 0.05]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = sim.brute_force_topk(emb, emb.filter("vec_id = 0"), k=2).collect()
-    assert [r["neighbor_id"] for r in sorted(out, key=lambda r: r["rank"])] == [3, 1]
 
 
 def test_near_dup_groups_vs_bruteforce_unionfind(spark, corpus_df):
@@ -380,119 +241,6 @@ def _pq_fixture(spark):
         "vec_id long, embedding array<double>",
     )
     return vecs, df
-
-
-def test_pq_adc_exactness_invariant(spark):
-    """With codebooks covering every distinct subvector, ADC distance
-    IS the exact squared L2 distance and the ranking equals exact
-    brute force — quantization error is provably the ONLY
-    approximation in the operator."""
-    import numpy as np
-
-    vecs, df = _pq_fixture(spark)
-    got = sim.pq_topk(
-        df, df.filter("vec_id < 3"), k=4, m=2, n_codes=16
-    ).toPandas()
-    for q in range(3):
-        d = ((vecs - vecs[q]) ** 2).sum(axis=1)
-        oracle = sorted(
-            (round(float(d[i]), 6), i) for i in range(20) if i != q
-        )[:4]
-        mine = got[got.query_id == q].sort_values("rank")
-        assert [i for _, i in oracle] == list(mine.neighbor_id)
-        assert np.allclose(
-            [dd_ for dd_, _ in oracle], mine.adc_dist, atol=1e-6
-        )
-
-
-def test_pq_rerank_recovers_recall(spark):
-    """Exact shortlist re-rank: recall@5 vs the exact-L2 oracle rises
-    monotonically with the shortlist and a full-corpus shortlist
-    reproduces exact search — the two-stage ADC+re-rank design works
-    end to end on real embeddings."""
-    import numpy as np
-
-    pdf = spark.read.parquet(f"{SF_MED}/embeddings.parquet").toPandas()
-    V = np.stack(pdf.embedding.values).astype(float)
-    ids = pdf.vec_id.values
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(ids, V)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = df.filter("vec_id < 3")
-
-    def l2_oracle(q, k=5):
-        d = ((V - V[ids == q][0]) ** 2).sum(axis=1)
-        return [int(ids[j]) for j in np.argsort(d) if ids[j] != q][:k]
-
-    def recall(rerank):
-        got = sim.pq_topk(
-            df, queries, k=5, m=8, n_codes=16, train_iters=1,
-            rerank=rerank,
-        ).toPandas()
-        return sum(
-            len(set(got[got.query_id == q].neighbor_id)
-                & set(l2_oracle(q))) / 5
-            for q in range(3)
-        ) / 3
-
-    r0, r50 = recall(0), recall(50)
-    assert r50 >= r0
-    assert r50 >= 0.5, (r0, r50)
-    full = sim.pq_topk(
-        df, queries, k=5, m=8, n_codes=16, train_iters=1,
-        rerank=len(pdf) + 1,
-    ).toPandas()
-    for q in range(3):
-        mine = full[full.query_id == q].sort_values("rank")
-        assert list(mine.neighbor_id) == l2_oracle(q)
-
-
-def test_pq_invalid_params_raise(spark):
-    _, df = _pq_fixture(spark)
-    with pytest.raises(ValueError, match="divisible"):
-        sim.pq_codebooks(df, m=3, n_codes=4, dim=8)
-    with pytest.raises(ValueError, match="positive"):
-        sim.pq_topk(df, df, m=0)
-
-
-def test_ivf_pq_blocking(spark):
-    """IVF-PQ: with n_probe >= n_cells the blocking is a no-op (same
-    output as plain ADC); at partial probes + full rerank the only
-    possible loss is a true neighbor outside the probed cells, so
-    recall vs exact L2 stays at a usable floor."""
-    import numpy as np
-
-    pdf = spark.read.parquet(f"{SF_MED}/embeddings.parquet").toPandas()
-    V = np.stack(pdf.embedding.values).astype(float)
-    ids = pdf.vec_id.values
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(ids, V)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = df.filter("vec_id < 3")
-    plain = sim.pq_topk(df, queries, k=5, m=8, n_codes=16).toPandas()
-    noop = sim.pq_topk(
-        df, queries, k=5, m=8, n_codes=16, n_cells=8, n_probe=8
-    ).toPandas()
-    key = lambda d: sorted(map(tuple, d[["query_id", "neighbor_id",
-                                         "rank"]].values.tolist()))
-    assert key(plain) == key(noop)
-
-    def l2_oracle(q, k=5):
-        d = ((V - V[ids == q][0]) ** 2).sum(axis=1)
-        return [int(ids[j]) for j in np.argsort(d) if ids[j] != q][:k]
-
-    blocked = sim.pq_topk(
-        df, queries, k=5, m=8, n_codes=16, n_cells=8, n_probe=4,
-        rerank=100,
-    ).toPandas()
-    rec = sum(
-        len(set(blocked[blocked.query_id == q].neighbor_id)
-            & set(l2_oracle(q))) / 5
-        for q in range(3)
-    ) / 3
-    assert rec >= 0.5, rec
 
 
 def test_mirror_hosts_threshold_and_blocking(spark):

@@ -181,13 +181,7 @@ def test_cte_oracles_agree_at_sf01_too(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_LARGE}/documents.parquet')"
     )
-    # dsir_select rides along (ADVICE r4): it is in SQL_BENCH_QUERIES
-    # so it RUNS at sf0.1, and its one float op (round(1e6*ln)) has
-    # its rounding margin pinned only on the sf0.01 corpus — this
-    # compare catches an sf0.1 bucket value landing near a .5
-    # boundary that the sf0.01 pin cannot see.
-    for name in ("news_clusters_lsh", "v1_cross_source_clusters",
-                 "dsir_select"):
+    for name in ("news_clusters_lsh", "v1_cross_source_clusters"):
         fn, sql = QUERIES[name]
         got = normalize_frame(fn(spark, SF_LARGE).toPandas())
         exp = normalize_frame(duck.execute(sql).fetchdf())

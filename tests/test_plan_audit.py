@@ -152,8 +152,8 @@ def test_hot_queries_whole_stage_codegen(spark, qname):
         "repetition_score",
         "dedup_first",
         "pii_scrub",
-        "decontaminate",
-        "lm_nll",
+        "group_by_day",
+        "entry_lookup",
     ],
 )
 def test_no_python_udf_in_jvm_expressible_queries(spark, qname):
@@ -219,35 +219,31 @@ _LAZY_QUERIES = [
     "sessionize", "event_type_pivot", "distinct_users", "lang_id",
     "quality_score", "token_count", "fingerprint", "dedup_stats",
     "dedup_first", "ngram_overlap", "summarize", "merge_upsert",
-    "pos_tags", "repetition_score", "sentence_dedup", "ann_topk",
-    "label_centroids", "minhash_near_dups", "simhash_near_dups",
-    "embedding_near_dups", "ivf_ann", "multimodal_features",
+    "pos_tags", "repetition_score", "sentence_dedup",
+    "minhash_near_dups", "simhash_near_dups", "multimodal_features",
     "audio_features", "video_features", "pii_scrub",
-    "decontaminate", "corpus_stats", "filter_funnel",
-    "lm_nll", "v1_cross_source_clusters", "duplicated_spans",
-    "dup_span_stats", "pack_sequences",
+    "corpus_stats", "filter_funnel", "v1_cross_source_clusters",
+    "duplicated_spans", "dup_span_stats",
     # round-2 additions (link_rank excluded: page_rank iterates
     # eagerly via localCheckpoint, audited in test_linkgraph)
     "hot_hosts", "snapshot_asof", "domain_mix", "robots_rules",
     "crawl_diff", "crawl_delay_budgets", "host_quality_filter",
-    "sitemap_urls", "token_budget_mix",
+    "sitemap_urls",
     "fetch_retries", "redirect_resolution", "anchor_texts",
     "warc_records", "recrawl_priority", "robots_sitemaps",
-    "conditional_fetch", "boilerplate_removal", "gopher_rules",
+    "conditional_fetch", "boilerplate_removal",
     "priority_boosts", "global_cap", "url_templates",
     "robots_longest_match", "soft404_filter", "mojibake_repair",
     "adaptive_budgets", "canonical_consolidate", "registered_domains",
     "normalize_text", "admission_funnel", "politeness_composition",
-    "content_sniff", "pq_ann", "request_rate_budgets",
+    "content_sniff", "request_rate_budgets",
     "meta_robots_gate", "hreflang_alternates", "sitemap_index",
-    "etag_gate", "wet_export", "shard_manifest", "ip_politeness",
-    "mirror_hosts", "parallel_corpus",
+    "etag_gate", "wet_export", "ip_politeness", "mirror_hosts",
     # round-3 additions
     "delta_admit", "trap_hosts", "host_reputation",
     "ngram_counts", "wat_export", "frontier_merge",
     "inverted_index", "term_search", "shard_rendezvous",
-    "freshness_revisit", "alpha_mix", "dsir_select", "cdx_export",
-    "discovery_yield",
+    "freshness_revisit", "cdx_export", "discovery_yield",
     "bm25_search", "hits_rank", "opic_priority", "param_significance",
     "phrase_search", "path_profile", "reciprocal_hosts", "stale_robots",
     "containment_pairs", "host_clusters", "drain_forecast",
@@ -512,7 +508,6 @@ def test_bench_battery_covers_all_oracle_queries():
         "url_parse",  # sub-second scalar pass, folded into extract
         "minhash_near_dups", "simhash_near_dups", "duplicated_spans",
         "dedup_stats", "distinct_users", "multimodal_features",
-        "ivf_ann",  # recall-gated in pytest; brute-force phase benched
     }
     dual = {n for n, (_f, s) in Q.QUERIES.items() if s is not None}
     missing = sorted(dual - battery - phase_benched)

@@ -10,6 +10,7 @@ collapsed-away duplicates are visible.
 """
 
 import ast
+import re
 from pathlib import Path
 
 import news_combinator_spark.plans.queries as q
@@ -78,3 +79,25 @@ def test_every_window_query_has_an_oracle_or_is_declared_rows_only():
     }
     # the contract-exempt set: sequential-consume clusterings only
     assert rows_only <= {"news_clusters_lsh", "v1_cross_source_clusters"}
+
+
+def test_coverage_table_matches_registry():
+    """COVERAGE.md's Registry table has one row per registry entry:
+    an entry added without a row (naming its SURVEY.md §2 row or
+    marking it an engine addition), or a row left behind by a deleted
+    entry, fails here."""
+    cov = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
+    section = cov.split("\n## Registry\n", 1)[1].split("\n## ", 1)[0]
+    names = [
+        m.group(1)
+        for m in re.finditer(r"^\| `([a-z0-9_]+)` \|", section, re.M)
+    ]
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    assert dupes == [], f"duplicate COVERAGE registry rows: {dupes}"
+    keys = _dict_literal_keys("_QUERIES_BY_FAMILY")
+    unlisted = sorted(set(keys) - set(names))
+    stale = sorted(set(names) - set(keys))
+    assert (unlisted, stale) == ([], []), (
+        f"registry entries without a COVERAGE row: {unlisted}; "
+        f"COVERAGE rows without a registry entry: {stale}"
+    )

@@ -1,7 +1,6 @@
 """Semantics of the round-3 second-batch operators beyond the DuckDB
 hash gate: inverted index + conjunctive search, rendezvous resharding
-stability, renewal-corrected revisit scheduling, alpha mixture
-shares."""
+stability, renewal-corrected revisit scheduling."""
 
 import math
 
@@ -13,7 +12,6 @@ from news_combinator_spark.operators.bucketing import (
     rendezvous_shard,
     reshard_moves,
 )
-from news_combinator_spark.operators.sampling import alpha_mix_shares
 from news_combinator_spark.operators.snapshots import freshness_revisit
 
 from conftest import SF_MED
@@ -210,32 +208,6 @@ def test_freshness_single_observation_excluded(spark):
 
     rows = [("u", dt.datetime(2024, 1, 1), "a")]
     assert freshness_revisit(_obs(spark, rows)).count() == 0
-
-
-# ------------------------------------------------------------ alpha mix
-
-
-def test_alpha_mix_shares_sum_to_one_and_order(spark):
-    df = spark.createDataFrame(
-        [("a", 1000), ("b", 100), ("c", 10)], "g string, tok long"
-    )
-    rows = {r.g: r for r in alpha_mix_shares(df, "g", "tok", 0.5).collect()}
-    assert abs(sum(r.share for r in rows.values()) - 1.0) < 1e-5
-    # sqrt scaling compresses the range: head downweighted, tail up
-    assert rows["a"].share / rows["c"].share == pytest.approx(
-        math.sqrt(100), rel=1e-3
-    )
-    assert rows["a"].epochs < 1.0 < rows["c"].epochs
-
-
-def test_alpha_one_is_natural_distribution(spark):
-    df = spark.createDataFrame(
-        [("a", 300), ("b", 100)], "g string, tok long"
-    )
-    rows = {r.g: r for r in alpha_mix_shares(df, "g", "tok", 1.0).collect()}
-    assert rows["a"].share == pytest.approx(0.75, abs=1e-6)
-    assert rows["a"].epochs == pytest.approx(1.0, abs=1e-6)
-    assert rows["b"].epochs == pytest.approx(1.0, abs=1e-6)
 
 
 # ------------------------------------------------------------- cdx/surt

@@ -178,42 +178,6 @@ def test_snapshot_diff_all_statuses(spark):
     }
 
 
-def test_token_budget_mix_membership_and_clamp(spark):
-    from news_combinator_spark.operators.sampling import token_budget_mix
-
-    # lang 'a' huge (samples down), 'b' tiny vs its share (clamps at
-    # 1.0, kept whole), 'c' absent from shares (dropped entirely)
-    rows = (
-        [(f"a{i}", "a", 50) for i in range(200)]
-        + [(f"b{i}", "b", 10) for i in range(10)]
-        + [(f"c{i}", "c", 30) for i in range(20)]
-    )
-    df = spark.createDataFrame(rows, "id_str string, lang string, n_tok long")
-    shares = {"a": 0.5, "b": 0.5}
-    kept = token_budget_mix(
-        df, "lang", "id_str", "n_tok", shares, budget_frac=0.4
-    ).toPandas()
-
-    total = sum(r[2] for r in rows)
-    tok = {"a": 200 * 50, "b": 10 * 10, "c": 20 * 30}
-    exp_ids = set()
-    for id_str, lang, _ in rows:
-        if lang not in shares:
-            continue
-        rate = min(1.0, shares[lang] * 0.4 * total / tok[lang])
-        if rate >= 1.0:
-            exp_ids.add(id_str)
-        else:
-            thr = format(int(rate * (1 << 52)), "x").rjust(13, "0")
-            if hashlib.md5(id_str.encode()).hexdigest()[:13] < thr:
-                exp_ids.add(id_str)
-    assert set(kept.id_str) == exp_ids
-    by = kept.groupby("lang").size()
-    assert by.get("b", 0) == 10           # clamped group kept whole
-    assert 0 < by["a"] < 200              # sampled down
-    assert "c" not in set(kept.lang)      # unweighted group dropped
-
-
 def test_recrawl_priority_rates_and_buckets(spark):
     """Change rate = consecutive-distinct transitions / (n_obs - 1);
     single observation -> rate 0; buckets map to the frontier's 0/1/2
@@ -306,51 +270,3 @@ def test_etag_candidates_null_logic(spark):
     )
     kept = {r.url for r in etag_candidates(cand, store).collect()}
     assert kept == {"u_old_match", "u_nullstore", "u_diff", "u_new"}
-
-
-def test_dsir_bucket_log_ratios_are_margin_safe_and_cross_engine(duck):
-    """The one float op in dsir_select is round(1e6 * ln(ratio)) per
-    bucket. ln is not guaranteed correctly rounded, so cross-engine
-    agreement needs every scaled value to sit FAR from a .5 rounding
-    boundary (ulp-level ln disagreement is ~1e-9 here). Pins the
-    margin at sf0.01 and checks the SQL oracle's bucket weights equal
-    an independent pure-Python computation bit-for-bit."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    B = 1024
-    rows = duck.execute(
-        "SELECT doc_id, text, source FROM documents "
-        "WHERE doc_id < 500 ORDER BY doc_id"
-    ).fetchall()
-
-    def bucket(f):
-        return int(hashlib.md5(f.encode()).hexdigest()[:13], 16) % B
-
-    ct: Counter = Counter()
-    cr: Counter = Counter()
-    for _did, text, src in rows:
-        tk = text.split()
-        feats = tk + [f"{a} {b}" for a, b in zip(tk, tk[1:])]
-        bs = Counter(bucket(f) for f in feats)
-        tgt = src in ("src0", "src1")
-        for k, v in bs.items():
-            (ct if tgt else cr)[k] += v
-    tt, tr = sum(ct.values()), sum(cr.values())
-    scaled = {
-        b: 1e6
-        * math.log(((ct.get(b, 0) + 1) * (tr + B)) / ((cr[b] + 1) * (tt + B)))
-        for b in cr
-    }
-    min_margin = min(abs(v % 1.0 - 0.5) for v in scaled.values())
-    assert min_margin > 1e-6, min_margin
-
-    from news_combinator_spark.plans.queries import SQL_DSIR_SELECT
-
-    lr_sql = SQL_DSIR_SELECT.split("wts AS")[0].rstrip().rstrip(",")
-    got = dict(
-        duck.execute(lr_sql + "\nSELECT bucket, lr FROM lr").fetchall()
-    )
-    expect = {b: round(v) for b, v in scaled.items()}
-    assert got == expect
