@@ -172,13 +172,10 @@ def budgets_df(spark: SparkSession) -> DataFrame:
 
 
 def robots_df(spark: SparkSession) -> DataFrame:
-    """robots(host, disallow_prefix): one rule — h1.test disallows one
+    """robots(host, path_prefix): one rule — h1.test disallows one
     day directory (engine handles arbitrary prefix lists)."""
-    rows = [
-        (ROBOTS_BLOCKED_HOST,
-         f"http://{ROBOTS_BLOCKED_HOST}/a/{ROBOTS_BLOCKED_DAY}/")
-    ]
-    return spark.createDataFrame(rows, "host string, disallow_prefix string")
+    rows = [(ROBOTS_BLOCKED_HOST, f"/a/{ROBOTS_BLOCKED_DAY}/")]
+    return spark.createDataFrame(rows, "host string, path_prefix string")
 
 
 # ---------------------------------------------------------------------------

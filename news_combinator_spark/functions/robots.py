@@ -2,7 +2,7 @@
 
 The reference delegates robots handling to scrapy's middleware
 (reconstruction/crawler settings enable ROBOTSTXT_OBEY); the frontier
-here gates candidates with `apply_robots` over (host, disallow_prefix)
+here gates candidates with `apply_robots` over (host, path_prefix)
 rules. This module produces those rules from RAW robots.txt bodies —
 one body per host, fetched like any other page — so the whole
 politeness pipeline runs from crawl data with no driver-side parsing.
@@ -19,7 +19,7 @@ Semantics (the subset `apply_robots` can enforce):
   ignored by `rules_from_robots_txt` (conservative prefix-disallow
   gate: an Allow shadowing a broader Disallow stays disallowed); for
   full RFC 9309 longest-match semantics use `allow_disallow_rules`
-  with `frontier.apply_robots_longest_match`.
+  with `frontier.apply_robots_rfc9309`.
 
 Scale design: everything is split/regexp/window expressions — no
 Python. The only window partitions by host, and a robots body is
@@ -142,7 +142,7 @@ def allow_disallow_rules(
     (host, path_prefix, allow boolean), distinct.
 
     This is the input for RFC 9309 longest-match evaluation
-    (`frontier.apply_robots_longest_match`): an Allow whose prefix is
+    (`frontier.apply_robots_rfc9309`): an Allow whose prefix is
     longer than the blocking Disallow re-opens the subtree (e.g.
     ``Disallow: /a/`` + ``Allow: /a/img/``), which the simpler
     `rules_from_robots_txt` gate deliberately treats as still

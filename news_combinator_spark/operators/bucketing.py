@@ -79,8 +79,8 @@ def rendezvous_shard(key_col, n_shards: int) -> "F.Column":  # noqa: F821
     argmax over s in [0, n_shards) of md5(key || ':' || s).
 
     HRW (Thaler & Ravishankar 1998) is the consistent-placement rule
-    the sharded URL-seen structures need (operators/bloom.py /
-    operators/cuckoo.py shard by hash prefix, which is uniform but
+    the sharded URL-seen structures need (operators/bloom.py shards
+    by hash prefix, which is uniform but
     NOT stable under shard-count change: growing 16 -> 20 prefix
     shards remaps ~3/4 of all keys, forcing a near-total rebuild of
     the seen-set). Under HRW a key moves only when one of the NEW
@@ -92,7 +92,7 @@ def rendezvous_shard(key_col, n_shards: int) -> "F.Column":  # noqa: F821
     Shape: one O(n_shards)-wide JVM expression per row (array of
     (hash, shard) structs -> array_max), zero shuffle, zero Python.
     Cost is linear in n_shards, so this addresses PHYSICAL shard
-    counts (10^1-10^3, each holding one cuckoo/bloom shard); for
+    counts (10^1-10^3, each holding one bloom shard); for
     10^4+ logical buckets keep prefix sharding inside a physical
     shard — stability only matters at the physical (rebuild) level.
     md5 rather than an engine-native hash so the assignment is

@@ -327,56 +327,6 @@ def ip_budgets(
     )
 
 
-def apply_robots_longest_match(
-    candidates: DataFrame, rules: DataFrame | None
-) -> DataFrame:
-    """RFC 9309 robots evaluation: among a host's rules matching the
-    candidate's path, the LONGEST path_prefix governs; on a length
-    tie Allow wins; no matching rule means allowed.
-
-    This upgrades `apply_robots`' conservative prefix-disallow gate
-    (which ignores Allow lines) to the full standard: ``Disallow: /a/``
-    plus ``Allow: /a/img/`` blocks /a/x but re-opens /a/img/y. Rules
-    come from `functions/robots.allow_disallow_rules` —
-    (host, path_prefix, allow).
-
-    Scale shape: rules broadcast (KB per host by protocol
-    convention); the governing rule per candidate is one map-side-
-    combined groupBy(url) max_by over (prefix length, allow) — rule
-    matches per URL are bounded by the host's rule count, and no
-    window or data-sized single-partition stage appears.
-    """
-    if rules is None:
-        return candidates
-    r = F.broadcast(
-        rules.select(
-            F.col("host").alias("r_host"), "path_prefix", "allow"
-        )
-    )
-    path = _robots_path("url")
-    cand = candidates.withColumn("_path", path)
-    matched = cand.join(
-        r,
-        (F.col("host") == F.col("r_host"))
-        & F.col("_path").startswith(F.col("path_prefix")),
-        "inner",
-    )
-    # governing rule: longest prefix, Allow breaking length ties
-    governing = matched.groupBy("url").agg(
-        F.max_by(
-            F.col("allow"),
-            F.struct(
-                F.length("path_prefix").alias("l"),
-                F.col("allow").cast("int").alias("a"),
-            ),
-        ).alias("_allow")
-    )
-    out = cand.join(governing, "url", "left")
-    return out.filter(
-        F.col("_allow").isNull() | F.col("_allow")
-    ).drop("_allow", "_path")
-
-
 def schedule_with_global_cap(
     frontier: DataFrame,
     budgets: DataFrame,
@@ -434,21 +384,13 @@ def apply_robots(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
     rule gates every scheme/port of its host, so the match is host
     equality + path-and-beyond startswith — 'https://h/secret/x' is
     blocked by `Disallow: /secret` exactly like the http form. Rules
-    carry either `path_prefix` (functions/robots.rules_from_robots_txt
-    output) or a legacy full-URL `disallow_prefix`, whose
-    scheme+authority is stripped here. robots is tiny -> broadcast."""
+    carry (host, path_prefix), as functions/robots.rules_from_robots_txt
+    emits them. robots is tiny -> broadcast."""
     if robots is None:
         return candidates
-    if "path_prefix" in robots.columns:
-        rules = robots.select("host", "path_prefix")
-    else:
-        rules = robots.select(
-            "host",
-            F.regexp_replace(
-                "disallow_prefix", r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", ""
-            ).alias("path_prefix"),
-        )
-    r = F.broadcast(rules.withColumnRenamed("host", "r_host"))
+    r = F.broadcast(
+        robots.select(F.col("host").alias("r_host"), "path_prefix")
+    )
     # path-and-beyond (path + query/fragment): strip scheme+authority
     # textually so prefixes containing '?' still match; a bare-host URL
     # ('http://h.test') yields '' which RFC 9309 treats as '/'
@@ -475,7 +417,7 @@ def discover_candidates(
 ) -> DataFrame:
     """One round's discovery step: fetched (url, html, ...) -> gated,
     deduped candidates (url, host, priority), plus `maybe` when a seen
-    `prefilter` (ShardedBloom / ShardedCuckoo) is given. Links cross
+    `prefilter` (ShardedBloom) is given. Links cross
     into Python once per page, and the host filter stays above the
     explode. `observe` = (discovered, robots-allowed) Observations,
     each filled with a row count `n` by the first action.
@@ -494,13 +436,10 @@ def discover_candidates(
         cand = cand.observe(observe[0], _n())
     # gate mode: 'prefix' = conservative disallow-only (the
     # oracle-pinned default); 'rfc9309' = longest-match with Allow
-    # overrides; 'rfc9309-wildcards' additionally honors the spec's
-    # * / $ special characters — for both rfc modes, robots must be
-    # functions/robots.allow_disallow_rules output
-    if robots_mode == "rfc9309-wildcards":
+    # overrides and the spec's * / $ special characters — robots must
+    # then be functions/robots.allow_disallow_rules output
+    if robots_mode == "rfc9309":
         cand = apply_robots_rfc9309(cand, robots)
-    elif robots_mode == "rfc9309":
-        cand = apply_robots_longest_match(cand, robots)
     else:
         cand = apply_robots(cand, robots)
     if observe is not None:
@@ -519,9 +458,6 @@ def crawl(
     rounds: int = 3,
     use_bloom: bool = False,
     bloom_expected: int = 1_000_000,
-    bloom_fp: float = 1e-3,
-    bloom_shards: int = 64,
-    prefilter_kind: str = "bloom",
     salt_buckets: int = 0,
     allowed_host_suffix: str | None = None,
     checkpoint_dir: str | None = None,
@@ -563,12 +499,12 @@ def crawl(
 
     Scale notes:
     - each non-final round runs `discover_candidates` once; the
-      bloom/cuckoo seen PREFILTER is semantics-neutral (false
-      positives fall through to the exact anti-join, no false
-      negatives) and sharded by url-hash, never driver-merged.
+      bloom seen PREFILTER is semantics-neutral (false positives fall
+      through to the exact anti-join, no false negatives) and sharded
+      by url-hash, never driver-merged.
     - `robots_mode='rfc9309'` switches the discovered-candidate gate
-      to longest-match Allow/Disallow evaluation
-      (`apply_robots_longest_match`); `robots` must then carry
+      to longest-match Allow/Disallow evaluation with `*`/`$` rules
+      (`apply_robots_rfc9309`); `robots` must then carry
       (host, path_prefix, allow) rows from
       `functions/robots.allow_disallow_rules`. The default 'prefix'
       mode is the oracle-pinned conservative gate.
@@ -587,10 +523,9 @@ def crawl(
             "nothing left to crawl — raise --rounds or resume an "
             "earlier checkpoint"
         )
-    if robots_mode not in ("prefix", "rfc9309", "rfc9309-wildcards"):
+    if robots_mode not in ("prefix", "rfc9309"):
         raise ValueError(
-            "robots_mode must be 'prefix', 'rfc9309' or "
-            f"'rfc9309-wildcards', got {robots_mode!r}"
+            f"robots_mode must be 'prefix' or 'rfc9309', got {robots_mode!r}"
         )
     # The "web" is probed by url every round. Two layouts:
     # - web_table: a catalog table bucketed by url (operators/
@@ -654,25 +589,11 @@ def crawl(
     def seen_df() -> DataFrame:
         return reduce(DataFrame.unionByName, seen_parts)
 
-    # either prefilter kind is semantics-neutral, so the same crawl
-    # oracle pins both; cuckoo also supports deletion at ~2x bits/key
-    if prefilter_kind not in ("bloom", "cuckoo"):
-        raise ValueError(
-            f"prefilter_kind must be 'bloom' or 'cuckoo', got "
-            f"{prefilter_kind!r}"
-        )
     bloom = None
     if use_bloom and discovers:
-        if prefilter_kind == "cuckoo":
-            from .cuckoo import build_sharded_cuckoo
-
-            bloom = build_sharded_cuckoo(
-                seen_df(), "url", bloom_expected, bloom_shards
-            )
-        else:
-            bloom = build_sharded_bloom(
-                seen_df(), "url", bloom_expected, bloom_fp, bloom_shards
-            )
+        bloom = build_sharded_bloom(
+            seen_df(), "url", bloom_expected, fp_rate=1e-3, n_shards=64
+        )
 
     # base snapshot (every seed is seen-delta 0), written only when
     # starting from seeds: a resume from round 0 reads the committed one
@@ -791,8 +712,7 @@ def crawl(
         if bloom is not None and r + 2 < rounds:
             # shard-keyed fold of the round's seen delta (no driver-side
             # bitset); the final round probes nothing, so skip its fold
-            fold = bloom.insert_delta if prefilter_kind == "cuckoo" else bloom.or_delta
-            bloom = fold(new, "url")
+            bloom = bloom.or_delta(new, "url")
 
     all_fetched = reduce(DataFrame.unionByName, fetched_rounds)
     # Total crawl order = row_number over (round, priority, host, url),
@@ -1274,12 +1194,17 @@ def apply_robots_rfc9309(
     octets (the rule string as written) governs, Allow winning length
     ties; no match means allowed.
 
-    This supersedes `apply_robots_longest_match` (exact-prefix rules
-    only) when rule sets use wildcards — prefix startswith() treats
-    '*' as a literal and silently never matches such rules. Shape is
-    identical: rules (with their translated regexes) broadcast, the
-    match predicate evaluated JVM-side in the join, the governing
-    rule one map-side-combined max_by per url.
+    ``Disallow: /a/`` plus ``Allow: /a/img/`` blocks /a/x but
+    re-opens /a/img/y; a wildcard-free rule matches exactly as a
+    path prefix. Rules come from `functions/robots.allow_disallow_rules`
+    — (host, path_prefix, allow).
+
+    Scale shape: rules (with their translated regexes) broadcast (KB
+    per host by protocol convention), the match predicate evaluated
+    JVM-side in the join, the governing rule one map-side-combined
+    groupBy(url) max_by — rule matches per URL are bounded by the
+    host's rule count, and no window or data-sized single-partition
+    stage appears.
     """
     if rules is None:
         return candidates

@@ -178,35 +178,6 @@ def q_crawl_frontier(spark, sf_dir):
 SQL_CRAWL_FRONTIER = crawl_oracle_sql(N_DOCS_SUBQUERY)
 
 
-def q_crawl_frontier_cuckoo(spark, sf_dir):
-    """The SAME crawl under the cuckoo seen-prefilter
-    (operators/cuckoo.py — the north-star's deletable alternative to
-    the bloom): the prefilter is semantics-neutral (fps fall through
-    to the exact anti-join, no false negatives), so the identical
-    unrolled SQL oracle must hash-match — which is exactly what makes
-    an otherwise un-oracle-able membership sketch driver-checkable."""
-    pages = pages_from_documents(spark, sf_dir)
-    res = crawl(
-        spark,
-        pages,
-        seeds_df(spark, pages),
-        budgets_df(spark),
-        robots=robots_df(spark),
-        rounds=CRAWL_ROUNDS,
-        allowed_host_suffix=".test",
-        use_bloom=True,
-        bloom_expected=100_000,
-        prefilter_kind="cuckoo",
-    )
-    return res.fetched.select(
-        F.col("round").cast("int").alias("round"),
-        "url",
-        "host",
-        F.col("priority").cast("int").alias("priority"),
-        F.col("fetch_order").cast("int").alias("fetch_order"),
-    )
-
-
 def q_crawl_host_lineage(spark, sf_dir):
     """North-rule per-partition lineage: the crawl's per-(round, host)
     scheduled/deferred audit trail — host is the politeness partition
@@ -3209,7 +3180,7 @@ SQL_URL_TEMPLATES = (
 
 
 def q_robots_longest_match(spark, sf_dir):
-    """RFC 9309 robots evaluation (frontier.apply_robots_longest_match
+    """RFC 9309 robots evaluation (frontier.apply_robots_rfc9309
     over functions/robots.allow_disallow_rules): each host disallows
     one day directory but re-allows a longer id prefix inside it
     ('Disallow: /a/<d>/' + 'Allow: /a/<d>/0000001'), so docs 100-199
@@ -3230,7 +3201,7 @@ def q_robots_longest_match(spark, sf_dir):
     )
     rules = rb.allow_disallow_rules(robots)
     cand = pages.select("url", "host", "priority")
-    return fr.apply_robots_longest_match(cand, rules)
+    return fr.apply_robots_rfc9309(cand, rules)
 
 
 SQL_ROBOTS_LONGEST_MATCH = (
@@ -4994,7 +4965,7 @@ def q_shard_rendezvous(spark, sf_dir):
     seen-set fleet, with the moved flag. HRW's guarantee — an
     unmoved key keeps its EXACT shard and the moved fraction
     concentrates at (20-16)/20 — is what lets the sharded
-    cuckoo/bloom seen-set grow without a full rebuild; the hash gate
+    bloom seen-set grow without a full rebuild; the hash gate
     pins every placement, and the oracle replays the argmax over
     md5(url || ':' || shard) in SQL."""
     pages = pages_from_documents(spark, sf_dir)
@@ -6251,7 +6222,6 @@ _QUERIES_BY_FAMILY = {
     "extract_markers": (q_extract_markers, SQL_EXTRACT_MARKERS),
     "url_parse": (q_url_parse, SQL_URL_PARSE),
     "crawl_frontier": (q_crawl_frontier, SQL_CRAWL_FRONTIER),
-    "crawl_frontier_cuckoo": (q_crawl_frontier_cuckoo, SQL_CRAWL_FRONTIER),
     "crawl_host_lineage": (q_crawl_host_lineage, SQL_CRAWL_HOST_LINEAGE),
     "crawl_seen_set": (q_crawl_seen_set, SQL_CRAWL_FETCHED_URLS),
     # serving
@@ -6422,12 +6392,14 @@ _R5_ROTATION = [
     # Changed in r5 — MUST re-attest (standing rule: a change ships
     # only inside the next window): the candidate_pairs rewrite
     # (bucket guard + pair expansion as one hash aggregation) flows
-    # into the whole minhash near-dup family, and the crawl loop's
+    # into the whole minhash near-dup family; the crawl loop's
     # checkpoint-fold/Observation changes flow into every crawl
     # query (crawl_frontier/crawl_seen_set sit in _ALWAYS_ATTEST;
-    # the cuckoo and host-lineage variants re-enter here).
+    # the host-lineage variant re-enters here); and
+    # robots_longest_match's Spark function is now
+    # apply_robots_rfc9309.
     "minhash_near_dups", "near_dup_groups", "canonical_best",
-    "crawl_frontier_cuckoo", "crawl_host_lineage",
+    "crawl_host_lineage", "robots_longest_match",
     #
     # Oldest-first refill: the 29 entries still registered whose
     # latest green row was CORRECTNESS_r02.json when this window was

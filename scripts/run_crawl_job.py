@@ -64,11 +64,11 @@ def main() -> None:
     )
     ap.add_argument(
         "--robots-mode",
-        choices=["prefix", "rfc9309", "rfc9309-wildcards"],
+        choices=["prefix", "rfc9309"],
         default="prefix",
         help="prefix = conservative disallow-only gate; rfc9309 = "
-        "longest-match with Allow overrides; rfc9309-wildcards also "
-        "honors the spec's * and $ special characters",
+        "longest-match with Allow overrides and the spec's * and $ "
+        "special characters",
     )
     ap.add_argument(
         "--use-crawl-delays",
@@ -134,7 +134,7 @@ def main() -> None:
         robots_bodies = spark.read.parquet(args.robots)
         robots_rules = (
             allow_disallow_rules(robots_bodies)
-            if args.robots_mode.startswith("rfc9309")
+            if args.robots_mode == "rfc9309"
             else rules_from_robots_txt(robots_bodies)
         )
         if args.use_crawl_delays:

@@ -2,10 +2,10 @@
 
 Relocated out of ``news_combinator_spark.operators.bloom`` (VERDICT r4
 residual nit: the fenced single-bitset path had no production caller).
-The engine's only seen-set representations are ``ShardedBloom`` /
-``ShardedCuckoo`` (executor-resident shards, never collected); this
-module keeps the small driver-merged bitset purely so the test suite
-can cross-check the sharded build against an independent local fold.
+The engine's only seen-set representation is ``ShardedBloom``
+(executor-resident shards, never collected); this module keeps the
+small driver-merged bitset purely so the test suite can cross-check
+the sharded build against an independent local fold.
 
 Semantics unchanged from the fenced original: per-partition bitset
 build -> driver OR-merge, hard-capped at MAX_DRIVER_BLOOM_BITS.

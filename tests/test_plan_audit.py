@@ -260,8 +260,7 @@ _LAZY_QUERIES = [
 # the lazy-plan parametrization above
 _EAGER_AUDITED_ELSEWHERE = {
     # crawl loop: test_frontier_fetch_order_no_global_window
-    "crawl_frontier", "crawl_frontier_cuckoo", "crawl_host_lineage",
-    "crawl_seen_set",
+    "crawl_frontier", "crawl_host_lineage", "crawl_seen_set",
     # CC / greedy iteration loops: test_clustering / test_linkgraph
     # (canonical_best = near_dup_groups' CC + one lazy argmax groupBy)
     "news_clusters_lsh", "near_dup_groups", "link_rank",
@@ -502,7 +501,6 @@ def test_bench_battery_covers_all_oracle_queries():
     assert battery <= set(Q.QUERIES), sorted(battery - set(Q.QUERIES))
     phase_benched = {
         "crawl_frontier", "crawl_seen_set",  # bench_crawl
-        "crawl_frontier_cuckoo",  # same loop, cuckoo prefilter
         "crawl_host_lineage",     # same loop + per-host audit frames
         "news_clusters_lsh", "v1_cross_source_clusters",  # bench_cluster
         "url_parse",  # sub-second scalar pass, folded into extract

@@ -63,7 +63,7 @@ def test_parsed_rules_gate_candidates(spark):
     robots = spark.createDataFrame(
         [("h9.test", _TXT)], "host string, robots_txt string"
     )
-    rules = rules_from_robots_txt(robots).select("host", "disallow_prefix")
+    rules = rules_from_robots_txt(robots)
     cand = spark.createDataFrame(
         [(f"http://h9.test{p}", "h9.test", 0) for p in _PATHS],
         "url string, host string, priority int",
@@ -192,7 +192,7 @@ def test_longest_match_allow_reopens_subtree(spark):
         allow_disallow_rules,
     )
     from news_combinator_spark.operators.frontier import (
-        apply_robots_longest_match,
+        apply_robots_rfc9309,
     )
 
     txt = (
@@ -218,7 +218,7 @@ def test_longest_match_allow_reopens_subtree(spark):
         ],
         "url string, host string, priority int",
     )
-    kept = set(apply_robots_longest_match(cand, rules).toPandas().url)
+    kept = set(apply_robots_rfc9309(cand, rules).toPandas().url)
     assert kept == {
         "http://h.test/a/img/y",
         "http://h.test/tie/q",
@@ -379,11 +379,11 @@ def test_fuzz_disallow_only_parity_vs_urllib(spark):
 def test_bare_host_url_blocked_by_disallow_root(spark):
     """'http://h.test' (no path) is '/' under RFC 9309, so
     'Disallow: /' blocks it — in both the conservative prefix gate and
-    the longest-match gate (ADVICE r2: the old strip yielded '' and
+    the RFC 9309 longest-match gate (ADVICE r2: the old strip yielded '' and
     let it through)."""
     from news_combinator_spark.operators.frontier import (
         apply_robots,
-        apply_robots_longest_match,
+        apply_robots_rfc9309,
     )
 
     cand = spark.createDataFrame(
@@ -401,6 +401,6 @@ def test_bare_host_url_blocked_by_disallow_root(spark):
         "host string, path_prefix string, allow boolean",
     )
     kept_lm = {
-        r.url for r in apply_robots_longest_match(cand, lm_rules).collect()
+        r.url for r in apply_robots_rfc9309(cand, lm_rules).collect()
     }
     assert kept_lm == {"http://open.test"}

@@ -221,20 +221,3 @@ def test_longest_octets_governs_allow_wins_ties(spark):
     ]
     kept = _kept(spark, rules, ["/dir/x", "/dir/open1", "/other"])
     assert kept == {"/dir/open1", "/other"}
-
-
-def test_wildcard_rule_invisible_to_prefix_gate(spark):
-    # the motivating gap: the exact-prefix evaluator treats '*' as a
-    # literal and never matches, silently allowing what the wildcard
-    # rule blocks
-    from news_combinator_spark.operators.frontier import (
-        apply_robots_longest_match,
-    )
-
-    rules = _rules(spark, [("h.test", "/*.php", False)])
-    cand = _cand(spark, ["/a.php"])
-    assert apply_robots_longest_match(cand, rules).count() == 1  # leaks
-    from news_combinator_spark.operators.frontier import (
-        apply_robots_rfc9309,
-    )
-    assert apply_robots_rfc9309(cand, rules).count() == 0  # blocked
