@@ -54,12 +54,6 @@ SQL_BENCH_QUERIES = [
     "extract_text",
     "extract_links",
     "extract_markers",
-    "pricing_summary",
-    "top_revenue_customers",
-    "order_priority",
-    "running_total",
-    "sessionize",
-    "event_type_pivot",
     "lang_id",
     "quality_score",
     "token_count",
@@ -151,14 +145,7 @@ SQL_BENCH_QUERIES = [
     "drain_forecast",
     "pii_scrub",
     "robots_wildcards",
-    "adaptive_length",
-    "content_drift",
     "index_delta_merge",
-    # added round 4 (multimodal_features joins the battery now that it
-    # is a real PNG decode rather than the stub codec)
-    "multimodal_features",
-    "audio_features",
-    "video_features",
 ]
 
 

@@ -13,8 +13,7 @@ Apache Spark DataFrame engine:
 - Serving-layer queries (date-range index, FK entry lookup, comment
   ranking, extractive summarization).
 - Dedup (exact/MinHash/SimHash/Jaccard), text quality /
-  language-id / fingerprint operators, multimodal binary-column
-  plumbing.
+  language-id / fingerprint operators.
 
 Everything is DataFrame-first; Python appears only inside Arrow-batched
 pandas UDFs. No RDD API in the hot path.

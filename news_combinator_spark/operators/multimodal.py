@@ -1,41 +1,14 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Media rows: the typed picture schema and its garbage collection.
 
 The reference stores pictures out-of-band (qiniu bucket) with typed
 metadata rows (`news_picture`, reetsee_news.sql:48-58; upload+retry
-crawler.php:66-114; GC clearpic.php:38-77). Here the binary payload is
-a first-class `binary` column with typed metadata, and decode /
-feature-extract steps are Arrow `mapInPandas` kernels.
-
-Four codec tiers:
-
-* a REAL PNG codec (`encode_png_gray` / `decode_png_gray`) for 8-bit
-  non-interlaced grayscale — genuine PNG bytes (signature, IHDR with
-  CRC-32, zlib IDAT, IEND) built and parsed with only stdlib
-  struct/zlib, so the decode path (header parse, CRC check, inflate,
-  scanline de-filter) is exercised end to end and hash-checked by the
-  `multimodal_features` DuckDB oracle;
-* a REAL WAV codec (`encode_wav_pcm16` / `decode_wav_pcm16`) for
-  PCM/mono/16-bit — genuine RIFF/WAVE bytes (fmt + data chunk walk,
-  word alignment) round-tripped with only stdlib struct, giving the
-  AUDIO modality the same real decode + feature-extract path,
-  hash-checked by the `audio_features` DuckDB oracle;
-* a REAL AVI codec (`encode_avi_gray` / `decode_avi_gray`) for
-  uncompressed 8-bit DIB video — genuine RIFF('AVI ') bytes
-  (spec-shaped hdrl with avih/strh/strf, movi LIST of '00db' frames)
-  round-tripped with only stdlib struct, plus FRAME SAMPLING in the
-  feature kernel, hash-checked by the `video_features` DuckDB oracle;
-* the legacy NCIM deterministic STUB for the generic binary-column
-  plumbing tests. Payloads in no tier's format raise
-  NotImplementedError exactly like an unsupported codec would
-  (full-color JPEG/video still needs PIL/ffmpeg, absent here).
+crawler.php:66-114; GC clearpic.php:38-77). Here the payload is a
+first-class `binary` column, the serialized extension fields are a
+`map<string,string>` column, and the GC is a row filter.
 """
 
 from __future__ import annotations
 
-import struct
-import zlib
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,448 +16,6 @@ MEDIA_SCHEMA = (
     "media_id long, abstract_id long, day_time int, kind string, "
     "payload binary, ext map<string,string>"
 )
-
-_MAGIC = b"NCIM"
-
-
-def _riff_chunks(buf: bytes):
-    """Shared RIFF chunk walk: yield (tag, body) with the spec's
-    word-aligned advance (odd-length bodies are padded by one byte).
-    Both the WAV and the AVI decoder iterate chunks this way; keeping
-    the tag/length/slice/alignment arithmetic in one place means a
-    truncation-handling fix cannot drift between codecs."""
-    pos = 0
-    while pos + 8 <= len(buf):
-        tag = bytes(buf[pos : pos + 4])
-        (ln,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-        yield tag, bytes(buf[pos + 8 : pos + 8 + ln])
-        pos += 8 + ln + (ln & 1)  # RIFF chunks are word-aligned
-
-
-def _out_schema(df: DataFrame, payload_col: str, extra: str) -> str:
-    """mapInPandas DDL schema: the input columns minus the payload,
-    plus the kernel's feature columns. Handles the payload-only input
-    (keep == '') without emitting a leading-comma parse error."""
-    keep = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name != payload_col
-    )
-    return f"{keep}, {extra}" if keep else extra
-
-
-def encode_fake_image(width: int, height: int, seed: int) -> bytes:
-    """Deterministic fixture payload: 4-byte magic + w/h/seed ints +
-    (w*h) pseudo-pixel bytes. Stand-in for a real JPEG."""
-    head = _MAGIC + struct.pack("<iii", width, height, seed)
-    body = bytes(((seed + i * 31) % 251) for i in range(width * height))
-    return head + body
-
-
-def decode_image_meta(payload: bytes) -> tuple[int, int, int]:
-    """STUB decoder: reads the fixture header. A real implementation
-    would call PIL.Image.open here; anything without our magic raises
-    NotImplementedError exactly like an unsupported codec would."""
-    if payload is None or payload[:4] != _MAGIC:
-        raise NotImplementedError(
-            "real image codecs unavailable in this container; "
-            "only NCIM fixture payloads are decodable"
-        )
-    w, h, seed = struct.unpack("<iii", payload[4:16])
-    return w, h, seed
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(body))
-        + tag
-        + body
-        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-    )
-
-
-def encode_png_gray(width: int, height: int, seed: int) -> bytes:
-    """A REAL minimal PNG: 8-bit grayscale, non-interlaced, filter 0
-    scanlines, pixel (y*width+x) = (seed + i*31) % 251. Any standards-
-    compliant PNG reader decodes it; ours below round-trips it."""
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = bytearray()
-    i = 0
-    for _y in range(height):
-        raw.append(0)  # filter type None
-        for _x in range(width):
-            raw.append((seed + i * 31) % 251)
-            i += 1
-    idat = zlib.compress(bytes(raw), 6)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", idat)
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_png_gray(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL PNG decode for the 8-bit-grayscale/non-interlaced subset:
-    signature + chunk walk, IHDR CRC-32 verification, IDAT inflate,
-    per-scanline de-filter (None/Sub/Up — the filters a minimal
-    grayscale encoder emits). Returns (width, height, pixels). Other
-    color types / interlacing raise NotImplementedError like any
-    codec asked for a format it doesn't support."""
-    if payload is None or bytes(payload[:8]) != _PNG_SIG:
-        raise NotImplementedError("not a PNG payload")
-    pos, width, height, idat = 8, None, None, b""
-    while pos + 8 <= len(payload):
-        (ln,) = struct.unpack(">I", payload[pos : pos + 4])
-        tag = bytes(payload[pos + 4 : pos + 8])
-        body = bytes(payload[pos + 8 : pos + 8 + ln])
-        (crc,) = struct.unpack(
-            ">I", payload[pos + 8 + ln : pos + 12 + ln]
-        )
-        if zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {tag!r} CRC mismatch")
-        if tag == b"IHDR":
-            width, height, depth, ctype, _c, _f, ilace = struct.unpack(
-                ">IIBBBBB", body
-            )
-            if depth != 8 or ctype != 0 or ilace != 0:
-                raise NotImplementedError(
-                    "only 8-bit non-interlaced grayscale supported"
-                )
-        elif tag == b"IDAT":
-            idat += body
-        elif tag == b"IEND":
-            break
-        pos += 12 + ln
-    if width is None:
-        raise ValueError("PNG missing IHDR")
-    raw = zlib.decompress(idat)
-    stride = width + 1
-    out = bytearray()
-    prev = bytes(width)
-    for y in range(height):
-        row = bytearray(raw[y * stride + 1 : (y + 1) * stride])
-        ftype = raw[y * stride]
-        if ftype == 1:  # Sub
-            for x in range(1, width):
-                row[x] = (row[x] + row[x - 1]) & 0xFF
-        elif ftype == 2:  # Up
-            for x in range(width):
-                row[x] = (row[x] + prev[x]) & 0xFF
-        elif ftype != 0:
-            raise NotImplementedError(f"PNG filter {ftype} unsupported")
-        out += row
-        prev = bytes(row)
-    return width, height, bytes(out)
-
-
-def with_png_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched REAL PNG decode -> (width, height, mean_pixel).
-    Same mapInPandas contract as with_image_features, but the kernel
-    walks actual PNG chunks, checks CRCs, inflates IDAT, and
-    de-filters scanlines before aggregating pixels."""
-
-    def _feat(batches):
-        for pdf in batches:
-            ws, hs, means = [], [], []
-            for payload in pdf[payload_col]:
-                w, h, px = decode_png_gray(bytes(payload))
-                ws.append(w)
-                hs.append(h)
-                means.append(sum(px) / max(len(px), 1))
-            out = pdf[[c for c in pdf.columns if c != payload_col]].copy()
-            out["width"] = ws
-            out["height"] = hs
-            out["mean_pixel"] = means
-            yield out
-
-    return df.mapInPandas(
-        _feat,
-        schema=_out_schema(
-            df, payload_col, "width int, height int, mean_pixel double"
-        ),
-    )
-
-
-def with_image_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched decode -> (width, height, mean_pixel). The batch
-    shape is the real contract: bytes in, numeric features out, one
-    Arrow record batch at a time, no driver involvement."""
-
-    def _feat(batches):
-        for pdf in batches:
-            ws, hs, means = [], [], []
-            for payload in pdf[payload_col]:
-                w, h, seed = decode_image_meta(bytes(payload))
-                body = bytes(payload)[16 : 16 + w * h]
-                ws.append(w)
-                hs.append(h)
-                means.append(sum(body) / max(len(body), 1))
-            out = pdf[[c for c in pdf.columns if c != payload_col]].copy()
-            out["width"] = ws
-            out["height"] = hs
-            out["mean_pixel"] = means
-            yield out
-
-    return df.mapInPandas(
-        _feat,
-        schema=_out_schema(
-            df, payload_col, "width int, height int, mean_pixel double"
-        ),
-    )
-
-
-_RIFF_SIG = b"RIFF"
-
-
-def encode_wav_pcm16(n_samples: int, rate: int, seed: int) -> bytes:
-    """A REAL minimal WAV: RIFF/WAVE container, PCM fmt chunk (mono,
-    16-bit, `rate` Hz), data chunk of samples
-    s_j = ((seed + j*97) % 4001) - 2000. Any standards-compliant WAV
-    reader plays it; ours below round-trips it. The sample generator
-    is closed-form so a SQL oracle can replay the decoded features
-    arithmetically without touching the bytes."""
-    data = b"".join(
-        struct.pack("<h", ((seed + j * 97) % 4001) - 2000)
-        for j in range(n_samples)
-    )
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return _RIFF_SIG + struct.pack("<I", len(body)) + body
-
-
-def decode_wav_pcm16(payload: bytes) -> tuple[int, bytes]:
-    """REAL WAV decode for the PCM/mono/16-bit subset: RIFF signature
-    + WAVE form type, chunk walk with word-aligned skipping, fmt
-    validation, data extraction. Returns (sample_rate, raw_samples).
-    Compressed / multi-channel / other-depth audio raises
-    NotImplementedError exactly like a codec asked for a format it
-    doesn't support (ffmpeg/soundfile are absent in this container)."""
-    if payload is None or bytes(payload[:4]) != _RIFF_SIG:
-        raise NotImplementedError("not a RIFF payload")
-    if bytes(payload[8:12]) != b"WAVE":
-        raise NotImplementedError("RIFF form is not WAVE")
-    rate, data = None, None
-    for tag, body in _riff_chunks(bytes(payload[12:])):
-        if tag == b"fmt ":
-            audio_fmt, channels, rate, _br, _ba, depth = struct.unpack(
-                "<HHIIHH", body[:16]
-            )
-            if audio_fmt != 1 or channels != 1 or depth != 16:
-                raise NotImplementedError(
-                    "only PCM mono 16-bit WAV supported"
-                )
-        elif tag == b"data":
-            data = body
-    if rate is None or data is None:
-        raise ValueError("WAV missing fmt or data chunk")
-    return rate, data
-
-
-def with_wav_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched REAL WAV decode -> (sample_rate, n_samples,
-    duration_ms, peak_amp, mean_abs_amp). Same mapInPandas contract
-    as with_png_features: bytes in, numeric features out, one Arrow
-    record batch at a time, no driver involvement. mean_abs (not RMS)
-    keeps the feature an integer-sum / count ratio — bit-stable
-    across engines for the hash oracle."""
-
-    def _feat(batches):
-        for pdf in batches:
-            rates, ns, durs, peaks, means = [], [], [], [], []
-            for payload in pdf[payload_col]:
-                rate, data = decode_wav_pcm16(bytes(payload))
-                n = len(data) // 2
-                samples = struct.unpack(f"<{n}h", data)
-                rates.append(rate)
-                ns.append(n)
-                durs.append((n * 1000) // rate)
-                peaks.append(max((abs(s) for s in samples), default=0))
-                means.append(
-                    sum(abs(s) for s in samples) / max(n, 1)
-                )
-            out = pdf[[c for c in pdf.columns if c != payload_col]].copy()
-            out["sample_rate"] = rates
-            out["n_samples"] = ns
-            out["duration_ms"] = durs
-            out["peak_amp"] = peaks
-            out["mean_abs_amp"] = means
-            yield out
-
-    return df.mapInPandas(
-        _feat,
-        schema=_out_schema(
-            df,
-            payload_col,
-            "sample_rate int, n_samples int, duration_ms int, "
-            "peak_amp int, mean_abs_amp double",
-        ),
-    )
-
-
-def encode_avi_gray(
-    width: int, height: int, n_frames: int, fps: int, seed: int
-) -> bytes:
-    """A REAL minimal AVI: RIFF('AVI ') with a spec-shaped hdrl LIST
-    (avih main header + one strl stream with strh/strf for an
-    uncompressed 8-bit DIB video stream) and a movi LIST of '00db'
-    raw frame chunks. Frame f's pixel i is
-    (seed + f*13 + i*31) % 251 — closed-form, so a SQL oracle can
-    replay sampled-frame statistics without parsing the container."""
-    frames = []
-    for f in range(n_frames):
-        frames.append(
-            bytes(
-                (seed + f * 13 + i * 31) % 251
-                for i in range(width * height)
-            )
-        )
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    frame_bytes = width * height
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps,          # microseconds per frame
-        frame_bytes * fps,         # max bytes/sec
-        0, 0,                      # padding, flags: 0 — no idx1 chunk
-                                   # is written, so AVIF_HASINDEX
-                                   # (0x10) must NOT be set or a
-                                   # spec-conformant reader would seek
-                                   # a missing index
-        n_frames, 0, 1, frame_bytes,
-        width, height, 0, 0, 0, 0,
-    )
-    # AVISTREAMHEADER is exactly 56 bytes: fccType+fccHandler, then
-    # dwFlags, wPriority, wLanguage, dwInitialFrames, dwScale, dwRate,
-    # dwStart, dwLength, dwSuggestedBufferSize, dwQuality,
-    # dwSampleSize (40 bytes), then the rcFrame RECT of four WORDs.
-    strh = (
-        b"vids" + b"DIB " + struct.pack(
-            "<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0, n_frames,
-            frame_bytes, 0, 0,
-        ) + struct.pack("<HHHH", 0, 0, width, height)
-    )
-    # BITMAPINFOHEADER, 8-bit + a 256-entry grayscale palette
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, -height, 1, 8, 0,
-        frame_bytes, 0, 0, 256, 0,
-    ) + b"".join(struct.pack("<BBBB", g, g, g, 0) for g in range(256))
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(
-            b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)
-        ),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return _RIFF_SIG + struct.pack("<I", len(body)) + body
-
-
-def decode_avi_gray(
-    payload: bytes,
-) -> tuple[int, int, int, int, list[bytes]]:
-    """REAL AVI decode for the uncompressed-8-bit-DIB subset: RIFF
-    signature + 'AVI ' form type, recursive LIST walk, avih main
-    header (dims, frame count, frame period), '00db' frame chunk
-    collection. Returns (width, height, n_frames, us_per_frame,
-    frames). Compressed fourccs raise NotImplementedError like a
-    codec asked for a format it doesn't support."""
-    if payload is None or bytes(payload[:4]) != _RIFF_SIG:
-        raise NotImplementedError("not a RIFF payload")
-    if bytes(payload[8:12]) != b"AVI ":
-        raise NotImplementedError("RIFF form is not AVI")
-    width = height = n_frames = uspf = None
-    frames: list[bytes] = []
-
-    def walk(buf: bytes) -> None:
-        nonlocal width, height, n_frames, uspf
-        for tag, body in _riff_chunks(buf):
-            if tag == b"LIST":
-                walk(body[4:])  # skip the 4-byte list kind
-            elif tag == b"avih":
-                vals = struct.unpack("<IIIIIIIIIIIIII", body[:56])
-                uspf, n_frames = vals[0], vals[4]
-                width, height = vals[8], vals[9]
-            elif tag == b"strh":
-                if body[:4] == b"vids" and body[4:8] not in (
-                    b"DIB ", b"\x00\x00\x00\x00"
-                ):
-                    raise NotImplementedError(
-                        "only uncompressed DIB video supported"
-                    )
-            elif tag == b"00dc":
-                raise NotImplementedError(
-                    "compressed frame chunks unsupported"
-                )
-            elif tag == b"00db":
-                frames.append(body)
-
-    walk(bytes(payload[12:]))
-    if width is None or n_frames is None:
-        raise ValueError("AVI missing avih header")
-    if len(frames) != n_frames:
-        raise ValueError(
-            f"AVI frame count mismatch: header {n_frames}, "
-            f"found {len(frames)}"
-        )
-    return width, height, n_frames, uspf, frames
-
-
-def with_video_features(
-    df: DataFrame, payload_col: str = "payload", sample_stride: int = 2
-) -> DataFrame:
-    """Arrow-batched REAL AVI decode + FRAME SAMPLING -> (width,
-    height, n_frames, duration_ms, sampled mean pixel). Sampling
-    takes every `sample_stride`-th frame starting at 0 — the decode /
-    frame-sample step of a video pipeline, same mapInPandas contract
-    as the image/audio kernels: bytes in, numeric features out, no
-    driver involvement. The sampled mean is an exact integer sum over
-    sampled pixels / their count — bit-stable across engines for the
-    hash oracle."""
-
-    def _feat(batches):
-        for pdf in batches:
-            ws, hs, ns, durs, means = [], [], [], [], []
-            for payload in pdf[payload_col]:
-                w, h, n, uspf, frames = decode_avi_gray(bytes(payload))
-                sampled = frames[::sample_stride]
-                tot = sum(sum(fr) for fr in sampled)
-                cnt = sum(len(fr) for fr in sampled)
-                ws.append(w)
-                hs.append(h)
-                ns.append(n)
-                durs.append((n * uspf) // 1000)
-                means.append(tot / max(cnt, 1))
-            out = pdf[[c for c in pdf.columns if c != payload_col]].copy()
-            out["width"] = ws
-            out["height"] = hs
-            out["n_frames"] = ns
-            out["duration_ms"] = durs
-            out["sampled_mean"] = means
-            yield out
-
-    return df.mapInPandas(
-        _feat,
-        schema=_out_schema(
-            df,
-            payload_col,
-            "width int, height int, n_frames int, "
-            "duration_ms int, sampled_mean double",
-        ),
-    )
 
 
 def gc_old_media(media: DataFrame, today_day: int, keep_days: int = 5) -> DataFrame:

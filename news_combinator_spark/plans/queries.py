@@ -18,7 +18,7 @@ news_combinator_spark/oracle/).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import (
@@ -46,21 +46,9 @@ from ..operators import indexing as ix
 from ..operators.bucketing import reshard_moves
 from ..operators.frontier import crawl
 from ..operators.merge import merge_into
-from ..operators.multimodal import (
-    encode_avi_gray,
-    encode_png_gray,
-    encode_wav_pcm16,
-    with_png_features,
-    with_video_features,
-    with_wav_features,
-)
 from ..operators.ranking import partitioned_global_rank, ranked_prefix
 from ..operators.summarize import add_abstract_column
-from ..oracle.crawl_sql import (
-    crawl_oracle_sql,
-    host_lineage_oracle_sql,
-    seen_set_oracle_sql,
-)
+from ..oracle.crawl_sql import crawl_oracle_sql, host_lineage_oracle_sql
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -412,201 +400,6 @@ SQL_GROUP_BY_DAY = """
            count(DISTINCT user_id) AS n_users,
            count(DISTINCT event_type) AS n_types
     FROM events GROUP BY 1
-"""
-
-
-# ===========================================================================
-# Aggregation / join / window family (TPC-H-ish; SURVEY §2.3/2.4/2.5)
-# ===========================================================================
-
-def q_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(avg(l_discount), 4) AS avg_disc,
-           count(*) AS n_rows
-    FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_revenue_customers(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    rev = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-    # top-10 via orderBy().limit() (TakeOrderedAndProject — parallel
-    # top-k, bounded merge); the rank window then sees only 10 rows
-    return ranked_prefix(
-        rev, [F.desc("revenue"), F.asc("c_custkey")], limit=10,
-        out_col="rank",
-    )
-
-
-SQL_TOP_REVENUE_CUSTOMERS = """
-    WITH rev AS (
-      SELECT c_custkey, c_name,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_custkey, c_name
-    ), r AS (
-      SELECT *, cast(row_number() OVER (ORDER BY revenue DESC, c_custkey)
-                     as int) AS rank
-      FROM rev
-    )
-    SELECT c_custkey, c_name, revenue, rank FROM r WHERE rank <= 10
-"""
-
-
-def q_order_priority(spark, sf_dir):
-    """Semi-join (EXISTS) + group count."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    late = li.filter(F.col("l_shipdate").isNotNull())
-    semi = o.join(
-        late,
-        (o.o_orderkey == late.l_orderkey) & (late.l_shipdate > o.o_orderdate),
-        "left_semi",
-    )
-    return semi.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
-
-
-SQL_ORDER_PRIORITY = """
-    SELECT o_orderpriority, count(*) AS n_orders
-    FROM orders
-    WHERE EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-    GROUP BY o_orderpriority
-"""
-
-
-def q_running_total(spark, sf_dir):
-    """W: running sum per user over event time."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.sum("value").over(w), 4).alias("running_value"),
-    )
-
-
-SQL_RUNNING_TOTAL = """
-    SELECT event_id, user_id,
-           round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                 4) AS running_value
-    FROM events
-"""
-
-
-def q_sessionize(spark, sf_dir):
-    """Sessionization: 30-min inactivity gap via lag + cumsum."""
-    ev = _t(spark, sf_dir, "events")
-    # parquet ts is TIMESTAMP_NTZ; route through timestamp (session TZ
-    # pinned to UTC) to get the same epoch seconds DuckDB's epoch() gives
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gapped = ev.withColumn("prev_ts", F.lag(epoch).over(w)).withColumn(
-        "new_session",
-        F.when(
-            F.col("prev_ts").isNull() | ((epoch - F.col("prev_ts")) > 1800),
-            1,
-        ).otherwise(0),
-    )
-    sessions = gapped.withColumn(
-        "session_idx", F.sum("new_session").over(w).cast("int")
-    )
-    return sessions.groupBy("user_id", "session_idx").agg(
-        F.count("*").alias("n_events"),
-        F.min("event_id").alias("first_event"),
-    )
-
-
-SQL_SESSIONIZE = """
-    WITH g AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN lag(epoch(ts)) OVER w IS NULL
-                       OR epoch(ts) - lag(epoch(ts)) OVER w > 1800
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT user_id, event_id,
-             cast(sum(new_session) OVER (PARTITION BY user_id
-                  ORDER BY ts, event_id) as int) AS session_idx
-      FROM g
-    )
-    SELECT user_id, session_idx, count(*) AS n_events,
-           min(event_id) AS first_event
-    FROM s GROUP BY user_id, session_idx
-"""
-
-
-def q_event_type_pivot(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    out = (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "error", "signup"])
-        .count()
-        .na.fill(0)
-    )
-    return out.select(
-        "user_id",
-        F.col("click").alias("n_click"),
-        F.col("view").alias("n_view"),
-        F.col("purchase").alias("n_purchase"),
-        F.col("error").alias("n_error"),
-        F.col("signup").alias("n_signup"),
-    )
-
-
-SQL_EVENT_TYPE_PIVOT = """
-    SELECT user_id,
-           count(*) FILTER (event_type = 'click') AS n_click,
-           count(*) FILTER (event_type = 'view') AS n_view,
-           count(*) FILTER (event_type = 'purchase') AS n_purchase,
-           count(*) FILTER (event_type = 'error') AS n_error,
-           count(*) FILTER (event_type = 'signup') AS n_signup
-    FROM events GROUP BY user_id
-"""
-
-
-def q_distinct_users(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users")
-    )
-
-
-SQL_DISTINCT_USERS = """
-    SELECT event_type, count(DISTINCT user_id) AS n_users
-    FROM events GROUP BY event_type
 """
 
 
@@ -1782,168 +1575,6 @@ SQL_DUP_SPAN_STATS = r"""
            round(count(d.span)::DOUBLE / count(*), 4) AS dup_frac
     FROM spans s LEFT JOIN dups d ON s.span = d.span
     GROUP BY s.doc_id
-"""
-
-
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal binary-column decode (multimodal.with_png_features):
-    64 GENUINE PNG payloads (signature, IHDR+CRC32, zlib IDAT, IEND;
-    8-bit grayscale, pixel j = (seed + j*31) % 251) go through the
-    real decode path — chunk walk, CRC verification, inflate,
-    scanline de-filter — inside an Arrow mapInPandas kernel. The
-    DuckDB oracle cannot decode PNG, but it doesn't need to: the
-    pixel generator is closed-form, so the oracle recomputes
-    (width, height, mean_pixel) arithmetically and the hash gate
-    pins that the full codec round-trip reproduces them exactly.
-    Every reachable pixel count (w*h in 48..96) yields a mean that
-    is either non-terminating-but-identical IEEE or exact at 4 dp,
-    so round(.,4) is cross-engine stable."""
-    rows = [
-        (i, i % 7, 20240101 + i % 5, "image",
-         encode_png_gray(8 + i % 5, 6 + i % 3, i))
-        for i in range(64)
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, abstract_id long, day_time int, kind string, "
-        "payload binary",
-    )
-    return with_png_features(media).select(
-        "media_id", "width", "height",
-        F.round("mean_pixel", 4).alias("mean_pixel"),
-    )
-
-
-SQL_MULTIMODAL_FEATURES = """
-    WITH m AS (SELECT unnest(range(0, 64)) AS media_id),
-    dims AS (
-      SELECT media_id,
-             8 + media_id % 5 AS w,
-             6 + media_id % 3 AS h
-      FROM m
-    ),
-    px AS (
-      SELECT media_id, w, h, (media_id + g.j * 31) % 251 AS v
-      FROM dims, (SELECT unnest(range(0, 96)) AS j) g
-      WHERE g.j < w * h
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           round(avg(v), 4) AS mean_pixel
-    FROM px GROUP BY media_id, w, h
-"""
-
-
-def q_audio_features(spark, sf_dir):
-    """Audio binary-column decode (multimodal.with_wav_features):
-    64 GENUINE RIFF/WAVE payloads (PCM fmt chunk, word-aligned chunk
-    walk, 16-bit mono data; sample s_j = ((seed + j*97) % 4001) -
-    2000) go through the real decode path inside an Arrow mapInPandas
-    kernel — the audio twin of multimodal_features, modeling the
-    reference's out-of-band media handling (crawler.php:66-114) as a
-    typed binary column. The DuckDB oracle cannot parse WAV, but the
-    sample generator is closed-form, so it replays (n_samples,
-    duration_ms, peak_amp, mean_abs_amp) arithmetically and the hash
-    gate pins that the codec round-trip reproduces them exactly.
-    duration uses floor division on positive ints (trunc == floor on
-    both engines); mean_abs is an exact-int sum / count, identical
-    IEEE on both engines at round(.,4)."""
-    rows = [
-        (i, i % 7, 20240101 + i % 5, "audio",
-         encode_wav_pcm16(240 + (i % 7) * 40, 8000 + (i % 3) * 4000, i))
-        for i in range(64)
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, abstract_id long, day_time int, kind string, "
-        "payload binary",
-    )
-    return with_wav_features(media).select(
-        "media_id", "sample_rate", "n_samples", "duration_ms",
-        "peak_amp", F.round("mean_abs_amp", 4).alias("mean_abs_amp"),
-    )
-
-
-SQL_AUDIO_FEATURES = """
-    WITH m AS (SELECT unnest(range(0, 64)) AS media_id),
-    dims AS (
-      SELECT media_id,
-             240 + (media_id % 7) * 40 AS n,
-             8000 + (media_id % 3) * 4000 AS rate
-      FROM m
-    ),
-    smp AS (
-      SELECT media_id, n, rate,
-             abs(((media_id + g.j * 97) % 4001) - 2000) AS a
-      FROM dims, (SELECT unnest(range(0, 480)) AS j) g
-      WHERE g.j < n
-    )
-    SELECT media_id,
-           CAST(rate AS INT) AS sample_rate,
-           CAST(n AS INT) AS n_samples,
-           CAST((n * 1000) // rate AS INT) AS duration_ms,
-           CAST(max(a) AS INT) AS peak_amp,
-           round(avg(a), 4) AS mean_abs_amp
-    FROM smp GROUP BY media_id, n, rate
-"""
-
-
-def q_video_features(spark, sf_dir):
-    """Video binary-column decode + FRAME SAMPLING
-    (multimodal.with_video_features): 64 GENUINE AVI payloads
-    (RIFF('AVI ') with a spec-shaped hdrl LIST — avih + strl/strh/strf
-    for an uncompressed 8-bit DIB stream — and a movi LIST of '00db'
-    frame chunks; frame f pixel i = (seed + f*13 + i*31) % 251) go
-    through the real container walk, then every 2nd frame is sampled
-    — the decode / frame-sample step of a video pipeline as an Arrow
-    mapInPandas kernel. The DuckDB oracle replays the closed-form
-    sampled-pixel statistics arithmetically; the hash gate pins that
-    the container round-trip + sampling reproduce them exactly.
-    duration_ms uses positive-int floor division on both engines."""
-    rows = [
-        (i, i % 7, 20240101 + i % 5, "video",
-         encode_avi_gray(
-             6 + i % 4, 4 + i % 3, 4 + i % 5, 10 + (i % 2) * 5, i
-         ))
-        for i in range(64)
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, abstract_id long, day_time int, kind string, "
-        "payload binary",
-    )
-    return with_video_features(media, sample_stride=2).select(
-        "media_id", "width", "height", "n_frames", "duration_ms",
-        F.round("sampled_mean", 4).alias("sampled_mean"),
-    )
-
-
-SQL_VIDEO_FEATURES = """
-    WITH m AS (SELECT unnest(range(0, 64)) AS media_id),
-    dims AS (
-      SELECT media_id,
-             6 + media_id % 4 AS w,
-             4 + media_id % 3 AS h,
-             4 + media_id % 5 AS n,
-             10 + (media_id % 2) * 5 AS fps
-      FROM m
-    ),
-    px AS (
-      SELECT media_id, w, h, n, fps,
-             (media_id + f.f * 13 + g.j * 31) % 251 AS v
-      FROM dims,
-           (SELECT unnest(range(0, 8, 2)) AS f) f,
-           (SELECT unnest(range(0, 54)) AS j) g
-      WHERE f.f < n AND g.j < w * h
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(n AS INT) AS n_frames,
-           CAST((n * (1000000 // fps)) // 1000 AS INT) AS duration_ms,
-           round(avg(v), 4) AS sampled_mean
-    FROM px GROUP BY media_id, w, h, n, fps
 """
 
 
@@ -6047,128 +5678,6 @@ SQL_ROBOTS_WILDCARDS = (
 
 
 # ===========================================================================
-# Round-3 additions, eighth batch: distribution-aware curation
-# ===========================================================================
-
-def q_adaptive_length(spark, sf_dir):
-    """Per-language adaptive length cuts (quality.
-    adaptive_length_filter): each doc kept iff its token count lies
-    within its OWN language's [p05, p95] band — the cut every
-    multilingual pipeline needs instead of one global constant. Both
-    engines compute exact linear-interpolation quantiles (Spark
-    `percentile` == DuckDB `quantile_cont`), rounded at 4 dp, so the
-    keep decision hash-matches."""
-    from ..operators.quality import adaptive_length_filter
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    return adaptive_length_filter(docs)
-
-
-SQL_ADAPTIVE_LENGTH = r"""
-    WITH toks AS (
-      SELECT doc_id AS doc, lang AS grp,
-             CAST(len(regexp_split_to_array(trim(text), '\s+'))
-                  AS BIGINT) AS n_tok
-      FROM documents
-    ),
-    cuts AS (
-      SELECT grp,
-             round(quantile_cont(n_tok, 0.05), 4) AS lo_cut,
-             round(quantile_cont(n_tok, 0.95), 4) AS hi_cut
-      FROM toks GROUP BY grp
-    )
-    SELECT t.doc, t.grp AS lang, t.n_tok, c.lo_cut, c.hi_cut,
-           t.n_tok >= c.lo_cut AND t.n_tok <= c.hi_cut AS keep
-    FROM toks t JOIN cuts c ON t.grp = c.grp
-"""
-
-
-def q_content_drift(spark, sf_dir):
-    """Round-over-round content drift (quality.content_drift): the
-    'before' snapshot is docs 0-249, 'after' is 250+ with host
-    h1.test's texts truncated to 8 tokens — the extractor-breakage
-    shape. PSI over fixed 20-token buckets must flag exactly h1 as
-    drifted while the untouched hosts stay under threshold; the
-    oracle replays bucketing, eps smoothing, and the PSI sum."""
-    from ..operators.quality import content_drift
-
-    pages = pages_from_documents(spark, sf_dir)
-    before = pages.filter(F.col("doc_id") < 250).select("host", "text")
-    ws = F.split(F.trim(F.col("text")), r"\s+")
-    after = pages.filter(F.col("doc_id") >= 250).select(
-        "host",
-        F.when(
-            F.col("host") == "h1.test",
-            F.array_join(F.slice(ws, 1, 8), " "),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return content_drift(before, after)
-
-
-SQL_CONTENT_DRIFT = (
-    _pages_cte()
-    + r"""
-    , before_t AS (
-        SELECT host, text FROM pages WHERE doc_id < 250
-    )
-    , after_t AS (
-        SELECT host,
-               CASE WHEN host = 'h1.test'
-                 THEN array_to_string(
-                     (regexp_split_to_array(trim(text), '\s+'))[1:8],
-                     ' ')
-                 ELSE text END AS text
-        FROM pages WHERE doc_id >= 250
-    )
-    , hb AS (
-        SELECT host AS key,
-               CAST(least(CAST(len(regexp_split_to_array(trim(text),
-                        '\s+')) AS BIGINT) // 20, 9) AS INT) AS bucket,
-               count(*) AS n
-        FROM before_t GROUP BY 1, 2
-    )
-    , ha AS (
-        SELECT host AS key,
-               CAST(least(CAST(len(regexp_split_to_array(trim(text),
-                        '\s+')) AS BIGINT) // 20, 9) AS INT) AS bucket,
-               count(*) AS n
-        FROM after_t GROUP BY 1, 2
-    )
-    , grid AS (
-        SELECT coalesce(hb.key, ha.key) AS key,
-               coalesce(hb.bucket, ha.bucket) AS bucket,
-               coalesce(hb.n, 0) AS n_b,
-               coalesce(ha.n, 0) AS n_a
-        FROM hb FULL OUTER JOIN ha
-          ON hb.key = ha.key AND hb.bucket = ha.bucket
-    )
-    , tot AS (
-        SELECT key, sum(n_b) AS tot_b, sum(n_a) AS tot_a
-        FROM grid GROUP BY key
-    )
-    , per AS (
-        SELECT g.key, g.n_b, g.n_a,
-               (g.n_a / greatest(t.tot_a, 1) + 1e-6
-                - (g.n_b / greatest(t.tot_b, 1) + 1e-6))
-               * ln((g.n_a / greatest(t.tot_a, 1) + 1e-6)
-                    / (g.n_b / greatest(t.tot_b, 1) + 1e-6)) AS term
-        FROM grid g JOIN tot t ON g.key = t.key
-    )
-    SELECT key AS host,
-           CAST(sum(n_b) AS BIGINT) AS n_before,
-           CAST(sum(n_a) AS BIGINT) AS n_after,
-           round(sum(term), 6) AS psi,
-           round(sum(term), 6) > 0.2 AS drifted
-    FROM per GROUP BY key
-"""
-)
-
-
-# ===========================================================================
 # Round-3 additions, ninth batch: incremental index maintenance
 # ===========================================================================
 
@@ -6230,14 +5739,6 @@ _QUERIES_BY_FAMILY = {
     "entry_lookup": (q_entry_lookup, SQL_ENTRY_LOOKUP),
     "comments_sort": (q_comments_sort, SQL_COMMENTS_SORT),
     "group_by_day": (q_group_by_day, SQL_GROUP_BY_DAY),
-    # agg / join / window
-    "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
-    "top_revenue_customers": (q_top_revenue_customers, SQL_TOP_REVENUE_CUSTOMERS),
-    "order_priority": (q_order_priority, SQL_ORDER_PRIORITY),
-    "running_total": (q_running_total, SQL_RUNNING_TOTAL),
-    "sessionize": (q_sessionize, SQL_SESSIONIZE),
-    "event_type_pivot": (q_event_type_pivot, SQL_EVENT_TYPE_PIVOT),
-    "distinct_users": (q_distinct_users, SQL_DISTINCT_USERS),
     # text analysis
     "lang_id": (q_lang_id, SQL_LANG_ID),
     "quality_score": (q_quality_score, SQL_QUALITY_SCORE),
@@ -6254,8 +5755,6 @@ _QUERIES_BY_FAMILY = {
     # "pii_scrub" is registered ONCE, in the round-3 additions below
     # (the duplicate key that used to sit here silently shadowed it).
     "robots_wildcards": (q_robots_wildcards, SQL_ROBOTS_WILDCARDS),
-    "adaptive_length": (q_adaptive_length, SQL_ADAPTIVE_LENGTH),
-    "content_drift": (q_content_drift, SQL_CONTENT_DRIFT),
     "index_delta_merge": (q_index_delta_merge, SQL_INDEX_DELTA_MERGE),
     "corpus_stats": (q_corpus_stats, SQL_CORPUS_STATS),
     "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
@@ -6313,12 +5812,6 @@ _QUERIES_BY_FAMILY = {
     "wet_export": (q_wet_export, SQL_WET_EXPORT),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
     "mirror_hosts": (q_mirror_hosts, SQL_MIRROR_HOSTS),
-    "multimodal_features": (
-        q_multimodal_features,
-        SQL_MULTIMODAL_FEATURES,
-    ),
-    "audio_features": (q_audio_features, SQL_AUDIO_FEATURES),
-    "video_features": (q_video_features, SQL_VIDEO_FEATURES),
     # round-3 additions (attestation candidates for the r4 window;
     # locally hash-gated by test_queries_vs_duckdb from day one)
     "delta_admit": (q_delta_admit, SQL_DELTA_ADMIT),
@@ -6359,9 +5852,8 @@ _QUERIES_BY_FAMILY = {
 # never-attested round-3 additions (VERDICT r3 "what's missing" #1),
 # the two entries rotated out in r3 (request_rate_budgets,
 # sitemap_index), and everything whose Spark fn or oracle CHANGED this
-# round (admission_funnel, shard_manifest, multimodal_features,
-# freshness_revisit, cdx_export, wat_export, index_delta_merge,
-# pii_scrub). Standing rule (VERDICT r3 #2): any query whose
+# round (admission_funnel, freshness_revisit, cdx_export, wat_export,
+# index_delta_merge, pii_scrub, and entries since deleted). Standing rule (VERDICT r3 #2): any query whose
 # implementation or oracle changes re-enters the NEXT window; nothing
 # ships a change while wearing an older attestation. The north-rule
 # gates stay in the window every round. Entries outside the window
@@ -6387,7 +5879,7 @@ _R5_ROTATION = [
     # round 5 + the OLDEST still-valid attestations refilled
     # oldest-first (bounding attestation age at two rounds for
     # unchanged implementations: the r2 rows are now the oldest
-    # standing and all 37 of them rotate through here).
+    # standing and every one still registered rotates through here).
     #
     # Changed in r5 — MUST re-attest (standing rule: a change ships
     # only inside the next window): the candidate_pairs rewrite
@@ -6401,28 +5893,28 @@ _R5_ROTATION = [
     "minhash_near_dups", "near_dup_groups", "canonical_best",
     "crawl_host_lineage", "robots_longest_match",
     #
-    # Oldest-first refill: the 29 entries still registered whose
+    # Oldest-first refill: the 22 entries still registered whose
     # latest green row was CORRECTNESS_r02.json when this window was
-    # first drawn (the registry diet deleted 7 of the original 36:
-    # the LM-training and embedding-ANN entries).
+    # first drawn (the registry diets deleted 14 of the original 36:
+    # the LM-training, embedding-ANN and warehouse entries).
     "index_daterange", "front_page_ranking", "entry_lookup",
-    "comments_sort", "group_by_day", "pricing_summary",
-    "top_revenue_customers", "order_priority", "running_total",
-    "sessionize", "event_type_pivot", "distinct_users", "lang_id",
-    "quality_score", "token_count", "fingerprint", "dedup_stats",
-    "dedup_first", "ngram_overlap", "merge_upsert", "pos_tags",
-    "repetition_score", "sentence_dedup", "corpus_stats",
-    "filter_funnel", "duplicated_spans", "dup_span_stats",
-    "link_rank", "hot_hosts",
+    "comments_sort", "group_by_day", "lang_id", "quality_score",
+    "token_count", "fingerprint", "dedup_stats", "dedup_first",
+    "ngram_overlap", "merge_upsert", "pos_tags", "repetition_score",
+    "sentence_dedup", "corpus_stats", "filter_funnel",
+    "duplicated_spans", "dup_span_stats", "link_rank", "hot_hosts",
     #
-    # The 7 freed slots refill by the same rule. snapshot_asof goes
+    # The 14 freed slots refill by the same rule. snapshot_asof goes
     # first: its latest green row is still CORRECTNESS_r02.json (it
     # yielded its r5 slot to the changed-implementation set above).
-    # Then the 6 oldest after it: every other remaining entry's
+    # Then the 13 oldest after it: every other remaining entry's
     # latest green row is r03 or newer, and the r03 ties are taken
     # in _QUERIES_BY_FAMILY order.
     "snapshot_asof", "domain_mix", "robots_rules", "crawl_diff",
     "crawl_delay_budgets", "host_quality_filter", "sitemap_urls",
+    "fetch_retries", "redirect_resolution", "anchor_texts",
+    "warc_records", "recrawl_priority", "robots_sitemaps",
+    "conditional_fetch",
 ]
 
 QUERIES = {

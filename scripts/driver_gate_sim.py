@@ -19,10 +19,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 WINDOW = 50
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+# the tables a registry oracle reads
+TABLES = ("events", "documents")
 
 
 def main() -> int:
@@ -38,11 +36,10 @@ def main() -> int:
         normalize_frame as _normalize,
     )
     from news_combinator_spark.plans.queries import QUERIES
+    from news_combinator_spark.session import default_cores
 
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
+        SparkSession.builder.master(f"local[{default_cores()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.python.worker.reuse", "true")

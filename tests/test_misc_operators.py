@@ -1,17 +1,11 @@
-"""Serving builders, multimodal plumbing, watermark incremental scan,
+"""Serving builders, media GC, watermark incremental scan,
 structured streaming smoke."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from news_combinator_spark.operators import serving
-from news_combinator_spark.operators.multimodal import (
-    decode_image_meta,
-    encode_fake_image,
-    gc_old_media,
-    with_image_features,
-)
+from news_combinator_spark.operators.multimodal import gc_old_media
 from news_combinator_spark.streaming.incremental import (
     WatermarkStore,
     advance,
@@ -59,21 +53,6 @@ def test_paginate(spark):
     df = spark.createDataFrame([(i,) for i in range(50)], "x long")
     page2 = serving.paginate(df, [F.asc("x")], pn=2, rn=10).collect()
     assert sorted(r["x"] for r in page2) == list(range(10, 20))
-
-
-def test_multimodal_roundtrip_and_stub_gate(spark):
-    payload = encode_fake_image(8, 6, 42)
-    assert decode_image_meta(payload) == (8, 6, 42)
-    with pytest.raises(NotImplementedError):
-        decode_image_meta(b"\xff\xd8\xff\xe0 not our format")
-    media = spark.createDataFrame(
-        [(1, 10, 20240105, "image", payload)],
-        "media_id long, abstract_id long, day_time int, kind string, "
-        "payload binary",
-    )
-    out = with_image_features(media).collect()[0]
-    assert (out["width"], out["height"]) == (8, 6)
-    assert 0 <= out["mean_pixel"] <= 255
 
 
 def test_gc_old_media(spark):
@@ -498,238 +477,3 @@ def test_streaming_admission_filter(spark, tmp_path):
         assert "  " not in got["http://h/good"].norm_text
     finally:
         q.stop()
-
-
-def test_png_codec_roundtrip_and_integrity(spark):
-    import struct
-    import zlib
-
-    from news_combinator_spark.operators.multimodal import (
-        decode_png_gray,
-        encode_png_gray,
-        with_png_features,
-    )
-
-    png = encode_png_gray(5, 4, 7)
-    # genuine PNG container: signature + IHDR first
-    assert png[:8] == b"\x89PNG\r\n\x1a\n"
-    assert png[12:16] == b"IHDR"
-    w, h, px = decode_png_gray(png)
-    assert (w, h) == (5, 4)
-    assert list(px) == [(7 + i * 31) % 251 for i in range(20)]
-
-    # CRC corruption must be detected, not silently decoded
-    bad = bytearray(png)
-    bad[20] ^= 0xFF  # inside IHDR body
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png_gray(bytes(bad))
-
-    # Sub/Up filtered scanlines decode too (an external encoder may
-    # pick them); build one by hand: 3x2, row0 Sub, row1 Up
-    raw = bytes([1, 10, 5, 5, 2, 1, 1, 1])  # row0: 10,15,20; row1: 11,16,21
-    ihdr = struct.pack(">IIBBBBB", 3, 2, 8, 0, 0, 0, 0)
-
-    def chunk(tag, body):
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    filt = (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-    w2, h2, px2 = decode_png_gray(filt)
-    assert (w2, h2) == (3, 2)
-    assert list(px2) == [10, 15, 20, 11, 16, 21]
-
-    # non-PNG payloads act like an unsupported codec
-    with pytest.raises(NotImplementedError):
-        decode_png_gray(b"\xff\xd8\xff\xe0 jpeg-ish")
-
-    # the Spark kernel end-to-end
-    media = spark.createDataFrame(
-        [(1, png)], "media_id long, payload binary"
-    )
-    out = with_png_features(media).collect()[0]
-    assert (out["width"], out["height"]) == (5, 4)
-    assert out["mean_pixel"] == sum(px) / 20
-
-
-def test_wav_codec_roundtrip_and_integrity(spark):
-    import struct
-
-    from news_combinator_spark.operators.multimodal import (
-        decode_wav_pcm16,
-        encode_wav_pcm16,
-        with_wav_features,
-    )
-
-    wav = encode_wav_pcm16(240, 8000, 5)
-    # genuine RIFF/WAVE container: RIFF size WAVE, fmt chunk first
-    assert wav[:4] == b"RIFF" and wav[8:12] == b"WAVE"
-    assert wav[12:16] == b"fmt "
-    rate, data = decode_wav_pcm16(wav)
-    assert rate == 8000 and len(data) == 480
-    samples = struct.unpack("<240h", data)
-    assert list(samples) == [
-        ((5 + j * 97) % 4001) - 2000 for j in range(240)
-    ]
-
-    # odd-length chunks are word-aligned: splice a 3-byte LIST chunk
-    # between fmt and data (pad byte after it, per RIFF) and the walk
-    # must still find the data chunk
-    fmt_end = 12 + 8 + 16
-    body = (
-        b"WAVE" + wav[12:fmt_end]
-        + b"LIST" + struct.pack("<I", 3) + b"abc\x00"
-        + wav[fmt_end:]
-    )
-    spliced = b"RIFF" + struct.pack("<I", len(body)) + body
-    rate2, data2 = decode_wav_pcm16(spliced)
-    assert rate2 == 8000 and data2 == data
-
-    # unsupported formats act like a missing codec, not a crash
-    with pytest.raises(NotImplementedError):
-        decode_wav_pcm16(b"\xff\xfb mpeg-ish frame")
-    stereo_fmt = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-    stereo = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + 16) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + stereo_fmt
-    )
-    with pytest.raises(NotImplementedError, match="mono"):
-        decode_wav_pcm16(stereo)
-    with pytest.raises(ValueError, match="missing"):
-        decode_wav_pcm16(b"RIFF" + struct.pack("<I", 4) + b"WAVE")
-
-    # the Spark kernel end-to-end
-    media = spark.createDataFrame(
-        [(1, wav)], "media_id long, payload binary"
-    )
-    out = with_wav_features(media).collect()[0]
-    assert out["sample_rate"] == 8000
-    assert out["n_samples"] == 240
-    assert out["duration_ms"] == 30
-    assert out["peak_amp"] == max(abs(s) for s in samples)
-    assert out["mean_abs_amp"] == sum(abs(s) for s in samples) / 240
-
-
-def test_avi_codec_roundtrip_and_frame_sampling(spark):
-    import struct
-
-    from news_combinator_spark.operators.multimodal import (
-        decode_avi_gray,
-        encode_avi_gray,
-        with_video_features,
-    )
-
-    avi = encode_avi_gray(8, 6, 5, 10, 3)
-    # genuine RIFF/AVI container: RIFF size 'AVI ', hdrl LIST first
-    assert avi[:4] == b"RIFF" and avi[8:12] == b"AVI "
-    assert avi[12:16] == b"LIST" and avi[20:24] == b"hdrl"
-    w, h, n, uspf, frames = decode_avi_gray(avi)
-    assert (w, h, n, uspf) == (8, 6, 5, 100_000)
-    for f, fr in enumerate(frames):
-        assert list(fr) == [
-            (3 + f * 13 + i * 31) % 251 for i in range(48)
-        ]
-
-    # header/body frame-count mismatch must be detected
-    truncated = avi[: avi.rfind(b"00db")]
-    # fix the RIFF size so only the frame loss is the defect
-    body_len = len(truncated) - 8
-    truncated = (
-        truncated[:4] + struct.pack("<I", body_len) + truncated[8:]
-    )
-    with pytest.raises(ValueError, match="frame count"):
-        decode_avi_gray(truncated)
-
-    # compressed streams act like a missing codec
-    with pytest.raises(NotImplementedError):
-        decode_avi_gray(b"\x00\x00\x01\xba mpeg-ps")
-
-    # the Spark kernel end-to-end: every 2nd frame sampled
-    media = spark.createDataFrame(
-        [(1, avi)], "media_id long, payload binary"
-    )
-    out = with_video_features(media, sample_stride=2).collect()[0]
-    assert (out["width"], out["height"], out["n_frames"]) == (8, 6, 5)
-    assert out["duration_ms"] == (5 * 100_000) // 1000
-    sampled = frames[::2]
-    exp_mean = sum(sum(fr) for fr in sampled) / sum(
-        len(fr) for fr in sampled
-    )
-    assert out["sampled_mean"] == exp_mean
-
-
-def test_avi_header_flags_match_container_shape():
-    """Review fix: the avih dwFlags word must be 0 — the encoder writes
-    no idx1 chunk, so AVIF_HASINDEX (0x10) would promise an index that
-    is not there and break strict players/parsers."""
-    import struct
-
-    from news_combinator_spark.operators.multimodal import (
-        encode_avi_gray,
-    )
-
-    avi = encode_avi_gray(4, 4, 2, 10, 1)
-    assert b"idx1" not in avi
-    pos = avi.find(b"avih")
-    assert pos > 0
-    size = struct.unpack_from("<I", avi, pos + 4)[0]
-    avih = avi[pos + 8: pos + 8 + size]
-    # avih layout: dwMicroSecPerFrame, dwMaxBytesPerSec, dwPadding,
-    # dwFlags, dwTotalFrames, ...
-    dw_flags = struct.unpack_from("<I", avih, 12)[0]
-    assert dw_flags == 0
-    total_frames = struct.unpack_from("<I", avih, 16)[0]
-    assert total_frames == 2
-
-
-def test_media_kernels_accept_payload_only_input(spark):
-    """Review fix: when the payload is the ONLY column, the mapInPandas
-    output schema must not start with a leading comma."""
-    from news_combinator_spark.operators.multimodal import (
-        encode_avi_gray,
-        encode_png_gray,
-        encode_wav_pcm16,
-        with_png_features,
-        with_video_features,
-        with_wav_features,
-    )
-
-    png = spark.createDataFrame(
-        [(encode_png_gray(4, 3, 7),)], "payload binary"
-    )
-    row = with_png_features(png).collect()[0]
-    assert (row["width"], row["height"]) == (4, 3)
-
-    wav = spark.createDataFrame(
-        [(encode_wav_pcm16(50, 8000, 3),)], "payload binary"
-    )
-    row = with_wav_features(wav).collect()[0]
-    assert (row["sample_rate"], row["n_samples"]) == (8000, 50)
-
-    avi = spark.createDataFrame(
-        [(encode_avi_gray(4, 4, 3, 10, 1),)], "payload binary"
-    )
-    row = with_video_features(avi).collect()[0]
-    assert (row["width"], row["n_frames"]) == (4, 3)
-
-
-def test_avi_strh_is_56_bytes():
-    """AVISTREAMHEADER is a fixed 56-byte struct; an extra DWORD would
-    shift rcFrame for conformant readers (review fix)."""
-    import struct
-
-    from news_combinator_spark.operators.multimodal import (
-        encode_avi_gray,
-    )
-
-    avi = encode_avi_gray(6, 4, 2, 10, 5)
-    pos = avi.find(b"strh")
-    size = struct.unpack_from("<I", avi, pos + 4)[0]
-    assert size == 56
-    body = avi[pos + 8: pos + 8 + size]
-    # rcFrame occupies the final 8 bytes: (left, top, right, bottom)
-    assert struct.unpack_from("<HHHH", body, 48) == (0, 0, 6, 4)

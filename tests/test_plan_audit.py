@@ -72,9 +72,10 @@ def test_serving_daterange_pushdown(spark):
 # ---------------------------------------------------------------------------
 
 def test_small_dim_joins_broadcast(spark):
-    """customer (25k rows at sf0.01) must broadcast against lineitem,
-    not trigger a shuffle of the fact table for the dim join."""
-    plan = _simple(Q.q_top_revenue_customers(spark, SF_MED))
+    """The documents side of entry_lookup's FK join (65 KB of parquet
+    at sf0.01) must broadcast against the exploded member ids, not
+    shuffle both sides for the join."""
+    plan = _simple(Q.q_entry_lookup(spark, SF_MED))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -125,7 +126,7 @@ def test_robots_gating_is_broadcast(spark):
 
 @pytest.mark.parametrize(
     "qname",
-    ["pricing_summary", "sessionize", "front_page_ranking", "dedup_first"],
+    ["group_by_day", "index_daterange", "front_page_ranking", "dedup_first"],
 )
 def test_hot_queries_whole_stage_codegen(spark, qname):
     # AQE hides codegen subtrees behind AdaptiveSparkPlan until runtime;
@@ -146,7 +147,6 @@ def test_hot_queries_whole_stage_codegen(spark, qname):
 @pytest.mark.parametrize(
     "qname",
     [
-        "pricing_summary",
         "lang_id",
         "quality_score",
         "repetition_score",
@@ -214,14 +214,11 @@ def single_partition_violations(plan: str) -> list[str]:
 _LAZY_QUERIES = [
     "extract_text", "extract_links", "extract_markers", "url_parse",
     "index_daterange", "front_page_ranking", "entry_lookup",
-    "comments_sort", "group_by_day", "pricing_summary",
-    "top_revenue_customers", "order_priority", "running_total",
-    "sessionize", "event_type_pivot", "distinct_users", "lang_id",
+    "comments_sort", "group_by_day", "lang_id",
     "quality_score", "token_count", "fingerprint", "dedup_stats",
     "dedup_first", "ngram_overlap", "summarize", "merge_upsert",
     "pos_tags", "repetition_score", "sentence_dedup",
-    "minhash_near_dups", "simhash_near_dups", "multimodal_features",
-    "audio_features", "video_features", "pii_scrub",
+    "minhash_near_dups", "simhash_near_dups", "pii_scrub",
     "corpus_stats", "filter_funnel", "v1_cross_source_clusters",
     "duplicated_spans", "dup_span_stats",
     # round-2 additions (link_rank excluded: page_rank iterates
@@ -249,8 +246,6 @@ _LAZY_QUERIES = [
     "containment_pairs", "host_clusters", "drain_forecast",
     "pii_scrub",
     "robots_wildcards",
-    "adaptive_length",
-    "content_drift",
     "index_delta_merge",
 ]
 
@@ -421,7 +416,7 @@ def test_greedy_membership_small_graph_is_local_table_scan(spark):
 def test_partial_aggregation_before_shuffle(spark):
     """groupBy must map-side combine (two HashAggregate levels around
     the exchange), or the shuffle carries every input row at 100 TB."""
-    plan = _formatted(Q.q_pricing_summary(spark, SF_MED))
+    plan = _formatted(Q.q_group_by_day(spark, SF_MED))
     assert plan.count("HashAggregate") >= 2, plan
     assert "partial_" in plan.lower() or "Partial" in plan, plan
 
@@ -505,7 +500,7 @@ def test_bench_battery_covers_all_oracle_queries():
         "news_clusters_lsh", "v1_cross_source_clusters",  # bench_cluster
         "url_parse",  # sub-second scalar pass, folded into extract
         "minhash_near_dups", "simhash_near_dups", "duplicated_spans",
-        "dedup_stats", "distinct_users", "multimodal_features",
+        "dedup_stats",
     }
     dual = {n for n, (_f, s) in Q.QUERIES.items() if s is not None}
     missing = sorted(dual - battery - phase_benched)
