@@ -193,7 +193,7 @@ def sketch_counts(
     """Batched MinHash + SimHash over per-document token ``Counter``s —
     BIT-IDENTICAL to ``minhash_signature(counts.keys())`` /
     ``simhash64(tokens, hash_fn)`` per doc (pinned by
-    tests/test_textfns.py), but ~15x faster single-core:
+    tests/test_text_functions.py), but ~15x faster single-core:
 
     - each distinct token is hashed ONCE per batch (web text is
       Zipf-distributed; the per-doc kernels re-hash 'the' for every
@@ -206,7 +206,7 @@ def sketch_counts(
       C-side ops instead of per-token Python.
 
     This is the Arrow-batch hot kernel of the dedup/cluster data plane
-    (clustering.featurize_docs/minhash_df, dedup sketches, the bench
+    (clustering.featurize_docs, dedup sketches, the bench
     kernel phase). Memory is bounded: the vocabulary matrices are
     flushed once they exceed ``max_vocab`` rows (~1 KB/row), trading
     re-hashing across flush boundaries for a hard cap — correctness is
@@ -363,23 +363,6 @@ def sketch_batch(
         hash_fn=hash_fn,
         max_vocab=max_vocab,
     )
-
-
-def lsh_bands(signature: list[int], bands: int = 16) -> list[tuple[int, int]]:
-    """(band_id, band_hash) pairs; docs sharing any pair are candidates."""
-    rows = len(signature) // bands
-    out = []
-    for bi in range(bands):
-        chunk = tuple(signature[bi * rows : (bi + 1) * rows])
-        h = hash_bytes_64(repr(chunk).encode())
-        out.append((bi, h))
-    return out
-
-
-def hash_bytes_64(data: bytes) -> int:
-    return struct.unpack(
-        "<q", hashlib.blake2b(data, digest_size=8).digest()
-    )[0]
 
 
 def md5_hash64(token: str) -> int:

@@ -51,21 +51,6 @@ from ..oracle.reference_impl import (
 )
 
 
-def tokenize_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add a `tokens` array column (Arrow-batched kernel)."""
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in docs.schema.fields
-    )
-
-    def _tok(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["tokens"] = pdf[text_col].map(lambda t: tokenize(t or ""))
-            yield pdf
-
-    return docs.mapInPandas(_tok, schema=f"{fields}, tokens array<string>")
-
-
 def featurize_docs(
     docs: DataFrame, text_col: str = "text", num_perm: int = 64
 ) -> DataFrame:
@@ -114,19 +99,12 @@ def featurize_docs(
 
 
 def _tf_rows(tokens_df: DataFrame) -> DataFrame:
-    """(doc_id, word, tf) — from a `featurize_docs` frame (has `wc`
-    pre-counted in-kernel — preferred, occurrence explosion never
-    shuffles) or any frame with a raw `tokens` column."""
-    if "wc" in tokens_df.columns:
-        return tokens_df.select(
-            "doc_id", F.explode("wc").alias("e")
-        ).select(
-            "doc_id", F.col("e.word").alias("word"), F.col("e.tf").alias("tf")
-        )
-    toks = tokens_df.select(
-        "doc_id", F.explode("tokens").alias("word")
-    ).filter(F.length("word") > 1)
-    return toks.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    """(doc_id, word, tf) from a `featurize_docs` frame: `wc` is
+    pre-counted in-kernel, so the occurrence explosion never
+    shuffles."""
+    return tokens_df.select("doc_id", F.explode("wc").alias("e")).select(
+        "doc_id", F.col("e.word").alias("word"), F.col("e.tf").alias("tf")
+    )
 
 
 def doc_tags(tokens_df: DataFrame, k: int = TAG_NUM) -> DataFrame:
@@ -219,21 +197,31 @@ def doc_tags_tfidf(
     )
 
 
-def minhash_df(tokens_df: DataFrame, num_perm: int = 64) -> DataFrame:
-    def _sig(batches):
-        from collections import Counter
-
-        for pdf in batches:
-            sigs, _ = sketch_counts(
-                (Counter(t) for t in pdf["tokens"]),
-                num_perm,
-                simhash=False,
+def _band_rows(sig_df: DataFrame, bands: int, *cols: str) -> DataFrame:
+    """(doc_id, *cols, band_id, band_key): one row per LSH band of each
+    doc's `sig`, the band key being the raw signature slice. Shared by
+    candidate_pairs (one frame against itself) and dedup.delta_admit
+    (incoming bands against corpus bands)."""
+    rows_per_band = (F.size("sig") / bands).cast("int")
+    return sig_df.select(
+        "doc_id",
+        *cols,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(bi).alias("band_id"),
+                        F.slice(
+                            "sig",
+                            F.lit(bi) * rows_per_band + 1,
+                            rows_per_band,
+                        ).alias("band_key"),
+                    )
+                    for bi in range(bands)
+                ]
             )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": sigs})
-
-    return tokens_df.select("doc_id", "tokens").mapInPandas(
-        _sig, schema="doc_id long, sig array<long>"
-    )
+        ).alias("bk"),
+    ).select("doc_id", *cols, "bk.band_id", "bk.band_key")
 
 
 def candidate_pairs(
@@ -258,11 +246,9 @@ def candidate_pairs(
     verification needs no second size join.
 
     Banding is PURE JVM: each band key is ``slice(sig, ...)`` — the
-    raw sub-signature array — exploded inline, so the 16x-docs band
-    table never leaves whole-stage codegen (the former Python
-    ``lsh_bands`` kernel paid one full Arrow round-trip of that table
-    per run; at corpus scale that is 16N rows through Python for a
-    pure reshape). Joining on the array itself is also hash-free:
+    raw sub-signature array — exploded inline (_band_rows), so the
+    16x-docs band table never leaves whole-stage codegen. Joining on
+    the array itself is also hash-free:
     equal slices match exactly — no band-hash collision can merge
     distinct buckets, and no hash function needs cross-engine
     pinning. Pair generation is ONE hash-aggregated shuffle of the
@@ -274,27 +260,7 @@ def candidate_pairs(
     bounds the blow-up; near-dup docs still meet in their other
     bands.
     """
-    rows_per_band = (F.size("sig") / bands).cast("int")
-    size_cols = [size_col] if size_col else []
-    banded = sig_df.select(
-        "doc_id",
-        *size_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_id"),
-                        F.slice(
-                            "sig",
-                            F.lit(bi) * rows_per_band + 1,
-                            rows_per_band,
-                        ).alias("band_key"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", *size_cols, "bk.band_id", "bk.band_key")
+    banded = _band_rows(sig_df, bands, *([size_col] if size_col else []))
     # Bucket guard + pair expansion as ONE hash aggregation (r5): the
     # former shape — a sort-based window count over the 16x-docs
     # banded frame followed by a sort-merge self-join on the same
@@ -361,8 +327,7 @@ def verify_pairs(
 
     Shuffle shape: each candidate pair is verified in ONE projection
     over its own row. Every doc's term counts become a word -> tf map
-    (``map_from_entries(wc)`` on a `featurize_docs` frame, one
-    groupBy(doc_id) over the raw tokens otherwise); the seed side
+    (``map_from_entries(wc)`` on the `featurize_docs` frame); the seed side
     looks its <= TAG_NUM tags up once per doc (docs-sized), pair rows
     pick up the seed's tags and counts by `a` and the probe doc's map
     by `b`, and array lambdas fold the dot product and norms. No
@@ -379,14 +344,7 @@ def verify_pairs(
     num/denom — happen in the same order as the Python kernel, and
     IEEE-754 sqrt/divide are correctly rounded in both runtimes.
     """
-    if "wc" in tokens_df.columns:
-        wc = tokens_df.select("doc_id", F.map_from_entries("wc").alias("wc"))
-    else:
-        wc = _tf_rows(tokens_df).groupBy("doc_id").agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("word", "tf"))
-            ).alias("wc")
-        )
+    wc = tokens_df.select("doc_id", F.map_from_entries("wc").alias("wc"))
     # a doc whose tokens are all 1-char has no map row: its counts are 0
     counts = "transform(tags, t -> coalesce(wc[t], 0L))"
     sq_sum = "aggregate({}, 0L, (s, x) -> s + x * x)"
@@ -617,33 +575,6 @@ def _greedy_scan(a_vals, b_vals, rows: list, max_similar: int) -> None:
             rows.extend((i, j, r + 1) for r, j in enumerate(similar))
 
 
-def _greedy_scan_v1(a_vals, b_vals, sim_vals, rows: list) -> None:
-    """v1 greedy (top-1 consume, reference_impl.greedy_clusters_v1),
-    same whole-graph-or-per-component indifference as _greedy_scan."""
-    nbrs: dict[int, list[tuple[float, int]]] = {}
-    nodes: set[int] = set()
-    for a, b, s in zip(a_vals, b_vals, sim_vals):
-        nbrs.setdefault(int(a), []).append((float(s), int(b)))
-        nodes.add(int(a))
-        nodes.add(int(b))
-    consumed: set[int] = set()
-    for i in sorted(nodes):
-        if i in consumed:
-            continue
-        consumed.add(i)
-        cands = [
-            (s, j) for s, j in nbrs.get(i, [])
-            if j > i and j not in consumed
-        ]
-        if not cands:
-            continue
-        cands.sort(key=lambda p: (-p[0], p[1]))
-        j = cands[0][1]
-        consumed.add(j)
-        rows.append((i, i, 0))
-        rows.append((i, j, 1))
-
-
 def greedy_relabel(
     edges: DataFrame,
     components: DataFrame,
@@ -675,9 +606,6 @@ def greedy_relabel(
             .drop("n_edges")
         )
 
-    def _greedy_one(sub: pd.DataFrame, rows: list) -> None:
-        _greedy_scan(sub["a"], sub["b"], rows, max_similar)
-
     def _greedy(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # One Arrow group per HASH BUCKET of components, not per
         # component: components are processed independently inside the
@@ -689,44 +617,7 @@ def greedy_relabel(
         # bucket, exactly as it landed in a single group before.
         rows: list = []
         for _, sub in pdf.groupby("component", sort=False):
-            _greedy_one(sub, rows)
-        return pd.DataFrame(
-            rows, columns=["cluster_id", "doc_id", "member_rank"]
-        )
-
-    n_buckets = max(
-        64, edges.sparkSession.sparkContext.defaultParallelism * 4
-    )
-    return (
-        e.withColumn(
-            "_bkt", F.pmod(F.xxhash64("component"), F.lit(n_buckets))
-        )
-        .groupBy("_bkt")
-        .applyInPandas(
-            _greedy, schema="cluster_id long, doc_id long, member_rank int"
-        )
-    )
-
-
-def greedy_relabel_v1(
-    edges: DataFrame,
-    components: DataFrame,
-) -> DataFrame:
-    """v1 mode (chnsegmt top-1 matching, oracle
-    reference_impl.greedy_clusters_v1): each seed takes only its best
-    strictly-above-threshold match, which is consumed for good."""
-    e = edges.join(
-        components.withColumnRenamed("doc_id", "a"), "a"
-    ).select("component", "a", "b", "sim")
-
-    def _greedy_one(sub: pd.DataFrame, rows: list) -> None:
-        _greedy_scan_v1(sub["a"], sub["b"], sub["sim"], rows)
-
-    def _greedy(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # Hash-bucketed dispatch, same amortization as greedy_relabel.
-        rows: list = []
-        for _, sub in pdf.groupby("component", sort=False):
-            _greedy_one(sub, rows)
+            _greedy_scan(sub["a"], sub["b"], rows, max_similar)
         return pd.DataFrame(
             rows, columns=["cluster_id", "doc_id", "member_rank"]
         )
@@ -748,7 +639,6 @@ def greedy_relabel_v1(
 def greedy_membership(
     edges: DataFrame,
     max_similar: int = MAX_SIMILAR,
-    mode: str = "v2",
     local_max_edges: int = 50_000,
 ) -> DataFrame:
     """Fused CC + greedy seam (VERDICT r4 next-round #1).
@@ -756,7 +646,7 @@ def greedy_membership(
     The unfused seam is ``connected_components(edges)`` ->
     ``greedy_relabel(edges, comps)``. Component labels exist there
     only to PARTITION the greedy into independent pandas groups — the
-    greedy's handled/consumed bookkeeping never crosses a component
+    greedy's handled-set bookkeeping never crosses a component
     boundary, so running the same scan-order loop over the whole
     graph yields identical clusters. When the edge list is small
     enough that CC would take the driver union-find path anyway
@@ -786,28 +676,19 @@ def greedy_membership(
     otherwise re-execute the sketch->banding->verify derivation
     twice. Local-vs-distributed equality is pinned by
     tests/test_clustering.py::test_greedy_membership_fused_agrees
-    (both modes) and the news_clusters_lsh driver hash oracle.
+    and the news_clusters_lsh driver hash oracle.
     """
     n_edges = edges.count()
     if n_edges <= local_max_edges:
         spark = edges.sparkSession
         rows: list = []
-        if mode == "v1":
-            collected = edges.select("a", "b", "sim").collect()
-            _greedy_scan_v1(
-                (r[0] for r in collected),
-                (r[1] for r in collected),
-                (r[2] for r in collected),
-                rows,
-            )
-        else:
-            collected = edges.select("a", "b").collect()
-            _greedy_scan(
-                (r[0] for r in collected),
-                (r[1] for r in collected),
-                rows,
-                max_similar,
-            )
+        collected = edges.select("a", "b").collect()
+        _greedy_scan(
+            (r[0] for r in collected),
+            (r[1] for r in collected),
+            rows,
+            max_similar,
+        )
         schema = T.StructType(
             [
                 T.StructField("cluster_id", T.LongType(), False),
@@ -821,8 +702,6 @@ def greedy_membership(
             pd.DataFrame(rows, columns=schema.fieldNames()), schema
         )
     comps = connected_components(edges.select("a", "b"))
-    if mode == "v1":
-        return greedy_relabel_v1(edges, comps)
     return greedy_relabel(edges, comps, max_similar)
 
 
@@ -834,22 +713,19 @@ def cluster_documents(
     max_similar: int = MAX_SIMILAR,
     num_perm: int = 64,
     bands: int = 16,
-    mode: str = "v2",
     tag_ranking: str = "int",
     idf: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end: docs(doc_id, text, [source, title, day_time]) ->
-    news_category-shaped clusters. mode='v2' (default): categorize.cpp
-    greedy stars at >= 0.85; mode='v1': chnsegmt top-1 pairs at > 0.75
-    with 10 tags (SURVEY.md J1/J2).
+    news_category-shaped clusters: categorize.cpp greedy stars at
+    >= 0.85 (SURVEY.md J2/J3). The v1 pipeline's top-1 pairing (J1)
+    is cluster_documents_v1_sources.
 
     tag_ranking='int' (default): (tf desc, df asc, word asc) integer
     ordering; tag_ranking='tfidf' with an `idf` table (word, idf):
     the reference's float tf-share * idf ranking
     (KeywordExtractor.hpp:54-99) via doc_tags_tfidf — a user porting
     v2 data with its idf dicts gets the reference's tag sets."""
-    if mode == "v1":
-        sim_bound, tag_num = 0.75, 10
     toks = featurize_docs(docs, num_perm=num_perm).persist()
     if tag_ranking == "tfidf":
         if idf is None:
@@ -861,14 +737,8 @@ def cluster_documents(
         raise ValueError(f"unknown tag_ranking: {tag_ranking!r}")
     sigs = toks.select("doc_id", "sig")
     pairs = candidate_pairs(sigs, bands)
-    if mode == "v1":
-        # strict > threshold (findsimilarpassage.py:18-19)
-        edges = verify_pairs(pairs, toks, tags, sim_bound=-1.0).filter(
-            F.col("sim") > sim_bound
-        ).persist()
-    else:
-        edges = verify_pairs(pairs, toks, tags, sim_bound).persist()
-    membership = greedy_membership(edges, max_similar, mode=mode)
+    edges = verify_pairs(pairs, toks, tags, sim_bound).persist()
+    membership = greedy_membership(edges, max_similar)
 
     meta_cols = [c for c in ("source", "title", "day_time") if c in docs.columns]
     enriched = membership.join(docs.select("doc_id", *meta_cols), "doc_id")

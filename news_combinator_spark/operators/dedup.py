@@ -7,8 +7,13 @@ JVM-side where the semantics allow (exact paths are pure built-ins).
 
 - exact_dedup:        first row per content hash (groupBy/window)
 - exact_dup_groups:   hash -> members (the audit view of the above)
-- minhash_near_dups:  shingle -> MinHash -> LSH bands -> bucket pairs
-                      -> Jaccard verify (reuses clustering kernels)
+- minhash_near_dups:  one Arrow sketch pass (MinHash signature +
+                      distinct tokens) -> clustering.candidate_pairs'
+                      JVM banding -> Jaccard verify in the JVM
+- delta_admit:        the same sketch pass per side, incoming band rows
+                      joined to corpus band rows on the signature slice
+                      -> Jaccard verify; admits incoming rows with no
+                      near-dup in the corpus
 - simhash_near_dups:  64-bit SimHash, Hamming <= radius via
                       pigeonhole blocking over radius+1 disjoint
                       blocks (lossless: a pair within radius agrees
@@ -35,7 +40,7 @@ from ..functions.textfns import (
     sketch_counts,
     tokenize,
 )
-from .clustering import candidate_pairs
+from .clustering import _band_rows, candidate_pairs
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", key_cols=None) -> DataFrame:
@@ -65,18 +70,27 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _tokens_df(df: DataFrame, text_col: str) -> DataFrame:
-    def _tok(batches):
+def _sketch(df: DataFrame, text_col: str, num_perm: int) -> DataFrame:
+    """(doc_id, sig, toks, n): ONE Arrow pass per doc yields its MinHash
+    signature, its distinct tokens and their count. Banding reads
+    (sig, n), exact verify reads (toks, n), so a caller that persists
+    this frame tokenizes each doc once."""
+
+    def _sig(batches):
         for pdf in batches:
+            counters = [Counter(tokenize(t or "")) for t in pdf[text_col]]
+            sig_col, _ = sketch_counts(counters, num_perm, simhash=False)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "tokens": pdf[text_col].map(lambda t: tokenize(t or "")),
+                    "sig": sig_col,
+                    "toks": [list(c.keys()) for c in counters],
+                    "n": [len(c) for c in counters],
                 }
             )
 
     return df.select("doc_id", text_col).mapInPandas(
-        _tok, schema="doc_id long, tokens array<string>"
+        _sig, schema="doc_id long, sig array<long>, toks array<string>, n long"
     )
 
 
@@ -108,22 +122,6 @@ def minhash_near_dups(
     (the previous shape; at 96k candidates over 500 docs the Python
     verify pass plus its per-pair text fan-out dominated the query).
     jaccard(∅, ∅) = 1.0 replicates functions.textfns.jaccard."""
-    base = df.select("doc_id", F.col(text_col).alias("_mnd_text"))
-
-    def _sig(batches):
-        for pdf in batches:
-            counters = [
-                Counter(tokenize(t or "")) for t in pdf["_mnd_text"]
-            ]
-            sig_col, _ = sketch_counts(counters, num_perm, simhash=False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sig": sig_col,
-                    "toks": [list(c.keys()) for c in counters],
-                }
-            )
-
     # persist: the sig/token frame feeds THREE subplans of the one
     # final plan (banding + both sides of the candidate join); Spark
     # has no common-subexpression reuse across joins, so uncached the
@@ -133,9 +131,7 @@ def minhash_near_dups(
     # session) pass cache_registry and unpersist after materializing
     # the result; otherwise the block lives until the Python object is
     # GC'd (fine for one-shot queries, a leak in a loop).
-    sigs = base.mapInPandas(
-        _sig, schema="doc_id long, sig array<long>, toks array<string>"
-    ).persist()
+    sigs = _sketch(df, text_col, num_perm).persist()
     if cache_registry is not None:
         cache_registry.append(sigs)
     # EXACT size prune INSIDE the band self-join (see candidate_pairs:
@@ -145,7 +141,7 @@ def minhash_near_dups(
     # size joins are gone, and |A ∪ B| = |A| + |B| - |A ∩ B| below
     # replaces array_union with arithmetic over the carried na/nb.
     cand = candidate_pairs(
-        sigs.select("doc_id", "sig", F.size("toks").alias("n")),
+        sigs.select("doc_id", "sig", "n"),
         bands,
         max_bucket=max_bucket,
         size_col="n",
@@ -381,49 +377,6 @@ def keep_best_in_groups(
     )
 
 
-def _banded_df(sigs: DataFrame, bands: int) -> DataFrame:
-    """(doc_id, band_id, band_hash) LSH band rows for a signature
-    frame — the exposed half of candidate_pairs' banding, for joins
-    where the two sides are DIFFERENT frames (delta admission)."""
-    from ..functions.textfns import lsh_bands
-
-    def _bands(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, sig, n in zip(pdf["doc_id"], pdf["sig"], pdf["n"]):
-                for band_id, band_hash in lsh_bands(list(sig), bands):
-                    rows.append((doc_id, band_id, band_hash, n))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "band_id", "band_hash", "n"]
-            )
-
-    return sigs.mapInPandas(
-        _bands, schema="doc_id long, band_id int, band_hash long, n long"
-    )
-
-
-def _sig_df(toks: DataFrame, num_perm: int) -> DataFrame:
-    def _sig(batches):
-        from collections import Counter
-
-        for pdf in batches:
-            counters = [Counter(t) for t in pdf["tokens"]]
-            sig_col, _ = sketch_counts(counters, num_perm, simhash=False)
-            # n = distinct-token count, emitted in the same Arrow pass
-            # so the size prune downstream needs no second join
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sig": sig_col,
-                    "n": [len(c) for c in counters],
-                }
-            )
-
-    return toks.mapInPandas(
-        _sig, schema="doc_id long, sig array<long>, n long"
-    )
-
-
 def delta_admit(
     corpus: DataFrame,
     incoming: DataFrame,
@@ -441,11 +394,14 @@ def delta_admit(
     This is the form dedup takes on a ROLLING corpus: each crawl round
     delivers a delta that must be checked against everything already
     admitted, without re-clustering the corpus. Both sides are
-    MinHash-banded; candidates come from an equi-join of incoming
-    bands against corpus bands — cost O(|delta| + matching buckets),
-    never O(|corpus|^2) and never a rescan of corpus content. At
+    MinHash-banded with candidate_pairs' band rows (the key is the
+    raw signature slice); candidates come from an equi-join of
+    incoming bands against corpus bands on (band_id, band_key) — cost
+    O(|delta| + matching buckets), never O(|corpus|^2) and never a
+    rescan of corpus content. Each side is one persisted Arrow sketch
+    pass feeding both its band rows and its verify join. At
     production scale the corpus band table is computed once and
-    persisted (bucketed by (band_id, band_hash)), so each round
+    persisted (bucketed by (band_id, band_key)), so each round
     shuffles only the delta; here both sides derive from DataFrames so
     the whole flow stays hash-checkable against a brute-force NOT
     EXISTS oracle (lossless banding at oracle scale, same argument as
@@ -455,64 +411,61 @@ def delta_admit(
     near_dup_groups/keep_best_in_groups on the admitted batch. The
     ``max_bucket`` guard drops corpus boilerplate buckets before the
     join, the same s^2/2 bound as candidate_pairs."""
-    # persist both token frames: each feeds TWO subplans (its band
-    # derivation and its side of the verify join) plus the narrow
-    # size-prune frame below; uncached the Arrow tokenize pass would
-    # re-run once per subplan. The documented rolling loop calls this
-    # once per batch — without a release hook every round would pin
-    # two more cached frames until Python GC. Pass cache_registry and
-    # unpersist after materializing the round's result.
-    inc_toks = _tokens_df(incoming, text_col).persist()
-    cor_toks = _tokens_df(corpus, text_col).persist()
+    # persist both sketch frames: each feeds TWO subplans (its band
+    # rows and its side of the verify join); uncached the Arrow pass
+    # would re-run once per subplan. The documented rolling loop calls
+    # this once per batch — without a release hook every round would
+    # pin two more cached frames until Python GC. Pass cache_registry
+    # and unpersist after materializing the round's result.
+    inc = _sketch(incoming, text_col, num_perm).persist()
+    cor = _sketch(corpus, text_col, num_perm).persist()
     if cache_registry is not None:
-        cache_registry.extend((inc_toks, cor_toks))
-    inc_bands = _banded_df(_sig_df(inc_toks, num_perm), bands)
-    cor_bands = _banded_df(_sig_df(cor_toks, num_perm), bands)
-    w_bucket = Window.partitionBy("band_id", "band_hash")
+        cache_registry.extend((inc, cor))
+    w_bucket = Window.partitionBy("band_id", "band_key")
     cor_bands = (
-        cor_bands.withColumn("bucket_n", F.count("*").over(w_bucket))
+        _band_rows(cor, bands, "n")
+        .withColumn("bucket_n", F.count("*").over(w_bucket))
         .filter(F.col("bucket_n") <= max_bucket)
         .drop("bucket_n")
     )
     # EXACT size prune (same law as minhash_near_dups): set-jaccard
     # <= min(|A|,|B|)/max(|A|,|B|) over DISTINCT token counts. The
-    # counts ride the band rows from the sig kernel (one long per
-    # row), so the prune runs INSIDE the inc x cor band join — before
-    # the distinct shuffle — and needs no separate size joins.
+    # counts ride the band rows (one long per row), so the prune runs
+    # INSIDE the inc x cor band join — before the distinct shuffle —
+    # and needs no separate size joins.
     na, nb = F.col("na"), F.col("nb")
     cand = (
-        inc_bands.select(
-            "band_id", "band_hash",
+        _band_rows(inc, bands, "n")
+        .select(
+            "band_id", "band_key",
             F.col("doc_id").alias("a"), F.col("n").alias("na"),
         )
         .join(
             cor_bands.select(
-                "band_id", "band_hash",
+                "band_id", "band_key",
                 F.col("doc_id").alias("b"), F.col("n").alias("nb"),
             ),
-            ["band_id", "band_hash"],
+            ["band_id", "band_key"],
         )
         .filter(
             F.least(na, nb).cast("double")
             >= F.lit(threshold) * F.greatest(na, nb).cast("double")
         )
-        .select("a", "b")
+        .select("a", "b", "na", "nb")
         .dropDuplicates(["a", "b"])
     )
     joined = cand.join(
-        inc_toks.select(F.col("doc_id").alias("a"), F.col("tokens").alias("a_tok")),
+        inc.select(F.col("doc_id").alias("a"), F.col("toks").alias("a_toks")),
         "a",
     ).join(
-        cor_toks.select(F.col("doc_id").alias("b"), F.col("tokens").alias("b_tok")),
+        cor.select(F.col("doc_id").alias("b"), F.col("toks").alias("b_toks")),
         "b",
     )
-
-    # exact verify in whole-stage codegen: array_intersect/array_union
-    # dedupe, so this equals set-Jaccard over the token lists (the
-    # Python-kernel shape this replaces did set() explicitly);
+    # exact verify in whole-stage codegen over the distinct-token
+    # arrays, |A ∪ B| = |A| + |B| - |A ∩ B| as in minhash_near_dups;
     # jaccard(∅, ∅) = 1.0 replicates functions.textfns.jaccard.
-    inter = F.size(F.array_intersect("a_tok", "b_tok"))
-    uni = F.size(F.array_union("a_tok", "b_tok"))
+    inter = F.size(F.array_intersect("a_toks", "b_toks"))
+    uni = na + nb - inter
     dup_ids = (
         joined.select(
             "a",

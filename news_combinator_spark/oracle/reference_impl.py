@@ -118,40 +118,6 @@ def greedy_clusters(
     return clusters
 
 
-def greedy_clusters_v1(
-    texts: list[str],
-    sim_bound: float = 0.75,
-    tag_num: int = 10,
-) -> list[Cluster]:
-    """v1 semantics (chnsegmt/categorize.py:40-68 +
-    findsimilarpassage.py:21-44): each unconsumed seed takes only its
-    single BEST match (heap top-1) and only when similarity is
-    STRICTLY above 0.75; the match is consumed (news_set.discard) and
-    never seeds or matches again — unlike v2, consumed docs cannot
-    join later clusters. Ties broken by lower doc index (heap order on
-    (-sim, index))."""
-    token_lists = [tokenize(t) for t in texts]
-    df = doc_freq(token_lists)
-    consumed: set[int] = set()
-    clusters: list[Cluster] = []
-    for i in range(len(texts)):
-        if i in consumed:
-            continue
-        consumed.add(i)
-        vocab = select_tags(token_lists[i], df, tag_num)
-        best: tuple[float, int] | None = None
-        for j in range(i + 1, len(texts)):
-            if j in consumed:
-                continue
-            s = seed_similarity(token_lists[i], token_lists[j], vocab)
-            if s > sim_bound and (best is None or (-s, j) < (-best[0], best[1])):
-                best = (s, j)
-        if best is not None:
-            consumed.add(best[1])
-            clusters.append(Cluster(seed=i, members=[i, best[1]]))
-    return clusters
-
-
 def all_qualifying_pairs(
     texts: list[str],
     sim_bound: float = SIM_BOUND,

@@ -1085,7 +1085,7 @@ SQL_FILTER_FUNNEL = f"""
 # ===========================================================================
 
 def q_news_clusters_lsh(spark, sf_dir):
-    """J1-J3 (categorize.cpp:92-165): MinHash-LSH banding -> exact
+    """J2-J3 (categorize.cpp:92-165): MinHash-LSH banding -> exact
     directional seed-vocab cosine (>= 0.85) -> connected components ->
     the reference's sequential greedy star relabel, over the documents
     slice (doc_id < 500 = the full sf0.01 corpus; SF-invariant cost).
@@ -1214,7 +1214,7 @@ ORDER BY cluster_id, member_rank
 
 
 def q_v1_cross_source_clusters(spark, sf_dir):
-    """J1 faithful form: the v1 pipeline's cross-source greedy
+    """J1: the v1 pipeline's cross-source greedy
     (categorize.py:40-68 + findsimilarpassage.py:21-44) — one pool per
     source, seeds scan pool-major, each seed takes at most one
     strictly-> 0.75 best match from EACH later pool, matched docs
@@ -5887,11 +5887,13 @@ _R5_ROTATION = [
     # into the whole minhash near-dup family; the crawl loop's
     # checkpoint-fold/Observation changes flow into every crawl
     # query (crawl_frontier/crawl_seen_set sit in _ALWAYS_ATTEST;
-    # the host-lineage variant re-enters here); and
+    # the host-lineage variant re-enters here);
     # robots_longest_match's Spark function is now
-    # apply_robots_rfc9309.
+    # apply_robots_rfc9309; and delta_admit now bands through
+    # candidate_pairs' signature-slice rows over one sketch pass per
+    # side (its Python band hashing is gone).
     "minhash_near_dups", "near_dup_groups", "canonical_best",
-    "crawl_host_lineage", "robots_longest_match",
+    "crawl_host_lineage", "robots_longest_match", "delta_admit",
     #
     # Oldest-first refill: the 22 entries still registered whose
     # latest green row was CORRECTNESS_r02.json when this window was
@@ -5907,14 +5909,14 @@ _R5_ROTATION = [
     # The 14 freed slots refill by the same rule. snapshot_asof goes
     # first: its latest green row is still CORRECTNESS_r02.json (it
     # yielded its r5 slot to the changed-implementation set above).
-    # Then the 13 oldest after it: every other remaining entry's
-    # latest green row is r03 or newer, and the r03 ties are taken
-    # in _QUERIES_BY_FAMILY order.
+    # Then the oldest after it: every other remaining entry's latest
+    # green row is r03 or newer, and the r03 ties are taken in
+    # _QUERIES_BY_FAMILY order. The newest of these (conditional_fetch)
+    # yielded its slot to delta_admit above.
     "snapshot_asof", "domain_mix", "robots_rules", "crawl_diff",
     "crawl_delay_budgets", "host_quality_filter", "sitemap_urls",
     "fetch_retries", "redirect_resolution", "anchor_texts",
     "warc_records", "recrawl_priority", "robots_sitemaps",
-    "conditional_fetch",
 ]
 
 QUERIES = {

@@ -9,8 +9,7 @@ from news_combinator_spark.operators.clustering import (
     cluster_documents,
     connected_components,
     doc_tags,
-    minhash_df,
-    tokenize_docs,
+    featurize_docs,
     verify_pairs,
 )
 from news_combinator_spark.oracle.reference_impl import (
@@ -41,7 +40,7 @@ def test_tags_match_oracle(spark, docs_df, corpus):
     texts, _ = corpus
     token_lists = [tokenize(t) for t in texts]
     df = doc_freq(token_lists)
-    toks = tokenize_docs(docs_df)
+    toks = featurize_docs(docs_df)
     got = {
         r["doc_id"]: list(r["tags"])
         for r in doc_tags(toks).collect()
@@ -53,8 +52,8 @@ def test_tags_match_oracle(spark, docs_df, corpus):
 def test_lsh_candidates_cover_all_qualifying_pairs(spark, docs_df, corpus):
     texts, _ = corpus
     expected = all_qualifying_pairs(texts)
-    toks = tokenize_docs(docs_df)
-    pairs = candidate_pairs(minhash_df(toks)).collect()
+    feat = featurize_docs(docs_df)
+    pairs = candidate_pairs(feat.select("doc_id", "sig")).collect()
     got = {(r["a"], r["b"]) for r in pairs}
     missing = expected - got
     assert not missing, f"LSH missed qualifying pairs: {missing}"
@@ -63,33 +62,30 @@ def test_lsh_candidates_cover_all_qualifying_pairs(spark, docs_df, corpus):
 def test_verified_edges_match_oracle(spark, docs_df, corpus):
     texts, _ = corpus
     expected = all_qualifying_pairs(texts)
-    toks = tokenize_docs(docs_df)
-    tags = doc_tags(toks)
-    pairs = candidate_pairs(minhash_df(toks))
-    edges = verify_pairs(pairs, toks, tags).collect()
+    feat = featurize_docs(docs_df)
+    tags = doc_tags(feat)
+    pairs = candidate_pairs(feat.select("doc_id", "sig"))
+    edges = verify_pairs(pairs, feat, tags).collect()
     got = {(r["a"], r["b"]) for r in edges}
     assert got == expected
 
 
-@pytest.mark.parametrize("k", [15, 10], ids=["v2", "v1"])
-@pytest.mark.parametrize("frame", ["featurize", "tokenize"])
-def test_verify_sims_equal_oracle_kernel(spark, docs_df, corpus, frame, k):
-    """verify_pairs' sim is bit-identical (==) to seed_similarity for
-    every candidate pair, plus pairs whose probe doc holds none of the
-    seed's tags (sim 0.0), over both token-frame shapes."""
-    from news_combinator_spark.operators.clustering import featurize_docs
+@pytest.mark.parametrize("k", [15, 10], ids=["featurize-v2", "featurize-v1"])
+def test_verify_sims_equal_oracle_kernel(spark, docs_df, corpus, k):
+    """verify_pairs' sim over a featurize_docs frame is bit-identical
+    (==) to seed_similarity for every candidate pair, plus pairs whose
+    probe doc holds none of the seed's tags (sim 0.0), with 15 and 10
+    tags."""
     from news_combinator_spark.oracle.reference_impl import seed_similarity
 
     texts, _ = corpus
     token_lists = [tokenize(t) for t in texts]
     df = doc_freq(token_lists)
     seed_tags = [select_tags(t, df, k=k) for t in token_lists]
-    toks = (featurize_docs if frame == "featurize" else tokenize_docs)(
-        docs_df
-    )
+    toks = featurize_docs(docs_df)
     cands = {
         (r["a"], r["b"])
-        for r in candidate_pairs(minhash_df(tokenize_docs(docs_df)))
+        for r in candidate_pairs(toks.select("doc_id", "sig"))
         .select("a", "b")
         .collect()
     }
@@ -134,19 +130,6 @@ def test_clusters_match_reference_greedy_exactly(spark, docs_df, corpus):
         assert by_id[c.seed]["abstract_ids"] == ",".join(
             str(m) for m in c.members
         )
-
-
-def test_v1_mode_matches_v1_oracle(spark, docs_df, corpus):
-    from news_combinator_spark.oracle.reference_impl import (
-        greedy_clusters_v1,
-    )
-
-    texts, _ = corpus
-    exp = {c.seed: c.members for c in greedy_clusters_v1(texts)}
-    out = cluster_documents(spark, docs_df, mode="v1").collect()
-    got = {r["cluster_id"]: list(r["member_ids"]) for r in out}
-    assert got == exp
-    assert all(len(m) == 2 for m in got.values())  # v1 emits pairs only
 
 
 def test_connected_components_basic(spark):
@@ -251,39 +234,18 @@ def test_greedy_membership_fused_agrees(spark, docs_df):
     """The fused driver path (greedy_membership under the size gate)
     and the unfused distributed seam (forced with local_max_edges=0:
     connected_components -> per-component greedy) must emit identical
-    membership rows, both modes — the equivalence the r5 barrier
-    fusion rests on."""
-    from pyspark.sql import functions as F
-
-    from news_combinator_spark.operators.clustering import (
-        featurize_docs,
-        greedy_membership,
-    )
+    membership rows — the equivalence the r5 barrier fusion rests
+    on."""
+    from news_combinator_spark.operators.clustering import greedy_membership
 
     feat = featurize_docs(docs_df).persist()
     tags = doc_tags(feat, 15)
     pairs = candidate_pairs(feat.select("doc_id", "sig"), 16)
-    for mode, edges in (
-        ("v2", verify_pairs(pairs, feat, tags, 0.85)),
-        (
-            "v1",
-            verify_pairs(pairs, feat, tags, sim_bound=-1.0).filter(
-                F.col("sim") > 0.75
-            ),
-        ),
-    ):
-        edges = edges.persist()
-        fused = sorted(
-            map(tuple, greedy_membership(edges, 5, mode=mode).collect())
-        )
-        dist = sorted(
-            map(
-                tuple,
-                greedy_membership(
-                    edges, 5, mode=mode, local_max_edges=0
-                ).collect(),
-            )
-        )
-        assert fused == dist and len(fused) > 0, mode
-        edges.unpersist()
+    edges = verify_pairs(pairs, feat, tags, 0.85).persist()
+    fused = sorted(map(tuple, greedy_membership(edges, 5).collect()))
+    dist = sorted(
+        map(tuple, greedy_membership(edges, 5, local_max_edges=0).collect())
+    )
+    assert fused == dist and len(fused) > 0
+    edges.unpersist()
     feat.unpersist()

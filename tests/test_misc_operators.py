@@ -5,7 +5,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from news_combinator_spark.operators import serving
-from news_combinator_spark.operators.multimodal import gc_old_media
+from news_combinator_spark.operators.multimodal import (
+    MEDIA_SCHEMA,
+    gc_old_media,
+)
 from news_combinator_spark.streaming.incremental import (
     WatermarkStore,
     advance,
@@ -56,14 +59,29 @@ def test_paginate(spark):
 
 
 def test_gc_old_media(spark):
-    media = spark.createDataFrame(
-        [(1, 20240101), (2, 20240106), (3, 20240110)],
-        "media_id long, day_time int",
+    """The GC filter over MEDIA_SCHEMA rows: old rows go, kept rows
+    keep their binary payload and their typed `ext` map (SURVEY F7)."""
+    from pyspark.sql import types as T
+
+    rows = [
+        (i, 100 + i, day, "jpg", bytes([i, 0xFF]), {"w": str(i), "src": "up"})
+        for i, day in ((1, 20240101), (2, 20240106), (3, 20240110))
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    assert media.schema["ext"].dataType == T.MapType(
+        T.StringType(), T.StringType()
     )
     kept = sorted(
-        r["media_id"] for r in gc_old_media(media, today_day=20240110).collect()
+        gc_old_media(media, today_day=20240110).collect(),
+        key=lambda r: r["media_id"],
     )
-    assert kept == [2, 3]  # day <= today-5 dropped (clearpic.php:38-77)
+    # day <= today-5 dropped (clearpic.php:38-77)
+    assert [r["media_id"] for r in kept] == [2, 3]
+    assert [bytes(r["payload"]) for r in kept] == [b"\x02\xff", b"\x03\xff"]
+    assert [r["ext"] for r in kept] == [
+        {"w": "2", "src": "up"},
+        {"w": "3", "src": "up"},
+    ]
 
 
 def test_watermark_incremental_scan(spark, tmp_path):

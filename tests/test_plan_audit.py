@@ -244,7 +244,6 @@ _LAZY_QUERIES = [
     "bm25_search", "hits_rank", "opic_priority", "param_significance",
     "phrase_search", "path_profile", "reciprocal_hosts", "stale_robots",
     "containment_pairs", "host_clusters", "drain_forecast",
-    "pii_scrub",
     "robots_wildcards",
     "index_delta_merge",
 ]
@@ -398,6 +397,54 @@ def test_verify_pairs_is_one_projection_per_pair(spark):
     assert edges.count() > 0
 
 
+def _has_ancestor(lines: list[str], i: int, marker: str) -> bool:
+    """True when some ancestor node of plan line ``i`` contains
+    ``marker`` (ancestors are the earlier lines of smaller depth)."""
+    depth = _node_depth(lines[i])
+    for ln in reversed(lines[:i]):
+        d = _node_depth(ln)
+        if d < depth:
+            if marker in ln:
+                return True
+            depth = d
+    return False
+
+
+def test_delta_admit_one_arrow_pass_per_side(spark):
+    """delta_admit sketches each side in ONE Arrow pass and persists
+    it: every MapInPandas in the plan sits inside a cached sketch
+    relation (band rows and verify tokens both read the cache), and
+    there are exactly two distinct passes — incoming and corpus. A
+    cached relation is printed once per scan, so each pass may appear
+    more than once."""
+    from news_combinator_spark.datagen import reference_grammar_pages
+    from news_combinator_spark.operators import dedup as dd
+
+    pages = reference_grammar_pages(n_pages=60, seed=3, dup_rate=0.4)
+    docs = spark.createDataFrame(
+        [(i, p["text"]) for i, p in enumerate(pages)], "doc_id long, text string"
+    )
+    reg: list = []
+    out = dd.delta_admit(
+        docs.filter("doc_id % 3 <> 0"),
+        docs.filter("doc_id % 3 = 0"),
+        max_bucket=10_000,
+        cache_registry=reg,
+    )
+    lines = _simple(out).splitlines()
+    passes = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    outside = [
+        lines[i].strip()
+        for i in passes
+        if not _has_ancestor(lines, i, "InMemoryRelation")
+    ]
+    assert not outside, "\n".join(lines)
+    nodes = {lines[i][lines[i].index("MapInPandas"):] for i in passes}
+    assert len(nodes) == 2, "\n".join(lines)
+    for f in reg:
+        f.unpersist()
+
+
 def test_greedy_membership_small_graph_is_local_table_scan(spark):
     """The driver greedy's membership frame is built from Arrow: it
     plans as a LocalTableScan, not a scan of parallelized rows."""
@@ -406,11 +453,10 @@ def test_greedy_membership_small_graph_is_local_table_scan(spark):
     edges = spark.createDataFrame(
         [(0, 1, 0.9), (0, 2, 0.9), (5, 6, 0.9)], "a long, b long, sim double"
     )
-    for mode in ("v2", "v1"):
-        members = greedy_membership(edges, mode=mode)
-        plan = _simple(members)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
-        assert members.count() > 0
+    members = greedy_membership(edges)
+    plan = _simple(members)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert members.count() > 0
 
 
 def test_partial_aggregation_before_shuffle(spark):

@@ -8,7 +8,6 @@ from news_combinator_spark.functions.textfns import (
     cosine_guarded,
     hamming64,
     jaccard,
-    lsh_bands,
     minhash_signature,
     simhash64,
     tokenize,
@@ -49,13 +48,6 @@ def test_minhash_estimates_jaccard():
     assert abs(est - true) < 0.15
     # identical inputs -> identical signatures (deterministic)
     assert minhash_signature(a, 128) == sa
-
-
-def test_lsh_bands_shape():
-    sig = minhash_signature(["x", "y", "z"], 64)
-    bands = lsh_bands(sig, 16)
-    assert len(bands) == 16
-    assert all(b[0] == i for i, b in enumerate(bands))
 
 
 def test_simhash_near_for_near_texts():
