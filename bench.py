@@ -80,7 +80,6 @@ SQL_BENCH_QUERIES = [
     "filter_funnel",
     "v1_cross_source_clusters",
     "dup_span_stats",
-    "link_rank",
     "hot_hosts",
     "snapshot_asof",
     "domain_mix",
@@ -91,7 +90,6 @@ SQL_BENCH_QUERIES = [
     "sitemap_urls",
     "fetch_retries",
     "redirect_resolution",
-    "anchor_texts",
     "warc_records",
     "recrawl_priority",
     "robots_sitemaps",
@@ -126,26 +124,18 @@ SQL_BENCH_QUERIES = [
     "ngram_counts",
     "wat_export",
     "frontier_merge",
-    "inverted_index",
-    "term_search",
     "shard_rendezvous",
     "freshness_revisit",
     "cdx_export",
     "discovery_yield",
-    "bm25_search",
-    "hits_rank",
-    "opic_priority",
     "param_significance",
-    "phrase_search",
     "path_profile",
-    "reciprocal_hosts",
     "stale_robots",
     "containment_pairs",
     "host_clusters",
     "drain_forecast",
     "pii_scrub",
     "robots_wildcards",
-    "index_delta_merge",
 ]
 
 

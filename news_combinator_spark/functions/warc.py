@@ -180,9 +180,9 @@ def wat_records(
 ) -> DataFrame:
     """Serialize per-page METADATA as WAT-style ``metadata`` records —
     the companion format to WET (wet_records): where WET carries the
-    derived text, WAT carries the envelope a link-graph / indexing
-    consumer wants without touching page bodies (target URI, content
-    digest, size, outlinks). Output: input columns + ``wat_record``.
+    derived text, WAT carries the envelope (target URI, content digest,
+    size, outlinks) a consumer can read without touching page
+    bodies. Output: input columns + ``wat_record``.
 
     The payload is a minimal JSON envelope assembled with plain
     string concatenation rather than ``to_json`` — key ORDER and

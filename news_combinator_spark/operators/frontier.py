@@ -747,10 +747,9 @@ def apply_priority_boosts(
 
     The frontier orders fetches by (priority, url) within a host
     (lower = sooner); this is where the engine's derived signals —
-    link centrality (`linkgraph.host_rank`), change frequency
-    (`snapshots.recrawl_priority`), curation tiers — actually reach
-    the schedule: effective = clamp(priority - host_boost - url_boost,
-    lo, hi). host_boosts is (host, boost int) and broadcasts (host
+    change frequency (`snapshots.recrawl_priority`), per-host tiers —
+    actually reach the schedule: effective = clamp(priority -
+    host_boost - url_boost, lo, hi). host_boosts is (host, boost int) and broadcasts (host
     cardinality is partition-sized); url_boosts is (url, boost int)
     and joins as an ordinary AQE-planned equi-join. Missing keys
     boost 0, so passing None leaves the frontier unchanged.

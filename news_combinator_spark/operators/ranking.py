@@ -13,7 +13,9 @@ decomposes into:
 2. per-group counts (tiny: one row per group);
 3. an exclusive prefix sum over the counts frame ordered by the group
    keys — a window over *group-cardinality* rows, never data rows;
-4. broadcast-join the offsets back; global rank = offset + local rank.
+4. broadcast-join the offsets back on the group keys, null-safe (a
+   null key is a group like any other); global rank = offset + local
+   rank.
 
 The only single-partition stage left operates on the aggregated counts
 frame, bounded by key cardinality (e.g. rounds x priorities x hosts),
@@ -75,16 +77,20 @@ def partitioned_global_rank(
         .orderBy(*part_order)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    keys = [f"_k{i}" for i in range(len(part_cols))]
     offsets = counts.withColumn(
         "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-    ).select(*part_cols, "_off")
-    return (
-        ranked.join(F.broadcast(offsets), list(part_cols))
-        .withColumn(
-            out_col,
-            (F.col("_off") + F.col("_lrn") + F.lit(base)).cast(cast_to),
-        )
-        .drop("_lrn", "_off")
+    ).select(*(F.col(c).alias(k) for c, k in zip(part_cols, keys)), "_off")
+    # null-safe: a null group key is one group of the total order (the
+    # sort places it like any value), so it must find its offset too
+    on = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(part_cols, keys)]
+    rest = [c for c in df.columns if c not in part_cols]
+    return ranked.join(F.broadcast(offsets), on).select(
+        *part_cols,
+        *rest,
+        (F.col("_off") + F.col("_lrn") + F.lit(base))
+        .cast(cast_to)
+        .alias(out_col),
     )
 
 

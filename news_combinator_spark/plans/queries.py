@@ -33,7 +33,6 @@ from ..datagen import (
 from ..functions.extract import links_udf, markers_udf, passage_udf, title_udf
 from ..operators import dedup as dd
 from ..functions.posfilter import _FUNCTION_WORDS, _PRONOUNS, doc_pos_tags
-from ..operators import linkgraph as lg
 from ..operators import sampling
 from ..operators import snapshots as snap_ops
 from ..functions import robots as rb
@@ -42,7 +41,6 @@ from ..functions import warc as wc
 from ..functions.robots import rules_from_robots_txt
 from ..operators import frontier as fr
 from ..operators import hoststats as hs
-from ..operators import indexing as ix
 from ..operators.bucketing import reshard_moves
 from ..operators.frontier import crawl
 from ..operators.merge import merge_into
@@ -1579,75 +1577,8 @@ SQL_DUP_SPAN_STATS = r"""
 
 
 # ===========================================================================
-# Link-graph centrality (frontier priority at Common-Crawl scale)
+# Host skew telemetry
 # ===========================================================================
-
-def q_link_rank(spark, sf_dir):
-    """PageRank over the EXTRACTED link graph: edges come from the real
-    extraction kernel (links_udf over html binary), filtered to .test
-    hosts exactly like the frontier's allowed-suffix gate, then 5 power
-    iterations of operators/linkgraph.page_rank. The oracle re-derives
-    the same edges from the datagen rule and unrolls the same 5
-    iterations as CTEs — so centroid-free iterative ranking is fully
-    hash-checked. Doc n-6 has a doubled out-link ((2i+1)%n == (3i+7)%n
-    at i = n-6), pinning multiset edge semantics on both sides."""
-    pages = pages_from_documents(spark, sf_dir)
-    edges = (
-        pages.select(
-            F.col("url").alias("src"),
-            F.explode(links_udf(F.col("html"))).alias("dst"),
-        )
-        .filter(F.parse_url("dst", F.lit("HOST")).endswith(".test"))
-    )
-    ranks = lg.page_rank(edges, num_iters=5, alpha=0.85)
-    return ranks.select(
-        F.col("node").alias("url"), F.round("rank", 8).alias("pr")
-    )
-
-
-def _link_rank_oracle_sql(num_iters: int = 5, alpha: float = 0.85) -> str:
-    """Unroll the power iteration as chained CTEs (dual expression of
-    page_rank's per-round join+agg; same float op structure, rounded
-    at 8 dp so cross-engine summation order can't flip the hash)."""
-    parts = [
-        _pages_cte(),
-        """
-        , e AS (
-            SELECT url AS src, next1_url AS dst FROM pages
-            UNION ALL
-            SELECT url AS src, next2_url AS dst FROM pages
-        )
-        , deg AS (SELECT src, count(*) AS out_deg FROM e GROUP BY src)
-        , en AS (SELECT e.src, e.dst, cast(1.0 as double) / deg.out_deg AS w
-                 FROM e JOIN deg ON e.src = deg.src)
-        , nodes AS (SELECT url AS node FROM pages)
-        , nn AS (SELECT cast(count(*) as double) AS n FROM pages)
-        , r0 AS (SELECT node, cast(1.0 as double) / nn.n AS pr
-                 FROM nodes CROSS JOIN nn)
-        """,
-    ]
-    for k in range(1, num_iters + 1):
-        parts.append(f"""
-        , r{k} AS (
-            SELECT nodes.node,
-                   (1.0 - {alpha}) / nn.n
-                   + {alpha} * coalesce(c.s, cast(0.0 as double)) AS pr
-            FROM nodes CROSS JOIN nn
-            LEFT JOIN (
-                SELECT en.dst, sum(r.pr * en.w) AS s
-                FROM en JOIN r{k - 1} r ON en.src = r.node
-                GROUP BY en.dst
-            ) c ON nodes.node = c.dst
-        )
-        """)
-    parts.append(
-        f"SELECT node AS url, round(pr, 8) AS pr FROM r{num_iters}"
-    )
-    return "".join(parts)
-
-
-SQL_LINK_RANK = _link_rank_oracle_sql()
-
 
 def q_hot_hosts(spark, sf_dir):
     """Hot-host telemetry feeding the skew story: per-host URL counts,
@@ -2243,48 +2174,6 @@ SQL_REDIRECT_RESOLUTION = (
 )
 
 
-def q_anchor_texts(spark, sf_dir):
-    """Anchor-text aggregation (linkgraph.anchor_text_profile): what
-    the rest of the corpus calls each URL — referring-tag count,
-    distinct referring hosts, sorted distinct anchor-text set. Every
-    page contributes its three <a> tags; the same URL is 'n1' from
-    one referrer and 'n2' from another, so the distinct-set ordering
-    is exercised. Tag explosion and field extraction are JVM regexps
-    in both engines."""
-    pages = pages_from_documents(spark, sf_dir)
-    return lg.anchor_text_profile(pages)
-
-
-SQL_ANCHOR_TEXTS = (
-    _pages_cte()
-    + r"""
-    , tags AS (
-        SELECT host,
-               unnest(regexp_extract_all(
-                   html_str, '<a href="[^"]*">[^<]*</a>', 0)) AS tag
-        FROM pages
-    )
-    , pairs AS (
-        SELECT host,
-               regexp_extract(tag, 'href="([^"]*)"', 1) AS dst,
-               regexp_extract(tag, '>([^<]*)<', 1) AS anchor
-        FROM tags
-    )
-    , counts AS (
-        SELECT dst, count(*) AS n_refs,
-               count(DISTINCT host) AS n_src_hosts
-        FROM pairs GROUP BY dst
-    )
-    , texts AS (
-        SELECT dst, string_agg(anchor, '|' ORDER BY anchor) AS anchors
-        FROM (SELECT DISTINCT dst, anchor FROM pairs) GROUP BY dst
-    )
-    SELECT c.dst, c.n_refs, c.n_src_hosts, t.anchors
-    FROM counts c JOIN texts t ON c.dst = t.dst
-"""
-)
-
-
 def q_warc_records(spark, sf_dir):
     """WARC ingestion (functions/warc.records_from_warc): per host,
     synthesize one WARC blob — a warcinfo record (no Target-URI /
@@ -2663,8 +2552,8 @@ SQL_BOILERPLATE_REMOVAL = (
 
 def q_priority_boosts(spark, sf_dir):
     """Signal-to-scheduler glue (frontier.apply_priority_boosts):
-    fold a host-level boost (every 4th host — the host_rank /
-    curation tier shape) and a url-level boost (every 6th doc — the
+    fold a host-level boost (every 4th host — the per-host tier
+    shape) and a url-level boost (every 6th doc — the
     recrawl change-rate shape) into the frontier's priority key with
     clamping at both ends. The oracle replays the joins and the
     clamp arithmetic."""
@@ -4149,7 +4038,7 @@ SQL_MIRROR_HOSTS = (
 
 # ===========================================================================
 # Round-3 additions: incremental dedup, quality-aware canonicals,
-# host-behavior curation, n-gram inventory, WAT export, frontier merge
+# n-gram inventory, WAT export, frontier merge
 # ===========================================================================
 
 def q_delta_admit(spark, sf_dir):
@@ -4528,67 +4417,9 @@ SQL_FRONTIER_MERGE = (
 
 
 # ===========================================================================
-# Round-3 additions, second batch: inverted index + term search,
-# rendezvous resharding, renewal-corrected revisit scheduling
+# Round-3 additions, second batch: rendezvous resharding,
+# renewal-corrected revisit scheduling
 # ===========================================================================
-
-def q_inverted_index(spark, sf_dir):
-    """Inverted index (indexing.term_postings): per-term document
-    frequency, total term frequency, and the sorted comma-joined
-    posting list over the doc corpus; min_df=3 prunes hapax noise.
-    The hash gate pins the exact posting-list BYTES per term, so a
-    tokenization or ordering drift cannot hide."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return ix.term_postings(docs, min_df=3)
-
-
-SQL_INVERTED_INDEX = r"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-                 AS term
-      FROM documents WHERE doc_id < 500
-    ),
-    per AS (
-      SELECT term, doc_id, count(*) AS tf
-      FROM toks WHERE term <> '' GROUP BY term, doc_id
-    )
-    SELECT term,
-           count(*) AS n_docs,
-           CAST(sum(tf) AS BIGINT) AS total_tf,
-           string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-               AS postings
-    FROM per GROUP BY term HAVING count(*) >= 3
-"""
-
-
-def q_term_search(spark, sf_dir):
-    """Conjunctive term retrieval (indexing.conjunctive_search):
-    documents containing ALL of {vector, stream, window}, scored by
-    summed query-term frequency — the relational postings
-    intersection (count-distinct-matched == n_terms). The term filter
-    sits under the tokenize aggregate, so only matching tokens reach
-    a shuffle."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return ix.conjunctive_search(docs, ["vector", "stream", "window"])
-
-
-SQL_TERM_SEARCH = r"""
-    WITH toks AS (
-      SELECT doc_id AS doc,
-             unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-                 AS term
-      FROM documents WHERE doc_id < 500
-    ),
-    per AS (
-      SELECT term, doc, count(*) AS tf FROM toks
-      WHERE term IN ('vector', 'stream', 'window')
-      GROUP BY term, doc
-    )
-    SELECT doc, CAST(sum(tf) AS BIGINT) AS score
-    FROM per GROUP BY doc HAVING count(DISTINCT term) = 3
-"""
-
 
 def q_shard_rendezvous(spark, sf_dir):
     """Rendezvous resharding audit (bucketing.reshard_moves): every
@@ -4810,222 +4641,8 @@ SQL_DISCOVERY_YIELD = (
 
 
 # ===========================================================================
-# Round-3 additions, third batch: BM25 ranked retrieval, HITS, OPIC,
-# URL-parameter significance (DUST)
+# Round-3 additions, third batch: URL-parameter significance (DUST)
 # ===========================================================================
-
-def q_bm25_search(spark, sf_dir):
-    """Okapi BM25 disjunctive retrieval (indexing.bm25_search) for
-    {vector, stream, window} over the doc corpus: per matching doc the
-    matched-term count and the summed BM25 part score (Lucene idf
-    variant, k1=1.2, b=0.75). Corpus stats (N, avgdl) reduce to one
-    broadcast scalar; df is aggregated over the query terms' postings
-    only. The oracle replays the identical ln/division structure, both
-    engines rounding the final sum at 6 dp."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return ix.bm25_search(docs, ["vector", "stream", "window"])
-
-
-SQL_BM25_SEARCH = r"""
-    WITH toks AS (
-      SELECT doc_id AS doc,
-             unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-                 AS term
-      FROM documents WHERE doc_id < 500
-    ),
-    per AS (
-      SELECT term, doc, count(*) AS tf FROM toks
-      WHERE term <> '' GROUP BY term, doc
-    ),
-    dl AS (SELECT doc, sum(tf) AS dl FROM per GROUP BY doc),
-    st AS (
-      SELECT cast(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
-      FROM dl
-    ),
-    hits AS (
-      SELECT * FROM per
-      WHERE term IN ('vector', 'stream', 'window')
-    ),
-    dfq AS (
-      SELECT term, cast(count(*) AS DOUBLE) AS df
-      FROM hits GROUP BY term
-    )
-    SELECT h.doc, count(*) AS n_hit,
-           round(sum(
-             ln((st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
-             * (h.tf * 2.2)
-             / (h.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / st.avgdl))
-           ), 6) AS score
-    FROM hits h
-    JOIN dfq ON h.term = dfq.term
-    JOIN dl ON h.doc = dl.doc
-    CROSS JOIN st
-    GROUP BY h.doc
-"""
-
-
-def q_hits_rank(spark, sf_dir):
-    """Kleinberg HITS (linkgraph.hits_rank, 3 iterations) over the
-    EXTRACTED link graph — same edge derivation as link_rank
-    (links_udf over html binary, .test suffix gate), separating hub
-    pages (worth re-crawling for link discovery) from authorities
-    (worth re-crawling for content). The oracle unrolls the 3
-    synchronous iterations — contribution sum, L2 normalization —
-    as chained CTEs; both engines round at 6 dp."""
-    pages = pages_from_documents(spark, sf_dir)
-    edges = pages.select(
-        F.col("url").alias("src"),
-        F.explode(links_udf(F.col("html"))).alias("dst"),
-    ).filter(F.parse_url("dst", F.lit("HOST")).endswith(".test"))
-    out = lg.hits_rank(edges, num_iters=3)
-    return out.select(F.col("node").alias("url"), "hub", "authority")
-
-
-def _hits_oracle_sql(num_iters: int = 3) -> str:
-    parts = [
-        _pages_cte(),
-        """
-        , e AS (
-            SELECT url AS src, next1_url AS dst FROM pages
-            UNION ALL
-            SELECT url AS src, next2_url AS dst FROM pages
-        )
-        , nodes AS (
-            SELECT DISTINCT node FROM (
-                SELECT src AS node FROM e
-                UNION ALL SELECT dst FROM e
-            )
-        )
-        , nn AS (SELECT cast(count(*) AS DOUBLE) AS n FROM nodes)
-        , hs0 AS (
-            SELECT node, 1.0 / sqrt(nn.n) AS hub
-            FROM nodes CROSS JOIN nn
-        )
-        """,
-    ]
-    for k in range(1, num_iters + 1):
-        parts.append(f"""
-        , ar{k} AS (
-            SELECT nodes.node, coalesce(c.s, 0.0) AS a
-            FROM nodes LEFT JOIN (
-                SELECT e.dst, sum(h.hub) AS s
-                FROM e JOIN hs{k - 1} h ON e.src = h.node
-                GROUP BY e.dst
-            ) c ON nodes.node = c.dst
-        )
-        , an{k} AS (SELECT sqrt(sum(a * a)) AS nrm FROM ar{k})
-        , as{k} AS MATERIALIZED (
-            SELECT node,
-                   CASE WHEN nrm > 0 THEN a / nrm ELSE 0.0 END AS auth
-            FROM ar{k} CROSS JOIN an{k}
-        )
-        , hr{k} AS (
-            SELECT nodes.node, coalesce(c.s, 0.0) AS h
-            FROM nodes LEFT JOIN (
-                SELECT e.src, sum(a.auth) AS s
-                FROM e JOIN as{k} a ON e.dst = a.node
-                GROUP BY e.src
-            ) c ON nodes.node = c.src
-        )
-        , hn{k} AS (SELECT sqrt(sum(h * h)) AS nrm FROM hr{k})
-        , hs{k} AS MATERIALIZED (
-            SELECT hr{k}.node,
-                   CASE WHEN nrm > 0 THEN h / nrm ELSE 0.0 END AS hub,
-                   a.auth
-            FROM hr{k} CROSS JOIN hn{k}
-            JOIN as{k} a ON hr{k}.node = a.node
-        )
-        """)
-    parts.append(
-        f"""SELECT node AS url, round(hub, 6) AS hub,
-               round(auth, 6) AS authority FROM hs{num_iters}"""
-    )
-    return "".join(parts)
-
-
-SQL_HITS_RANK = _hits_oracle_sql()
-
-
-def q_opic_priority(spark, sf_dir):
-    """OPIC cash/history crawl priority (linkgraph.opic_priority, 4
-    synchronous rounds) over the PARTIALLY-crawled link graph: pages
-    with doc_id % 11 == 0 are uncrawled frontier leaves, so their
-    urls appear only as link TARGETS — out-degree-0 sinks whose cash
-    drains to the virtual root and is redistributed uniformly,
-    exercising the paper's dangling construction. The oracle unrolls
-    all 4 rounds as CTEs; both engines round at 6 dp."""
-    pages = pages_from_documents(spark, sf_dir).filter(
-        F.col("doc_id") % 11 != 0
-    )
-    edges = pages.select(
-        F.col("url").alias("src"),
-        F.explode(links_udf(F.col("html"))).alias("dst"),
-    ).filter(F.parse_url("dst", F.lit("HOST")).endswith(".test"))
-    out = lg.opic_priority(edges, num_rounds=4)
-    return out.select(
-        F.col("node").alias("url"), "cash", "history", "priority"
-    )
-
-
-def _opic_oracle_sql(num_rounds: int = 4) -> str:
-    parts = [
-        _pages_cte(),
-        """
-        , crawled AS (SELECT * FROM pages WHERE doc_id % 11 <> 0)
-        , e AS (
-            SELECT url AS src, next1_url AS dst FROM crawled
-            UNION ALL
-            SELECT url AS src, next2_url AS dst FROM crawled
-        )
-        , nodes AS (
-            SELECT DISTINCT node FROM (
-                SELECT src AS node FROM e
-                UNION ALL SELECT dst FROM e
-            )
-        )
-        , nn AS (SELECT cast(count(*) AS DOUBLE) AS n FROM nodes)
-        , deg AS (SELECT src, count(*) AS out_deg FROM e GROUP BY src)
-        , en AS (
-            SELECT e.src, e.dst, 1.0 / deg.out_deg AS w
-            FROM e JOIN deg ON e.src = deg.src
-        )
-        , s0 AS (
-            SELECT node, 1.0 / nn.n AS cash, 0.0 AS hist
-            FROM nodes CROSS JOIN nn
-        )
-        """,
-    ]
-    for k in range(1, num_rounds + 1):
-        parts.append(f"""
-        , d{k} AS MATERIALIZED (
-            SELECT coalesce(sum(s.cash), 0.0) AS dm
-            FROM s{k - 1} s
-            WHERE s.node NOT IN (SELECT src FROM deg)
-        )
-        , s{k} AS MATERIALIZED (
-            SELECT s.node,
-                   coalesce(c.inflow, 0.0) + d{k}.dm / nn.n AS cash,
-                   s.hist + s.cash AS hist
-            FROM s{k - 1} s
-            LEFT JOIN (
-                SELECT en.dst, sum(s2.cash * en.w) AS inflow
-                FROM en JOIN s{k - 1} s2 ON en.src = s2.node
-                GROUP BY en.dst
-            ) c ON s.node = c.dst
-            CROSS JOIN d{k} CROSS JOIN nn
-        )
-        """)
-    parts.append(f"""
-        SELECT node AS url, round(cash, 6) AS cash,
-               round(hist, 6) AS history,
-               round((hist + cash) / {num_rounds + 1}.0, 6) AS priority
-        FROM s{num_rounds}
-    """)
-    return "".join(parts)
-
-
-SQL_OPIC_PRIORITY = _opic_oracle_sql()
-
 
 def q_param_significance(spark, sf_dir):
     """URL-parameter significance mining (hoststats.
@@ -5123,40 +4740,9 @@ SQL_PARAM_SIGNIFICANCE = (
 
 
 # ===========================================================================
-# Round-3 additions, fourth batch: phrase search, site-structure
-# profile, link-exchange detection, robots TTL refresh gate
+# Round-3 additions, fourth batch: site-structure profile, robots TTL
+# refresh gate
 # ===========================================================================
-
-def q_phrase_search(spark, sf_dir):
-    """Exact-phrase retrieval (indexing.phrase_search) for the phrase
-    "value table" via the positional-postings merge: the two terms'
-    position lists equi-join on (doc, pos + 1). Each term's positions
-    are filtered out of the token stream BEFORE any shuffle; overlap
-    semantics (a token run like 'value table ... value table') counts
-    every occurrence. The oracle zips DuckDB's unnest with
-    generate_subscripts to rebuild the same zero-based offsets."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return ix.phrase_search(docs, ["value", "table"])
-
-
-SQL_PHRASE_SEARCH = r"""
-    WITH arrs AS (
-      SELECT doc_id AS doc,
-             regexp_split_to_array(lower(trim(text)), '\s+') AS arr
-      FROM documents WHERE doc_id < 500
-    ),
-    toks AS (
-      SELECT doc, unnest(arr) AS term,
-             generate_subscripts(arr, 1) - 1 AS pos
-      FROM arrs
-    ),
-    p0 AS (SELECT doc, pos FROM toks WHERE term = 'value'),
-    p1 AS (SELECT doc, pos - 1 AS pos FROM toks WHERE term = 'table')
-    SELECT p0.doc, count(*) AS n_occurrences
-    FROM p0 JOIN p1 ON p0.doc = p1.doc AND p0.pos = p1.pos
-    GROUP BY p0.doc
-"""
-
 
 def q_path_profile(spark, sf_dir):
     """Site-structure rollup (hoststats.path_profile): per (host,
@@ -5198,69 +4784,6 @@ SQL_PATH_PROFILE = (
            CAST(sum(nbytes) AS BIGINT) AS total_bytes,
            count(DISTINCT fp) AS n_distinct_fp
     FROM d GROUP BY host, prefix, depth
-"""
-)
-
-
-def q_reciprocal_hosts(spark, sf_dir):
-    """Link-exchange detection (linkgraph.reciprocal_hosts): the
-    host-level edge set is made deliberately ASYMMETRIC — an edge
-    survives when src_host < dst_host or when doc_id % 3 == 0 — so
-    reciprocity lands strictly between 0 and 1 per host instead of
-    the complete-graph degeneracy a 4-host fixture would otherwise
-    produce. The oracle replays the distinct-pair self-join."""
-    pages = pages_from_documents(spark, sf_dir)
-    dst1 = F.parse_url("next1_url", F.lit("HOST"))
-    dst2 = F.parse_url("next2_url", F.lit("HOST"))
-    edges = (
-        pages.select(
-            F.col("host").alias("src_host"),
-            dst1.alias("dst_host"),
-            "doc_id",
-        )
-        .unionByName(
-            pages.select(
-                F.col("host").alias("src_host"),
-                dst2.alias("dst_host"),
-                "doc_id",
-            )
-        )
-        .filter(
-            (F.col("src_host") < F.col("dst_host"))
-            | (F.col("doc_id") % 3 == 0)
-        )
-    )
-    return lg.reciprocal_hosts(edges)
-
-
-SQL_RECIPROCAL_HOSTS = (
-    _pages_cte()
-    + r"""
-    , e0 AS (
-        SELECT host AS a,
-               regexp_extract(next1_url,
-                   '^[a-z]+://([^/]+)', 1) AS b, doc_id
-        FROM pages
-        UNION ALL
-        SELECT host,
-               regexp_extract(next2_url, '^[a-z]+://([^/]+)', 1), doc_id
-        FROM pages
-    )
-    , pair AS (
-        SELECT DISTINCT a, b FROM e0
-        WHERE a <> b AND (a < b OR doc_id % 3 = 0)
-    )
-    , marked AS (
-        SELECT p.a, p.b,
-               CASE WHEN r.a IS NOT NULL THEN 1 END AS _r
-        FROM pair p
-        LEFT JOIN pair r ON p.a = r.b AND p.b = r.a
-    )
-    SELECT a AS host,
-           count(*) AS n_out_hosts,
-           count(_r) AS n_reciprocal,
-           round(count(_r) / CAST(count(*) AS DOUBLE), 6) AS reciprocity
-    FROM marked GROUP BY a
 """
 )
 
@@ -5317,8 +4840,8 @@ SQL_STALE_ROBOTS = (
 
 
 # ===========================================================================
-# Round-3 additions, fifth batch: containment dedup, host clusters,
-# frontier drain forecast
+# Round-3 additions, fifth batch: containment dedup, frontier drain
+# forecast
 # ===========================================================================
 
 def q_containment_pairs(spark, sf_dir):
@@ -5678,46 +5201,6 @@ SQL_ROBOTS_WILDCARDS = (
 
 
 # ===========================================================================
-# Round-3 additions, ninth batch: incremental index maintenance
-# ===========================================================================
-
-def q_index_delta_merge(spark, sf_dir):
-    """Incremental index maintenance (indexing.merge_postings): the
-    stored index covers docs 0-299; docs 300+ arrive as a crawl
-    delta and fold in WITHOUT re-tokenizing the old corpus (per-round
-    cost O(delta) + one term-keyed merge join). The oracle does the
-    opposite — a full rebuild over all docs — so the hash gate proves
-    the defining property merge(index(A), B) == rebuild(A+B) down to
-    the posting-list bytes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    old = ix.term_postings(docs.filter(F.col("doc_id") < 300), min_df=1)
-    delta = docs.filter(F.col("doc_id") >= 300).filter(
-        F.col("doc_id") < 500
-    )
-    return ix.merge_postings(old, delta, min_df=3)
-
-
-SQL_INDEX_DELTA_MERGE = r"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-                 AS term
-      FROM documents WHERE doc_id < 500
-    ),
-    per AS (
-      SELECT term, doc_id, count(*) AS tf
-      FROM toks WHERE term <> '' GROUP BY term, doc_id
-    )
-    SELECT term,
-           count(*) AS n_docs,
-           CAST(sum(tf) AS BIGINT) AS total_tf,
-           string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-               AS postings
-    FROM per GROUP BY term HAVING count(*) >= 3
-"""
-
-
-# ===========================================================================
 # Registry
 # ===========================================================================
 
@@ -5755,7 +5238,6 @@ _QUERIES_BY_FAMILY = {
     # "pii_scrub" is registered ONCE, in the round-3 additions below
     # (the duplicate key that used to sit here silently shadowed it).
     "robots_wildcards": (q_robots_wildcards, SQL_ROBOTS_WILDCARDS),
-    "index_delta_merge": (q_index_delta_merge, SQL_INDEX_DELTA_MERGE),
     "corpus_stats": (q_corpus_stats, SQL_CORPUS_STATS),
     "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
     # sequential-consume clusterings — recursive-CTE oracles since r4
@@ -5769,8 +5251,7 @@ _QUERIES_BY_FAMILY = {
     "simhash_near_dups": (q_simhash_near_dups, SQL_SIMHASH_NEAR_DUPS),
     "duplicated_spans": (q_duplicated_spans, SQL_DUPLICATED_SPANS),
     "dup_span_stats": (q_dup_span_stats, SQL_DUP_SPAN_STATS),
-    # link-graph centrality + skew telemetry
-    "link_rank": (q_link_rank, SQL_LINK_RANK),
+    # skew telemetry
     "hot_hosts": (q_hot_hosts, SQL_HOT_HOSTS),
     # multi-version store reads + deterministic sampling
     "snapshot_asof": (q_snapshot_asof, SQL_SNAPSHOT_ASOF),
@@ -5782,7 +5263,6 @@ _QUERIES_BY_FAMILY = {
     "sitemap_urls": (q_sitemap_urls, SQL_SITEMAP_URLS),
     "fetch_retries": (q_fetch_retries, SQL_FETCH_RETRIES),
     "redirect_resolution": (q_redirect_resolution, SQL_REDIRECT_RESOLUTION),
-    "anchor_texts": (q_anchor_texts, SQL_ANCHOR_TEXTS),
     "warc_records": (q_warc_records, SQL_WARC_RECORDS),
     "recrawl_priority": (q_recrawl_priority, SQL_RECRAWL_PRIORITY),
     "robots_sitemaps": (q_robots_sitemaps, SQL_ROBOTS_SITEMAPS),
@@ -5821,19 +5301,12 @@ _QUERIES_BY_FAMILY = {
     "ngram_counts": (q_ngram_counts, SQL_NGRAM_COUNTS),
     "wat_export": (q_wat_export, SQL_WAT_EXPORT),
     "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
-    "inverted_index": (q_inverted_index, SQL_INVERTED_INDEX),
-    "term_search": (q_term_search, SQL_TERM_SEARCH),
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
     "freshness_revisit": (q_freshness_revisit, SQL_FRESHNESS_REVISIT),
     "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
     "discovery_yield": (q_discovery_yield, SQL_DISCOVERY_YIELD),
-    "bm25_search": (q_bm25_search, SQL_BM25_SEARCH),
-    "hits_rank": (q_hits_rank, SQL_HITS_RANK),
-    "opic_priority": (q_opic_priority, SQL_OPIC_PRIORITY),
     "param_significance": (q_param_significance, SQL_PARAM_SIGNIFICANCE),
-    "phrase_search": (q_phrase_search, SQL_PHRASE_SEARCH),
     "path_profile": (q_path_profile, SQL_PATH_PROFILE),
-    "reciprocal_hosts": (q_reciprocal_hosts, SQL_RECIPROCAL_HOSTS),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
     "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
     "host_clusters": (q_host_clusters, SQL_HOST_CLUSTERS),
@@ -5853,7 +5326,7 @@ _QUERIES_BY_FAMILY = {
 # the two entries rotated out in r3 (request_rate_budgets,
 # sitemap_index), and everything whose Spark fn or oracle CHANGED this
 # round (admission_funnel, freshness_revisit, cdx_export, wat_export,
-# index_delta_merge, pii_scrub, and entries since deleted). Standing rule (VERDICT r3 #2): any query whose
+# pii_scrub, and entries since deleted). Standing rule (VERDICT r3 #2): any query whose
 # implementation or oracle changes re-enters the NEXT window; nothing
 # ships a change while wearing an older attestation. The north-rule
 # gates stay in the window every round. Entries outside the window
@@ -5895,28 +5368,30 @@ _R5_ROTATION = [
     "minhash_near_dups", "near_dup_groups", "canonical_best",
     "crawl_host_lineage", "robots_longest_match", "delta_admit",
     #
-    # Oldest-first refill: the 22 entries still registered whose
+    # Oldest-first refill: the 21 entries still registered whose
     # latest green row was CORRECTNESS_r02.json when this window was
-    # first drawn (the registry diets deleted 14 of the original 36:
-    # the LM-training, embedding-ANN and warehouse entries).
+    # first drawn (the registry diets deleted 15 of the original 36:
+    # the LM-training, embedding-ANN, warehouse and link-graph
+    # entries).
     "index_daterange", "front_page_ranking", "entry_lookup",
     "comments_sort", "group_by_day", "lang_id", "quality_score",
     "token_count", "fingerprint", "dedup_stats", "dedup_first",
     "ngram_overlap", "merge_upsert", "pos_tags", "repetition_score",
     "sentence_dedup", "corpus_stats", "filter_funnel",
-    "duplicated_spans", "dup_span_stats", "link_rank", "hot_hosts",
+    "duplicated_spans", "dup_span_stats", "hot_hosts",
     #
-    # The 14 freed slots refill by the same rule. snapshot_asof goes
+    # The 15 freed slots refill by the same rule. snapshot_asof goes
     # first: its latest green row is still CORRECTNESS_r02.json (it
     # yielded its r5 slot to the changed-implementation set above).
     # Then the oldest after it: every other remaining entry's latest
     # green row is r03 or newer, and the r03 ties are taken in
-    # _QUERIES_BY_FAMILY order. The newest of these (conditional_fetch)
+    # _QUERIES_BY_FAMILY order. The next of these (priority_boosts)
     # yielded its slot to delta_admit above.
     "snapshot_asof", "domain_mix", "robots_rules", "crawl_diff",
     "crawl_delay_budgets", "host_quality_filter", "sitemap_urls",
-    "fetch_retries", "redirect_resolution", "anchor_texts",
-    "warc_records", "recrawl_priority", "robots_sitemaps",
+    "fetch_retries", "redirect_resolution", "warc_records",
+    "recrawl_priority", "robots_sitemaps", "conditional_fetch",
+    "boilerplate_removal",
 ]
 
 QUERIES = {

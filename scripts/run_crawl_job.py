@@ -8,11 +8,14 @@ Cluster usage (north_rule submission shape):
         --sf-dir /data/testdata/sf0.1 --rounds 4 --hosts 64 \
         --budget 200 --seeds 512 --out /tmp/crawl_out
 
-Local two-parallelism scaling evidence (sandbox substitute for
-N vs 4N executors):
+Local two-parallelism scaling evidence (N vs 4N cores; 1 vs 4 on a
+4-core machine):
 
-    SPARK_GRAFT_CPUS=8  python scripts/run_crawl_job.py ...
-    SPARK_GRAFT_CPUS=32 python scripts/run_crawl_job.py ...
+    SPARK_GRAFT_CPUS=1 python scripts/run_crawl_job.py ...
+    SPARK_GRAFT_CPUS=4 python scripts/run_crawl_job.py ...
+
+Without SPARK_GRAFT_CPUS the session uses every CPU the process may
+run on, so `taskset -c 0` (one core) vs `taskset -c 0-3` works too.
 
 Writes the fetched table + per-round lineage metrics to --out and
 prints a one-line JSON summary.

@@ -819,3 +819,57 @@ def test_crawl_rfc9309_wildcards_mode(spark):
     h1 = got[(got.host == "h1.test") & (got["round"] > 0)]
     blocked = [u for u in h1.url if "/0000001" in u and "/00000013" not in u]
     assert blocked == [], blocked
+
+
+def test_partitioned_global_rank_null_keys_match_row_number(spark):
+    """A null group key is one group of the total order: every row
+    keeps its rank, and the numbering equals a plain row_number over
+    the full sort (nulls first), with the offsets still broadcast."""
+    from pyspark.sql import Window
+
+    from news_combinator_spark.operators.ranking import (
+        partitioned_global_rank,
+    )
+
+    df = spark.createDataFrame(
+        [("a.test", 1, "u1"), (None, 1, "u2"), ("b.test", None, "u3"),
+         ("a.test", 0, "u4"), (None, None, "u5"), ("a.test", 1, "u6")],
+        "host string, priority int, url string",
+    )
+    ranked = partitioned_global_rank(
+        df, part_cols=["priority", "host"], order_cols=["url"]
+    )
+    want = df.withColumn(
+        "rank",
+        F.row_number().over(Window.orderBy("priority", "host", "url")),
+    )
+    assert ranked.columns == ["priority", "host", "url", "rank"]
+    got = {r.url: r["rank"] for r in ranked.collect()}
+    assert got == {r.url: r["rank"] for r in want.collect()}
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+
+
+def test_crawl_fetches_null_priority_pages(spark):
+    """Pages whose priority is null are scheduled like any other:
+    every scheduled url lands in `fetched`, numbered densely from 1."""
+    def html(links):
+        body = "".join(f'<a href="{u}">x</a>' for u in links)
+        return f"<html><body>{body}</body></html>".encode()
+
+    pages = spark.createDataFrame(
+        [("http://h0.test/a", "h0.test", 0,
+          html(["http://h1.test/b", "http://h2.test/c"])),
+         ("http://h1.test/b", "h1.test", None, html([])),
+         ("http://h2.test/c", "h2.test", None, html([]))],
+        "url string, host string, priority int, html binary",
+    )
+    seeds = pages.filter("host = 'h0.test'").select("url", "host", "priority")
+    budgets = spark.createDataFrame(
+        [(f"h{i}.test", 5) for i in range(3)], "host string, budget int"
+    )
+    res = crawl(spark, pages, seeds, budgets, rounds=2)
+    rows = res.fetched.collect()
+    assert len(rows) == sum(m.scheduled for m in res.lineage) == 3
+    assert sorted(r.fetch_order for r in rows) == [1, 2, 3]
+    assert {r.url for r in rows} == {r.url for r in pages.collect()}

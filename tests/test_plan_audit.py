@@ -221,12 +221,11 @@ _LAZY_QUERIES = [
     "minhash_near_dups", "simhash_near_dups", "pii_scrub",
     "corpus_stats", "filter_funnel", "v1_cross_source_clusters",
     "duplicated_spans", "dup_span_stats",
-    # round-2 additions (link_rank excluded: page_rank iterates
-    # eagerly via localCheckpoint, audited in test_linkgraph)
+    # round-2 additions
     "hot_hosts", "snapshot_asof", "domain_mix", "robots_rules",
     "crawl_diff", "crawl_delay_budgets", "host_quality_filter",
     "sitemap_urls",
-    "fetch_retries", "redirect_resolution", "anchor_texts",
+    "fetch_retries", "redirect_resolution",
     "warc_records", "recrawl_priority", "robots_sitemaps",
     "conditional_fetch", "boilerplate_removal",
     "priority_boosts", "global_cap", "url_templates",
@@ -239,13 +238,11 @@ _LAZY_QUERIES = [
     # round-3 additions
     "delta_admit", "trap_hosts", "host_reputation",
     "ngram_counts", "wat_export", "frontier_merge",
-    "inverted_index", "term_search", "shard_rendezvous",
+    "shard_rendezvous",
     "freshness_revisit", "cdx_export", "discovery_yield",
-    "bm25_search", "hits_rank", "opic_priority", "param_significance",
-    "phrase_search", "path_profile", "reciprocal_hosts", "stale_robots",
+    "param_significance", "path_profile", "stale_robots",
     "containment_pairs", "host_clusters", "drain_forecast",
     "robots_wildcards",
-    "index_delta_merge",
 ]
 
 
@@ -255,10 +252,9 @@ _LAZY_QUERIES = [
 _EAGER_AUDITED_ELSEWHERE = {
     # crawl loop: test_frontier_fetch_order_no_global_window
     "crawl_frontier", "crawl_host_lineage", "crawl_seen_set",
-    # CC / greedy iteration loops: test_clustering / test_linkgraph
+    # CC / greedy iteration loops: test_clustering
     # (canonical_best = near_dup_groups' CC + one lazy argmax groupBy)
-    "news_clusters_lsh", "near_dup_groups", "link_rank",
-    "canonical_best",
+    "news_clusters_lsh", "near_dup_groups", "canonical_best",
 }
 
 

@@ -1,84 +1,16 @@
 """Semantics of the round-3 second-batch operators beyond the DuckDB
-hash gate: inverted index + conjunctive search, rendezvous resharding
-stability, renewal-corrected revisit scheduling."""
+hash gate: rendezvous resharding stability, renewal-corrected revisit
+scheduling."""
 
 import math
 
 import pyspark.sql.functions as F
-import pytest
 
-from news_combinator_spark.operators import indexing as ix
 from news_combinator_spark.operators.bucketing import (
     rendezvous_shard,
     reshard_moves,
 )
 from news_combinator_spark.operators.snapshots import freshness_revisit
-
-from conftest import SF_MED
-
-
-@pytest.fixture(scope="module")
-def docs200(spark):
-    return (
-        spark.read.parquet(f"{SF_MED}/documents.parquet")
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .cache()
-    )
-
-
-# ------------------------------------------------------------- indexing
-
-
-def test_postings_match_python_counter(spark, docs200):
-    """df / tf / posting list agree with a driver-side recount."""
-    rows = docs200.collect()
-    want: dict[str, dict[int, int]] = {}
-    for r in rows:
-        for t in r.text.strip().lower().split():
-            want.setdefault(t, {}).setdefault(r.doc_id, 0)
-            want[t][r.doc_id] += 1
-    got = {
-        r.term: r
-        for r in ix.term_postings(docs200, min_df=1).collect()
-    }
-    assert set(got) == set(want)
-    for t, per_doc in want.items():
-        assert got[t].n_docs == len(per_doc)
-        assert got[t].total_tf == sum(per_doc.values())
-        assert got[t].postings == ",".join(
-            str(d) for d in sorted(per_doc)
-        )
-
-
-def test_postings_max_df_drops_stopwords(spark, docs200):
-    full = ix.term_postings(docs200, min_df=1)
-    capped = ix.term_postings(docs200, min_df=1, max_df=50)
-    kept = {r.term for r in capped.collect()}
-    for r in full.collect():
-        assert (r.term in kept) == (r.n_docs <= 50)
-
-
-def test_conjunctive_search_equals_set_intersection(spark, docs200):
-    terms = ["vector", "stream", "window"]
-    rows = docs200.collect()
-    want = {
-        r.doc_id: sum(
-            r.text.strip().lower().split().count(t) for t in terms
-        )
-        for r in rows
-        if all(t in r.text.lower().split() for t in terms)
-    }
-    got = {
-        r.doc: r.score
-        for r in ix.conjunctive_search(docs200, terms).collect()
-    }
-    assert got == want
-
-
-def test_conjunctive_search_empty_on_absent_term(spark, docs200):
-    out = ix.conjunctive_search(docs200, ["vector", "zz_not_a_word"])
-    assert out.count() == 0
 
 
 # ----------------------------------------------------------- rendezvous
@@ -305,68 +237,6 @@ def test_discovery_yield_counts_only_unfetched(spark):
     assert b.n_new_links == 0 and b.discovery_yield == 0.0
 
 
-def test_conjunctive_search_duplicate_terms_collapse(spark, docs200):
-    # a conjunction of a term with itself is the term: must NOT
-    # return empty because countDistinct can never reach the raw count
-    once = ix.conjunctive_search(docs200, ["vector"])
-    twice = ix.conjunctive_search(docs200, ["vector", "vector"])
-    assert once.count() > 0
-    assert twice.count() == once.count()
-
-
-def test_merge_postings_equals_rebuild(spark, docs200):
-    old = ix.term_postings(docs200.filter("doc_id < 100"), min_df=1)
-    delta = docs200.filter("doc_id >= 100")
-    merged = {
-        r.term: (r.n_docs, r.total_tf, r.postings)
-        for r in ix.merge_postings(old, delta, min_df=2).collect()
-    }
-    rebuilt = {
-        r.term: (r.n_docs, r.total_tf, r.postings)
-        for r in ix.term_postings(docs200, min_df=2).collect()
-    }
-    assert merged == rebuilt
-
-
-def test_merge_postings_numeric_posting_order(spark):
-    # lexicographic merge would put '10' before '9'
-    docs = spark.createDataFrame(
-        [(9, "zebra word"), (10, "zebra other")],
-        "doc_id long, text string",
-    )
-    old = ix.term_postings(docs.filter("doc_id = 9"), min_df=1)
-    out = {r.term: r.postings for r in
-           ix.merge_postings(old, docs.filter("doc_id = 10")).collect()}
-    assert out["zebra"] == "9,10"
-
-
-def test_merge_postings_string_doc_ids(spark):
-    # ADVICE r3: a blind cast('long') crashed on non-numeric ids under
-    # ANSI, and numeric-as-string ids sorted numerically in the merge
-    # but lexicographically in term_postings. Both sides must order by
-    # the doc column's NATIVE type: string ids sort lexicographically
-    # ('10' before '9'), and the rebuild invariant must hold.
-    docs = spark.createDataFrame(
-        [("doc-b", "zebra word"), ("doc-a", "zebra other"),
-         ("10", "zebra ten"), ("9", "zebra nine")],
-        "doc_id string, text string",
-    )
-    old = ix.term_postings(docs.filter("doc_id in ('doc-b', '9')"),
-                           doc_col="doc_id", min_df=1)
-    merged = {
-        r.term: (r.n_docs, r.total_tf, r.postings)
-        for r in ix.merge_postings(
-            old, docs.filter("doc_id in ('doc-a', '10')")
-        ).collect()
-    }
-    rebuilt = {
-        r.term: (r.n_docs, r.total_tf, r.postings)
-        for r in ix.term_postings(docs, min_df=1).collect()
-    }
-    assert merged == rebuilt
-    assert merged["zebra"][2] == "10,9,doc-a,doc-b"
-
-
 def test_cdx_and_wat_json_escape(spark):
     # ADVICE r3: a url containing '"' or '\' must still yield a valid
     # JSON payload in the CDXJ line and the WAT record.
@@ -397,49 +267,3 @@ def test_cdx_and_wat_json_escape(spark):
     assert wat["Links"][1] == 'http://h1.test/"n2"'
 
 
-def test_merge_postings_ids_containing_separator(spark):
-    # review fix: ids containing ',' or '%' are percent-escaped in the
-    # posting list, so the comma join is lossless and the rebuild
-    # invariant holds for URL-shaped doc ids
-    docs = spark.createDataFrame(
-        [("http://h/a,b", "zebra word"), ("50%,off", "zebra other"),
-         ("plain", "zebra plain")],
-        "doc_id string, text string",
-    )
-    old = ix.term_postings(
-        docs.filter("doc_id = 'plain'"), doc_col="doc_id", min_df=1
-    )
-    merged = {
-        r.term: (r.n_docs, r.total_tf, r.postings)
-        for r in ix.merge_postings(
-            old, docs.filter("doc_id != 'plain'")
-        ).collect()
-    }
-    rebuilt = {
-        r.term: (r.n_docs, r.total_tf, r.postings)
-        for r in ix.term_postings(docs, min_df=1).collect()
-    }
-    assert merged == rebuilt
-    # three postings survive (a naive split on ',' would make five)
-    assert merged["zebra"][0] == 3
-    assert merged["zebra"][2].count(",") == 2
-    assert "%2C" in merged["zebra"][2]
-
-
-def test_split_posting_ids_inverts_escaping(spark):
-    # read-side inverse: raw ids come back exactly, including ids
-    # containing ',' and '%' (and the literal sequence '%25')
-    raw_ids = ["http://h/a,b", "50%,off", "x%25y", "plain"]
-    docs = spark.createDataFrame(
-        [(i, "zebra word") for i in raw_ids],
-        "doc_id string, text string",
-    )
-    import pyspark.sql.functions as F
-
-    out = (
-        ix.term_postings(docs, min_df=1)
-        .filter("term = 'zebra'")
-        .select(ix.split_posting_ids(F.col("postings")).alias("ids"))
-        .collect()[0]["ids"]
-    )
-    assert sorted(out) == sorted(raw_ids)

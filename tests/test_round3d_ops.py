@@ -1,151 +1,7 @@
-"""Semantics of the round-3 third-batch operators beyond the DuckDB
-hash gate: BM25 ranking, HITS hubs/authorities, OPIC cash/history,
-URL-parameter significance."""
+"""Semantics of the round-3 third-batch operator beyond the DuckDB
+hash gate: URL-parameter significance."""
 
-import math
-from collections import Counter
-
-import pyspark.sql.functions as F
-import pytest
-
-from news_combinator_spark.operators import indexing as ix
 from news_combinator_spark.operators.hoststats import param_significance
-from news_combinator_spark.operators.linkgraph import (
-    hits_rank,
-    opic_priority,
-)
-
-from conftest import SF_MED
-
-
-@pytest.fixture(scope="module")
-def docs100(spark):
-    return (
-        spark.read.parquet(f"{SF_MED}/documents.parquet")
-        .filter(F.col("doc_id") < 100)
-        .select("doc_id", "text")
-        .cache()
-    )
-
-
-# ------------------------------------------------------------------ BM25
-
-
-def _py_bm25(rows, terms, k1=1.2, b=0.75):
-    toks = {
-        d: [t for t in txt.lower().strip().split() if t]
-        for d, txt in rows
-    }
-    dl = {d: len(ts) for d, ts in toks.items()}
-    n = len(dl)
-    avgdl = sum(dl.values()) / n
-    tf = {d: Counter(ts) for d, ts in toks.items()}
-    df = {t: sum(1 for d in tf if tf[d][t] > 0) for t in terms}
-    out = {}
-    for d in tf:
-        score, hits = 0.0, 0
-        for t in terms:
-            f = tf[d][t]
-            if f == 0:
-                continue
-            hits += 1
-            idf = math.log((n - df[t] + 0.5) / (df[t] + 0.5) + 1.0)
-            score += idf * f * (k1 + 1) / (
-                f + k1 * (1 - b + b * dl[d] / avgdl)
-            )
-        if hits:
-            out[d] = (hits, round(score, 6))
-    return out
-
-
-def test_bm25_matches_pure_python(spark, docs100):
-    terms = ["vector", "stream", "window"]
-    got = {
-        r.doc: (r.n_hit, r.score)
-        for r in ix.bm25_search(docs100, terms).collect()
-    }
-    rows = [(r.doc_id, r.text) for r in docs100.collect()]
-    want = _py_bm25(rows, terms)
-    assert set(got) == set(want)
-    for d in want:
-        assert got[d][0] == want[d][0]
-        assert abs(got[d][1] - want[d][1]) < 1e-6, d
-
-
-def test_bm25_rare_term_outscores_common_at_equal_tf(spark):
-    # 'rare' appears in 1 of 10 docs, 'common' in 9; the rare-term
-    # doc must outrank a common-term doc of identical length/tf
-    rows = [(0, "rare x x x")] + [
-        (i, "common x x x") for i in range(1, 10)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc: r.score
-        for r in ix.bm25_search(df, ["rare", "common"]).collect()
-    }
-    assert got[0] > got[1]
-
-
-# ------------------------------------------------------------------ HITS
-
-
-def test_hits_on_known_graph(spark):
-    # hub h points at two authorities a1, a2; a1 also pointed at by p.
-    # a1 must out-authority a2; h must be the top hub.
-    edges = spark.createDataFrame(
-        [("h", "a1"), ("h", "a2"), ("p", "a1")], "src string, dst string"
-    )
-    out = {r.node: (r.hub, r.authority) for r in
-           hits_rank(edges, num_iters=10).collect()}
-    assert out["a1"][1] > out["a2"][1] > 0
-    assert out["h"][0] > out["p"][0] > 0
-    assert out["a1"][1] > out["h"][1]  # pure hub is no authority
-
-
-def test_hits_l2_norms_are_unit(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")],
-        "src string, dst string",
-    )
-    rows = hits_rank(edges, num_iters=4).collect()
-    h2 = sum(r.hub**2 for r in rows)
-    a2 = sum(r.authority**2 for r in rows)
-    # scores are rounded to 6 dp on output, so the squared sum can
-    # deviate by O(n * 1e-6) from exactly 1
-    assert abs(h2 - 1.0) < 1e-5 and abs(a2 - 1.0) < 1e-5
-
-
-# ------------------------------------------------------------------ OPIC
-
-
-def test_opic_conserves_cash_and_accumulates_history(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")],
-        "src string, dst string",
-    )  # d is dangling
-    rounds = 3
-    rows = opic_priority(edges, num_rounds=rounds).collect()
-    cash = sum(r.cash for r in rows)
-    hist = sum(r.history for r in rows)
-    # total cash is 1.0 every round (virtual-root redistribution);
-    # each round moves exactly 1.0 of cash into history
-    assert abs(cash - 1.0) < 1e-6
-    assert abs(hist - float(rounds)) < 1e-6
-    pri = {r.node: r.priority for r in rows}
-    # c has two in-links (a, b) plus the dangling share; b has one
-    assert pri["c"] > pri["b"]
-
-
-def test_opic_dangling_cash_redistributed(spark):
-    # two disconnected sinks: all cash funnels into them, then the
-    # virtual root hands it back uniformly — sinks never hoard
-    edges = spark.createDataFrame(
-        [("a", "x"), ("b", "x")], "src string, dst string"
-    )
-    rows = opic_priority(edges, num_rounds=2).collect()
-    got = {r.node: r.cash for r in rows}
-    assert abs(sum(got.values()) - 1.0) < 1e-6
-    assert got["a"] > 0 and got["b"] > 0  # root refill reaches sources
 
 
 # ------------------------------------------- URL-parameter significance

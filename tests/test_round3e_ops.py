@@ -1,61 +1,11 @@
 """Semantics of the round-3 fourth-batch operators beyond the DuckDB
-hash gate: phrase search over positional postings, path-prefix site
-profiling, reciprocal-link detection, robots TTL refresh gate."""
+hash gate: path-prefix site profiling, robots TTL refresh gate, RFC
+9309 wildcard rules."""
 
 import datetime as dt
 
-import pyspark.sql.functions as F
-import pytest
-
-from news_combinator_spark.operators import indexing as ix
 from news_combinator_spark.operators.frontier import stale_robots
 from news_combinator_spark.operators.hoststats import path_profile
-from news_combinator_spark.operators.linkgraph import reciprocal_hosts
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# --------------------------------------------------------- phrase search
-
-
-def test_phrase_counts_overlapping_occurrences(spark):
-    docs = _docs(spark, [
-        (0, "a b a b a"),       # 'a b' twice
-        (1, "b a b"),           # once
-        (2, "a a b b"),         # once
-        (3, "b a"),             # zero (wrong order)
-        (4, "a"),               # zero (no second term)
-    ])
-    got = {r.doc: r.n_occurrences
-           for r in ix.phrase_search(docs, ["a", "b"]).collect()}
-    assert got == {0: 2, 1: 1, 2: 1}
-
-
-def test_phrase_three_terms_chains_joins(spark):
-    docs = _docs(spark, [
-        (0, "x y z x y"),       # one full run
-        (1, "x y y z"),         # broken in the middle
-        (2, "x y z x y z"),     # two runs
-    ])
-    got = {r.doc: r.n_occurrences
-           for r in ix.phrase_search(docs, ["x", "y", "z"]).collect()}
-    assert got == {0: 1, 2: 2}
-
-
-def test_phrase_repeated_token_positions(spark):
-    # 'a a a' contains 'a a' twice — the position join must not
-    # collapse self-pairs
-    docs = _docs(spark, [(0, "a a a")])
-    got = ix.phrase_search(docs, ["a", "a"]).collect()
-    assert got[0].n_occurrences == 2
-
-
-def test_phrase_empty_raises(spark):
-    docs = _docs(spark, [(0, "a")])
-    with pytest.raises(ValueError):
-        ix.phrase_search(docs, [])
 
 
 # ----------------------------------------------------------- path profile
@@ -96,34 +46,6 @@ def test_path_profile_depth_cap(spark):
     pages = _pages(spark, [("http://h.test/a/b/c/d/e/f.htm", "x")])
     got = sorted(r.prefix for r in path_profile(pages, max_depth=3).collect())
     assert got == ["/a/", "/a/b/", "/a/b/c/"]
-
-
-# ------------------------------------------------------- reciprocal hosts
-
-
-def _edges(spark, rows):
-    return spark.createDataFrame(rows, "src_host string, dst_host string")
-
-
-def test_reciprocity_ratio_and_self_loop_ignored(spark):
-    edges = _edges(spark, [
-        ("farm.test", "partner.test"),
-        ("partner.test", "farm.test"),   # reciprocated
-        ("farm.test", "victim.test"),    # one-way
-        ("farm.test", "farm.test"),      # self loop, dropped
-        ("farm.test", "partner.test"),   # multi-edge, collapsed
-    ])
-    out = {r.host: r for r in reciprocal_hosts(edges).collect()}
-    f = out["farm.test"]
-    assert f.n_out_hosts == 2 and f.n_reciprocal == 1
-    assert abs(f.reciprocity - 0.5) < 1e-9
-    assert out["partner.test"].reciprocity == 1.0
-    assert "victim.test" not in out  # no out-links -> no row
-
-
-def test_reciprocity_min_out_filter(spark):
-    edges = _edges(spark, [("a.test", "b.test"), ("b.test", "a.test")])
-    assert reciprocal_hosts(edges, min_out=2).count() == 0
 
 
 # ----------------------------------------------------------- stale robots
