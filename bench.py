@@ -54,8 +54,6 @@ SQL_BENCH_QUERIES = [
     "extract_text",
     "extract_links",
     "extract_markers",
-    "lang_id",
-    "quality_score",
     "token_count",
     "fingerprint",
     "dedup_first",
@@ -71,13 +69,9 @@ SQL_BENCH_QUERIES = [
     "summarize",
     "merge_upsert",
     "pos_tags",
-    "repetition_score",
-    "sentence_dedup",
     # pii_scrub moved to the round-3 block below (its implementation was
     # replaced in round 3; keeping one entry restores cross-round
     # per-query comparability under the new implementation only).
-    "corpus_stats",
-    "filter_funnel",
     "v1_cross_source_clusters",
     "dup_span_stats",
     "hot_hosts",
@@ -119,20 +113,14 @@ SQL_BENCH_QUERIES = [
     # added round 3
     "delta_admit",
     "canonical_best",
-    "trap_hosts",
-    "host_reputation",
     "ngram_counts",
     "wat_export",
     "frontier_merge",
     "shard_rendezvous",
     "freshness_revisit",
     "cdx_export",
-    "discovery_yield",
-    "param_significance",
-    "path_profile",
     "stale_robots",
     "containment_pairs",
-    "host_clusters",
     "drain_forecast",
     "pii_scrub",
     "robots_wildcards",

@@ -1,4 +1,4 @@
-"""Tokenization, TF-IDF, MinHash/SimHash, cosine, language/quality.
+"""Tokenization, TF-IDF, MinHash/SimHash, cosine, Jaccard.
 
 Pure deterministic kernels (shared by the engine's pandas UDFs and the
 pure-Python parity oracle) re-expressing the reference semantics:
@@ -413,15 +413,3 @@ def jaccard(a: set, b: set) -> float:
         return 1.0
     return len(a & b) / len(a | b)
 
-
-# Tiny per-language stopword lists for the heuristic language-id
-# (kept SQL-expressible so the DuckDB oracle can mirror it exactly).
-# SINGLE SOURCE: the Spark query, its DuckDB oracle SQL, and any
-# kernel all import this dict (plans/queries.py generates both sides
-# from it) so the marker sets can never drift.
-LANG_MARKERS = {
-    "en": ("the", "a", "of", "and", "to"),
-    "es": ("el", "la", "de", "que", "y"),
-    "fr": ("le", "les", "des", "et", "une"),
-    "de": ("der", "die", "das", "und", "nicht"),
-}

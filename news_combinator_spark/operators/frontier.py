@@ -78,6 +78,11 @@ def _n() -> Column:  # the row count every lineage Observation records
 
 
 def _count(obs: Observation) -> int:
+    # AQE prunes the CollectMetrics node of a plan it proves empty (a
+    # round whose frontier is empty); its Observation then completes
+    # with an empty metrics row, which reads as 0 rows
+    if obs._jo.getRow().length() == 0:
+        return 0
     return int(obs.get["n"])
 
 

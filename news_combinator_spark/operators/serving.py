@@ -1,15 +1,18 @@
-"""Serving-layer queries — the reference website's read path as
-DataFrame builders (SURVEY.md §2: P5, O1-O3, W4, W5, A7, A8, J4).
+"""Serving-layer operators — the reference website's read path as
+DataFrame builders (SURVEY.md §2: P5, W4, O3, J4).
 
-All pure built-in expressions (codegen'd, pushdown-friendly); these
-are the SQL-expressible operators checked against the DuckDB oracle
-in __spark_entry__.py.
+All pure built-in expressions (codegen'd, pushdown-friendly). The
+registry entries ``front_page_ranking``, ``entry_lookup`` and
+``comments_sort`` (plans/queries.py) run through these builders and are
+hash-checked against their DuckDB oracles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ranking import partitioned_global_rank, ranked_prefix
 
 
 def clamp_range_days(range_days: int, default: int = 3, lo: int = 1, hi: int = 50) -> int:
@@ -19,44 +22,34 @@ def clamp_range_days(range_days: int, default: int = 3, lo: int = 1, hi: int = 5
     return max(lo, min(hi, int(range_days)))
 
 
-def date_range_filter(
-    df: DataFrame, day_col: str, cutoff_day: int
-) -> DataFrame:
-    """day_time >= cutoff, newest first (indexAction.php:32-45)."""
-    return df.filter(F.col(day_col) >= cutoff_day).orderBy(
-        F.desc(day_col)
-    )
-
-
 def rank_front_page(
     clusters: DataFrame,
     sources_col: str = "source_names",
     preferred_source: str = "reetsee",
 ) -> DataFrame:
-    """Within each day: entries carrying the preferred source first,
-    then more distinct sources first (indexAction.php:57-68 usort),
-    deterministic tie-break on cluster_id."""
+    """Newest day first; within a day, entries carrying the preferred
+    source first, then more distinct sources first
+    (indexAction.php:57-68 usort), deterministic tie-break on
+    cluster_id. Adds ``has_preferred``, ``n_distinct_sources`` and the
+    int global ``rank`` (1-based). The rank is taken within each day
+    (parallel) and offset by the broadcast per-day prefix sums, so the
+    only unpartitioned frame is the distinct-day counts."""
     sources_arr = F.split(F.col(sources_col), ",")
-    return (
-        clusters.withColumn(
-            "has_preferred",
-            F.array_contains(sources_arr, preferred_source).cast("int"),
-        )
-        .withColumn("n_distinct_sources", F.size(F.array_distinct(sources_arr)))
-        .orderBy(
-            F.desc("day_time"),
+    feat = clusters.withColumn(
+        "has_preferred",
+        F.array_contains(sources_arr, preferred_source).cast("int"),
+    ).withColumn("n_distinct_sources", F.size(F.array_distinct(sources_arr)))
+    return partitioned_global_rank(
+        feat,
+        part_cols=["day_time"],
+        part_order=[F.desc("day_time")],
+        order_cols=[
             F.desc("has_preferred"),
             F.desc("n_distinct_sources"),
             F.asc("cluster_id"),
-        )
-    )
-
-
-def group_by_day(clusters: DataFrame) -> DataFrame:
-    """data[day_time][] grouping (indexAction.php:52-56)."""
-    return clusters.groupBy("day_time").agg(
-        F.count("*").alias("n_entries"),
-        F.sort_array(F.collect_list("cluster_id")).alias("cluster_ids"),
+        ],
+        out_col="rank",
+        cast_to="int",
     )
 
 
@@ -72,28 +65,12 @@ def entry_lookup(clusters: DataFrame, contents: DataFrame) -> DataFrame:
     return member.join(contents, "abstract_id", "inner")
 
 
-def sort_comments(
-    comments: DataFrame,
-    preferred_source: str = "reetsee",
-    time_col: str = "time",
-) -> DataFrame:
-    """W5: preferred-source comments first, then by time
-    (commentsAction.php:182-189)."""
-    return comments.orderBy(
-        (F.col("source") == preferred_source).cast("int").desc(),
-        F.asc(time_col),
-    )
-
-
 def paginate(df: DataFrame, order_cols, pn: int = 1, rn: int = 20) -> DataFrame:
-    """O3 comment paging (commentsAction.php:10-11). Page pn needs only
-    the top pn*rn rows of the total order, so rank a limit-bounded
-    prefix (TakeOrderedAndProject) instead of windowing the whole
-    relation into one partition."""
-    from .ranking import ranked_prefix
-
-    return (
-        ranked_prefix(df, list(order_cols), limit=pn * rn, out_col="_rn")
-        .filter(F.col("_rn") > (pn - 1) * rn)
-        .drop("_rn")
-    )
+    """O3 comment paging (commentsAction.php:10-11): page ``pn`` of
+    ``rn`` rows, each row keeping its 1-based position in the total
+    order as the int column ``rn``. Page pn needs only the top pn*rn
+    rows of the order, so rank a limit-bounded prefix
+    (TakeOrderedAndProject) instead of windowing the whole relation
+    into one partition."""
+    prefix = ranked_prefix(df, list(order_cols), limit=pn * rn, out_col="rn")
+    return prefix.filter(F.col("rn") > (pn - 1) * rn)

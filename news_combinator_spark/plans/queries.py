@@ -34,17 +34,16 @@ from ..functions.extract import links_udf, markers_udf, passage_udf, title_udf
 from ..operators import dedup as dd
 from ..functions.posfilter import _FUNCTION_WORDS, _PRONOUNS, doc_pos_tags
 from ..operators import sampling
+from ..operators import serving
 from ..operators import snapshots as snap_ops
 from ..functions import robots as rb
 from ..functions import sitemap as sm
 from ..functions import warc as wc
 from ..functions.robots import rules_from_robots_txt
 from ..operators import frontier as fr
-from ..operators import hoststats as hs
 from ..operators.bucketing import reshard_moves
 from ..operators.frontier import crawl
 from ..operators.merge import merge_into
-from ..operators.ranking import partitioned_global_rank, ranked_prefix
 from ..operators.summarize import add_abstract_column
 from ..oracle.crawl_sql import crawl_oracle_sql, host_lineage_oracle_sql
 
@@ -251,7 +250,8 @@ SQL_INDEX_DATERANGE = """
 
 def q_front_page_ranking(spark, sf_dir):
     """W4: preferred-source-first, then source-diversity ranking
-    (indexAction.php:57-68) over a clusters-shaped derivation."""
+    (indexAction.php:57-68, serving.rank_front_page) over a
+    clusters-shaped derivation."""
     docs = _t(spark, sf_dir, "documents")
     clusters = docs.select(
         F.col("doc_id").alias("cluster_id"),
@@ -262,28 +262,7 @@ def q_front_page_ranking(spark, sf_dir):
             F.concat(F.lit("src"), ((F.col("doc_id") + 1) % 20).cast("string")),
         ).alias("source_names"),
     )
-    arr = F.split(F.col("source_names"), ",")
-    ranked = (
-        clusters.withColumn(
-            "has_preferred", F.array_contains(arr, "src0").cast("int")
-        )
-        .withColumn("n_distinct_sources", F.size(F.array_distinct(arr)))
-    )
-    # global rank without a single-partition window: rank within each
-    # day (parallel), offset by the broadcast per-day prefix sums —
-    # the only unpartitioned frame is the distinct-day counts
-    return partitioned_global_rank(
-        ranked,
-        part_cols=["day_time"],
-        part_order=[F.desc("day_time")],
-        order_cols=[
-            F.desc("has_preferred"),
-            F.desc("n_distinct_sources"),
-            F.asc("cluster_id"),
-        ],
-        out_col="rank",
-        cast_to="int",
-    ).select(
+    return serving.rank_front_page(clusters, preferred_source="src0").select(
         "cluster_id", "day_time", "source_names", "has_preferred",
         "n_distinct_sources", "rank",
     )
@@ -313,7 +292,8 @@ SQL_FRONT_PAGE_RANKING = """
 
 
 def q_entry_lookup(spark, sf_dir):
-    """J4: csv id-list FK join (entryAction.php:79-87)."""
+    """J4: csv id-list FK join (entryAction.php:79-87,
+    serving.entry_lookup)."""
     docs = _t(spark, sf_dir, "documents")
     clusters = docs.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("cluster_id"),
@@ -324,12 +304,9 @@ def q_entry_lookup(spark, sf_dir):
             (F.col("doc_id") + 3).cast("string"),
         ).alias("abstract_ids"),
     )
-    member = clusters.select(
-        "cluster_id",
-        F.explode(F.split("abstract_ids", ",")).alias("doc_id_str"),
-    ).select("cluster_id", F.col("doc_id_str").cast("long").alias("doc_id"))
-    return member.join(docs.select("doc_id", "source"), "doc_id").select(
-        "cluster_id", F.col("doc_id").alias("abstract_id"), "source"
+    contents = docs.select(F.col("doc_id").alias("abstract_id"), "source")
+    return serving.entry_lookup(clusters, contents).select(
+        "cluster_id", "abstract_id", "source"
     )
 
 
@@ -351,20 +328,19 @@ SQL_ENTRY_LOOKUP = """
 
 def q_comments_sort(spark, sf_dir):
     """W5+O3: preferred-type-first then time ordering with pagination
-    (commentsAction.php:182-189, 10-11)."""
+    (commentsAction.php:182-189, 10-11). serving.paginate ranks only
+    the top-40 prefix that page 2 of 20 needs (TakeOrderedAndProject:
+    parallel per-partition top-k), so the ranked frame stays at 40 rows
+    regardless of input size — no global window over the events
+    table."""
     ev = _t(spark, sf_dir, "events")
     order = [
         F.desc((F.col("event_type") == "error").cast("int")),
         F.asc("ts"),
         F.asc("event_id"),
     ]
-    # page 2 of 20 needs only the top-40 prefix: TakeOrderedAndProject
-    # (parallel per-partition top-k) bounds the ranked frame at 40 rows
-    # regardless of input size — no global window over the events table
-    return (
-        ranked_prefix(ev, order, limit=40, out_col="rn")
-        .filter(F.col("rn") > 20)
-        .select("event_id", "event_type", "rn")
+    return serving.paginate(ev, order, pn=2, rn=20).select(
+        "event_id", "event_type", "rn"
     )
 
 
@@ -402,114 +378,9 @@ SQL_GROUP_BY_DAY = """
 
 
 # ===========================================================================
-# Text-analysis family (training-data ops over `documents`)
+# Text family: token counts, fingerprints, exact dedup, overlap,
+# abstracts (W2), MERGE upsert (S9), POS tags (F12)
 # ===========================================================================
-
-# single-sourced marker lists (functions/textfns.py) — the Spark query
-# and the DuckDB oracle SQL are both generated from the same constant
-from ..functions.textfns import LANG_MARKERS as _LANG_LISTS  # noqa: E402
-
-
-def _lang_score(lang: str):
-    words = ", ".join(f"'{w}'" for w in _LANG_LISTS[lang])
-    return F.expr(
-        f"size(filter(split(text, ' '), x -> x IN ({words})))"
-    ).cast("int")
-
-
-def q_lang_id(spark, sf_dir):
-    """Heuristic language id via stopword-marker hit counts."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        _lang_score("en").alias("s_en"),
-        _lang_score("es").alias("s_es"),
-        _lang_score("fr").alias("s_fr"),
-        _lang_score("de").alias("s_de"),
-    )
-    return scored.withColumn(
-        "pred_lang",
-        F.when(
-            (F.col("s_en") >= F.col("s_es"))
-            & (F.col("s_en") >= F.col("s_fr"))
-            & (F.col("s_en") >= F.col("s_de")),
-            "en",
-        )
-        .when(
-            (F.col("s_es") >= F.col("s_fr")) & (F.col("s_es") >= F.col("s_de")),
-            "es",
-        )
-        .when(F.col("s_fr") >= F.col("s_de"), "fr")
-        .otherwise("de"),
-    )
-
-
-def _sql_lang_score(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in _LANG_LISTS[lang])
-    return (
-        f"cast(len(list_filter(string_split(text, ' '), "
-        f"x -> x IN ({words}))) as int)"
-    )
-
-
-SQL_LANG_ID = f"""
-    WITH s AS (
-      SELECT doc_id,
-             {_sql_lang_score('en')} AS s_en,
-             {_sql_lang_score('es')} AS s_es,
-             {_sql_lang_score('fr')} AS s_fr,
-             {_sql_lang_score('de')} AS s_de
-      FROM documents
-    )
-    SELECT doc_id, s_en, s_es, s_fr, s_de,
-           CASE WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en'
-                WHEN s_es >= s_fr AND s_es >= s_de THEN 'es'
-                WHEN s_fr >= s_de THEN 'fr'
-                ELSE 'de' END AS pred_lang
-    FROM s
-"""
-
-
-def q_quality_score(spark, sf_dir):
-    """Quality scoring: token count, stopword ratio, avg token length."""
-    docs = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " ")).cast("int")
-    stop_hits = _lang_score("en")
-    avg_len = (F.length("text") - (n_tok - 1)) / n_tok
-    return docs.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        F.round(stop_hits / n_tok, 4).alias("stopword_ratio"),
-        F.round(avg_len, 4).alias("avg_token_len"),
-        # +1e-9 shifts exact .00005 grid points off the rounding
-        # boundary identically in both engines (Spark rounds the
-        # decimal string HALF_UP; DuckDB rounds the binary double)
-        F.round(
-            0.5 * (stop_hits / n_tok)
-            + 0.1 * F.least(avg_len / 10, F.lit(1.0))
-            + 1e-9,
-            4,
-        ).alias("quality_score"),
-    )
-
-
-SQL_QUALITY_SCORE = f"""
-    WITH s AS (
-      SELECT doc_id,
-             cast(len(string_split(text, ' ')) as int) AS n_tokens,
-             {_sql_lang_score('en')} AS stop_hits,
-             length(text) AS n_chars
-      FROM documents
-    )
-    SELECT doc_id, n_tokens,
-           round(stop_hits / n_tokens, 4) AS stopword_ratio,
-           round((n_chars - (n_tokens - 1)) / n_tokens, 4) AS avg_token_len,
-           round(0.5 * (stop_hits / n_tokens)
-                 + 0.1 * least((n_chars - (n_tokens - 1)) / n_tokens / 10,
-                               1.0) + 1e-9, 4) AS quality_score
-    FROM s
-"""
-
 
 def q_token_count(spark, sf_dir):
     """BPE-ish token counting over JSON-y strings (events.props)."""
@@ -780,298 +651,6 @@ SQL_POS_TAGS = f"""
            coalesce(string_agg(r.t, ',' ORDER BY r.rn), '') AS tags_csv
     FROM documents d LEFT JOIN ranked r ON r.doc_id = d.doc_id
     GROUP BY d.doc_id
-"""
-
-
-def q_sentence_dedup(spark, sf_dir):
-    """Corpus-wide sentence-level exact dedup (CCNet-style): split
-    each doc into sentences, keep only the FIRST occurrence of every
-    distinct sentence — first = lowest (doc_id, position) in scan
-    order — and reassemble each doc from its surviving sentences in
-    original order. Sentences are derived exactly as in q_summarize
-    (fixed-width chunks joined by ' . ': the test corpus carries no
-    natural delimiters), so exact-dup documents lose all their
-    sentences to the earlier copy and partial overlaps shrink.
-
-    Scale shape: first-occurrence is groupBy(sentence).min(struct(
-    doc_id, pos)) — a partial-aggregating shuffle, so a boilerplate
-    sentence appearing 10^8 times combines map-side instead of
-    flooding one window reducer (the skew-safe alternative to
-    row_number over partitionBy(sentence)). Reassembly is one
-    groupBy(doc_id) with an ordered array_sort concat."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    chunks = [
-        F.substring("text", 1 + _SUM_WIDTH * i, _SUM_WIDTH)
-        for i in range(_SUM_CHUNKS)
-    ]
-    sentences = docs.select(
-        "doc_id", F.posexplode(F.array(*chunks)).alias("pos", "sent")
-    ).filter(F.col("sent") != "")
-    first = (
-        sentences.groupBy("sent")
-        .agg(F.min(F.struct("doc_id", "pos")).alias("f"))
-        .select(
-            F.col("f.doc_id").alias("doc_id"),
-            F.col("f.pos").alias("pos"),
-            "sent",
-        )
-    )
-    agg = first.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(pos,"
-            " sent))), x -> x.sent), ' . ')"
-        ).alias("kept_text"),
-    )
-    return docs.select("doc_id").join(agg, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("kept_text", F.lit("")).alias("kept_text"),
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-    )
-
-
-_SDD_SENT_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {i} AS pos, substr(text, {1 + _SUM_WIDTH * i},"
-    f" {_SUM_WIDTH}) AS sent FROM documents"
-    for i in range(_SUM_CHUNKS)
-)
-
-# same first-occurrence semantics via a window (the oracle need not
-# scale); empty chunks are dropped on both sides before dedup
-SQL_SENTENCE_DEDUP = f"""
-    WITH s AS ({_SDD_SENT_SQL}),
-    ranked AS (
-      SELECT doc_id, pos, sent,
-             row_number() OVER (PARTITION BY sent
-                                ORDER BY doc_id, pos) AS rn
-      FROM s WHERE sent <> ''
-    ),
-    agg AS (
-      SELECT doc_id, count(*) AS n_kept,
-             string_agg(sent, ' . ' ORDER BY pos) AS kept_text
-      FROM ranked WHERE rn = 1 GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           coalesce(agg.kept_text, '') AS kept_text,
-           coalesce(agg.n_kept, 0) AS n_kept
-    FROM documents d LEFT JOIN agg USING (doc_id)
-"""
-
-
-def q_repetition_score(spark, sf_dir):
-    """Repetition-based quality scoring (C4/Gopher-style training-data
-    filters): duplicate-word fraction (1 - distinct/total) and
-    top-bigram fraction (count of the most frequent word bigram over
-    all bigrams). All JVM expressions; the only shuffles are two
-    map-side-combined groupBys keyed by (doc_id[, bigram]) plus a
-    doc_id join back — no global stage, scales with the corpus."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
-    )
-    base = docs.select(
-        "doc_id",
-        F.size("ws").cast("long").alias("n_words"),
-        F.size(F.array_distinct("ws")).alias("n_distinct"),
-        # bigram i = ws[i] + ' ' + ws[i+1] (0-based [] indexing; the
-        # slice drops the last word so i+1 stays in range)
-        F.expr(
-            "transform(slice(ws, 1, size(ws) - 1),"
-            " (x, i) -> concat(x, ' ', ws[i + 1]))"
-        ).alias("bgs"),
-    )
-    cnt = (
-        base.select("doc_id", F.explode("bgs").alias("b"))
-        .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    top = cnt.groupBy("doc_id").agg(F.max("c").alias("top_c"))
-    # +1e-9 shifts exact .00005 grid points off the rounding boundary
-    # identically in both engines (see q_quality_score)
-    return base.join(top, "doc_id", "left").select(
-        "doc_id",
-        "n_words",
-        F.round(
-            F.lit(1.0) - F.col("n_distinct") / F.col("n_words") + 1e-9, 4
-        ).alias("dup_word_frac"),
-        F.round(
-            F.when(
-                F.col("n_words") > 1,
-                F.col("top_c") / (F.col("n_words") - 1),
-            ).otherwise(F.lit(0.0))
-            + 1e-9,
-            4,
-        ).alias("top_bigram_frac"),
-    )
-
-
-SQL_REPETITION_SCORE = """
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-    ), base AS (
-      SELECT doc_id, len(ws) AS n_words,
-             len(list_distinct(ws)) AS n_distinct, ws
-      FROM w
-    ), idx AS (
-      SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-      FROM w WHERE len(ws) > 1
-    ), cnt AS (
-      SELECT doc_id,
-             list_extract(ws, i) || ' ' || list_extract(ws, i + 1) AS b,
-             count(*) AS c
-      FROM idx GROUP BY doc_id, b
-    ), top AS (
-      SELECT doc_id, max(c) AS top_c FROM cnt GROUP BY doc_id
-    )
-    SELECT base.doc_id,
-           base.n_words,
-           round(1 - base.n_distinct / CAST(base.n_words AS DOUBLE)
-                 + 1e-9, 4) AS dup_word_frac,
-           round(CASE WHEN base.n_words > 1
-                      THEN top.top_c / (base.n_words - 1.0)
-                      ELSE 0.0 END + 1e-9, 4) AS top_bigram_frac
-    FROM base LEFT JOIN top USING (doc_id)
-"""
-
-
-# (The round-2 q_pii_scrub that lived here was superseded by the
-# functions/pii.scrub_pii-backed query in the round-3 additions below;
-# the shadowed def and its SQL were removed in round 4 — VERDICT r3 #3.)
-
-
-def _word_4grams(docs):
-    """doc_id -> exploded word 4-grams over a pre-split `ws` column.
-    Used by filter_funnel."""
-    return docs.filter(F.size("ws") >= 4).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(ws, 1, size(ws) - 3),"
-                " (x, i) -> concat_ws(' ', slice(ws, i + 1, 4)))"
-            )
-        ).alias("g"),
-    )
-
-
-def q_corpus_stats(spark, sf_dir):
-    """Per-language corpus profiling (curation dashboards / sampling
-    weights): doc counts, total and mean tokens, and exact linearly
-    interpolated p50/p90/p99 token counts. percentile() holds
-    O(distinct values) aggregation state per group and token counts
-    are small bounded ints, so the exact form is scale-safe here; for
-    unbounded value domains swap in approx_percentile — same plan
-    shape, one map-side-combined shuffle on lang."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "lang", F.size(F.split("text", " ")).cast("int").alias("nt")
-    )
-
-    def pct(p):
-        return F.round(F.expr(f"percentile(nt, {p})") + 1e-9, 4)
-
-    return docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("nt").cast("long").alias("total_tokens"),
-        F.round(F.avg("nt") + 1e-9, 4).alias("mean_tokens"),
-        pct(0.5).alias("p50_tokens"),
-        pct(0.9).alias("p90_tokens"),
-        pct(0.99).alias("p99_tokens"),
-    )
-
-
-SQL_CORPUS_STATS = """
-    WITH s AS (
-      SELECT lang, cast(len(string_split(text, ' ')) as int) AS nt
-      FROM documents
-    )
-    SELECT lang,
-           count(*) AS n_docs,
-           CAST(sum(nt) AS BIGINT) AS total_tokens,
-           round(avg(nt) + 1e-9, 4) AS mean_tokens,
-           round(quantile_cont(nt, 0.5) + 1e-9, 4) AS p50_tokens,
-           round(quantile_cont(nt, 0.9) + 1e-9, 4) AS p90_tokens,
-           round(quantile_cont(nt, 0.99) + 1e-9, 4) AS p99_tokens
-    FROM s GROUP BY lang
-"""
-
-
-def q_filter_funnel(spark, sf_dir):
-    """End-to-end curation funnel over the training slice (doc_id %
-    20 != 0; the eval slice is held out for decontamination): per-doc
-    pass/fail flags for language (metadata lang == 'en' — the
-    classifier path is q_lang_id composed upstream; its prediction is
-    degenerate on this all-English-vocab corpus), length (>= 25
-    tokens), repetition (dup-word fraction <= 0.6) and
-    decontamination (no word 4-gram shared with the eval slice), plus
-    the keep conjunction. The three per-row flags are one narrow
-    projection pass; the only shuffle is the decontamination hit
-    aggregation (broadcast semi-join + map-side-combined groupBy)
-    joined back on doc_id. Comparisons are on identical IEEE double
-    ops in both engines, so the flag boundaries cannot drift."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.split("text", " ").alias("ws")
-    )
-    is_eval = F.col("doc_id") % 20 == 0
-    grams = _word_4grams(docs)
-    eval_grams = grams.filter(is_eval).select("g").distinct()
-    hits = (
-        grams.filter(~is_eval)
-        .join(F.broadcast(eval_grams), "g")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    nt = F.size("ws")
-    flags = docs.filter(~is_eval).select(
-        "doc_id",
-        (F.col("lang") == "en").cast("int").alias("pass_lang"),
-        (nt >= 25).cast("int").alias("pass_len"),
-        ((F.lit(1.0) - F.size(F.array_distinct("ws")) / nt) <= 0.6)
-        .cast("int")
-        .alias("pass_repetition"),
-    )
-    return (
-        flags.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "pass_lang",
-            "pass_len",
-            "pass_repetition",
-            F.col("n_hits").isNull().cast("int").alias("pass_decontam"),
-        )
-        .withColumn(
-            "keep",
-            F.col("pass_lang")
-            * F.col("pass_len")
-            * F.col("pass_repetition")
-            * F.col("pass_decontam"),
-        )
-    )
-
-
-SQL_FILTER_FUNNEL = f"""
-    WITH w AS (
-      SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents
-    ), grams AS (
-      SELECT doc_id, array_to_string(list_slice(ws, i, i + 3), ' ') AS g
-      FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 2)) AS i
-            FROM w WHERE len(ws) >= 4)
-    ), eval AS (
-      SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0
-    ), hits AS (
-      SELECT grams.doc_id, count(*) AS n_hits
-      FROM grams JOIN eval USING (g)
-      WHERE grams.doc_id % 20 <> 0 GROUP BY grams.doc_id
-    ), flags AS (
-      SELECT doc_id,
-             CAST(lang = 'en' AS INTEGER) AS pass_lang,
-             CAST(len(ws) >= 25 AS INTEGER) AS pass_len,
-             CAST(1 - len(list_distinct(ws)) / CAST(len(ws) AS DOUBLE)
-                  <= 0.6 AS INTEGER) AS pass_repetition
-      FROM w WHERE doc_id % 20 <> 0
-    )
-    SELECT f.doc_id, f.pass_lang, f.pass_len, f.pass_repetition,
-           CAST(h.doc_id IS NULL AS INTEGER) AS pass_decontam,
-           f.pass_lang * f.pass_len * f.pass_repetition
-             * CAST(h.doc_id IS NULL AS INTEGER) AS keep
-    FROM flags f LEFT JOIN hits h ON h.doc_id = f.doc_id
 """
 
 
@@ -4126,157 +3705,6 @@ SQL_CANONICAL_BEST = r"""
 """
 
 
-def q_trap_hosts(spark, sf_dir):
-    """Content-side crawler-trap detection (hoststats.trap_hosts):
-    the fixture gives one host (hn%4==2) five session-id alias URLs
-    per page over unchanged bodies, so its distinct-URL count
-    explodes 6x over distinct content and it flags; the other hosts
-    sit near ratio 1 (exact-dup texts in the corpus keep it not
-    exactly 1 — also under the hash). Complements url_templates: the
-    alias token here is a non-numeric-prefixed query suffix a
-    numeric-run template collapse would only partially fold."""
-    pages = pages_from_documents(spark, sf_dir)
-    hn = F.regexp_extract("host", r"h(\d+)", 1).cast("int")
-    aliased = (
-        pages.filter(hn % 4 == 2)
-        .select(
-            "host", "url", "text",
-            F.explode(F.sequence(F.lit(0), F.lit(4))).alias("s"),
-        )
-        .select(
-            "host",
-            F.concat(
-                "url", F.lit(";jsessionid="), F.col("s").cast("string")
-            ).alias("url"),
-            "text",
-        )
-    )
-    cand = pages.select("host", "url", "text").unionByName(aliased)
-    return hs.trap_hosts(cand)
-
-
-SQL_TRAP_HOSTS = (
-    _pages_cte()
-    + r"""
-    , reps AS (SELECT unnest(range(0, 5)) AS s)
-    , aliased AS (
-        SELECT host,
-               url || ';jsessionid=' || CAST(s AS VARCHAR) AS url,
-               text
-        FROM pages CROSS JOIN reps
-        WHERE CAST(regexp_extract(host, 'h(\d+)', 1) AS INT) % 4 = 2
-    )
-    , cand AS (
-        SELECT host, url, text FROM pages
-        UNION ALL SELECT host, url, text FROM aliased
-    )
-    SELECT host,
-           count(DISTINCT url) AS n_urls,
-           count(DISTINCT md5(text)) AS n_contents,
-           round(count(DISTINCT url)
-                 / CAST(count(DISTINCT md5(text)) AS DOUBLE), 4)
-               AS url_content_ratio,
-           count(DISTINCT url)
-               / CAST(count(DISTINCT md5(text)) AS DOUBLE) > 2.0 AS is_trap
-    FROM cand GROUP BY host
-"""
-)
-
-
-def q_host_reputation(spark, sf_dir):
-    """Per-host crawl-budget multiplier (hoststats.host_reputation):
-    the fixture trips each signal on a different host — hn%4==2 gets
-    the session-id trap aliases (x0.25), and docs doc_id%8==3 are
-    truncated to 10 chars so their host crosses the stub-rate
-    threshold (x0.5). Every comparison derives from exact integer
-    aggregates (long sums / counts), so the thresholds are
-    engine-deterministic and the oracle replays signal extraction and
-    multiplier composition in SQL. This is the number the scheduler
-    multiplies into next round's politeness budget — curation feeding
-    back into crawl ordering."""
-    pages = pages_from_documents(spark, sf_dir)
-    hn = F.regexp_extract("host", r"h(\d+)", 1).cast("int")
-    fx = pages.select(
-        "host", "url",
-        F.when(F.col("doc_id") % 8 == 3, F.substring("text", 1, 10))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    aliased = (
-        fx.filter(hn % 4 == 2)
-        .select(
-            "host", "url", "text",
-            F.explode(F.sequence(F.lit(0), F.lit(4))).alias("s"),
-        )
-        .select(
-            "host",
-            F.concat(
-                "url", F.lit(";jsessionid="), F.col("s").cast("string")
-            ).alias("url"),
-            "text",
-        )
-    )
-    cand = fx.unionByName(aliased)
-    return hs.host_reputation(cand)
-
-
-SQL_HOST_REPUTATION = (
-    _pages_cte()
-    + r"""
-    , fx AS (
-        SELECT host, url,
-               CASE WHEN doc_id % 8 = 3 THEN substr(text, 1, 10)
-                    ELSE text END AS text
-        FROM pages
-    )
-    , reps AS (SELECT unnest(range(0, 5)) AS s)
-    , aliased AS (
-        SELECT host,
-               url || ';jsessionid=' || CAST(s AS VARCHAR) AS url,
-               text
-        FROM fx CROSS JOIN reps
-        WHERE CAST(regexp_extract(host, 'h(\d+)', 1) AS INT) % 4 = 2
-    )
-    , cand AS (
-        SELECT host, url, text FROM fx
-        UNION ALL SELECT host, url, text FROM aliased
-    )
-    , per_host AS (
-        SELECT host,
-               avg(CAST(len(regexp_split_to_array(trim(text), '\s+'))
-                        AS BIGINT)) AS mean_tok,
-               avg(CASE WHEN length(text) < 64 THEN 1.0 ELSE 0.0 END)
-                   AS stub_rate
-        FROM cand GROUP BY host
-    )
-    , traps AS (
-        SELECT host,
-               count(DISTINCT url) AS n_urls,
-               count(DISTINCT url)
-                   / CAST(count(DISTINCT md5(text)) AS DOUBLE) AS ratio
-        FROM cand GROUP BY host
-    )
-    , corpus AS (
-        SELECT avg(CAST(len(regexp_split_to_array(trim(text), '\s+'))
-                        AS BIGINT)) AS corpus_mean_tok
-        FROM cand
-    )
-    SELECT p.host, t.n_urls,
-           round(t.ratio, 4) AS url_content_ratio,
-           round(p.stub_rate, 4) AS stub_rate,
-           round(p.mean_tok, 4) AS mean_tok,
-           round(1.0
-                 * CASE WHEN t.ratio > 2.0 THEN 0.25 ELSE 1.0 END
-                 * CASE WHEN p.stub_rate > 0.3 THEN 0.5 ELSE 1.0 END
-                 * CASE WHEN p.mean_tok < 0.5 * c.corpus_mean_tok
-                        THEN 0.5 ELSE 1.0 END, 4) AS budget_multiplier
-    FROM per_host p
-    JOIN traps t ON p.host = t.host
-    CROSS JOIN corpus c
-"""
-)
-
-
 def q_ngram_counts(spark, sf_dir):
     """Corpus-wide 5-gram inventory (dedup.ngram_counts): every
     whitespace 5-gram occurring >= 3 times — the index behind
@@ -4581,212 +4009,9 @@ SQL_CDX_EXPORT = (
 )
 
 
-def q_discovery_yield(spark, sf_dir):
-    """Per-host frontier value (hoststats.discovery_yield): docs
-    doc_id<400 are the fetched snapshot; their outlinks (the
-    extract_links set: next1, next2, one offsite) are NEW when not
-    themselves fetched urls — link targets with id >= 400 and the
-    offsite url. discovery_yield = distinct new links per fetched
-    page, offsite_frac separates frontier expansion from
-    self-cover."""
-    pages = pages_from_documents(spark, sf_dir).filter(
-        F.col("doc_id") < 400
-    )
-    links = (
-        pages.select("host", F.col("next1_url").alias("link"))
-        .unionByName(
-            pages.select("host", F.col("next2_url").alias("link"))
-        )
-        .unionByName(
-            pages.select(
-                "host", F.lit("http://offsite.example/x").alias("link")
-            )
-        )
-    )
-    return hs.discovery_yield(pages, links)
-
-
-SQL_DISCOVERY_YIELD = (
-    _pages_cte()
-    + r"""
-    , fetched AS (SELECT * FROM pages WHERE doc_id < 400)
-    , links AS (
-        SELECT host, next1_url AS link FROM fetched
-        UNION ALL SELECT host, next2_url FROM fetched
-        UNION ALL SELECT host, 'http://offsite.example/x' FROM fetched
-    )
-    , dl AS (SELECT DISTINCT host, link FROM links)
-    , newl AS (
-        SELECT d.host,
-               count(*) AS n_new_links,
-               avg(CASE WHEN regexp_extract(
-                            d.link, '^[a-z]+://([^/]+)', 1) <> d.host
-                        THEN 1.0 ELSE 0.0 END) AS offsite_frac
-        FROM dl d
-        WHERE NOT EXISTS (
-            SELECT 1 FROM fetched f WHERE f.url = d.link)
-        GROUP BY d.host
-    )
-    , per AS (
-        SELECT host, count(*) AS n_pages FROM fetched GROUP BY host
-    )
-    SELECT p.host, p.n_pages,
-           coalesce(n.n_new_links, 0) AS n_new_links,
-           round(coalesce(n.offsite_frac, 0.0), 6) AS offsite_frac,
-           round(coalesce(n.n_new_links, 0)
-                 / CAST(p.n_pages AS DOUBLE), 6) AS discovery_yield
-    FROM per p LEFT JOIN newl n ON p.host = n.host
-"""
-)
-
-
 # ===========================================================================
-# Round-3 additions, third batch: URL-parameter significance (DUST)
+# Round-3 additions, fourth batch: robots TTL refresh gate
 # ===========================================================================
-
-def q_param_significance(spark, sf_dir):
-    """URL-parameter significance mining (hoststats.
-    param_significance): a synthetic request log carries each page
-    url three times with a session parameter and twice with a paging
-    parameter (`url?sid=sV&pg=P` and `url?pg=P`), where content
-    fingerprints vary with pg but not sid. The operator's
-    within-stripped-group comparison must mark sid insignificant and
-    pg significant even though both co-occur on the same urls; the
-    oracle replays the pair explode, the literal-replace strip, and
-    both aggregation levels."""
-    pages = pages_from_documents(spark, sf_dir)
-    base = pages.select(
-        "url",
-        "text",
-        F.explode(F.sequence(F.lit(0), F.lit(2))).alias("v"),
-    )
-    fp = F.md5(
-        F.concat_ws(":", F.col("text"), (F.col("v") % 2).cast("string"))
-    )
-    reqs = base.select(
-        F.concat(
-            F.col("url"),
-            F.lit("?sid=s"),
-            F.col("v").cast("string"),
-            F.lit("&pg="),
-            (F.col("v") % 2).cast("string"),
-        ).alias("url"),
-        fp.alias("fp"),
-    ).unionByName(
-        base.select(
-            F.concat(
-                F.col("url"),
-                F.lit("?pg="),
-                (F.col("v") % 2).cast("string"),
-            ).alias("url"),
-            fp.alias("fp"),
-        )
-    )
-    return hs.param_significance(reqs, min_support=2)
-
-
-SQL_PARAM_SIGNIFICANCE = (
-    _pages_cte()
-    + r"""
-    , g AS (SELECT unnest(range(0, 3)) AS v)
-    , reqs AS (
-        SELECT url || '?sid=s' || CAST(v AS VARCHAR)
-                   || '&pg=' || CAST(v % 2 AS VARCHAR) AS url,
-               md5(text || ':' || CAST(v % 2 AS VARCHAR)) AS fp
-        FROM pages CROSS JOIN g
-        UNION ALL
-        SELECT url || '?pg=' || CAST(v % 2 AS VARCHAR) AS url,
-               md5(text || ':' || CAST(v % 2 AS VARCHAR)) AS fp
-        FROM pages CROSS JOIN g
-    )
-    , pairs AS (
-        SELECT url, fp,
-               regexp_extract(url,
-                   '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1) AS host,
-               unnest(string_split(
-                   regexp_extract(url, '\?(.*)$', 1), '&')) AS pair
-        FROM reqs
-    )
-    , keyed AS (
-        SELECT url, fp, host,
-               regexp_extract(pair, '^([^=]*)', 1) AS param,
-               replace(replace(replace(url,
-                   '&' || pair, ''),
-                   '?' || pair || '&', '?'),
-                   '?' || pair, '') AS stripped
-        FROM pairs WHERE pair <> ''
-    )
-    , grp AS (
-        SELECT host, param, stripped,
-               count(DISTINCT url) AS g_urls,
-               count(DISTINCT fp) AS g_fps
-        FROM keyed GROUP BY host, param, stripped
-        HAVING count(DISTINCT url) >= 2
-    )
-    , agg AS (
-        SELECT host, param,
-               count(*) AS n_groups,
-               sum(g_urls) AS n_urls,
-               sum(g_fps) AS n_fp
-        FROM grp GROUP BY host, param
-    )
-    SELECT host, param, n_groups,
-           CAST(n_urls AS BIGINT) AS n_urls,
-           CAST(n_fp AS BIGINT) AS n_fp,
-           n_fp > n_groups AS significant
-    FROM agg WHERE n_urls >= 2
-"""
-)
-
-
-# ===========================================================================
-# Round-3 additions, fourth batch: site-structure profile, robots TTL
-# refresh gate
-# ===========================================================================
-
-def q_path_profile(spark, sf_dir):
-    """Site-structure rollup (hoststats.path_profile): per (host,
-    path-prefix, depth<=3) page count, text bytes, and distinct
-    content fingerprints — the map that scopes a crawl to the
-    directory trees worth budget. Every url contributes one row per
-    ancestor prefix via a constant-bounded explode; one map-side-
-    combined groupBy at (host, prefix) cardinality."""
-    pages = pages_from_documents(spark, sf_dir)
-    return hs.path_profile(pages)
-
-
-SQL_PATH_PROFILE = (
-    _pages_cte()
-    + r"""
-    , b AS (
-        SELECT regexp_extract(url,
-                   '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1) AS host,
-               md5(coalesce(text, '')) AS fp,
-               length(coalesce(text, '')) AS nbytes,
-               string_split(
-                   regexp_replace(
-                       regexp_replace(url,
-                           '^[a-z][a-z0-9+.-]*://[^/]*', ''),
-                       '[?#].*$', ''),
-                   '/') AS segs
-        FROM pages
-    )
-    , d AS (
-        SELECT host, fp, nbytes, segs,
-               CAST(unnest(range(1, least(3, len(segs) - 2) + 1))
-                    AS INT) AS depth
-        FROM b WHERE len(segs) >= 3
-    )
-    SELECT host,
-           array_to_string(segs[1:depth + 1], '/') || '/' AS prefix,
-           depth,
-           count(*) AS n_pages,
-           CAST(sum(nbytes) AS BIGINT) AS total_bytes,
-           count(DISTINCT fp) AS n_distinct_fp
-    FROM d GROUP BY host, prefix, depth
-"""
-)
-
 
 def q_stale_robots(spark, sf_dir):
     """Robots TTL refresh gate (frontier.stale_robots, RFC 9309 S2.4
@@ -4910,55 +4135,6 @@ SQL_CONTAINMENT_PAIRS = r"""
     JOIN sizes zb ON zb.doc = i.b
     WHERE greatest(round(i.n_common / CAST(za.n_sh AS DOUBLE), 6),
                    round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6)) >= 0.9
-"""
-
-
-def q_host_clusters(spark, sf_dir):
-    """Mirror/equivalence cluster resolution (hoststats.host_clusters):
-    a sparse synthetic host graph (64 hosts; an edge h(i%64) --
-    h((7i+1)%64) for every ninth doc) resolved into connected
-    components with lexicographic-min canonicals — the frontier's
-    one-politeness-identity-per-mirror-set table. The oracle closes
-    the same edges with a recursive CTE, pinning the exact cluster
-    assignment of every host."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    a = F.concat(
-        F.lit("h"), (F.col("doc_id") % 64).cast("string"), F.lit(".test")
-    )
-    b = F.concat(
-        F.lit("h"),
-        ((F.col("doc_id") * 7 + 1) % 64).cast("string"),
-        F.lit(".test"),
-    )
-    edges = (
-        docs.filter(F.col("doc_id") % 9 == 0)
-        .select(a.alias("a"), b.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    return hs.host_clusters(edges)
-
-
-SQL_HOST_CLUSTERS = r"""
-    WITH RECURSIVE e0 AS (
-      SELECT 'h' || CAST(doc_id % 64 AS VARCHAR) || '.test' AS a,
-             'h' || CAST((doc_id * 7 + 1) % 64 AS VARCHAR) || '.test'
-                 AS b
-      FROM documents WHERE doc_id < 300 AND doc_id % 9 = 0
-    ),
-    pairs AS (SELECT DISTINCT a, b FROM e0 WHERE a <> b),
-    edges AS (
-      SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach(src, node) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-    )
-    SELECT src AS host,
-           min(node) AS cluster,
-           min(node) = src AS is_canonical
-    FROM reach GROUP BY src
 """
 
 
@@ -5222,9 +4398,7 @@ _QUERIES_BY_FAMILY = {
     "entry_lookup": (q_entry_lookup, SQL_ENTRY_LOOKUP),
     "comments_sort": (q_comments_sort, SQL_COMMENTS_SORT),
     "group_by_day": (q_group_by_day, SQL_GROUP_BY_DAY),
-    # text analysis
-    "lang_id": (q_lang_id, SQL_LANG_ID),
-    "quality_score": (q_quality_score, SQL_QUALITY_SCORE),
+    # text
     "token_count": (q_token_count, SQL_TOKEN_COUNT),
     "fingerprint": (q_fingerprint, SQL_FINGERPRINT),
     "dedup_stats": (q_dedup_stats, SQL_DEDUP_STATS),
@@ -5233,13 +4407,9 @@ _QUERIES_BY_FAMILY = {
     "summarize": (q_summarize, SQL_SUMMARIZE),
     "merge_upsert": (q_merge_upsert, SQL_MERGE_UPSERT),
     "pos_tags": (q_pos_tags, SQL_POS_TAGS),
-    "repetition_score": (q_repetition_score, SQL_REPETITION_SCORE),
-    "sentence_dedup": (q_sentence_dedup, SQL_SENTENCE_DEDUP),
     # "pii_scrub" is registered ONCE, in the round-3 additions below
     # (the duplicate key that used to sit here silently shadowed it).
     "robots_wildcards": (q_robots_wildcards, SQL_ROBOTS_WILDCARDS),
-    "corpus_stats": (q_corpus_stats, SQL_CORPUS_STATS),
-    "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
     # sequential-consume clusterings — recursive-CTE oracles since r4
     "news_clusters_lsh": (q_news_clusters_lsh, SQL_NEWS_CLUSTERS_LSH),
     "v1_cross_source_clusters": (
@@ -5296,20 +4466,14 @@ _QUERIES_BY_FAMILY = {
     # locally hash-gated by test_queries_vs_duckdb from day one)
     "delta_admit": (q_delta_admit, SQL_DELTA_ADMIT),
     "canonical_best": (q_canonical_best, SQL_CANONICAL_BEST),
-    "trap_hosts": (q_trap_hosts, SQL_TRAP_HOSTS),
-    "host_reputation": (q_host_reputation, SQL_HOST_REPUTATION),
     "ngram_counts": (q_ngram_counts, SQL_NGRAM_COUNTS),
     "wat_export": (q_wat_export, SQL_WAT_EXPORT),
     "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
     "freshness_revisit": (q_freshness_revisit, SQL_FRESHNESS_REVISIT),
     "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
-    "discovery_yield": (q_discovery_yield, SQL_DISCOVERY_YIELD),
-    "param_significance": (q_param_significance, SQL_PARAM_SIGNIFICANCE),
-    "path_profile": (q_path_profile, SQL_PATH_PROFILE),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
     "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
-    "host_clusters": (q_host_clusters, SQL_HOST_CLUSTERS),
     "drain_forecast": (q_drain_forecast, SQL_DRAIN_FORECAST),
     "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
 }
@@ -5364,34 +4528,38 @@ _R5_ROTATION = [
     # robots_longest_match's Spark function is now
     # apply_robots_rfc9309; and delta_admit now bands through
     # candidate_pairs' signature-slice rows over one sketch pass per
-    # side (its Python band hashing is gone).
+    # side (its Python band hashing is gone). front_page_ranking,
+    # entry_lookup and comments_sort now run through
+    # operators/serving.py's rank_front_page, entry_lookup and
+    # paginate instead of inline copies of W4/J4/O3.
     "minhash_near_dups", "near_dup_groups", "canonical_best",
     "crawl_host_lineage", "robots_longest_match", "delta_admit",
+    "front_page_ranking", "entry_lookup", "comments_sort",
     #
-    # Oldest-first refill: the 21 entries still registered whose
+    # Oldest-first refill: the 12 entries still registered whose
     # latest green row was CORRECTNESS_r02.json when this window was
-    # first drawn (the registry diets deleted 15 of the original 36:
-    # the LM-training, embedding-ANN, warehouse and link-graph
-    # entries).
-    "index_daterange", "front_page_ranking", "entry_lookup",
-    "comments_sort", "group_by_day", "lang_id", "quality_score",
+    # first drawn and that did not change since (the registry diets
+    # deleted 21 of the original 36: the LM-training, embedding-ANN,
+    # warehouse, link-graph and training-data text-analysis entries).
+    "index_daterange", "group_by_day",
     "token_count", "fingerprint", "dedup_stats", "dedup_first",
-    "ngram_overlap", "merge_upsert", "pos_tags", "repetition_score",
-    "sentence_dedup", "corpus_stats", "filter_funnel",
+    "ngram_overlap", "merge_upsert", "pos_tags",
     "duplicated_spans", "dup_span_stats", "hot_hosts",
     #
-    # The 15 freed slots refill by the same rule. snapshot_asof goes
+    # The freed slots refill by the same rule. snapshot_asof goes
     # first: its latest green row is still CORRECTNESS_r02.json (it
     # yielded its r5 slot to the changed-implementation set above).
     # Then the oldest after it: every other remaining entry's latest
     # green row is r03 or newer, and the r03 ties are taken in
-    # _QUERIES_BY_FAMILY order. The next of these (priority_boosts)
-    # yielded its slot to delta_admit above.
+    # _QUERIES_BY_FAMILY order (robots_longest_match, one of them,
+    # already sits in the changed block above).
     "snapshot_asof", "domain_mix", "robots_rules", "crawl_diff",
     "crawl_delay_budgets", "host_quality_filter", "sitemap_urls",
     "fetch_retries", "redirect_resolution", "warc_records",
     "recrawl_priority", "robots_sitemaps", "conditional_fetch",
-    "boilerplate_removal",
+    "boilerplate_removal", "priority_boosts", "global_cap",
+    "url_templates", "soft404_filter", "mojibake_repair",
+    "adaptive_budgets",
 ]
 
 QUERIES = {

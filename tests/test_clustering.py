@@ -190,7 +190,7 @@ def test_cc_local_and_distributed_agree(spark):
     # both physical strategies (driver union-find vs hash-min +
     # pointer-jump propagation) must produce identical labels — on a
     # chain (worst case for propagation depth), a cycle, singleton
-    # pairs, and string keys (host_clusters' domain).
+    # pairs, and string keys (host names: the ids need not be numeric).
     import random
 
     rng = random.Random(7)

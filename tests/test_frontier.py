@@ -873,3 +873,29 @@ def test_crawl_fetches_null_priority_pages(spark):
     assert len(rows) == sum(m.scheduled for m in res.lineage) == 3
     assert sorted(r.fetch_order for r in rows) == [1, 2, 3]
     assert {r.url for r in rows} == {r.url for r in pages.collect()}
+
+
+def test_lineage_after_empty_final_round(spark):
+    """Two seed pages that link only to each other leave round 1 with
+    an empty frontier. Reading `fetched` first runs round 1's empty
+    plan, whose Observations complete with no metrics; `lineage` must
+    still read both rounds, the empty one as zeros."""
+    def html(links):
+        body = "".join(f'<a href="{u}">x</a>' for u in links)
+        return f"<html><body>{body}</body></html>".encode()
+
+    pages = spark.createDataFrame(
+        [("http://h0.test/a", "h0.test", 0, html(["http://h1.test/b"])),
+         ("http://h1.test/b", "h1.test", 0, html(["http://h0.test/a"]))],
+        "url string, host string, priority int, html binary",
+    )
+    seeds = pages.select("url", "host", "priority")
+    budgets = spark.createDataFrame(
+        [(f"h{i}.test", 5) for i in range(2)], "host string, budget int"
+    )
+    res = crawl(spark, pages, seeds, budgets, rounds=2)
+    n = res.fetched.count()
+    lineage = res.lineage
+    assert [m.round for m in lineage] == [0, 1]
+    assert lineage[1].frontier == lineage[1].scheduled == 0
+    assert n == sum(m.scheduled for m in lineage) == 2

@@ -35,7 +35,8 @@ def test_rank_front_page_ordering(spark):
     df = spark.createDataFrame(
         rows, "cluster_id long, day_time int, source_names string"
     )
-    out = [r["cluster_id"] for r in serving.rank_front_page(df).collect()]
+    ranked = serving.rank_front_page(df).collect()
+    out = [r["cluster_id"] for r in sorted(ranked, key=lambda r: r["rank"])]
     # newest day first; within a day: reetsee first, then diversity
     assert out == [4, 2, 1, 3]
 

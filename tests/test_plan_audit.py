@@ -147,9 +147,6 @@ def test_hot_queries_whole_stage_codegen(spark, qname):
 @pytest.mark.parametrize(
     "qname",
     [
-        "lang_id",
-        "quality_score",
-        "repetition_score",
         "dedup_first",
         "pii_scrub",
         "group_by_day",
@@ -214,12 +211,10 @@ def single_partition_violations(plan: str) -> list[str]:
 _LAZY_QUERIES = [
     "extract_text", "extract_links", "extract_markers", "url_parse",
     "index_daterange", "front_page_ranking", "entry_lookup",
-    "comments_sort", "group_by_day", "lang_id",
-    "quality_score", "token_count", "fingerprint", "dedup_stats",
-    "dedup_first", "ngram_overlap", "summarize", "merge_upsert",
-    "pos_tags", "repetition_score", "sentence_dedup",
-    "minhash_near_dups", "simhash_near_dups", "pii_scrub",
-    "corpus_stats", "filter_funnel", "v1_cross_source_clusters",
+    "comments_sort", "group_by_day", "token_count", "fingerprint",
+    "dedup_stats", "dedup_first", "ngram_overlap", "summarize",
+    "merge_upsert", "pos_tags", "minhash_near_dups",
+    "simhash_near_dups", "pii_scrub", "v1_cross_source_clusters",
     "duplicated_spans", "dup_span_stats",
     # round-2 additions
     "hot_hosts", "snapshot_asof", "domain_mix", "robots_rules",
@@ -236,12 +231,9 @@ _LAZY_QUERIES = [
     "meta_robots_gate", "hreflang_alternates", "sitemap_index",
     "etag_gate", "wet_export", "ip_politeness", "mirror_hosts",
     # round-3 additions
-    "delta_admit", "trap_hosts", "host_reputation",
-    "ngram_counts", "wat_export", "frontier_merge",
-    "shard_rendezvous",
-    "freshness_revisit", "cdx_export", "discovery_yield",
-    "param_significance", "path_profile", "stale_robots",
-    "containment_pairs", "host_clusters", "drain_forecast",
+    "delta_admit", "ngram_counts", "wat_export", "frontier_merge",
+    "shard_rendezvous", "freshness_revisit", "cdx_export",
+    "stale_robots", "containment_pairs", "drain_forecast",
     "robots_wildcards",
 ]
 

@@ -1,6 +1,6 @@
 """Semantics of the round-3 operators beyond the DuckDB hash gate:
-delta admission, quality-aware canonicals, host-behavior stats,
-n-gram inventory, WAT round-trip, frontier merge."""
+delta admission, quality-aware canonicals, n-gram inventory, WAT
+round-trip, frontier merge."""
 
 from collections import Counter
 
@@ -8,7 +8,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from news_combinator_spark.operators import dedup as dd
-from news_combinator_spark.operators import hoststats as hs
 from news_combinator_spark.operators.frontier import merge_frontiers
 from news_combinator_spark.functions import warc as wc
 
@@ -99,45 +98,6 @@ def test_keep_best_in_groups_same_partition_as_min_id(spark, docs500):
             members, key=lambda d: (-ntok[d], d)
         )
         assert winner == expected
-
-
-# ------------------------------------------------------------ hoststats
-
-
-def test_trap_hosts_flags_aliased_host(spark):
-    rows = [
-        # h-trap: 3 urls per content body
-        ("h-trap", "http://h-trap/x;s=1", "same body one"),
-        ("h-trap", "http://h-trap/x;s=2", "same body one"),
-        ("h-trap", "http://h-trap/x;s=3", "same body one"),
-        ("h-trap", "http://h-trap/y;s=1", "same body two"),
-        ("h-trap", "http://h-trap/y;s=2", "same body two"),
-        ("h-trap", "http://h-trap/y;s=3", "same body two"),
-        # h-ok: one url per body
-        ("h-ok", "http://h-ok/a", "body a"),
-        ("h-ok", "http://h-ok/b", "body b"),
-    ]
-    df = spark.createDataFrame(rows, "host string, url string, text string")
-    out = {r.host: r for r in hs.trap_hosts(df).collect()}
-    assert out["h-trap"].is_trap and out["h-trap"].url_content_ratio == 3.0
-    assert not out["h-ok"].is_trap and out["h-ok"].url_content_ratio == 1.0
-
-
-def test_host_reputation_multiplier_composition(spark):
-    rows = (
-        # trap host (ratio 3 > 2) with long docs -> 0.25
-        [("h-trap", f"http://h-trap/x;s={i}", "w " * 200) for i in range(3)]
-        # stub host: all docs < 64 chars -> 0.5
-        + [("h-stub", f"http://h-stub/{i}", f"tiny{i}") for i in range(3)]
-        # healthy host, long docs -> 1.0
-        + [("h-good", f"http://h-good/{i}", "w " * 200 + str(i)) for i in range(3)]
-    )
-    df = spark.createDataFrame(rows, "host string, url string, text string")
-    out = {r.host: r for r in hs.host_reputation(df).collect()}
-    assert out["h-trap"].budget_multiplier == 0.25
-    # stub host also trips low-quality (1 token vs corpus mean ~134)
-    assert out["h-stub"].budget_multiplier == 0.25
-    assert out["h-good"].budget_multiplier == 1.0
 
 
 # -------------------------------------------------------------- ngrams

@@ -204,39 +204,6 @@ def test_surt_orders_host_subtree_contiguously(spark):
     assert len(com_example) == 3  # aexample.com is NOT in the range
 
 
-# ------------------------------------------------------- discovery yield
-
-
-def test_discovery_yield_counts_only_unfetched(spark):
-    from news_combinator_spark.operators.hoststats import discovery_yield
-
-    pages = spark.createDataFrame(
-        [
-            ("http://a.test/1", "a.test"),
-            ("http://a.test/2", "a.test"),
-            ("http://b.test/1", "b.test"),
-        ],
-        "url string, host string",
-    )
-    links = spark.createDataFrame(
-        [
-            ("a.test", "http://a.test/2"),      # fetched -> not new
-            ("a.test", "http://a.test/new"),    # new, onsite
-            ("a.test", "http://c.test/x"),      # new, offsite
-            ("a.test", "http://c.test/x"),      # duplicate proposal
-            ("b.test", "http://b.test/1"),      # fetched -> not new
-        ],
-        "host string, link string",
-    )
-    rows = {r.host: r for r in discovery_yield(pages, links).collect()}
-    a = rows["a.test"]
-    assert a.n_pages == 2 and a.n_new_links == 2
-    assert a.offsite_frac == 0.5
-    assert a.discovery_yield == 1.0
-    b = rows["b.test"]
-    assert b.n_new_links == 0 and b.discovery_yield == 0.0
-
-
 def test_cdx_and_wat_json_escape(spark):
     # ADVICE r3: a url containing '"' or '\' must still yield a valid
     # JSON payload in the CDXJ line and the WAT record.

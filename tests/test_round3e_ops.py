@@ -1,51 +1,9 @@
 """Semantics of the round-3 fourth-batch operators beyond the DuckDB
-hash gate: path-prefix site profiling, robots TTL refresh gate, RFC
-9309 wildcard rules."""
+hash gate: robots TTL refresh gate, RFC 9309 wildcard rules."""
 
 import datetime as dt
 
 from news_combinator_spark.operators.frontier import stale_robots
-from news_combinator_spark.operators.hoststats import path_profile
-
-
-# ----------------------------------------------------------- path profile
-
-
-def _pages(spark, rows):
-    return spark.createDataFrame(rows, "url string, text string")
-
-
-def test_path_profile_prefix_rollup(spark):
-    pages = _pages(spark, [
-        ("http://h.test/a/x/1.htm", "t1"),
-        ("http://h.test/a/x/2.htm", "t2"),
-        ("http://h.test/a/y/3.htm", "t1"),
-        ("http://h.test/b/4.htm", "t3"),
-    ])
-    out = {(r.prefix, r.depth): r for r in path_profile(pages).collect()}
-    a = out[("/a/", 1)]
-    assert a.n_pages == 3 and a.n_distinct_fp == 2
-    assert out[("/a/x/", 2)].n_pages == 2
-    assert out[("/a/y/", 2)].n_pages == 1
-    assert out[("/b/", 1)].n_pages == 1
-    assert a.total_bytes == 6  # 't1'+'t2'+'t1'
-
-
-def test_path_profile_root_and_query_urls(spark):
-    # root path contributes no prefixes; query strings are cut before
-    # segmentation
-    pages = _pages(spark, [
-        ("http://h.test/", "root"),
-        ("http://h.test/a/1.htm?page=2", "q"),
-    ])
-    out = {(r.prefix, r.depth) for r in path_profile(pages).collect()}
-    assert out == {("/a/", 1)}
-
-
-def test_path_profile_depth_cap(spark):
-    pages = _pages(spark, [("http://h.test/a/b/c/d/e/f.htm", "x")])
-    got = sorted(r.prefix for r in path_profile(pages, max_depth=3).collect())
-    assert got == ["/a/", "/a/b/", "/a/b/c/"]
 
 
 # ----------------------------------------------------------- stale robots

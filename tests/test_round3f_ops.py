@@ -1,13 +1,11 @@
 """Semantics of the round-3 fifth-batch operators beyond the DuckDB
-hash gate: containment dedup, host cluster resolution, frontier drain
-forecasting."""
+hash gate: containment dedup, frontier drain forecasting."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from news_combinator_spark.operators.dedup import containment_pairs
 from news_combinator_spark.operators.frontier import drain_forecast
-from news_combinator_spark.operators.hoststats import host_clusters
 
 
 def _docs(spark, rows):
@@ -57,24 +55,6 @@ def test_containment_max_df_guard_drops_saturated_shingles(spark):
     )
     assert unguarded.count() > 0
     assert guarded.count() == 0
-
-
-# ----------------------------------------------------------- host clusters
-
-
-def test_host_clusters_components_and_canonicals(spark):
-    edges = spark.createDataFrame(
-        [("b.test", "a.test"), ("b.test", "c.test"), ("x.test", "y.test")],
-        "a string, b string",
-    )
-    out = {r.host: r for r in host_clusters(edges).collect()}
-    assert out["a.test"].cluster == "a.test"
-    assert out["b.test"].cluster == "a.test"
-    assert out["c.test"].cluster == "a.test"
-    assert out["x.test"].cluster == "x.test"
-    assert out["y.test"].cluster == "x.test"
-    canon = [h for h, r in out.items() if r.is_canonical]
-    assert sorted(canon) == ["a.test", "x.test"]
 
 
 # ---------------------------------------------------------- drain forecast
