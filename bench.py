@@ -75,19 +75,12 @@ SQL_BENCH_QUERIES = [
     "v1_cross_source_clusters",
     "dup_span_stats",
     "hot_hosts",
-    "snapshot_asof",
-    "domain_mix",
     "robots_rules",
-    "crawl_diff",
     "crawl_delay_budgets",
     "host_quality_filter",
-    "sitemap_urls",
     "fetch_retries",
     "redirect_resolution",
     "warc_records",
-    "recrawl_priority",
-    "robots_sitemaps",
-    "conditional_fetch",
     "boilerplate_removal",
     "priority_boosts",
     "global_cap",
@@ -105,8 +98,6 @@ SQL_BENCH_QUERIES = [
     "request_rate_budgets",
     "meta_robots_gate",
     "hreflang_alternates",
-    "sitemap_index",
-    "etag_gate",
     "wet_export",
     "ip_politeness",
     "mirror_hosts",
@@ -117,7 +108,6 @@ SQL_BENCH_QUERIES = [
     "wat_export",
     "frontier_merge",
     "shard_rendezvous",
-    "freshness_revisit",
     "cdx_export",
     "stale_robots",
     "containment_pairs",

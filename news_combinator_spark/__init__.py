@@ -12,8 +12,7 @@ Apache Spark DataFrame engine:
   (reproduces reference cluster assignment, categorize.cpp:94-158).
 - Serving-layer queries (date-range index, FK entry lookup, comment
   ranking, extractive summarization).
-- Dedup (exact/MinHash/SimHash/Jaccard), text quality /
-  language-id / fingerprint operators.
+- Dedup (exact/MinHash/SimHash/Jaccard) and fingerprint operators.
 
 Everything is DataFrame-first; Python appears only inside Arrow-batched
 pandas UDFs. No RDD API in the hot path.

@@ -39,7 +39,6 @@ __all__ = [
     "request_rates_from_robots_txt",
     "effective_delays",
     "budgets_from_delays",
-    "sitemaps_from_robots_txt",
 ]
 
 
@@ -266,29 +265,4 @@ def budgets_from_delays(
             "host",
             F.coalesce("budget", F.lit(default_budget)).alias("budget"),
         )
-    )
-
-
-def sitemaps_from_robots_txt(
-    robots: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, robots_txt) -> distinct (host, sitemap_url) from
-    ``Sitemap:`` directives.
-
-    Per the protocol, Sitemap is NOT group-scoped — it applies
-    regardless of which User-agent group it appears inside — so this
-    reads ALL typed lines, not an agent's groups. The output feeds
-    `functions/sitemap.urls_from_sitemap`, chaining the two discovery
-    channels: robots.txt names the sitemaps, the sitemaps name the
-    URLs. Empty values are dropped; the URL value keeps its own
-    colons (absolute URLs are the common form)."""
-    typed = _typed_lines(robots, host_col, txt_col)
-    return (
-        typed.filter(
-            (F.col("directive") == "sitemap") & (F.length("value") > 0)
-        )
-        .select("host", F.col("value").alias("sitemap_url"))
-        .distinct()
     )

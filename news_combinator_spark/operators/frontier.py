@@ -752,8 +752,8 @@ def apply_priority_boosts(
 
     The frontier orders fetches by (priority, url) within a host
     (lower = sooner); this is where the engine's derived signals —
-    change frequency (`snapshots.recrawl_priority`), per-host tiers —
-    actually reach the schedule: effective = clamp(priority -
+    per-url change frequency, per-host tiers — actually reach the
+    schedule: effective = clamp(priority -
     host_boost - url_boost, lo, hi). host_boosts is (host, boost int) and broadcasts (host
     cardinality is partition-sized); url_boosts is (url, boost int)
     and joins as an ordinary AQE-planned equi-join. Missing keys
@@ -785,8 +785,10 @@ def apply_priority_boosts(
 
 
 def _fail_threshold_hex(fail_frac: float) -> str:
-    """fail_frac in [0,1] -> 13-hex-digit lowercase threshold (the
-    sampling.keep_hash convention: 52 bits, exact in a double)."""
+    """fail_frac in [0,1] -> 13-hex-digit lowercase threshold: the
+    first 13 hex digits of an md5 are a uniform 52-bit integer, exact
+    in a double, so md5 prefix < threshold holds with probability
+    fail_frac and compares as a string in any engine."""
     return format(int(fail_frac * (1 << 52)), "013x")
 
 
@@ -804,9 +806,9 @@ def fetch_with_retry(
     crawler.php:420-444 — retry scheduling is what that becomes when
     fetches are batched). The sandbox stand-in for "attempt k on url
     failed transiently" is deterministic: md5(url:seed:k) below the
-    fail_frac threshold (the same 13-hex-digit uniform-hash convention
-    as operators/sampling.keep_hash, so the oracle can recompute the
-    exact outcome per URL).
+    fail_frac threshold (its first 13 hex digits read as a uniform
+    52-bit integer, see `_fail_threshold_hex`, so the oracle can
+    recompute the exact outcome per URL).
 
     Input: (url, host, priority) scheduled rows. Output one row per
     input: (url, host, priority, n_attempts, fetched, backoff_rounds)

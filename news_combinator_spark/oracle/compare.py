@@ -6,8 +6,8 @@ Stringify EVERY column, not just object ones: the driver's gate
 hashes stringified values, so "-0.0" != "0.0" and "472" != "472.0"
 are real failures there — a numeric atol compare here would mask
 exactly the environment-sensitive mismatches that made
-admission_funnel / shard_manifest / freshness_revisit driver-red
-while a numeric local gate stayed green (rounds 3-4).
+admission_funnel and two entries since deleted driver-red while a
+numeric local gate stayed green (rounds 3-4).
 """
 
 from __future__ import annotations

@@ -33,11 +33,8 @@ from ..datagen import (
 from ..functions.extract import links_udf, markers_udf, passage_udf, title_udf
 from ..operators import dedup as dd
 from ..functions.posfilter import _FUNCTION_WORDS, _PRONOUNS, doc_pos_tags
-from ..operators import sampling
 from ..operators import serving
-from ..operators import snapshots as snap_ops
 from ..functions import robots as rb
-from ..functions import sitemap as sm
 from ..functions import warc as wc
 from ..functions.robots import rules_from_robots_txt
 from ..operators import frontier as fr
@@ -1192,89 +1189,8 @@ SQL_HOT_HOSTS = (
 
 
 # ===========================================================================
-# Multi-version store reads + deterministic sampling
+# Crawl policy, fetch and archive operators
 # ===========================================================================
-
-def q_snapshot_asof(spark, sf_dir):
-    """As-of read over a multi-version page store: each url carries
-    1 + doc_id%3 snapshots (version v re-crawled at warc_ts + 90min*v);
-    select each url's latest snapshot as of 2024-01-01 06:00. Both
-    branches are exercised at sf0.01: urls first crawled after the
-    cutoff are absent, and urls with several eligible versions pick
-    the latest. One map-side-combined max_by shuffle — no per-url
-    window over an unpartitioned frame
-    (operators/snapshots.latest_asof)."""
-    snaps = _snaps_df(spark, sf_dir)
-    picked = snap_ops.latest_asof(
-        snaps,
-        F.lit("2024-01-01 06:00:00").cast("timestamp"),
-        key="url",
-        ts_col="snap_ts",
-    )
-    return picked.select(
-        "url", "v", F.col("snap_ts").cast("long").alias("snap_epoch")
-    )
-
-
-SQL_SNAPSHOT_ASOF = (
-    _pages_cte()
-    + """
-    , snaps AS (
-        SELECT url, CAST(g.v AS INTEGER) AS v,
-               warc_ts + g.v * INTERVAL 90 MINUTE AS snap_ts
-        FROM pages, (SELECT unnest(range(0, 3)) AS v) g
-        WHERE g.v <= doc_id % 3
-    )
-    , eligible AS (
-        SELECT * FROM snaps
-        WHERE snap_ts <= TIMESTAMP '2024-01-01 06:00:00'
-    )
-    , ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY url ORDER BY snap_ts DESC
-        ) AS rn
-        FROM eligible
-    )
-    SELECT url, v, CAST(epoch(snap_ts) AS BIGINT) AS snap_epoch
-    FROM ranked WHERE rn = 1
-"""
-)
-
-
-def q_domain_mix(spark, sf_dir):
-    """Deterministic quota-balanced domain sampling: keep ~40% of the
-    corpus with every host given an equal share of the budget, capped
-    at its size. Membership is a pure function of md5(url)
-    (operators/sampling.stratified_sample), so the exact kept set is
-    reproducible across engines — the oracle recomputes it row for
-    row."""
-    pages = pages_from_documents(spark, sf_dir).select("url", "host")
-    kept = sampling.stratified_sample(
-        pages, group_col="host", id_col="url", target_frac=0.4
-    )
-    return kept.select("url", "host", F.round("rate", 6).alias("rate"))
-
-
-SQL_DOMAIN_MIX = (
-    _pages_cte()
-    + """
-    , counts AS (SELECT host, count(*) AS n_g FROM pages GROUP BY host)
-    , totals AS (
-        SELECT sum(n_g) AS total, count(*) AS n_groups FROM counts
-    )
-    , rates AS (
-        SELECT host,
-               least(1.0, 0.4 * total / (n_groups * n_g)) AS rate
-        FROM counts CROSS JOIN totals
-    )
-    SELECT url, p.host, round(rate, 6) AS rate
-    FROM pages p JOIN rates r ON p.host = r.host
-    WHERE rate >= 1.0
-       OR substr(md5(url), 1, 13) <
-          lpad(lower(to_hex(CAST(floor(rate * 4503599627370496.0) AS BIGINT))), 13, '0')
-"""
-)
-
 
 def q_robots_rules(spark, sf_dir):
     """Parse RAW robots.txt bodies into the frontier's gate rules
@@ -1370,78 +1286,6 @@ SQL_ROBOTS_RULES = (
     FROM grouped g
     JOIN star s ON g.host = s.host AND g.group_id = s.group_id
     WHERE g.is_dis AND length(g.value) > 0
-"""
-)
-
-
-def _snaps_df(spark, sf_dir):
-    """Shared multi-version store fixture (see q_snapshot_asof)."""
-    pages = pages_from_documents(spark, sf_dir)
-    return pages.select(
-        "url",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
-        ).alias("v"),
-        "warc_ts",
-    ).select(
-        "url",
-        F.col("v").cast("int").alias("v"),
-        F.timestamp_add("MINUTE", F.col("v") * 90, F.col("warc_ts")).alias(
-            "snap_ts"
-        ),
-    )
-
-
-def q_crawl_diff(spark, sf_dir):
-    """Re-crawl change detection: diff the store's state between two
-    as-of reads (03:00 vs 06:00). 'new' urls entered the store in the
-    window, 'changed' urls picked a later version, 'unchanged' kept
-    the same one ('gone' cannot occur in an append-only store; the
-    operator handles it — pytest covers that branch). One full-outer
-    hash join over the two max_by reads
-    (operators/snapshots.snapshot_diff)."""
-    snaps = _snaps_df(spark, sf_dir)
-    s1 = snap_ops.latest_asof(
-        snaps, F.lit("2024-01-01 03:00:00").cast("timestamp"),
-        key="url", ts_col="snap_ts",
-    ).select("url", "v")
-    s2 = snap_ops.latest_asof(
-        snaps, F.lit("2024-01-01 06:00:00").cast("timestamp"),
-        key="url", ts_col="snap_ts",
-    ).select("url", "v")
-    return snap_ops.snapshot_diff(s1, s2, key="url", cmp_cols=("v",))
-
-
-SQL_CRAWL_DIFF = (
-    _pages_cte()
-    + """
-    , snaps AS (
-        SELECT url, CAST(g.v AS INTEGER) AS v,
-               warc_ts + g.v * INTERVAL 90 MINUTE AS snap_ts
-        FROM pages, (SELECT unnest(range(0, 3)) AS v) g
-        WHERE g.v <= doc_id % 3
-    )
-    , s1 AS (
-        SELECT url, v FROM (
-            SELECT url, v, row_number() OVER (
-                PARTITION BY url ORDER BY snap_ts DESC) AS rn
-            FROM snaps WHERE snap_ts <= TIMESTAMP '2024-01-01 03:00:00'
-        ) WHERE rn = 1
-    )
-    , s2 AS (
-        SELECT url, v FROM (
-            SELECT url, v, row_number() OVER (
-                PARTITION BY url ORDER BY snap_ts DESC) AS rn
-            FROM snaps WHERE snap_ts <= TIMESTAMP '2024-01-01 06:00:00'
-        ) WHERE rn = 1
-    )
-    SELECT coalesce(s1.url, s2.url) AS url,
-           CASE WHEN s1.url IS NULL THEN 'new'
-                WHEN s2.url IS NULL THEN 'gone'
-                WHEN s1.v IS DISTINCT FROM s2.v THEN 'changed'
-                ELSE 'unchanged' END AS status,
-           s1.v AS old_v, s2.v AS new_v
-    FROM s1 FULL OUTER JOIN s2 ON s1.url = s2.url
 """
 )
 
@@ -1543,78 +1387,6 @@ SQL_HOST_QUALITY_FILTER = (
     )
     SELECT url, t.host, n_tok
     FROM toks t JOIN passing p ON t.host = p.host
-"""
-)
-
-
-def q_sitemap_urls(spark, sf_dir):
-    """Sitemap discovery channel: synthesize one sitemap.xml per host
-    from its pages (ordered aggregation — the A4 machinery), then
-    parse it back with functions/sitemap.urls_from_sitemap. Per host
-    the body also carries one malformed-lastmod entry class (epoch
-    null) and one loc-less entry (dropped), so both error paths are
-    under the hash gate. Entries are pretty-printed — each child tag
-    on its own indented line, the real-world sitemap shape — so the
-    parser's DOTALL block matching is itself under the hash gate.
-    All generation and parsing is JVM regexp/agg; the oracle
-    round-trips the same XML in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    entry = F.concat(
-        F.lit("<url>\n  <loc>"), F.col("url"),
-        F.lit("</loc>\n  <lastmod>"),
-        F.when(F.col("doc_id") % 10 == 0, F.lit("soon")).otherwise(
-            F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss")
-        ),
-        F.lit("</lastmod>\n</url>"),
-    )
-    sitemaps = (
-        pages.select("host", entry.alias("entry"))
-        .groupBy("host")
-        .agg(
-            F.concat(
-                F.lit("<urlset>"),
-                F.concat_ws("", F.array_sort(F.collect_list("entry"))),
-                F.lit("<url><lastmod>2024-01-01</lastmod></url></urlset>"),
-            ).alias("sitemap_xml")
-        )
-    )
-    parsed = sm.urls_from_sitemap(sitemaps)
-    return parsed.select(
-        "host", "loc", F.col("lastmod").cast("long").alias("lastmod_epoch")
-    )
-
-
-SQL_SITEMAP_URLS = (
-    _pages_cte()
-    + """
-    , entries AS (
-        SELECT host,
-               '<url>' || chr(10) || '  <loc>' || url || '</loc>'
-               || chr(10) || '  <lastmod>' ||
-               CASE WHEN doc_id % 10 = 0 THEN 'soon'
-                    ELSE strftime(warc_ts, '%Y-%m-%dT%H:%M:%S') END ||
-               '</lastmod>' || chr(10) || '</url>' AS entry
-        FROM pages
-    )
-    , sm AS (
-        SELECT host,
-               '<urlset>' || string_agg(entry, '' ORDER BY entry) ||
-               '<url><lastmod>2024-01-01</lastmod></url></urlset>' AS xml
-        FROM entries GROUP BY host
-    )
-    , blocks AS (
-        SELECT host,
-               unnest(regexp_extract_all(xml, '(?s)<url>(.*?)</url>', 1))
-                   AS entry
-        FROM sm
-    )
-    SELECT host,
-           trim(regexp_extract(entry, '<loc>(.*?)</loc>', 1)) AS loc,
-           CAST(epoch(try_cast(trim(
-               regexp_extract(entry, '<lastmod>(.*?)</lastmod>', 1))
-               AS TIMESTAMP)) AS BIGINT) AS lastmod_epoch
-    FROM blocks
-    WHERE length(trim(regexp_extract(entry, '<loc>(.*?)</loc>', 1))) > 0
 """
 )
 
@@ -1857,204 +1629,6 @@ SQL_WARC_RECORDS = (
 )
 
 
-def q_recrawl_priority(spark, sf_dir):
-    """Adaptive re-crawl scheduling (snapshots.recrawl_priority):
-    per-url change rate from consecutive fingerprint transitions over
-    the multi-version store, mapped to the frontier's 0/1/2 priority
-    domain. The fixture yields all classes — single-observation urls
-    (rate 0 -> priority 2), always-changing (rate 1 -> 0), and
-    half-changing (0.5 -> 1). The oracle replays the same lag window
-    + thresholds."""
-    pages = pages_from_documents(spark, sf_dir)
-    obs = pages.select(
-        "url", "doc_id", "warc_ts",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
-        ).alias("v"),
-    ).select(
-        "url",
-        F.timestamp_add("MINUTE", F.col("v") * 90, F.col("warc_ts")).alias(
-            "snap_ts"
-        ),
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.col("url"),
-                F.when(F.col("doc_id") % 2 == 0, F.col("v"))
-                .otherwise(F.floor(F.col("v") / 2))
-                .cast("long")
-                .cast("string"),
-            )
-        ).alias("fingerprint"),
-    )
-    return snap_ops.recrawl_priority(obs, high=0.75, low=0.25)
-
-
-SQL_RECRAWL_PRIORITY = (
-    _pages_cte()
-    + """
-    , obs AS (
-        SELECT url,
-               warc_ts + g.v * INTERVAL 90 MINUTE AS snap_ts,
-               md5(url || ':' || CAST(CAST(
-                   CASE WHEN doc_id % 2 = 0 THEN g.v
-                        ELSE g.v // 2 END AS BIGINT) AS VARCHAR))
-                   AS fp
-        FROM pages, (SELECT unnest(range(0, 3)) AS v) g
-        WHERE g.v <= doc_id % 3
-    )
-    , trans AS (
-        SELECT url, fp,
-               lag(fp) OVER (PARTITION BY url ORDER BY snap_ts) AS prev
-        FROM obs
-    )
-    , per AS (
-        SELECT url, count(*) AS n_obs,
-               count(CASE WHEN prev IS NOT NULL AND prev <> fp
-                          THEN 1 END) AS n_changes
-        FROM trans GROUP BY url
-    )
-    SELECT url, n_obs, n_changes,
-           round(n_changes / CAST(greatest(n_obs - 1, 1) AS DOUBLE), 6)
-               AS change_rate,
-           CASE WHEN n_changes / CAST(greatest(n_obs - 1, 1) AS DOUBLE)
-                     > 0.75 THEN 0
-                WHEN n_changes / CAST(greatest(n_obs - 1, 1) AS DOUBLE)
-                     > 0.25 THEN 1
-                ELSE 2 END AS priority
-    FROM per
-"""
-)
-
-
-def q_robots_sitemaps(spark, sf_dir):
-    """Sitemap directive discovery (robots.sitemaps_from_robots_txt):
-    `Sitemap:` lines are group-INDEPENDENT per protocol, so one inside
-    a bot-specific group must still surface; duplicates dedupe; the
-    URL value's own colons survive the directive split. Even-numbered
-    hosts advertise a second, shared-CDN sitemap."""
-    pages = pages_from_documents(spark, sf_dir)
-    hn = F.regexp_extract("host", r"h(\d+)", 1).cast("int")
-    robots = pages.select("host").distinct().select(
-        "host",
-        F.concat(
-            F.lit("User-agent: fetchbot\nDisallow: /x\nSitemap: http://"),
-            F.col("host"),
-            F.lit("/sitemap-main.xml\n\nUser-agent: *\nDisallow: /y\n"),
-            F.when(
-                hn % 2 == 0,
-                F.concat(
-                    F.lit("Sitemap: http://cdn.example/shared/"),
-                    F.col("host"),
-                    F.lit(".xml\n"),
-                ),
-            ).otherwise(F.lit("# no shared map\n")),
-            F.lit("Sitemap: http://"),
-            F.col("host"),
-            F.lit("/sitemap-main.xml\n"),
-        ).alias("robots_txt"),
-    )
-    return rb.sitemaps_from_robots_txt(robots)
-
-
-SQL_ROBOTS_SITEMAPS = (
-    _pages_cte()
-    + r"""
-    , hosts AS (
-        SELECT DISTINCT host,
-               CAST(regexp_extract(host, 'h(\d+)', 1) AS INT) AS hn
-        FROM pages
-    )
-    , robots AS (
-        SELECT host,
-          'User-agent: fetchbot' || chr(10) || 'Disallow: /x' || chr(10)
-          || 'Sitemap: http://' || host || '/sitemap-main.xml'
-          || chr(10) || chr(10) || 'User-agent: *' || chr(10)
-          || 'Disallow: /y' || chr(10)
-          || CASE WHEN hn % 2 = 0
-                  THEN 'Sitemap: http://cdn.example/shared/' || host
-                       || '.xml' || chr(10)
-                  ELSE '# no shared map' || chr(10) END
-          || 'Sitemap: http://' || host || '/sitemap-main.xml' || chr(10)
-              AS txt
-        FROM hosts
-    )
-    , lines AS (
-        SELECT host,
-               trim(regexp_replace(u.raw, '#.*', '')) AS line
-        FROM robots, LATERAL (
-            SELECT unnest(regexp_split_to_array(txt, chr(10))) AS raw
-        ) u
-    )
-    SELECT DISTINCT host,
-           trim(substr(line, strpos(line, ':') + 1)) AS sitemap_url
-    FROM lines
-    WHERE length(line) > 0 AND strpos(line, ':') > 0
-      AND lower(trim(substr(line, 1, strpos(line, ':') - 1))) = 'sitemap'
-      AND length(trim(substr(line, strpos(line, ':') + 1))) > 0
-"""
-)
-
-
-def q_conditional_fetch(spark, sf_dir):
-    """If-Modified-Since gating (snapshots.modified_candidates): drop
-    re-crawl candidates whose advertised lastmod is no newer than the
-    store's latest snapshot. The fixture exercises every keep/drop
-    class — never-stored urls (doc_id%4==0), null lastmod
-    (doc_id%10==0), stamps straddling the stored snapshot ts both
-    ways. The oracle replays the max-reduce + gate in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    store = pages.filter(F.col("doc_id") % 4 != 0).select(
-        "url", "doc_id", "warc_ts",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
-        ).alias("v"),
-    ).select(
-        "url",
-        F.timestamp_add("MINUTE", F.col("v") * 90, F.col("warc_ts")).alias(
-            "snap_ts"
-        ),
-    )
-    cand = pages.select(
-        "url",
-        F.when(
-            F.col("doc_id") % 10 != 0,
-            F.timestamp_add(
-                "MINUTE",
-                ((F.col("doc_id") % 5) - 2).cast("int") * 120,
-                F.col("warc_ts"),
-            ),
-        ).alias("lastmod"),
-    )
-    kept = snap_ops.modified_candidates(cand, store)
-    return kept.select(
-        "url", F.col("lastmod").cast("long").alias("lastmod_epoch")
-    )
-
-
-SQL_CONDITIONAL_FETCH = (
-    _pages_cte()
-    + """
-    , store AS (
-        SELECT url, warc_ts + g.v * INTERVAL 90 MINUTE AS snap_ts
-        FROM pages, (SELECT unnest(range(0, 3)) AS v) g
-        WHERE g.v <= doc_id % 3 AND doc_id % 4 <> 0
-    )
-    , latest AS (SELECT url, max(snap_ts) AS st FROM store GROUP BY url)
-    , cand AS (
-        SELECT url,
-               CASE WHEN doc_id % 10 <> 0
-                    THEN warc_ts + (doc_id % 5 - 2) * INTERVAL 120 MINUTE
-               END AS lastmod
-        FROM pages
-    )
-    SELECT c.url, CAST(epoch(c.lastmod) AS BIGINT) AS lastmod_epoch
-    FROM cand c LEFT JOIN latest l ON c.url = l.url
-    WHERE l.st IS NULL OR c.lastmod IS NULL OR c.lastmod > l.st
-"""
-)
-
-
 def q_boilerplate_removal(spark, sf_dir):
     """Host-scoped boilerplate stripping (dedup.remove_boilerplate):
     pipe-delimited page lines where nav header and footer appear in
@@ -2133,7 +1707,7 @@ def q_priority_boosts(spark, sf_dir):
     """Signal-to-scheduler glue (frontier.apply_priority_boosts):
     fold a host-level boost (every 4th host — the per-host tier
     shape) and a url-level boost (every 6th doc — the
-    recrawl change-rate shape) into the frontier's priority key with
+    per-url change-rate shape) into the frontier's priority key with
     clamping at both ends. The oracle replays the joins and the
     clamp arithmetic."""
     pages = pages_from_documents(spark, sf_dir)
@@ -3280,188 +2854,6 @@ SQL_HREFLANG_ALTERNATES = (
 )
 
 
-def q_sitemap_index(spark, sf_dir):
-    """Nested sitemap-index resolution (sitemap.sitemap_index_entries
-    + resolve_sitemap_index): each host's index lists three fetched
-    child sitemaps (day_time%3 shards whose urlset bodies are built
-    from the pages themselves) plus one never-fetched child (drops at
-    the join); the walk yields every page URL with its lastmod and
-    owning shard. Big sites MUST shard sitemaps behind an index
-    (50k-URL protocol cap), so this is the discovery path that
-    actually matters at web scale. The oracle rebuilds the same XML
-    with string_agg and replays both parse levels in SQL."""
-    from ..functions.sitemap import resolve_sitemap_index
-
-    pages = pages_from_documents(spark, sf_dir)
-    d = (F.col("day_time") % 3).cast("string")
-    sm_loc = F.concat(F.lit("http://"), F.col("host"), F.lit("/sm/"),
-                      d, F.lit(".xml"))
-    entry = F.concat(
-        F.lit("<url><loc>"), F.col("url"), F.lit("</loc><lastmod>"),
-        F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss"),
-        F.lit("</lastmod></url>"),
-    )
-    bodies = (
-        pages.select("host", sm_loc.alias("sitemap_loc"),
-                     entry.alias("e"))
-        .groupBy("host", "sitemap_loc")
-        .agg(
-            F.concat(
-                F.lit("<urlset>"),
-                F.concat_ws("", F.sort_array(F.collect_list("e"))),
-                F.lit("</urlset>"),
-            ).alias("sitemap_xml")
-        )
-    )
-    child = lambda k: F.concat(
-        F.lit("<sitemap><loc>http://"), F.col("host"),
-        F.lit(f"/sm/{k}.xml</loc><lastmod>2024-02-0"),
-        F.lit(str(k + 1)), F.lit("</lastmod></sitemap>"),
-    )
-    indexes = pages.select("host").distinct().select(
-        "host",
-        F.concat(
-            F.lit("<sitemapindex>"), child(0), child(1), child(2),
-            F.lit("<sitemap><loc>http://"), F.col("host"),
-            F.lit("/sm/9.xml</loc></sitemap>"),  # never fetched
-            F.lit("</sitemapindex>"),
-        ).alias("index_xml"),
-    )
-    return resolve_sitemap_index(indexes, bodies.drop("host"))
-
-
-SQL_SITEMAP_INDEX = (
-    _pages_cte()
-    + """
-    , bodies AS (
-        SELECT host,
-               'http://' || host || '/sm/'
-                   || CAST(day_time % 3 AS VARCHAR) || '.xml'
-                   AS sitemap_loc,
-               '<urlset>' || string_agg(
-                   '<url><loc>' || url || '</loc><lastmod>'
-                   || strftime(warc_ts, '%Y-%m-%dT%H:%M:%S')
-                   || '</lastmod></url>', '' ORDER BY
-                   '<url><loc>' || url || '</loc><lastmod>'
-                   || strftime(warc_ts, '%Y-%m-%dT%H:%M:%S')
-                   || '</lastmod></url>')
-               || '</urlset>' AS sitemap_xml
-        FROM pages GROUP BY host, sitemap_loc
-    )
-    , idx AS (
-        SELECT host,
-               '<sitemapindex>'
-               || '<sitemap><loc>http://' || host
-               || '/sm/0.xml</loc><lastmod>2024-02-01</lastmod></sitemap>'
-               || '<sitemap><loc>http://' || host
-               || '/sm/1.xml</loc><lastmod>2024-02-02</lastmod></sitemap>'
-               || '<sitemap><loc>http://' || host
-               || '/sm/2.xml</loc><lastmod>2024-02-03</lastmod></sitemap>'
-               || '<sitemap><loc>http://' || host
-               || '/sm/9.xml</loc></sitemap>'
-               || '</sitemapindex>' AS index_xml
-        FROM (SELECT DISTINCT host FROM pages)
-    )
-    , entries AS (
-        SELECT host,
-               trim(regexp_extract(e, '<loc>(.*?)</loc>', 1))
-                   AS sitemap_loc
-        FROM (SELECT host, unnest(regexp_extract_all(index_xml,
-                  '(?s)<sitemap>(.*?)</sitemap>', 1)) AS e
-              FROM idx)
-        WHERE length(trim(regexp_extract(e, '<loc>(.*?)</loc>', 1))) > 0
-    )
-    , fetched AS (
-        SELECT e.host, e.sitemap_loc, b.sitemap_xml
-        FROM entries e JOIN bodies b ON e.sitemap_loc = b.sitemap_loc
-    )
-    , blocks AS (
-        SELECT host, sitemap_loc,
-               unnest(regexp_extract_all(sitemap_xml,
-                   '(?s)<url>(.*?)</url>', 1)) AS entry
-        FROM fetched
-    )
-    SELECT host, sitemap_loc,
-           trim(regexp_extract(entry, '<loc>(.*?)</loc>', 1)) AS loc,
-           TRY_CAST(trim(regexp_extract(entry,
-               '<lastmod>(.*?)</lastmod>', 1)) AS TIMESTAMP) AS lastmod
-    FROM blocks
-    WHERE length(trim(regexp_extract(entry, '<loc>(.*?)</loc>', 1))) > 0
-"""
-)
-
-
-def q_etag_gate(spark, sf_dir):
-    """If-None-Match gating (snapshots.etag_candidates): the store
-    holds 1 + doc_id%3 snapshots per stored url (doc_id%4==0 never
-    stored) with etag = md5(url || version), except doc_id%10==3
-    rows stored without an etag; candidates advertise the latest
-    stored etag (doc_id%5==1 -> certain 304, dropped), no etag
-    (doc_id%10==7 -> kept), or a different validator (kept). Every
-    keep/drop class is populated. The oracle replays the
-    latest-snapshot reduce and the four-way null logic in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    stored = pages.filter(F.col("doc_id") % 4 != 0)
-    store = stored.select(
-        "url", "doc_id", "warc_ts",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
-        ).alias("v"),
-    ).select(
-        "url",
-        F.timestamp_add("MINUTE", F.col("v") * 90, F.col("warc_ts"))
-        .alias("snap_ts"),
-        F.when(
-            F.col("doc_id") % 10 != 3,
-            F.md5(F.concat("url", F.col("v").cast("string"))),
-        ).alias("etag"),
-    )
-    cand = pages.select(
-        "url",
-        F.when(F.col("doc_id") % 10 == 7, F.lit(None).cast("string"))
-        .when(
-            F.col("doc_id") % 5 == 1,
-            F.md5(F.concat("url", (F.col("doc_id") % 3).cast("string"))),
-        )
-        .otherwise(F.md5(F.concat("url", F.lit("x"))))
-        .alias("etag"),
-    )
-    return snap_ops.etag_candidates(cand, store)
-
-
-SQL_ETAG_GATE = (
-    _pages_cte()
-    + """
-    , store AS (
-        SELECT url,
-               warc_ts + g.v * INTERVAL 90 MINUTE AS snap_ts,
-               CASE WHEN doc_id % 10 <> 3
-                    THEN md5(url || CAST(g.v AS VARCHAR)) END AS etag
-        FROM pages,
-             LATERAL (SELECT unnest(generate_series(0,
-                 CAST(doc_id % 3 AS INT))) AS v) g
-        WHERE doc_id % 4 <> 0
-    )
-    , latest AS (
-        SELECT url, arg_max(etag, snap_ts) AS se, max(snap_ts) AS seen
-        FROM store GROUP BY url
-    )
-    , cand AS (
-        SELECT url,
-               CASE WHEN doc_id % 10 = 7 THEN NULL
-                    WHEN doc_id % 5 = 1
-                        THEN md5(url || CAST(doc_id % 3 AS VARCHAR))
-                    ELSE md5(url || 'x') END AS etag
-        FROM pages
-    )
-    SELECT c.url, c.etag
-    FROM cand c LEFT JOIN latest l ON c.url = l.url
-    WHERE l.seen IS NULL OR c.etag IS NULL OR l.se IS NULL
-       OR c.etag <> l.se
-"""
-)
-
-
 def q_wet_export(spark, sf_dir):
     """WET serialization (warc.wet_records + wet_blob): every page's
     extracted text becomes a WARC/1.0 conversion record, then each
@@ -3845,8 +3237,7 @@ SQL_FRONTIER_MERGE = (
 
 
 # ===========================================================================
-# Round-3 additions, second batch: rendezvous resharding,
-# renewal-corrected revisit scheduling
+# Round-3 additions, second batch: rendezvous resharding, CDX index
 # ===========================================================================
 
 def q_shard_rendezvous(spark, sf_dir):
@@ -3881,89 +3272,6 @@ SQL_SHARD_RENDEZVOUS = (
     SELECT o.url, o.shard_old, n.shard_new,
            o.shard_old <> n.shard_new AS moved
     FROM old o JOIN neu n ON o.url = n.url
-"""
-)
-
-
-def q_freshness_revisit(spark, sf_dir):
-    """Renewal-corrected revisit scheduling (snapshots.
-    freshness_revisit): per-url Poisson change-rate estimate (Cho &
-    Garcia-Molina 2003, the -ln((n-X+.5)/(n+.5)) estimator) and the
-    clamped 1/lambda revisit interval, over a multi-version
-    observation log with NONUNIFORM per-url gaps (gap depends on
-    doc_id%7) so mean_gap_days genuinely varies. Single-observation
-    urls (doc_id%3==0) have no transition evidence and are excluded,
-    exactly as in the operator contract."""
-    pages = pages_from_documents(spark, sf_dir)
-    obs = pages.select(
-        "url", "doc_id", "warc_ts",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
-        ).alias("v"),
-    ).select(
-        "url",
-        F.timestamp_add(
-            "MINUTE",
-            (F.col("v") * (60 + (F.col("doc_id") % 7) * 30)).cast("int"),
-            F.col("warc_ts"),
-        ).alias("snap_ts"),
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.col("url"),
-                F.when(F.col("doc_id") % 2 == 0, F.col("v"))
-                .otherwise(F.floor(F.col("v") / 2))
-                .cast("long")
-                .cast("string"),
-            )
-        ).alias("fingerprint"),
-    )
-    return snap_ops.freshness_revisit(obs, min_days=1.0, max_days=90.0)
-
-
-SQL_FRESHNESS_REVISIT = (
-    _pages_cte()
-    + """
-    , obs AS (
-        SELECT url,
-               warc_ts + g.v * (60 + (doc_id % 7) * 30)
-                   * INTERVAL 1 MINUTE AS snap_ts,
-               md5(url || ':' || CAST(CAST(
-                   CASE WHEN doc_id % 2 = 0 THEN g.v
-                        ELSE g.v // 2 END AS BIGINT) AS VARCHAR))
-                   AS fp
-        FROM pages, (SELECT unnest(range(0, 3)) AS v) g
-        WHERE g.v <= doc_id % 3
-    )
-    , lagged AS (
-        SELECT url, snap_ts, fp,
-               lag(fp) OVER (PARTITION BY url ORDER BY snap_ts)
-                   AS prev_fp
-        FROM obs
-    )
-    , per AS (
-        SELECT url,
-               count(*) - 1 AS n_trans,
-               count(CASE WHEN prev_fp IS NOT NULL
-                          AND prev_fp <> fp THEN 1 END) AS n_changes,
-               (epoch(max(snap_ts)) - epoch(min(snap_ts))) / 86400.0
-                   AS span_days
-        FROM lagged GROUP BY url
-    )
-    SELECT url, n_trans, n_changes,
-           round(span_days / n_trans, 6) AS mean_gap_days,
-           -- + 0.0 normalizes IEEE -0.0 (from -ln(1.0) at
-           -- n_changes = 0) to +0.0, matching the engine's
-           -- normalization — a value-stringifying hash gate sees
-           -- "-0.0" != "0.0" otherwise
-           round(-ln((n_trans - n_changes + 0.5) / (n_trans + 0.5))
-                 / (span_days / n_trans), 6) + 0.0 AS lambda_hat,
-           CASE WHEN n_changes > 0 THEN
-               round(least(greatest(
-                 1.0 / (-ln((n_trans - n_changes + 0.5) / (n_trans + 0.5))
-                        / (span_days / n_trans)), 1.0), 90.0), 4)
-           ELSE 90.0 END AS revisit_days
-    FROM per WHERE n_trans >= 1
 """
 )
 
@@ -4423,20 +3731,13 @@ _QUERIES_BY_FAMILY = {
     "dup_span_stats": (q_dup_span_stats, SQL_DUP_SPAN_STATS),
     # skew telemetry
     "hot_hosts": (q_hot_hosts, SQL_HOT_HOSTS),
-    # multi-version store reads + deterministic sampling
-    "snapshot_asof": (q_snapshot_asof, SQL_SNAPSHOT_ASOF),
-    "domain_mix": (q_domain_mix, SQL_DOMAIN_MIX),
+    # crawl policy, fetch and archive operators
     "robots_rules": (q_robots_rules, SQL_ROBOTS_RULES),
-    "crawl_diff": (q_crawl_diff, SQL_CRAWL_DIFF),
     "crawl_delay_budgets": (q_crawl_delay_budgets, SQL_CRAWL_DELAY_BUDGETS),
     "host_quality_filter": (q_host_quality_filter, SQL_HOST_QUALITY_FILTER),
-    "sitemap_urls": (q_sitemap_urls, SQL_SITEMAP_URLS),
     "fetch_retries": (q_fetch_retries, SQL_FETCH_RETRIES),
     "redirect_resolution": (q_redirect_resolution, SQL_REDIRECT_RESOLUTION),
     "warc_records": (q_warc_records, SQL_WARC_RECORDS),
-    "recrawl_priority": (q_recrawl_priority, SQL_RECRAWL_PRIORITY),
-    "robots_sitemaps": (q_robots_sitemaps, SQL_ROBOTS_SITEMAPS),
-    "conditional_fetch": (q_conditional_fetch, SQL_CONDITIONAL_FETCH),
     "boilerplate_removal": (q_boilerplate_removal, SQL_BOILERPLATE_REMOVAL),
     "priority_boosts": (q_priority_boosts, SQL_PRIORITY_BOOSTS),
     "global_cap": (q_global_cap, SQL_GLOBAL_CAP),
@@ -4457,8 +3758,6 @@ _QUERIES_BY_FAMILY = {
                              SQL_REQUEST_RATE_BUDGETS),
     "meta_robots_gate": (q_meta_robots_gate, SQL_META_ROBOTS_GATE),
     "hreflang_alternates": (q_hreflang_alternates, SQL_HREFLANG_ALTERNATES),
-    "sitemap_index": (q_sitemap_index, SQL_SITEMAP_INDEX),
-    "etag_gate": (q_etag_gate, SQL_ETAG_GATE),
     "wet_export": (q_wet_export, SQL_WET_EXPORT),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
     "mirror_hosts": (q_mirror_hosts, SQL_MIRROR_HOSTS),
@@ -4470,7 +3769,6 @@ _QUERIES_BY_FAMILY = {
     "wat_export": (q_wat_export, SQL_WAT_EXPORT),
     "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
-    "freshness_revisit": (q_freshness_revisit, SQL_FRESHNESS_REVISIT),
     "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
     "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
@@ -4487,10 +3785,10 @@ _QUERIES_BY_FAMILY = {
 # Round 4 (below) rotates in EVERY entry that has never had a
 # driver-green row earned by its current implementation — the 31
 # never-attested round-3 additions (VERDICT r3 "what's missing" #1),
-# the two entries rotated out in r3 (request_rate_budgets,
-# sitemap_index), and everything whose Spark fn or oracle CHANGED this
-# round (admission_funnel, freshness_revisit, cdx_export, wat_export,
-# pii_scrub, and entries since deleted). Standing rule (VERDICT r3 #2): any query whose
+# the two entries rotated out in r3 (request_rate_budgets and one
+# since deleted), and everything whose Spark fn or oracle CHANGED this
+# round (admission_funnel, cdx_export, wat_export, pii_scrub, and
+# entries since deleted). Standing rule (VERDICT r3 #2): any query whose
 # implementation or oracle changes re-enters the NEXT window; nothing
 # ships a change while wearing an older attestation. The north-rule
 # gates stay in the window every round. Entries outside the window
@@ -4546,20 +3844,18 @@ _R5_ROTATION = [
     "ngram_overlap", "merge_upsert", "pos_tags",
     "duplicated_spans", "dup_span_stats", "hot_hosts",
     #
-    # The freed slots refill by the same rule. snapshot_asof goes
-    # first: its latest green row is still CORRECTNESS_r02.json (it
-    # yielded its r5 slot to the changed-implementation set above).
-    # Then the oldest after it: every other remaining entry's latest
-    # green row is r03 or newer, and the r03 ties are taken in
-    # _QUERIES_BY_FAMILY order (robots_longest_match, one of them,
-    # already sits in the changed block above).
-    "snapshot_asof", "domain_mix", "robots_rules", "crawl_diff",
-    "crawl_delay_budgets", "host_quality_filter", "sitemap_urls",
+    # The freed slots refill by the same rule: every remaining entry
+    # outside the blocks above has its latest green row at r03 or
+    # newer, and the r03 ties are taken in _QUERIES_BY_FAMILY order
+    # (robots_longest_match, one of them, already sits in the changed
+    # block above).
+    "robots_rules", "crawl_delay_budgets", "host_quality_filter",
     "fetch_retries", "redirect_resolution", "warc_records",
-    "recrawl_priority", "robots_sitemaps", "conditional_fetch",
     "boilerplate_removal", "priority_boosts", "global_cap",
     "url_templates", "soft404_filter", "mojibake_repair",
-    "adaptive_budgets",
+    "adaptive_budgets", "canonical_consolidate", "registered_domains",
+    "normalize_text", "politeness_composition", "content_sniff",
+    "meta_robots_gate", "hreflang_alternates",
 ]
 
 QUERIES = {

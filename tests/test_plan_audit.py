@@ -217,22 +217,19 @@ _LAZY_QUERIES = [
     "simhash_near_dups", "pii_scrub", "v1_cross_source_clusters",
     "duplicated_spans", "dup_span_stats",
     # round-2 additions
-    "hot_hosts", "snapshot_asof", "domain_mix", "robots_rules",
-    "crawl_diff", "crawl_delay_budgets", "host_quality_filter",
-    "sitemap_urls",
-    "fetch_retries", "redirect_resolution",
-    "warc_records", "recrawl_priority", "robots_sitemaps",
-    "conditional_fetch", "boilerplate_removal",
+    "hot_hosts", "robots_rules", "crawl_delay_budgets",
+    "host_quality_filter", "fetch_retries", "redirect_resolution",
+    "warc_records", "boilerplate_removal",
     "priority_boosts", "global_cap", "url_templates",
     "robots_longest_match", "soft404_filter", "mojibake_repair",
     "adaptive_budgets", "canonical_consolidate", "registered_domains",
     "normalize_text", "admission_funnel", "politeness_composition",
     "content_sniff", "request_rate_budgets",
-    "meta_robots_gate", "hreflang_alternates", "sitemap_index",
-    "etag_gate", "wet_export", "ip_politeness", "mirror_hosts",
+    "meta_robots_gate", "hreflang_alternates",
+    "wet_export", "ip_politeness", "mirror_hosts",
     # round-3 additions
     "delta_admit", "ngram_counts", "wat_export", "frontier_merge",
-    "shard_rendezvous", "freshness_revisit", "cdx_export",
+    "shard_rendezvous", "cdx_export",
     "stale_robots", "containment_pairs", "drain_forecast",
     "robots_wildcards",
 ]
@@ -509,15 +506,6 @@ def test_fetch_retry_ladder_is_shuffle_free(spark):
     Exchange nodes in the whole plan."""
     plan = _simple(Q.q_fetch_retries(spark, SF_MED))
     assert "Exchange" not in plan, plan
-
-
-def test_recrawl_priority_window_is_partitioned(spark):
-    """The change-rate lag window must partition by url — an
-    unpartitioned frame would coalesce the whole observation history
-    into one task."""
-    plan = _formatted(Q.q_recrawl_priority(spark, SF_MED))
-    for m in re.finditer(r"Arguments: \[[^\]]*windowspecdefinition\(([^,]*),", plan):
-        assert "url" in m.group(1), plan
 
 
 def test_bench_battery_covers_all_oracle_queries():

@@ -158,31 +158,6 @@ def test_apply_robots_is_scheme_independent(spark):
     assert kept == {"https://h9.test/open/a"}
 
 
-def test_sitemap_directives_are_group_independent(spark):
-    """Sitemap: lines surface regardless of which User-agent group
-    they sit in (protocol: not group-scoped); duplicates dedupe; the
-    URL's own colons survive the directive split."""
-    from news_combinator_spark.functions.robots import (
-        sitemaps_from_robots_txt,
-    )
-
-    txt = (
-        "User-agent: fetchbot\nDisallow: /x\n"
-        "Sitemap: http://h.test/sm-bot.xml\n\n"
-        "User-agent: *\nDisallow: /y\n"
-        "Sitemap: http://h.test/sm-star.xml\n"
-        "Sitemap: http://h.test/sm-star.xml\n"
-        "Sitemap:\n"
-    )
-    robots = spark.createDataFrame(
-        [("h.test", txt)], "host string, robots_txt string"
-    )
-    got = sorted(
-        r.sitemap_url for r in sitemaps_from_robots_txt(robots).collect()
-    )
-    assert got == ["http://h.test/sm-bot.xml", "http://h.test/sm-star.xml"]
-
-
 def test_longest_match_allow_reopens_subtree(spark):
     """RFC 9309 longest-match: Allow: /a/img/ re-opens a subtree of
     Disallow: /a/; a same-length Allow/Disallow pair ties to Allow;

@@ -1,8 +1,6 @@
 """Semantics of the round-3 second-batch operators beyond the DuckDB
-hash gate: rendezvous resharding stability, renewal-corrected revisit
-scheduling."""
-
-import math
+hash gate: rendezvous resharding stability, SURT ordering and the
+CDX/WAT line shape."""
 
 import pyspark.sql.functions as F
 
@@ -10,7 +8,6 @@ from news_combinator_spark.operators.bucketing import (
     rendezvous_shard,
     reshard_moves,
 )
-from news_combinator_spark.operators.snapshots import freshness_revisit
 
 
 # ----------------------------------------------------------- rendezvous
@@ -79,67 +76,6 @@ def test_prefix_resharding_moves_far_more(spark):
     )
     assert prefix_moved > 0.7
     assert hrw_moved < 0.25
-
-
-# ------------------------------------------------------------ freshness
-
-
-def _obs(spark, rows):
-    return spark.createDataFrame(
-        rows, "url string, snap_ts timestamp, fingerprint string"
-    )
-
-
-def test_freshness_estimator_values(spark):
-    """n=4 transitions, X=2 changes over a 4-day span (1-day gaps):
-    lambda = -ln((4-2+.5)/(4+.5)) / 1.0; revisit = 1/lambda."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        ("u", t0 + dt.timedelta(days=i), fp)
-        for i, fp in enumerate(["a", "a", "b", "b", "c"])
-    ]
-    out = freshness_revisit(_obs(spark, rows)).collect()
-    assert len(out) == 1
-    r = out[0]
-    lam = -math.log((4 - 2 + 0.5) / (4 + 0.5))
-    assert r.n_trans == 4 and r.n_changes == 2
-    assert abs(r.lambda_hat - round(lam, 6)) < 1e-9
-    assert abs(r.revisit_days - round(1 / lam, 4)) < 1e-6
-
-
-def test_freshness_never_changing_hits_max_clamp(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        ("u", t0 + dt.timedelta(days=i), "same") for i in range(5)
-    ]
-    r = freshness_revisit(_obs(spark, rows), max_days=90.0).collect()[0]
-    assert r.n_changes == 0
-    assert r.revisit_days == 90.0  # +0.5 prior keeps lambda finite
-
-
-def test_freshness_fast_changer_hits_min_clamp(spark):
-    """Changes every observation at 6-hour gaps -> revisit clamps to
-    min_days."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        ("u", t0 + dt.timedelta(hours=6 * i), f"v{i}") for i in range(9)
-    ]
-    r = freshness_revisit(_obs(spark, rows), min_days=1.0).collect()[0]
-    assert r.n_changes == 8
-    assert r.revisit_days == 1.0
-
-
-def test_freshness_single_observation_excluded(spark):
-    import datetime as dt
-
-    rows = [("u", dt.datetime(2024, 1, 1), "a")]
-    assert freshness_revisit(_obs(spark, rows)).count() == 0
 
 
 # ------------------------------------------------------------- cdx/surt

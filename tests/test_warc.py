@@ -83,17 +83,11 @@ def _wave_blob(wave: int, pages: list[tuple[str, str]]) -> str:
 
 
 def test_warc_ingestion_pipeline(spark, tmp_path):
-    """End-to-end ingestion: three crawl waves of WARC blobs parse,
-    MERGE into a versioned observation store, serve an as-of read, and
-    drive re-crawl prioritization — the full public-crawl bootstrap
-    path composed from its operators."""
-    from pyspark.sql import functions as F
-
+    """End-to-end ingestion: three crawl waves of WARC blobs parse and
+    MERGE into a versioned observation store, and an older version of
+    the store still serves the observations as of its own wave — the
+    public-crawl bootstrap path composed from its operators."""
     from news_combinator_spark.operators.merge import SnapshotTable
-    from news_combinator_spark.operators.snapshots import (
-        latest_asof,
-        recrawl_priority,
-    )
 
     waves = [
         (1, [("http://s.test/a", "a-v1"), ("http://s.test/b", "b-const")]),
@@ -114,31 +108,18 @@ def test_warc_ingestion_pipeline(spark, tmp_path):
         )
         store.merge(obs, key_cols=["target_uri", "warc_date"])
     assert store.latest_version() == 3
+    assert store.read().count() == 7  # 3 + 3 + 1 observations
 
-    obs = store.read()
-    assert obs.count() == 7  # 3 + 3 + 1 observations
-
-    # as-of wave 2: a at v2, b constant, c not yet crawled
-    asof = latest_asof(
-        obs, "2024-01-02 23:00:00", key="target_uri", ts_col="warc_date"
-    )
-    got = {r.target_uri: r.payload for r in asof.collect()}
-    assert got == {"http://s.test/a": "a-v2", "http://s.test/b": "b-const"}
-
-    # change-rate scheduling: a changes every wave -> fetch first;
-    # b never changes and c has one observation -> fetch last
-    pri = {
-        r.target_uri: r.priority
-        for r in recrawl_priority(
-            obs.withColumn("fp", F.md5("payload")),
-            key="target_uri", ts_col="warc_date", fp_col="fp",
-        ).collect()
+    # version 2 holds waves 1-2: a at v1 and v2, b twice, c not yet
+    # crawled
+    asof = store.read(2).collect()
+    assert len(asof) == 4
+    assert {r.target_uri for r in asof} == {
+        "http://s.test/a", "http://s.test/b",
     }
-    assert pri == {
-        "http://s.test/a": 0,
-        "http://s.test/b": 2,
-        "http://s.test/c": 2,
-    }
+    assert {
+        r.payload for r in asof if r.target_uri == "http://s.test/a"
+    } == {"a-v1", "a-v2"}
 
 
 def test_streaming_warc_ingest(spark, tmp_path):
