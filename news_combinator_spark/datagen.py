@@ -37,7 +37,6 @@ injection, used by parity tests and the crawl benchmark.
 
 from __future__ import annotations
 
-import hashlib
 import random
 
 from pyspark.sql import DataFrame, SparkSession
@@ -152,11 +151,6 @@ def pages_select_sql(
 N_DOCS_SUBQUERY = "(SELECT count(*) FROM documents)"
 
 
-def pages_cte_duckdb(n: int | str) -> str:
-    """DuckDB CTE body: `pages AS (...)` for embedding in oracle SQL."""
-    return f"pages AS ({pages_select_sql(n, 'duckdb')})"
-
-
 def seeds_df(spark: SparkSession, pages: DataFrame) -> DataFrame:
     return pages.filter(F.col("doc_id").isin(*SEED_DOC_IDS)).select(
         "url", "host", "priority"
@@ -172,10 +166,12 @@ def budgets_df(spark: SparkSession) -> DataFrame:
 
 
 def robots_df(spark: SparkSession) -> DataFrame:
-    """robots(host, path_prefix): one rule — h1.test disallows one
-    day directory (engine handles arbitrary prefix lists)."""
-    rows = [(ROBOTS_BLOCKED_HOST, f"/a/{ROBOTS_BLOCKED_DAY}/")]
-    return spark.createDataFrame(rows, "host string, path_prefix string")
+    """robots(host, path_prefix, allow): one rule — h1.test disallows
+    one day directory (engine handles arbitrary rule lists)."""
+    rows = [(ROBOTS_BLOCKED_HOST, f"/a/{ROBOTS_BLOCKED_DAY}/", False)]
+    return spark.createDataFrame(
+        rows, "host string, path_prefix string, allow boolean"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -287,11 +283,3 @@ def reference_grammar_pages(
                 }
             )
     return pages
-
-
-def corpus_fingerprint(pages: list[dict]) -> str:
-    h = hashlib.blake2b(digest_size=16)
-    for p in pages:
-        h.update(p["url"].encode())
-        h.update(p["text"].encode())
-    return h.hexdigest()

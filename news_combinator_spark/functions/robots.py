@@ -2,24 +2,23 @@
 
 The reference delegates robots handling to scrapy's middleware
 (reconstruction/crawler settings enable ROBOTSTXT_OBEY); the frontier
-here gates candidates with `apply_robots` over (host, path_prefix)
-rules. This module produces those rules from RAW robots.txt bodies —
-one body per host, fetched like any other page — so the whole
-politeness pipeline runs from crawl data with no driver-side parsing.
+here gates candidates with `frontier.apply_robots` over
+(host, path_prefix, allow) rules. This module produces those rules
+from RAW robots.txt bodies — one body per host, fetched like any
+other page — so the whole politeness pipeline runs from crawl data
+with no driver-side parsing.
 
-Semantics (the subset `apply_robots` can enforce):
+Semantics (RFC 9309, as `apply_robots` enforces them):
 - groups: consecutive `User-agent:` lines head a group; the group's
   rules run until the next group starts (a UA line whose previous
   significant line is not a UA line).
 - a group applies to `agent` if ANY of its UA lines equals it
   (case-insensitive; `*` is just an agent name here).
-- `Disallow:` with a non-empty prefix emits a rule; empty Disallow
-  (allow-all) is dropped.
-- comments (`#...`) and blank lines are ignored. `Allow:` lines are
-  ignored by `rules_from_robots_txt` (conservative prefix-disallow
-  gate: an Allow shadowing a broader Disallow stays disallowed); for
-  full RFC 9309 longest-match semantics use `allow_disallow_rules`
-  with `frontier.apply_robots_rfc9309`.
+- `Allow:` and `Disallow:` with a non-empty value each emit a rule;
+  an empty Disallow (allow-all) and an empty Allow (no-op) emit
+  nothing. Precedence between rules (longest match, Allow on a tie)
+  and the `*` / `$` special characters are the gate's business.
+- comments (`#...`) and blank lines are ignored.
 
 Scale design: everything is split/regexp/window expressions — no
 Python. The only window partitions by host, and a robots body is
@@ -34,7 +33,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "rules_from_robots_txt",
-    "allow_disallow_rules",
     "crawl_delays_from_robots_txt",
     "request_rates_from_robots_txt",
     "effective_delays",
@@ -111,43 +109,12 @@ def rules_from_robots_txt(
     host_col: str = "host",
     txt_col: str = "robots_txt",
 ) -> DataFrame:
-    """(host, robots_txt) -> distinct disallow rules applying to
-    `agent`: (host, path_prefix, disallow_prefix), where path_prefix
-    is the literal Disallow value — the scheme-independent key
-    `frontier.apply_robots` enforces against the candidate URL's path
-    — and disallow_prefix is a display-only full-URL rendering
-    ('http://' || host || path) kept for lineage/debugging (a rule
-    applies per robots protocol to every scheme/port of its host, so
-    enforcement never matches on it)."""
-    g = _agent_group_lines(robots, agent, host_col, txt_col)
-    return (
-        g.filter((F.col("directive") == "disallow") & (F.length("value") > 0))
-        .select("host", F.col("value").alias("path_prefix"))
-        .distinct()
-        .withColumn(
-            "disallow_prefix",
-            F.concat(F.lit("http://"), F.col("host"), F.col("path_prefix")),
-        )
-    )
-
-
-def allow_disallow_rules(
-    robots: DataFrame,
-    agent: str = "*",
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, robots_txt) -> BOTH rule kinds for `agent`:
-    (host, path_prefix, allow boolean), distinct.
-
-    This is the input for RFC 9309 longest-match evaluation
-    (`frontier.apply_robots_rfc9309`): an Allow whose prefix is
-    longer than the blocking Disallow re-opens the subtree (e.g.
-    ``Disallow: /a/`` + ``Allow: /a/img/``), which the simpler
-    `rules_from_robots_txt` gate deliberately treats as still
-    disallowed. Empty-value lines are dropped for both kinds — an
-    empty Disallow means allow-all and an empty Allow is a no-op, so
-    neither produces a rule."""
+    """(host, robots_txt) -> distinct Allow and Disallow rules applying
+    to `agent`: (host, path_prefix, allow boolean), where path_prefix
+    is the rule's literal value — the scheme-independent path rule
+    `frontier.apply_robots` matches against the candidate URL's path
+    (a rule applies per robots protocol to every scheme/port of its
+    host)."""
     g = _agent_group_lines(robots, agent, host_col, txt_col)
     return (
         g.filter(

@@ -82,16 +82,6 @@ def _cjk_bigrams(piece: str) -> list[str]:
     return toks
 
 
-def term_freq(tokens: list[str], vocab: set[str] | None = None) -> dict[str, int]:
-    """Counts; when vocab given, only vocab words are counted and
-    missing vocab words appear with 0 (reference: the seed's tag set is
-    the vector space — tfidf.py:9-24 / categorize.cpp:180-189)."""
-    c = Counter(tokens)
-    if vocab is None:
-        return dict(c)
-    return {w: c.get(w, 0) for w in vocab}
-
-
 def cosine_guarded(v1: dict[str, float], v2: dict[str, float], version: int = 2):
     """Cosine over the union key space with reference guard semantics.
 

@@ -147,25 +147,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize_url(u or ""))
 
 
-@F.pandas_udf(T.StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: url_host(u or ""))
-
-
-def with_url_identity(df, url_col: str = "url"):
-    """Add canonical url, host, and 64-bit hash columns.
-
-    host/hash are derived with built-in functions (JVM side) where
-    possible: ``parse_url`` handles host; xxhash64 the canonical form.
-    Canonicalization itself needs the Python kernel (query-sort).
-    """
-    return (
-        df.withColumn("url_canon", canonicalize_udf(F.col(url_col)))
-        .withColumn("host", F.lower(F.parse_url(F.col("url_canon"), F.lit("HOST"))))
-        .withColumn("url_hash", F.xxhash64("url_canon"))
-    )
-
-
 def canonical_href(html_col) -> F.Column:
     """First ``<link rel="canonical" href="...">`` target in the html,
     or NULL. Handles both attribute orders (rel-then-href and

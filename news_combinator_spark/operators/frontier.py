@@ -383,39 +383,58 @@ def _robots_path(col: str):
 
 
 def apply_robots(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Drop candidate URLs disallowed by a (host, path-prefix) rule.
+    """Drop candidate URLs disallowed by RFC 9309 robots rules.
 
-    Enforcement is scheme-independent, per the robots protocol: a
-    rule gates every scheme/port of its host, so the match is host
-    equality + path-and-beyond startswith — 'https://h/secret/x' is
-    blocked by `Disallow: /secret` exactly like the http form. Rules
-    carry (host, path_prefix), as functions/robots.rules_from_robots_txt
-    emits them. robots is tiny -> broadcast."""
+    Rules carry (host, path_prefix, allow), as
+    functions/robots.rules_from_robots_txt emits them. A rule path
+    may use the spec's special characters (`robots_rule_pattern`):
+    ``*`` matches any sequence and a trailing ``$`` anchors the end;
+    otherwise it matches as a path prefix. Among a host's matching
+    rules the longest (rule octets as written) governs and Allow wins
+    a length tie, so ``Disallow: /a/`` + ``Allow: /a/img/`` blocks
+    /a/x but re-opens /a/img/y. A URL no rule matches is allowed.
+
+    Enforcement is scheme-independent: a rule gates every scheme/port
+    of its host, so the match is host equality + path-and-beyond
+    ('https://h/secret/x' is blocked by `Disallow: /secret` exactly
+    like the http form).
+
+    Scale shape: the rules (KB per host by protocol convention) fold
+    into one array of (length, allow, regex) structs per host and
+    broadcast; each candidate picks its governing rule from its
+    host's array JVM-side, so the candidates are read once, with no
+    shuffle and no per-url aggregate."""
     if robots is None:
         return candidates
     r = F.broadcast(
-        robots.select(F.col("host").alias("r_host"), "path_prefix")
+        robots.groupBy(F.col("host").alias("r_host")).agg(
+            F.collect_list(F.struct(
+                F.length("path_prefix").alias("l"),
+                F.col("allow").cast("int").alias("a"),
+                robots_rule_pattern("path_prefix").alias("pat"),
+            )).alias("_rules")
+        )
     )
     # path-and-beyond (path + query/fragment): strip scheme+authority
-    # textually so prefixes containing '?' still match; a bare-host URL
-    # ('http://h.test') yields '' which RFC 9309 treats as '/'
-    path = _robots_path("url")
-    joined = candidates.withColumn("_path", path).join(
-        r,
-        (F.col("host") == F.col("r_host"))
-        & F.col("_path").startswith(F.col("path_prefix")),
-        "left",
+    # textually so rules containing '?' still match; a bare-host URL
+    # ('http://h.test') is evaluated as '/'
+    joined = candidates.withColumn("_path", _robots_path("url")).join(
+        r, F.col("host") == F.col("r_host"), "left"
     )
-    return joined.filter(F.col("r_host").isNull()).drop(
-        "r_host", "path_prefix", "_path"
-    )
+    # struct order (l, a, ...) makes the max the longest rule, Allow
+    # first on a tie; null = no rule matched
+    governing = F.array_max(F.filter(
+        "_rules", lambda x: F.regexp_like(F.col("_path"), x["pat"])
+    ))
+    return joined.filter(
+        governing.isNull() | (governing["a"] == 1)
+    ).drop("r_host", "_rules", "_path")
 
 
 def discover_candidates(
     fetched: DataFrame,
     web_meta: DataFrame,
     robots: DataFrame | None = None,
-    robots_mode: str = "prefix",
     allowed_host_suffix: str | None = None,
     prefilter=None,
     observe: tuple[Observation, Observation] | None = None,
@@ -424,7 +443,9 @@ def discover_candidates(
     deduped candidates (url, host, priority), plus `maybe` when a seen
     `prefilter` (ShardedBloom) is given. Links cross
     into Python once per page, and the host filter stays above the
-    explode. `observe` = (discovered, robots-allowed) Observations,
+    explode. `robots` rules (host, path_prefix, allow) gate the
+    candidates through `apply_robots`, one broadcast join.
+    `observe` = (discovered, robots-allowed) Observations,
     each filled with a row count `n` by the first action.
     """
     cand = fetched.select(
@@ -439,14 +460,7 @@ def discover_candidates(
     )
     if observe is not None:
         cand = cand.observe(observe[0], _n())
-    # gate mode: 'prefix' = conservative disallow-only (the
-    # oracle-pinned default); 'rfc9309' = longest-match with Allow
-    # overrides and the spec's * / $ special characters — robots must
-    # then be functions/robots.allow_disallow_rules output
-    if robots_mode == "rfc9309":
-        cand = apply_robots_rfc9309(cand, robots)
-    else:
-        cand = apply_robots(cand, robots)
+    cand = apply_robots(cand, robots)
     if observe is not None:
         cand = cand.observe(observe[1], _n())
     if prefilter is None:
@@ -507,12 +521,11 @@ def crawl(
       bloom seen PREFILTER is semantics-neutral (false positives fall
       through to the exact anti-join, no false negatives) and sharded
       by url-hash, never driver-merged.
-    - `robots_mode='rfc9309'` switches the discovered-candidate gate
-      to longest-match Allow/Disallow evaluation with `*`/`$` rules
-      (`apply_robots_rfc9309`); `robots` must then carry
-      (host, path_prefix, allow) rows from
-      `functions/robots.allow_disallow_rules`. The default 'prefix'
-      mode is the oracle-pinned conservative gate.
+    - discovered candidates pass the one robots gate, RFC 9309
+      longest-match (`apply_robots`); `robots` carries
+      (host, path_prefix, allow) rows, as
+      `functions/robots.rules_from_robots_txt` emits them.
+      `robots_mode` is accepted and ignored: there is one gate.
     - lineage is always collected (Observations, no extra jobs);
       `collect_lineage` is accepted and ignored.
     - `aging_every > 0` turns on starvation-free scheduling: frontier
@@ -527,10 +540,6 @@ def crawl(
             f"start_round ({start_round}) must be < rounds ({rounds}): "
             "nothing left to crawl — raise --rounds or resume an "
             "earlier checkpoint"
-        )
-    if robots_mode not in ("prefix", "rfc9309"):
-        raise ValueError(
-            f"robots_mode must be 'prefix' or 'rfc9309', got {robots_mode!r}"
         )
     # The "web" is probed by url every round. Two layouts:
     # - web_table: a catalog table bucketed by url (operators/
@@ -666,7 +675,7 @@ def crawl(
         # across branches, so without it the round would run the
         # whole discovery pipeline once per branch
         flagged = discover_candidates(
-            fetched, web_meta, robots, robots_mode, allowed_host_suffix,
+            fetched, web_meta, robots, allowed_host_suffix,
             bloom, observe=(disc_obs, gate_obs),
         ).persist()
         if bloom is not None:
@@ -1188,58 +1197,3 @@ def robots_rule_pattern(col):
         star,
         F.when(c.endswith("$"), F.lit("$")).otherwise(F.lit("")),
     )
-
-
-def apply_robots_rfc9309(
-    candidates: DataFrame, rules: DataFrame | None
-) -> DataFrame:
-    """Full RFC 9309 rule evaluation including the spec's special
-    characters (S2.2.3): ``Disallow: /*.php$`` or ``Allow: /a/*/13``
-    match with ``*`` as any-sequence and trailing ``$`` as an
-    end anchor; among a host's matching rules the one with the most
-    octets (the rule string as written) governs, Allow winning length
-    ties; no match means allowed.
-
-    ``Disallow: /a/`` plus ``Allow: /a/img/`` blocks /a/x but
-    re-opens /a/img/y; a wildcard-free rule matches exactly as a
-    path prefix. Rules come from `functions/robots.allow_disallow_rules`
-    — (host, path_prefix, allow).
-
-    Scale shape: rules (with their translated regexes) broadcast (KB
-    per host by protocol convention), the match predicate evaluated
-    JVM-side in the join, the governing rule one map-side-combined
-    groupBy(url) max_by — rule matches per URL are bounded by the
-    host's rule count, and no window or data-sized single-partition
-    stage appears.
-    """
-    if rules is None:
-        return candidates
-    r = F.broadcast(
-        rules.select(
-            F.col("host").alias("r_host"),
-            "allow",
-            robots_rule_pattern("path_prefix").alias("pat"),
-            F.length("path_prefix").alias("plen"),
-        )
-    )
-    path = _robots_path("url")
-    cand = candidates.withColumn("_path", path)
-    matched = cand.join(
-        r,
-        (F.col("host") == F.col("r_host"))
-        & F.regexp_like(F.col("_path"), F.col("pat")),
-        "inner",
-    )
-    governing = matched.groupBy("url").agg(
-        F.max_by(
-            F.col("allow"),
-            F.struct(
-                F.col("plen").alias("l"),
-                F.col("allow").cast("int").alias("a"),
-            ),
-        ).alias("_allow")
-    )
-    out = cand.join(governing, "url", "left")
-    return out.filter(
-        F.col("_allow").isNull() | F.col("_allow")
-    ).drop("_allow", "_path")

@@ -1217,8 +1217,12 @@ def q_robots_rules(spark, sf_dir):
             hn.cast("string"),
         ).alias("robots_txt"),
     )
-    return rules_from_robots_txt(robots).select(
-        "host", "path_prefix", "disallow_prefix"
+    return rules_from_robots_txt(robots).filter(~F.col("allow")).select(
+        "host",
+        "path_prefix",
+        F.concat(F.lit("http://"), "host", "path_prefix").alias(
+            "disallow_prefix"
+        ),
     )
 
 
@@ -1853,15 +1857,14 @@ SQL_URL_TEMPLATES = (
 
 
 def q_robots_longest_match(spark, sf_dir):
-    """RFC 9309 robots evaluation (frontier.apply_robots_rfc9309
-    over functions/robots.allow_disallow_rules): each host disallows
+    """RFC 9309 robots evaluation (frontier.apply_robots over
+    functions/robots.rules_from_robots_txt): each host disallows
     one day directory but re-allows a longer id prefix inside it
     ('Disallow: /a/<d>/' + 'Allow: /a/<d>/0000001'), so docs 100-199
     of the blocked day survive by longest-match while their siblings
-    drop and other days are untouched — the Allow-override case the
-    conservative prefix gate treats as still blocked. Rules parse
-    from RAW bodies; the oracle replays parse, longest-match, and
-    tie-break in SQL."""
+    drop and other days are untouched — the Allow-override case.
+    Rules parse from RAW bodies; the oracle replays parse,
+    longest-match, and tie-break in SQL."""
     pages = pages_from_documents(spark, sf_dir)
     hn = F.regexp_extract("host", r"h(\d+)", 1).cast("int")
     d0 = (F.lit(20240101) + hn % 3).cast("string")
@@ -1872,9 +1875,9 @@ def q_robots_longest_match(spark, sf_dir):
             F.lit("Allow: /a/"), d0, F.lit("/0000001\n"),
         ).alias("robots_txt"),
     )
-    rules = rb.allow_disallow_rules(robots)
+    rules = rules_from_robots_txt(robots)
     cand = pages.select("url", "host", "priority")
-    return fr.apply_robots_rfc9309(cand, rules)
+    return fr.apply_robots(cand, rules)
 
 
 SQL_ROBOTS_LONGEST_MATCH = (
@@ -3604,10 +3607,10 @@ SQL_PII_SCRUB = r"""
 # ===========================================================================
 
 def q_robots_wildcards(spark, sf_dir):
-    """RFC 9309 special-character rules (frontier.apply_robots_rfc9309
-    over robots_rule_pattern): every host disallows `/a/*/0000001`
-    (ids 100-199 on ANY day directory — the `*` the prefix gate would
-    treat as a literal and never match) but re-allows the longer
+    """RFC 9309 special-character rules (frontier.apply_robots over
+    robots_rule_pattern): every host disallows `/a/*/0000001`
+    (ids 100-199 on ANY day directory — `*` matches any sequence,
+    not a literal star) but re-allows the longer
     `/a/*/00000013` (ids 130-139); odd hosts additionally disallow
     `*7.htm$` (any url whose path ends in 7.htm — the end anchor).
     Precedence is rule-octet length with Allow winning ties, so id
@@ -3636,7 +3639,7 @@ def q_robots_wildcards(spark, sf_dir):
         )
     )
     cand = pages.select("url", "host", "priority")
-    return fr.apply_robots_rfc9309(cand, base)
+    return fr.apply_robots(cand, base)
 
 
 SQL_ROBOTS_WILDCARDS = (
@@ -3823,16 +3826,18 @@ _R5_ROTATION = [
     # checkpoint-fold/Observation changes flow into every crawl
     # query (crawl_frontier/crawl_seen_set sit in _ALWAYS_ATTEST;
     # the host-lineage variant re-enters here);
-    # robots_longest_match's Spark function is now
-    # apply_robots_rfc9309; and delta_admit now bands through
-    # candidate_pairs' signature-slice rows over one sketch pass per
-    # side (its Python band hashing is gone). front_page_ranking,
+    # robots_longest_match and robots_wildcards now run through the
+    # one robots gate, apply_robots, and robots_rules through the one
+    # parser, whose rules carry Allow rows; and delta_admit now bands
+    # through candidate_pairs' signature-slice rows over one sketch
+    # pass per side (its Python band hashing is gone). front_page_ranking,
     # entry_lookup and comments_sort now run through
     # operators/serving.py's rank_front_page, entry_lookup and
     # paginate instead of inline copies of W4/J4/O3.
     "minhash_near_dups", "near_dup_groups", "canonical_best",
     "crawl_host_lineage", "robots_longest_match", "delta_admit",
     "front_page_ranking", "entry_lookup", "comments_sort",
+    "robots_rules", "robots_wildcards",
     #
     # Oldest-first refill: the 12 entries still registered whose
     # latest green row was CORRECTNESS_r02.json when this window was
@@ -3847,15 +3852,15 @@ _R5_ROTATION = [
     # The freed slots refill by the same rule: every remaining entry
     # outside the blocks above has its latest green row at r03 or
     # newer, and the r03 ties are taken in _QUERIES_BY_FAMILY order
-    # (robots_longest_match, one of them, already sits in the changed
-    # block above).
-    "robots_rules", "crawl_delay_budgets", "host_quality_filter",
+    # (robots_longest_match and robots_rules, two of them, already sit
+    # in the changed block above).
+    "crawl_delay_budgets", "host_quality_filter",
     "fetch_retries", "redirect_resolution", "warc_records",
     "boilerplate_removal", "priority_boosts", "global_cap",
     "url_templates", "soft404_filter", "mojibake_repair",
     "adaptive_budgets", "canonical_consolidate", "registered_domains",
     "normalize_text", "politeness_composition", "content_sniff",
-    "meta_robots_gate", "hreflang_alternates",
+    "meta_robots_gate",
 ]
 
 QUERIES = {

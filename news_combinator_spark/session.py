@@ -74,8 +74,3 @@ def get_spark(
         print(f"news_combinator_spark: local[{cores}], driver heap {heap}",
               file=sys.stderr)
     return spark
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-provided parquet table (see TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -61,17 +61,10 @@ def main() -> None:
         "--robots",
         default="",
         help="parquet of RAW robots bodies (host string, robots_txt "
-        "string): candidates are gated by the parsed rules, and with "
+        "string): candidates are gated by the parsed rules (RFC 9309 "
+        "longest match: Allow overrides, * and $), and with "
         "--use-crawl-delays the bodies' Crawl-delay / Request-rate "
         "directives politely cap per-host budgets",
-    )
-    ap.add_argument(
-        "--robots-mode",
-        choices=["prefix", "rfc9309"],
-        default="prefix",
-        help="prefix = conservative disallow-only gate; rfc9309 = "
-        "longest-match with Allow overrides and the spec's * and $ "
-        "special characters",
     )
     ap.add_argument(
         "--use-crawl-delays",
@@ -128,18 +121,13 @@ def main() -> None:
     robots_rules = None
     if args.robots:
         from news_combinator_spark.functions.robots import (
-            allow_disallow_rules,
             budgets_from_delays,
             effective_delays,
             rules_from_robots_txt,
         )
 
         robots_bodies = spark.read.parquet(args.robots)
-        robots_rules = (
-            allow_disallow_rules(robots_bodies)
-            if args.robots_mode == "rfc9309"
-            else rules_from_robots_txt(robots_bodies)
-        )
+        robots_rules = rules_from_robots_txt(robots_bodies)
         if args.use_crawl_delays:
             delayed = budgets_from_delays(
                 effective_delays(robots_bodies),
@@ -188,7 +176,6 @@ def main() -> None:
             salt_buckets=args.salt_buckets,
             web_table=web_table,
             robots=robots_rules,
-            robots_mode=args.robots_mode,
             aging_every=args.aging_every,
         )
     else:
@@ -205,7 +192,6 @@ def main() -> None:
             checkpoint_dir=os.path.join(args.out, "ckpt") if args.out else None,
             web_table=web_table,
             robots=robots_rules,
-            robots_mode=args.robots_mode,
             aging_every=args.aging_every,
         )
     if args.out:

@@ -1,8 +1,8 @@
 """spark-submit entry-point regression: the crawl job CLI end to end.
 
 One subprocess run covers the flags a cluster submission composes:
-robots bodies (rfc9309 mode) + crawl-delay budgets + checkpoint
-output. The CLI is the north_rule's submission surface, so a broken
+robots bodies (with an Allow override) + crawl-delay budgets +
+checkpoint output. The CLI is the north_rule's submission surface, so a broken
 flag is a broken deployment even when every operator test passes.
 """
 
@@ -32,8 +32,7 @@ def test_crawl_job_cli_end_to_end(spark, tmp_path):
             sys.executable, "scripts/run_crawl_job.py",
             "--sf-dir", SF_SMALL, "--rounds", "3", "--hosts", "4",
             "--budget", "3", "--seeds", "4", "--out", out_dir,
-            "--robots", rp, "--robots-mode", "rfc9309",
-            "--use-crawl-delays",
+            "--robots", rp, "--use-crawl-delays",
         ],
         capture_output=True,
         text=True,
@@ -52,7 +51,7 @@ def test_crawl_job_cli_end_to_end(spark, tmp_path):
 
     fetched = spark.read.parquet(os.path.join(out_dir, "fetched"))
     assert fetched.count() == summary["urls_fetched"]
-    # rfc9309: h1's only surviving discoveries sit under the Allow
+    # longest match: h1's only surviving discoveries sit under the Allow
     h1 = fetched.filter(
         "host = 'h1.test' AND round > 0"
     ).toPandas()

@@ -158,8 +158,8 @@ def test_apply_robots_prefix(spark):
         "url string, host string, priority int",
     )
     robots = spark.createDataFrame(
-        [("h1.test", "/a/20240104/")],
-        "host string, path_prefix string",
+        [("h1.test", "/a/20240104/", False)],
+        "host string, path_prefix string, allow boolean",
     )
     out = apply_robots(cand, robots).toPandas()
     assert set(out.url) == {
@@ -544,11 +544,9 @@ def test_schedule_with_global_cap_order_and_defers(spark):
 
 
 def test_crawl_rfc9309_mode_allow_reopens(spark):
-    """robots_mode='rfc9309': an Allow nested under a host-wide
-    Disallow re-opens exactly its subtree for DISCOVERED candidates
-    (seeds are exempt by construction in both modes), while the
-    conservative prefix mode blocks the whole host; an invalid mode
-    raises."""
+    """A default crawl (no robots_mode): an Allow nested under a
+    host-wide Disallow re-opens exactly its subtree for DISCOVERED
+    candidates (seeds are exempt by construction)."""
     pages = pages_from_documents(spark, SF_SMALL)
     seeds = seeds_df(spark, pages)
     budgets = budgets_df(spark)
@@ -560,27 +558,12 @@ def test_crawl_rfc9309_mode_allow_reopens(spark):
         "host string, path_prefix string, allow boolean",
     )
     res = crawl(
-        spark, pages, seeds, budgets, robots=rules,
-        rounds=CRAWL_ROUNDS, robots_mode="rfc9309",
-        collect_lineage=False,
+        spark, pages, seeds, budgets, robots=rules, rounds=CRAWL_ROUNDS,
     )
     got = res.fetched.select("url", "host", "round").toPandas()
     h1_discovered = got[(got.host == "h1.test") & (got["round"] > 0)]
     assert len(h1_discovered) > 0, "Allow subtree must be crawlable"
     assert all("/a/20240106/" in u for u in h1_discovered.url)
-
-    # conservative mode with the equivalent disallow blocks all of h1
-    res_prefix = crawl(
-        spark, pages, seeds, budgets,
-        robots=rules.filter("NOT allow").select("host", "path_prefix"),
-        rounds=CRAWL_ROUNDS, collect_lineage=False,
-    )
-    gp = res_prefix.fetched.select("url", "host", "round").toPandas()
-    assert len(gp[(gp.host == "h1.test") & (gp["round"] > 0)]) == 0
-
-    for mode in ("bogus", "rfc9309-wildcards"):
-        with pytest.raises(ValueError, match="robots_mode"):
-            crawl(spark, pages, seeds, budgets, robots_mode=mode)
 
 
 def test_ip_budgets_split_and_compose(spark):
@@ -739,8 +722,8 @@ def test_observation_lineage_matches_count_lineage(spark, tmp_path):
 
     pages = pages_from_documents(spark, SF_SMALL)
     robots = robots_df(spark).unionByName(spark.createDataFrame(
-        [("h2.test", "/")],
-        "host string, path_prefix string",
+        [("h2.test", "/", False)],
+        "host string, path_prefix string, allow boolean",
     ))
     ckpt = str(tmp_path / "ck")
     kw = dict(
@@ -794,7 +777,7 @@ def test_lineage_read_before_output_does_not_block(spark):
 
 
 def test_crawl_rfc9309_wildcards_mode(spark):
-    """robots_mode='rfc9309': a `*`-rule blocks discovered candidates
+    """A default crawl: a `*`-rule blocks discovered candidates
     across every day directory of the host, and a longer Allow
     re-opens its slice."""
     pages = pages_from_documents(spark, SF_SMALL)
@@ -811,14 +794,45 @@ def test_crawl_rfc9309_wildcards_mode(spark):
         "host string, path_prefix string, allow boolean",
     )
     res = crawl(
-        spark, pages, seeds, budgets, robots=rules,
-        rounds=CRAWL_ROUNDS, robots_mode="rfc9309",
-        collect_lineage=False,
+        spark, pages, seeds, budgets, robots=rules, rounds=CRAWL_ROUNDS,
     )
     got = res.fetched.select("url", "host", "round").toPandas()
     h1 = got[(got.host == "h1.test") & (got["round"] > 0)]
     blocked = [u for u in h1.url if "/0000001" in u and "/00000013" not in u]
     assert blocked == [], blocked
+
+
+def test_crawl_fetches_canonical_form_once(spark, tmp_path):
+    """A seed links to four non-canonical spellings of one page (a
+    #fragment, the default :80 port, an upper-case host, an unsorted
+    query). The crawl canonicalizes them to one URL: the page is
+    fetched exactly once, and the seen set holds only its canonical
+    form. Every spelling is also a page of the web, so a crawl that
+    skipped canonicalization would fetch each one."""
+    from news_combinator_spark.operators.frontier import load_checkpoint
+
+    seed, canon = "http://c0.test/", "http://c0.test/p?a=1&b=2"
+    spellings = [
+        "http://c0.test/p?a=1&b=2#frag",
+        "http://c0.test:80/p?a=1&b=2",
+        "http://C0.TEST/p?a=1&b=2",
+        "http://c0.test/p?b=2&a=1",
+    ]
+    html = "".join(f'<a href="{u}">x</a>' for u in spellings)
+    pages = spark.createDataFrame(
+        [(seed, "c0.test", 0, html)]
+        + [(u, "c0.test", 1, "") for u in [canon] + spellings],
+        "url string, host string, priority int, html string",
+    )
+    ckpt = str(tmp_path / "ck")
+    res = crawl(
+        spark, pages, pages.filter(F.col("url") == seed),
+        spark.createDataFrame([("c0.test", 10)], "host string, budget int"),
+        rounds=2, checkpoint_dir=ckpt,
+    )
+    assert sorted(r.url for r in res.fetched.collect()) == [seed, canon]
+    _, seen, _ = load_checkpoint(spark, ckpt, 1)
+    assert sorted(r.url for r in seen.collect()) == [seed, canon]
 
 
 def test_partitioned_global_rank_null_keys_match_row_number(spark):

@@ -109,15 +109,29 @@ def test_frontier_fetch_join_no_resort_of_web(spark):
 
 
 def test_robots_gating_is_broadcast(spark):
-    """robots rules are a tiny table: the gating join must broadcast
-    them, never shuffle the candidate set on the rule key."""
-    from news_combinator_spark.datagen import pages_from_documents, robots_df
+    """robots rules are a tiny table: the one gate broadcasts them and
+    picks each candidate's governing rule in the join output. With
+    Allow and `*` rules in play, the candidate set is read once and
+    never shuffled: no sort-merge join back to it and no per-url
+    aggregate."""
+    from news_combinator_spark.datagen import pages_from_documents
     from news_combinator_spark.operators.frontier import apply_robots
 
     pages = pages_from_documents(spark, SF_MED)
-    cand = pages.select("url", "host", "priority")
-    plan = _simple(apply_robots(cand, robots_df(spark)))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
+    cand = pages.select("url", "host", "priority").persist()
+    rules = spark.createDataFrame(
+        [("h1.test", "/a/", False), ("h1.test", "/a/20240106/", True),
+         ("h2.test", "/a/*/0000001", False)],
+        "host string, path_prefix string, allow boolean",
+    )
+    try:
+        plan = _simple(apply_robots(cand, rules))
+    finally:
+        cand.unpersist()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "SortAggregate" not in plan, plan
+    assert plan.count("InMemoryTableScan") == 1, plan
 
 
 # ---------------------------------------------------------------------------

@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 from news_combinator_spark.functions.robots import rules_from_robots_txt
 from news_combinator_spark.operators.frontier import apply_robots
 
-# No Allow lines (the parser drops them by documented deviation);
-# everything else a real file has: multi-UA groups, comments, blank
-# lines, empty Disallow, agent-specific groups, colon in a prefix.
+# No Allow lines (urllib.robotparser applies them first-match, not
+# RFC 9309 longest-match); everything else a real file has: multi-UA
+# groups, comments, blank lines, empty Disallow, agent-specific
+# groups, colon in a prefix.
 _TXT = """# robots for example host
 User-agent: fetchbot
 Disallow: /private
@@ -143,7 +144,8 @@ def test_apply_robots_is_scheme_independent(spark):
     http form (the gate matches host + path, never a scheme-qualified
     URL prefix)."""
     rules = spark.createDataFrame(
-        [("h9.test", "/secret")], "host string, path_prefix string"
+        [("h9.test", "/secret", False)],
+        "host string, path_prefix string, allow boolean",
     )
     cand = spark.createDataFrame(
         [
@@ -163,12 +165,6 @@ def test_longest_match_allow_reopens_subtree(spark):
     Disallow: /a/; a same-length Allow/Disallow pair ties to Allow;
     a URL matching no rule is allowed; a longer Disallow under an
     Allow closes it again (most-specific rule governs, any depth)."""
-    from news_combinator_spark.functions.robots import (
-        allow_disallow_rules,
-    )
-    from news_combinator_spark.operators.frontier import (
-        apply_robots_rfc9309,
-    )
 
     txt = (
         "User-agent: *\n"
@@ -181,7 +177,7 @@ def test_longest_match_allow_reopens_subtree(spark):
     robots = spark.createDataFrame(
         [("h.test", txt)], "host string, robots_txt string"
     )
-    rules = allow_disallow_rules(robots)
+    rules = rules_from_robots_txt(robots)
     cand = spark.createDataFrame(
         [
             ("http://h.test/a/x", "h.test", 0),          # blocked
@@ -193,7 +189,7 @@ def test_longest_match_allow_reopens_subtree(spark):
         ],
         "url string, host string, priority int",
     )
-    kept = set(apply_robots_rfc9309(cand, rules).toPandas().url)
+    kept = set(apply_robots(cand, rules).toPandas().url)
     assert kept == {
         "http://h.test/a/img/y",
         "http://h.test/tie/q",
@@ -202,13 +198,10 @@ def test_longest_match_allow_reopens_subtree(spark):
     }
 
 
-def test_allow_disallow_rules_drop_empty_values(spark):
+def test_rules_drop_empty_values(spark):
     """Empty Disallow (allow-all) and empty Allow (no-op) produce no
-    rules; both kinds parse from the matched agent group only."""
-    from news_combinator_spark.functions.robots import (
-        allow_disallow_rules,
-    )
-
+    rules; both kinds parse from the matched agent group only, Allow
+    lines as allow = true rows."""
     txt = (
         "User-agent: otherbot\nDisallow: /not-ours\n\n"
         "User-agent: *\nDisallow: /a\nAllow: /a/b\n"
@@ -219,7 +212,7 @@ def test_allow_disallow_rules_drop_empty_values(spark):
     )
     got = {
         (r.path_prefix, r.allow)
-        for r in allow_disallow_rules(robots).collect()
+        for r in rules_from_robots_txt(robots).collect()
     }
     assert got == {("/a", False), ("/a/b", True)}
 
@@ -263,12 +256,12 @@ def test_fuzz_disallow_only_parity_vs_urllib(spark):
     """Seeded fuzz: 40 random Disallow-only robots bodies (random
     agent groups, comments, spacing, blank lines, malformed lines,
     empty Disallows) x 12 probe paths each — the engine's parse +
-    prefix gate must agree with urllib.robotparser on every (body,
-    path). Allow-bearing bodies are excluded: urllib applies
-    first-match order semantics there, while the engine offers
-    conservative and RFC 9309 longest-match gates (both pinned by
-    their own tests), so Disallow-only is the shared-semantics core
-    where ANY disagreement is a real parser bug. One Spark job for
+    gate must agree with urllib.robotparser on every (body, path).
+    Allow-bearing bodies are excluded: urllib applies first-match
+    order semantics there, while the engine's gate is RFC 9309
+    longest-match (pinned by its own tests), so Disallow-only is the
+    shared-semantics core where ANY disagreement is a real parser
+    bug. One Spark job for
     the whole matrix."""
     import random
     import urllib.robotparser
@@ -353,29 +346,15 @@ def test_fuzz_disallow_only_parity_vs_urllib(spark):
 
 def test_bare_host_url_blocked_by_disallow_root(spark):
     """'http://h.test' (no path) is '/' under RFC 9309, so
-    'Disallow: /' blocks it — in both the conservative prefix gate and
-    the RFC 9309 longest-match gate (ADVICE r2: the old strip yielded '' and
+    'Disallow: /' blocks it (ADVICE r2: the old strip yielded '' and
     let it through)."""
-    from news_combinator_spark.operators.frontier import (
-        apply_robots,
-        apply_robots_rfc9309,
-    )
-
     cand = spark.createDataFrame(
         [("http://h.test", "h.test", 0), ("http://open.test", "open.test", 0)],
         "url string, host string, priority int",
     )
     rules = spark.createDataFrame(
-        [("h.test", "/")], "host string, path_prefix string"
-    )
-    kept = {r.url for r in apply_robots(cand, rules).collect()}
-    assert kept == {"http://open.test"}
-
-    lm_rules = spark.createDataFrame(
         [("h.test", "/", False)],
         "host string, path_prefix string, allow boolean",
     )
-    kept_lm = {
-        r.url for r in apply_robots_rfc9309(cand, lm_rules).collect()
-    }
-    assert kept_lm == {"http://open.test"}
+    kept = {r.url for r in apply_robots(cand, rules).collect()}
+    assert kept == {"http://open.test"}

@@ -60,11 +60,9 @@ def _cand(spark, paths, host="h.test"):
 
 
 def _kept(spark, rules, paths):
-    from news_combinator_spark.operators.frontier import (
-        apply_robots_rfc9309,
-    )
+    from news_combinator_spark.operators.frontier import apply_robots
 
-    out = apply_robots_rfc9309(_cand(spark, paths), _rules(spark, rules))
+    out = apply_robots(_cand(spark, paths), _rules(spark, rules))
     return {r.url.split(".test", 1)[1] for r in out.collect()}
 
 
