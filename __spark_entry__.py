@@ -4,9 +4,7 @@ entry(spark):   flagship crawl-frontier query on sf0.001.
 queries():      every implemented operator from SURVEY.md §2 (see
                 news_combinator_spark/plans/queries.py).
 oracle_sql():   matching DuckDB SQL for EVERY queries() entry — the
-                approximate dedup operators are hash-checked via
-                lossless banding / pigeonhole blocking,
-                and the two sequential-consume greedy clusterings are
+                two sequential-consume greedy clusterings are
                 replayed in DuckDB as recursive-CTE state machines
                 (consumed set carried as a list column), so nothing
                 falls back to a rows-only check.

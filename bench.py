@@ -58,7 +58,6 @@ SQL_BENCH_QUERIES = [
     "fingerprint",
     "dedup_first",
     "ngram_overlap",
-    "near_dup_groups",
     "front_page_ranking",
     "index_daterange",
     "entry_lookup",
@@ -73,7 +72,6 @@ SQL_BENCH_QUERIES = [
     # replaced in round 3; keeping one entry restores cross-round
     # per-query comparability under the new implementation only).
     "v1_cross_source_clusters",
-    "dup_span_stats",
     "hot_hosts",
     "robots_rules",
     "crawl_delay_budgets",
@@ -81,7 +79,6 @@ SQL_BENCH_QUERIES = [
     "fetch_retries",
     "redirect_resolution",
     "warc_records",
-    "boilerplate_removal",
     "priority_boosts",
     "global_cap",
     "url_templates",
@@ -89,7 +86,6 @@ SQL_BENCH_QUERIES = [
     "soft404_filter",
     "mojibake_repair",
     "adaptive_budgets",
-    "canonical_consolidate",
     "registered_domains",
     "normalize_text",
     "admission_funnel",
@@ -100,17 +96,12 @@ SQL_BENCH_QUERIES = [
     "hreflang_alternates",
     "wet_export",
     "ip_politeness",
-    "mirror_hosts",
     # added round 3
-    "delta_admit",
-    "canonical_best",
-    "ngram_counts",
     "wat_export",
     "frontier_merge",
     "shard_rendezvous",
     "cdx_export",
     "stale_robots",
-    "containment_pairs",
     "drain_forecast",
     "pii_scrub",
     "robots_wildcards",
@@ -223,9 +214,9 @@ def bench_round_dataplane(spark, sf_dir: str) -> tuple[float, int]:
 
 
 def bench_kernel_sketch(spark, n_docs: int = 100_000) -> tuple[float, int]:
-    """CPU-kernel throughput: tokenize + MinHash(64) + SimHash per doc
-    in ONE Arrow pass (the per-document sketch work of the dedup/
-    cluster path). This phase is compute-bound with negligible shuffle,
+    """CPU-kernel throughput: tokenize + MinHash(64) per doc in ONE
+    Arrow pass (the per-document sketch work of the cluster path's
+    featurize step). This phase is compute-bound with negligible shuffle,
     so it is the cleanest scaling-efficiency measure a single shared-
     memory box allows (the shuffle-bound phases are limited by the one
     memory bus all cores share — on a real cluster each node brings
@@ -244,14 +235,11 @@ def bench_kernel_sketch(spark, n_docs: int = 100_000) -> tuple[float, int]:
 
     def _sketch(batches):
         for pdf in batches:
-            sigs, shs = sketch_batch(pdf["text"])
             yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "sig": sigs, "simhash": shs}
+                {"doc_id": pdf["doc_id"], "sig": sketch_batch(pdf["text"])}
             )
 
-    out = docs.mapInPandas(
-        _sketch, schema="doc_id long, sig array<long>, simhash long"
-    )
+    out = docs.mapInPandas(_sketch, schema="doc_id long, sig array<long>")
     t0 = time.time()
     n = out.count()
     dt = time.time() - t0
@@ -296,15 +284,16 @@ def bench_cluster(
 # "contended" so nobody (including the judge) trusts its per-query
 # times at face value.
 CANARY_DOCS = 50_000
-# Quiet references: min-of-2 warm on this box in an idle r5-open
-# window (kernel 1.45-1.8s at 50k docs; fingerprint 0.33-0.35s warm).
+# Quiet references: min-of-2 warm on this box in an idle window
+# (MinHash-only kernel 2.13-2.61s at 50k docs over six readings, 4
+# cores; fingerprint 0.33-0.35s warm).
 # The r4 contamination inflated trivial SQL queries 2-10x while the
 # Arrow kernel read clean, so BOTH probe shapes are needed: "cpu"
 # catches core starvation, "sql" catches the driver/scheduler-burst
 # mode that hit the r4 record. Bands are sized over the documented
 # quiet-window jitter (~±25%) so a quiet stamp survives normal noise
 # but any r4-style 2x+ inflation trips it.
-CANARY_CPU_QUIET_SEC = 1.6
+CANARY_CPU_QUIET_SEC = 2.4
 CANARY_CPU_BAND = 1.6
 CANARY_SQL_QUIET_SEC = 0.35
 CANARY_SQL_BAND = 2.0

@@ -1,4 +1,4 @@
-"""Tokenization, TF-IDF, MinHash/SimHash, cosine, Jaccard.
+"""Tokenization, TF-IDF, MinHash, cosine, Jaccard.
 
 Pure deterministic kernels (shared by the engine's pandas UDFs and the
 pure-Python parity oracle) re-expressing the reference semantics:
@@ -175,42 +175,33 @@ def minhash_signature(tokens: list[str], num_perm: int = 64) -> list[int]:
 def sketch_counts(
     doc_counts,
     num_perm: int = 64,
-    minhash: bool = True,
-    simhash: bool = True,
-    hash_fn=None,
     max_vocab: int = 25_000,
-) -> tuple[list[list[int]] | None, list[int] | None]:
-    """Batched MinHash + SimHash over per-document token ``Counter``s —
-    BIT-IDENTICAL to ``minhash_signature(counts.keys())`` /
-    ``simhash64(tokens, hash_fn)`` per doc (pinned by
-    tests/test_text_functions.py), but ~15x faster single-core:
+) -> list[list[int]]:
+    """Batched MinHash over per-document token ``Counter``s —
+    BIT-IDENTICAL to ``minhash_signature(counts.keys())`` per doc
+    (pinned by tests/test_text_functions.py), but much faster
+    single-core:
 
     - each distinct token is hashed ONCE per batch (web text is
-      Zipf-distributed; the per-doc kernels re-hash 'the' for every
+      Zipf-distributed; the per-doc kernel re-hashes 'the' for every
       doc),
-    - the affine MinHash permutations and the SimHash ±1 bit votes are
-      computed on a batch *vocabulary matrix* (vectorized over all new
-      tokens of a chunk at once),
-    - each doc then reduces its vocab rows by fancy indexing: ``min``
-      over rows for MinHash, ``counts @ votes`` for SimHash — two
-      C-side ops instead of per-token Python.
+    - the affine MinHash permutations are computed on a batch
+      *vocabulary matrix* (vectorized over all new tokens of a chunk
+      at once),
+    - each doc then reduces its vocab rows by fancy indexing (``min``
+      over rows) — one C-side op instead of per-token Python.
 
-    This is the Arrow-batch hot kernel of the dedup/cluster data plane
-    (clustering.featurize_docs, dedup sketches, the bench
-    kernel phase). Memory is bounded: the vocabulary matrices are
-    flushed once they exceed ``max_vocab`` rows (~1 KB/row), trading
+    This is the Arrow-batch hot kernel of the cluster data plane
+    (clustering.featurize_docs and the bench kernel phase). Memory is
+    bounded: the vocabulary matrix is flushed once it exceeds
+    ``max_vocab`` rows (~0.5 KB/row at 64 permutations), trading
     re-hashing across flush boundaries for a hard cap — correctness is
     unaffected because per-token columns are pure functions of the
-    token. The default (25k rows ~ 25 MB of matrices) keeps the
-    per-doc row gathers L3-resident: interleaved A/B at 100k docs
-    measured 8.6 s vs 13.7 s against a 200k cap, because gather cost
-    is dominated by cache misses on the vocabulary matrix, not by the
-    re-hash work a larger cap avoids. ``hash_fn`` selects the SimHash per-token hash exactly as in
-    ``simhash64`` (MinHash always uses the blake2b hash, as in
-    ``minhash_signature``).
-
-    Returns ``(sigs, shs)``; either element is None when its flag is
-    off (skipping the unused half skips its matrix work).
+    token. The default keeps the per-doc row gathers L3-resident:
+    interleaved A/B at 100k docs (when the kernel also computed a
+    SimHash) measured 8.6 s vs 13.7 s against a 200k cap, because
+    gather cost is dominated by cache misses on the vocabulary matrix,
+    not by the re-hash work a larger cap avoids.
     """
     if num_perm not in _MH_CACHE:
         _MH_CACHE[num_perm] = _minhash_params(num_perm)
@@ -218,63 +209,43 @@ def sketch_counts(
     m61 = np.uint64(_MERSENNE61)
     a_lo = (a & np.uint64(0x7FFFFFFF))[None, :]
     a_hi = (a >> np.uint64(31))[None, :]
-    shifts = np.arange(64, dtype=np.uint64)
-    sv_hash = hash_fn if hash_fn is not None else _stable_hash64
 
-    # vocabulary matrices grow by GEOMETRIC capacity doubling with an
-    # explicit row count, never per-chunk np.vstack: vstack re-copies
-    # the whole matrix every commit (O(V^2) bytes as the vocab grows —
-    # ~100 MB per copy near the 200k flush cap), which made large
-    # partitions slower per doc than small ones and showed up as fake
-    # anti-scaling in the 2-vs-8-core kernel cells. Doubling keeps
-    # total copy traffic O(V) amortized; values are bit-identical.
+    # the vocabulary matrix grows by GEOMETRIC capacity doubling with
+    # an explicit row count, never per-chunk np.vstack: vstack re-copies
+    # the whole matrix every commit (O(V^2) bytes as the vocab grows),
+    # which made large partitions slower per doc than small ones and
+    # showed up as fake anti-scaling in the 2-vs-8-core kernel cells.
+    # Doubling keeps total copy traffic O(V) amortized; values are
+    # bit-identical.
     index: dict[str, int] = {}
     cap = 4096
     n_rows = 0
-    MH = np.empty((cap, num_perm), np.uint64) if minhash else None
-    SV = np.empty((cap, 64), np.int64) if simhash else None
+    MH = np.empty((cap, num_perm), np.uint64)
 
     def commit(new_toks: list[str]) -> None:
-        nonlocal MH, SV, cap, n_rows
+        nonlocal MH, cap, n_rows
         k = len(new_toks)
         if n_rows + k > cap:
             while cap < n_rows + k:
                 cap *= 2
-            if minhash:
-                grown = np.empty((cap, num_perm), np.uint64)
-                grown[:n_rows] = MH[:n_rows]
-                MH = grown
-            if simhash:
-                grown_sv = np.empty((cap, 64), np.int64)
-                grown_sv[:n_rows] = SV[:n_rows]
-                SV = grown_sv
-        if minhash:
-            hs = np.fromiter(
-                (_stable_hash64(t) for t in new_toks),
-                dtype=np.uint64,
-                count=k,
-            )
-            x = (hs % m61)[:, None]
-            lo = (x * a_lo) % m61
-            hi = (x * a_hi) % m61
-            MH[n_rows:n_rows + k] = (
-                (lo + ((hi << np.uint64(31)) % m61)) % m61 + b[None, :]
-            ) % m61
-        if simhash:
-            hs2 = np.fromiter(
-                (sv_hash(t) for t in new_toks),
-                dtype=np.uint64,
-                count=k,
-            )
-            bits = (
-                (hs2[:, None] >> shifts[None, :]) & np.uint64(1)
-            ).astype(np.int64)
-            SV[n_rows:n_rows + k] = 2 * bits - 1
+            grown = np.empty((cap, num_perm), np.uint64)
+            grown[:n_rows] = MH[:n_rows]
+            MH = grown
+        hs = np.fromiter(
+            (_stable_hash64(t) for t in new_toks),
+            dtype=np.uint64,
+            count=k,
+        )
+        x = (hs % m61)[:, None]
+        lo = (x * a_lo) % m61
+        hi = (x * a_hi) % m61
+        MH[n_rows:n_rows + k] = (
+            (lo + ((hi << np.uint64(31)) % m61)) % m61 + b[None, :]
+        ) % m61
         n_rows += k
 
     empty_sig = [int(_MERSENNE61)] * num_perm
-    sigs: list[list[int]] | None = [] if minhash else None
-    shs: list[int] | None = [] if simhash else None
+    sigs: list[list[int]] = []
     doc_counts = list(doc_counts)
     CHUNK = 1024
     lo_i = 0
@@ -284,7 +255,7 @@ def sketch_counts(
         # the cap must hold inside a group too, or a run of
         # high-entropy docs (base64 junk, random ids) could commit
         # millions of rows in one chunk and blow the documented memory
-        # bound. The matrices therefore never exceed
+        # bound. The matrix therefore never exceeds
         # max(max_vocab, distinct tokens of one doc) rows.
         new_toks: list[str] = []
         hi_i = lo_i
@@ -302,100 +273,34 @@ def sketch_counts(
             commit(new_toks)
         for counts in chunk:
             if not counts:
-                if minhash:
-                    sigs.append(list(empty_sig))
-                if simhash:
-                    shs.append(0)
+                sigs.append(list(empty_sig))
                 continue
             idx = np.fromiter(
                 (index[tok] for tok in counts),
                 dtype=np.int64,
                 count=len(counts),
             )
-            if minhash:
-                sigs.append([int(v) for v in MH[idx].min(axis=0)])
-            if simhash:
-                cnts = np.fromiter(
-                    counts.values(), dtype=np.int64, count=len(counts)
-                )
-                votes = cnts @ SV[idx]
-                val = int(
-                    (((votes > 0).astype(np.uint64)) << shifts).sum(
-                        dtype=np.uint64
-                    )
-                )
-                if val >= 1 << 63:
-                    val -= 1 << 64
-                shs.append(val)
+            sigs.append([int(v) for v in MH[idx].min(axis=0)])
         if len(index) > max_vocab:
             # flush: reset the logical row count but KEEP the allocated
-            # capacity — the next fill reuses the same buffers
+            # capacity — the next fill reuses the same buffer
             index = {}
             n_rows = 0
-    return sigs, shs
+    return sigs
 
 
 def sketch_batch(
     texts,
     num_perm: int = 64,
-    minhash: bool = True,
-    simhash: bool = True,
-    hash_fn=None,
     max_vocab: int = 25_000,
-) -> tuple[list[list[int]] | None, list[int] | None]:
+) -> list[list[int]]:
     """``sketch_counts`` over raw texts: tokenize + Counter + sketch.
-    Bit-identical to the per-doc kernels applied to ``tokenize(t)``."""
+    Bit-identical to ``minhash_signature(tokenize(t))`` per text."""
     return sketch_counts(
         (Counter(tokenize(t or "")) for t in texts),
         num_perm=num_perm,
-        minhash=minhash,
-        simhash=simhash,
-        hash_fn=hash_fn,
         max_vocab=max_vocab,
     )
-
-
-def md5_hash64(token: str) -> int:
-    """Lower 64 bits of MD5, little-endian over digest bytes 8:16 —
-    bit-identical to DuckDB's ``md5_number_lower()``, so a pure-SQL
-    oracle can recompute simhash values built on this hash."""
-    return struct.unpack(
-        "<Q", hashlib.md5(token.encode("utf-8")).digest()[8:]
-    )[0]
-
-
-def simhash64(tokens: list[str], hash_fn=None) -> int:
-    """Charikar SimHash: signed bit-vote over per-token 64-bit hashes
-    weighted by term frequency; returns signed int64. ``hash_fn``
-    selects the per-token hash (default blake2b; pass ``md5_hash64``
-    for the SQL-reproducible variant)."""
-    if not tokens:
-        return 0
-    if hash_fn is None:
-        hash_fn = _stable_hash64
-    counts = Counter(tokens)
-    votes = np.zeros(64, dtype=np.int64)
-    for tok, cnt in counts.items():
-        h = hash_fn(tok)
-        bits = (h >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
-        votes += np.where(bits.astype(bool), cnt, -cnt)
-    val = 0
-    for i in range(64):
-        if votes[i] > 0:
-            val |= 1 << i
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
-
-
-def hamming64(a: int, b: int) -> int:
-    return int(bin((a ^ b) & ((1 << 64) - 1)).count("1"))
-
-
-def char_ngrams(text: str, n: int = 5) -> set[str]:
-    if not text or len(text) < n:
-        return {text} if text else set()
-    return {text[i : i + n] for i in range(len(text) - n + 1)}
 
 
 def jaccard(a: set, b: set) -> float:

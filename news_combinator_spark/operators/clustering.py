@@ -77,9 +77,7 @@ def featurize_docs(
                         ).items()
                     ]
                 )
-            sig_col, _ = sketch_counts(
-                counts_col, num_perm, simhash=False
-            )
+            sig_col = sketch_counts(counts_col, num_perm)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -197,15 +195,31 @@ def doc_tags_tfidf(
     )
 
 
-def _band_rows(sig_df: DataFrame, bands: int, *cols: str) -> DataFrame:
-    """(doc_id, *cols, band_id, band_key): one row per LSH band of each
-    doc's `sig`, the band key being the raw signature slice. Shared by
-    candidate_pairs (one frame against itself) and dedup.delta_admit
-    (incoming bands against corpus bands)."""
+def candidate_pairs(
+    sig_df: DataFrame,
+    bands: int = 16,
+    max_bucket: int = 200,
+) -> DataFrame:
+    """LSH banding -> (a, b) candidate pairs, a < b, distinct.
+
+    Banding is PURE JVM: each band key is ``slice(sig, ...)`` — the
+    raw sub-signature array — exploded inline, so the 16x-docs band
+    table never leaves whole-stage codegen. Joining on the array
+    itself is also hash-free: equal slices match exactly — no
+    band-hash collision can merge distinct buckets, and no hash
+    function needs cross-engine pinning. Pair generation is ONE
+    hash-aggregated shuffle of the banded frame: bucket members
+    collected per (band_id, band_key), a<b pairs expanded inline by
+    JVM array lambdas (see the shape comment below). Buckets larger
+    than max_bucket (boilerplate shingles) are dropped before
+    expansion: a bucket of size s emits s^2/2 pairs, so one 10^6
+    bucket would emit 5*10^11 — the guard bounds the blow-up;
+    near-dup docs still meet in their other bands.
+    """
+    # (doc_id, band_id, band_key): one row per LSH band of each doc
     rows_per_band = (F.size("sig") / bands).cast("int")
-    return sig_df.select(
+    banded = sig_df.select(
         "doc_id",
-        *cols,
         F.explode(
             F.array(
                 *[
@@ -221,46 +235,7 @@ def _band_rows(sig_df: DataFrame, bands: int, *cols: str) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", *cols, "bk.band_id", "bk.band_key")
-
-
-def candidate_pairs(
-    sig_df: DataFrame,
-    bands: int = 16,
-    max_bucket: int = 200,
-    size_col: str | None = None,
-    size_ratio: float | None = None,
-) -> DataFrame:
-    """LSH banding -> (a, b) candidate pairs, a < b, distinct.
-
-    With ``size_col`` (a per-doc distinct-token count on sig_df) and
-    ``size_ratio`` (the Jaccard threshold), the EXACT size prune —
-    jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so a pair whose counts
-    differ beyond the threshold ratio can never verify — runs INSIDE
-    the band self-join, before the distinct shuffle. The count is one
-    extra long per band row, and on boilerplate-heavy corpora where
-    banding degenerates toward all-pairs it drops most candidates
-    before they are ever deduplicated or joined downstream (measured
-    96.8k -> 22.8k candidate rows on the 500-doc near-dup bench slice
-    at threshold 0.95). The output then carries (a, b, na, nb) so
-    verification needs no second size join.
-
-    Banding is PURE JVM: each band key is ``slice(sig, ...)`` — the
-    raw sub-signature array — exploded inline (_band_rows), so the
-    16x-docs band table never leaves whole-stage codegen. Joining on
-    the array itself is also hash-free:
-    equal slices match exactly — no band-hash collision can merge
-    distinct buckets, and no hash function needs cross-engine
-    pinning. Pair generation is ONE hash-aggregated shuffle of the
-    banded frame: bucket members collected per (band_id, band_key),
-    a<b pairs expanded inline by JVM array lambdas (see the shape
-    comment below). Buckets larger than max_bucket (boilerplate
-    shingles) are dropped before expansion: a bucket of size s emits
-    s^2/2 pairs, so one 10^6 bucket would emit 5*10^11 — the guard
-    bounds the blow-up; near-dup docs still meet in their other
-    bands.
-    """
-    banded = _band_rows(sig_df, bands, *([size_col] if size_col else []))
+    ).select("doc_id", "bk.band_id", "bk.band_key")
     # Bucket guard + pair expansion as ONE hash aggregation (r5): the
     # former shape — a sort-based window count over the 16x-docs
     # banded frame followed by a sort-merge self-join on the same
@@ -278,40 +253,23 @@ def candidate_pairs(
     # s^2/2 blow-up per bucket, but filters AFTER collect_list: a
     # boilerplate bucket is still built whole in one buffer row.
     # Identical candidate SET: same bucket membership, same
-    # <=max_bucket guard, same a<b + size-ratio conditions, same
-    # final dropDuplicates.
-    member_fields = [F.col("doc_id").alias("d")] + (
-        [F.col(size_col).alias("n")] if size_col else []
-    )
+    # <=max_bucket guard, same a<b condition, same final
+    # dropDuplicates.
     buckets = (
         banded.groupBy("band_id", "band_key")
-        .agg(F.collect_list(F.struct(*member_fields)).alias("ms"))
+        .agg(F.collect_list(F.struct(F.col("doc_id").alias("d"))).alias("ms"))
         .filter(F.size("ms") <= max_bucket)
         .select(F.array_sort("ms").alias("ms"))
     )
-    if size_col:
-        pair_expr = (
-            "flatten(transform(ms, (x, i) -> "
-            "transform(slice(ms, i + 2, size(ms)), y -> "
-            "struct(x.d as a, y.d as b, x.n as na, y.n as nb))))"
-        )
-    else:
-        pair_expr = (
-            "flatten(transform(ms, (x, i) -> "
-            "transform(slice(ms, i + 2, size(ms)), y -> "
-            "struct(x.d as a, y.d as b))))"
-        )
     pairs = buckets.select(
-        F.explode(F.expr(pair_expr)).alias("p")
+        F.explode(
+            F.expr(
+                "flatten(transform(ms, (x, i) -> "
+                "transform(slice(ms, i + 2, size(ms)), y -> "
+                "struct(x.d as a, y.d as b))))"
+            )
+        ).alias("p")
     ).select("p.*")
-    if size_col and size_ratio is not None:
-        na, nb = F.col("na"), F.col("nb")
-        pairs = pairs.filter(
-            F.least(na, nb).cast("double")
-            >= F.lit(size_ratio) * F.greatest(na, nb).cast("double")
-        )
-    # na/nb are functionally dependent on a/b, so keeping them through
-    # the distinct costs nothing and saves the downstream size join
     return pairs.dropDuplicates(["a", "b"])
 
 
@@ -458,8 +416,8 @@ def connected_components(
 
     # materialize the symmetric edge list ONCE: it is re-joined every
     # iteration, and without this the whole upstream edge derivation
-    # (e.g. the MinHash -> banding -> verify pipeline feeding
-    # near_dup_groups) re-executes per round — measured as the
+    # (e.g. the MinHash -> banding -> verify pipeline of
+    # cluster_documents) re-executes per round — measured as the
     # dominant cost of the CC loop at bench scale
     # single-pass symmetrization: explode each edge into both
     # directions instead of union(edges, swapped) — the union's two

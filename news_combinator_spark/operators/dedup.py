@@ -1,46 +1,17 @@
-"""Deduplication operators for large-scale training-data pipelines.
+"""Exact deduplication: the reference's keep-first policy.
 
 The reference deduplicates exactly (file-exists / UNIQUE keys,
-pipelines.py:19-23, reetsee_news.sql:15,33); a 100 TB corpus also
-needs near-dup families. All variants return a DataFrame and stay
-JVM-side where the semantics allow (exact paths are pure built-ins).
-
-- exact_dedup:        first row per content hash (groupBy/window)
-- exact_dup_groups:   hash -> members (the audit view of the above)
-- minhash_near_dups:  one Arrow sketch pass (MinHash signature +
-                      distinct tokens) -> clustering.candidate_pairs'
-                      JVM banding -> Jaccard verify in the JVM
-- delta_admit:        the same sketch pass per side, incoming band rows
-                      joined to corpus band rows on the signature slice
-                      -> Jaccard verify; admits incoming rows with no
-                      near-dup in the corpus
-- simhash_near_dups:  64-bit SimHash, Hamming <= radius via
-                      pigeonhole blocking over radius+1 disjoint
-                      blocks (lossless: a pair within radius agrees
-                      on at least one block)
-- ngram_jaccard_pairs: character n-gram Jaccard for candidate pairs
-- near_dup_groups / dedup_keep_canonical: pairs -> connected
-                      components -> min-id canonical keep-one
-- duplicated_spans / dup_span_stats: substring-level dedup via hashed
-                      fixed token windows (Lee et al. 2022)
+pipelines.py:19-23, reetsee_news.sql:15,33): a page whose content was
+already stored is skipped. `exact_dedup` keeps the first row (lowest
+key) per content hash, in pure built-ins. Near-duplicate news is the
+cluster path's job (operators/clustering.py: MinHash-LSH candidates,
+exact cosine verify).
 """
 
 from __future__ import annotations
 
-from collections import Counter
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..functions.textfns import (
-    char_ngrams,
-    jaccard,
-    sketch_batch,
-    sketch_counts,
-    tokenize,
-)
-from .clustering import _band_rows, candidate_pairs
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", key_cols=None) -> DataFrame:
@@ -53,839 +24,4 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_cols=None) -> DataFra
         with_hash.withColumn("rn", F.row_number().over(w))
         .filter("rn = 1")
         .drop("rn")
-    )
-
-
-def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(content_hash, n_copies, member doc_ids sorted) for hashes with
-    more than one row."""
-    return (
-        df.withColumn("content_hash", F.sha2(F.col(text_col), 256))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
-        )
-        .filter("n_copies > 1")
-    )
-
-
-def _sketch(df: DataFrame, text_col: str, num_perm: int) -> DataFrame:
-    """(doc_id, sig, toks, n): ONE Arrow pass per doc yields its MinHash
-    signature, its distinct tokens and their count. Banding reads
-    (sig, n), exact verify reads (toks, n), so a caller that persists
-    this frame tokenizes each doc once."""
-
-    def _sig(batches):
-        for pdf in batches:
-            counters = [Counter(tokenize(t or "")) for t in pdf[text_col]]
-            sig_col, _ = sketch_counts(counters, num_perm, simhash=False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sig": sig_col,
-                    "toks": [list(c.keys()) for c in counters],
-                    "n": [len(c) for c in counters],
-                }
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(
-        _sig, schema="doc_id long, sig array<long>, toks array<string>, n long"
-    )
-
-
-def minhash_near_dups(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    max_bucket: int = 200,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    """(a, b, jaccard_sim) pairs with token-set Jaccard >= threshold.
-    LSH candidates then exact verify — never a full cross join.
-
-    ``max_bucket`` forwards to the banding guard: buckets larger than
-    it are dropped before the self-join (bounds the s^2/2 blow-up on
-    boilerplate shingles). Set it >= the corpus row count to make the
-    banding lossless — with 16 bands of 4 rows the per-pair miss
-    probability at jaccard s is (1-s^4)^16, ~1e-12 at s=0.95, so the
-    lossless-guard output equals brute force in practice (pinned by
-    the driver's DuckDB oracle and tests/test_dedup.py).
-
-    One Python pass, JVM verify: the sig kernel tokenizes once and
-    emits the distinct-token array NEXT TO the signature, so exact
-    verification is whole-stage-codegen set algebra
-    (array_intersect/array_union) over the candidate join — no second
-    Arrow round-trip shipping full texts to Python per candidate pair
-    (the previous shape; at 96k candidates over 500 docs the Python
-    verify pass plus its per-pair text fan-out dominated the query).
-    jaccard(∅, ∅) = 1.0 replicates functions.textfns.jaccard."""
-    # persist: the sig/token frame feeds THREE subplans of the one
-    # final plan (banding + both sides of the candidate join); Spark
-    # has no common-subexpression reuse across joins, so uncached the
-    # Arrow tokenize+sketch pass would run three times. persist (not
-    # localCheckpoint) keeps lineage for executor-loss recompute.
-    # Callers that loop (rolling admission, repeated clustering in one
-    # session) pass cache_registry and unpersist after materializing
-    # the result; otherwise the block lives until the Python object is
-    # GC'd (fine for one-shot queries, a leak in a loop).
-    sigs = _sketch(df, text_col, num_perm).persist()
-    if cache_registry is not None:
-        cache_registry.append(sigs)
-    # EXACT size prune INSIDE the band self-join (see candidate_pairs:
-    # jaccard(A,B) <= min/max over the distinct-token counts, so pairs
-    # beyond the threshold ratio drop before the distinct shuffle) —
-    # the counts ride the band rows as one extra long, the separate
-    # size joins are gone, and |A ∪ B| = |A| + |B| - |A ∩ B| below
-    # replaces array_union with arithmetic over the carried na/nb.
-    cand = candidate_pairs(
-        sigs.select("doc_id", "sig", "n"),
-        bands,
-        max_bucket=max_bucket,
-        size_col="n",
-        size_ratio=threshold,
-    )
-    na, nb = F.col("na"), F.col("nb")
-    joined = (
-        cand.join(
-            sigs.select(
-                F.col("doc_id").alias("a"), F.col("toks").alias("a_toks")
-            ),
-            "a",
-        ).join(
-            sigs.select(
-                F.col("doc_id").alias("b"), F.col("toks").alias("b_toks")
-            ),
-            "b",
-        )
-    )
-    inter = F.size(F.array_intersect("a_toks", "b_toks"))
-    uni = na + nb - inter
-    return joined.select(
-        "a",
-        "b",
-        F.when(uni == 0, F.lit(1.0))
-        .otherwise(inter.cast("double") / uni)
-        .alias("jaccard_sim"),
-    ).filter(F.col("jaccard_sim") >= threshold)
-
-
-def simhash_df(
-    df: DataFrame, text_col: str = "text", hash_fn=None
-) -> DataFrame:
-    def _sh(batches):
-        for pdf in batches:
-            _, sh_col = sketch_batch(
-                pdf[text_col], minhash=False, hash_fn=hash_fn
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "simhash": sh_col}
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(
-        _sh, schema="doc_id long, simhash long"
-    )
-
-
-def simhash_near_dups(
-    df: DataFrame, text_col: str = "text", radius: int = 3, hash_fn=None
-) -> DataFrame:
-    """(a, b, hamming) with Hamming(simhash_a, simhash_b) <= radius.
-
-    Pigeonhole blocking: split 64 bits into radius+1 blocks; any pair
-    within `radius` agrees on >=1 block -> groupBy(block_id, block
-    value) generates candidates, exact popcount verifies. All JVM-side
-    bit arithmetic (shiftright / xor / bit_count). Unlike LSH banding
-    this blocking is LOSSLESS by construction (pigeonhole over disjoint
-    blocks), so the output is exactly the hamming-radius pair set.
-    ``hash_fn`` forwards to simhash64 (md5_hash64 makes the sketch
-    SQL-reproducible for oracle checks).
-    """
-    sh = simhash_df(df, text_col, hash_fn)
-    n_blocks = radius + 1
-    width = 64 // n_blocks
-    blocks = None
-    for i in range(n_blocks):
-        piece = sh.select(
-            "doc_id",
-            "simhash",
-            F.lit(i).alias("block_id"),
-            (
-                F.shiftright(F.col("simhash"), i * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-            ).alias("block_val"),
-        )
-        blocks = piece if blocks is None else blocks.union(piece)
-
-    left = blocks.select(
-        "block_id",
-        "block_val",
-        F.col("doc_id").alias("a"),
-        F.col("simhash").alias("sh_a"),
-    )
-    right = blocks.select(
-        "block_id",
-        "block_val",
-        F.col("doc_id").alias("b"),
-        F.col("simhash").alias("sh_b"),
-    )
-    cands = (
-        left.join(right, ["block_id", "block_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sh_a", "sh_b")
-        .dropDuplicates(["a", "b"])
-    )
-    return cands.withColumn(
-        "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    ).filter(F.col("hamming") <= radius).select("a", "b", "hamming")
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
-    """Character n-gram Jaccard for given (a, b) pairs."""
-    joined = (
-        pairs.join(
-            df.select(F.col("doc_id").alias("a"), F.col(text_col).alias("ta")),
-            "a",
-        ).join(
-            df.select(F.col("doc_id").alias("b"), F.col(text_col).alias("tb")),
-            "b",
-        )
-    )
-
-    def _jac(batches):
-        for pdf in batches:
-            sims = [
-                jaccard(char_ngrams(x or "", n), char_ngrams(y or "", n))
-                for x, y in zip(pdf["ta"], pdf["tb"])
-            ]
-            out = pdf[["a", "b"]].copy()
-            out["ngram_jaccard"] = sims
-            yield out
-
-    return joined.mapInPandas(
-        _jac, schema="a long, b long, ngram_jaccard double"
-    )
-
-
-def near_dup_groups(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    pairs: DataFrame | None = None,
-    max_iter: int = 20,
-    max_bucket: int = 200,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    """Resolve near-dup PAIRS into dedup GROUPS: (doc_id, canonical,
-    is_canonical) for every input row.
-
-    The pairwise view (minhash_near_dups) is not what a training-data
-    pipeline consumes — it needs one keep/drop decision per document.
-    Pairs are closed under transitivity with connected components
-    (iterative hash-min, same machinery as the news clusterer), and the
-    minimum doc_id of each component is the canonical survivor — a
-    deterministic rule that matches the reference's keep-first dedup
-    (pipelines.py:19-23: first writer wins).
-
-    Rows that belong to no near-dup pair are their own canonical. Pass
-    `pairs` to reuse precomputed (a, b) edges. `max_iter` bounds the
-    component-resolution rounds (= max hop distance to a component's
-    minimum id); connected_components warns if it is hit, since an
-    under-converged chain would leave multiple 'canonical' survivors.
-    """
-    from .clustering import connected_components
-
-    if pairs is None:
-        pairs = minhash_near_dups(
-            df, text_col, threshold, num_perm, bands,
-            max_bucket=max_bucket, cache_registry=cache_registry,
-        )
-    comps = connected_components(pairs.select("a", "b"), max_iter=max_iter)
-    return (
-        df.select("doc_id")
-        .join(comps, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("canonical"),
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("canonical"))
-    )
-
-
-def dedup_keep_canonical(
-    df: DataFrame,
-    groups: DataFrame | None = None,
-    **near_dup_kwargs,
-) -> DataFrame:
-    """The corpus after near-dup removal: canonical rows only.
-    Semi-join against the group table — no wide row ever shuffles."""
-    if groups is None:
-        groups = near_dup_groups(df, **near_dup_kwargs)
-    keep = groups.filter("is_canonical").select("doc_id")
-    return df.join(keep, "doc_id", "left_semi")
-
-
-def keep_best_in_groups(
-    df: DataFrame,
-    score_col: str,
-    groups: DataFrame | None = None,
-    **near_dup_kwargs,
-) -> DataFrame:
-    """Quality-aware canonical selection: (doc_id, canonical,
-    is_canonical) where each near-dup component's survivor is the
-    member with the HIGHEST ``score_col`` (ties -> lowest doc_id),
-    instead of near_dup_groups' blind min-id rule.
-
-    At training-data scale the min-id survivor is often the worst copy
-    (a truncated syndication of the full article); picking the argmax
-    of a quality score keeps the best text while dropping the same
-    duplicates. One groupBy per component with a max-of-struct
-    aggregate — map-side combined, no window, no skew beyond component
-    size (already bounded by the banding guard upstream)."""
-    if groups is None:
-        groups = near_dup_groups(df, **near_dup_kwargs)
-    scored = groups.join(df.select("doc_id", score_col), "doc_id")
-    # argmax(score, tie -> min doc_id) as max(struct(score, -doc_id))
-    best = (
-        scored.groupBy(F.col("canonical").alias("component"))
-        .agg(
-            F.max(
-                F.struct(
-                    F.col(score_col).alias("s"),
-                    (-F.col("doc_id")).alias("neg_id"),
-                )
-            ).alias("m")
-        )
-        .select("component", (-F.col("m.neg_id")).alias("best_id"))
-    )
-    return (
-        groups.join(best, groups["canonical"] == best["component"])
-        .select(
-            "doc_id",
-            F.col("best_id").alias("canonical"),
-            (F.col("doc_id") == F.col("best_id")).alias("is_canonical"),
-        )
-    )
-
-
-def delta_admit(
-    corpus: DataFrame,
-    incoming: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    max_bucket: int = 200,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    """Incremental near-dup admission: the INCOMING rows that have no
-    near-duplicate (token Jaccard >= threshold) in the existing
-    CORPUS. Returns incoming's rows unchanged, filtered.
-
-    This is the form dedup takes on a ROLLING corpus: each crawl round
-    delivers a delta that must be checked against everything already
-    admitted, without re-clustering the corpus. Both sides are
-    MinHash-banded with candidate_pairs' band rows (the key is the
-    raw signature slice); candidates come from an equi-join of
-    incoming bands against corpus bands on (band_id, band_key) — cost
-    O(|delta| + matching buckets), never O(|corpus|^2) and never a
-    rescan of corpus content. Each side is one persisted Arrow sketch
-    pass feeding both its band rows and its verify join. At
-    production scale the corpus band table is computed once and
-    persisted (bucketed by (band_id, band_key)), so each round
-    shuffles only the delta; here both sides derive from DataFrames so
-    the whole flow stays hash-checkable against a brute-force NOT
-    EXISTS oracle (lossless banding at oracle scale, same argument as
-    minhash_near_dups).
-
-    Intra-delta duplicates are NOT resolved here — compose with
-    near_dup_groups/keep_best_in_groups on the admitted batch. The
-    ``max_bucket`` guard drops corpus boilerplate buckets before the
-    join, the same s^2/2 bound as candidate_pairs."""
-    # persist both sketch frames: each feeds TWO subplans (its band
-    # rows and its side of the verify join); uncached the Arrow pass
-    # would re-run once per subplan. The documented rolling loop calls
-    # this once per batch — without a release hook every round would
-    # pin two more cached frames until Python GC. Pass cache_registry
-    # and unpersist after materializing the round's result.
-    inc = _sketch(incoming, text_col, num_perm).persist()
-    cor = _sketch(corpus, text_col, num_perm).persist()
-    if cache_registry is not None:
-        cache_registry.extend((inc, cor))
-    w_bucket = Window.partitionBy("band_id", "band_key")
-    cor_bands = (
-        _band_rows(cor, bands, "n")
-        .withColumn("bucket_n", F.count("*").over(w_bucket))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
-    # EXACT size prune (same law as minhash_near_dups): set-jaccard
-    # <= min(|A|,|B|)/max(|A|,|B|) over DISTINCT token counts. The
-    # counts ride the band rows (one long per row), so the prune runs
-    # INSIDE the inc x cor band join — before the distinct shuffle —
-    # and needs no separate size joins.
-    na, nb = F.col("na"), F.col("nb")
-    cand = (
-        _band_rows(inc, bands, "n")
-        .select(
-            "band_id", "band_key",
-            F.col("doc_id").alias("a"), F.col("n").alias("na"),
-        )
-        .join(
-            cor_bands.select(
-                "band_id", "band_key",
-                F.col("doc_id").alias("b"), F.col("n").alias("nb"),
-            ),
-            ["band_id", "band_key"],
-        )
-        .filter(
-            F.least(na, nb).cast("double")
-            >= F.lit(threshold) * F.greatest(na, nb).cast("double")
-        )
-        .select("a", "b", "na", "nb")
-        .dropDuplicates(["a", "b"])
-    )
-    joined = cand.join(
-        inc.select(F.col("doc_id").alias("a"), F.col("toks").alias("a_toks")),
-        "a",
-    ).join(
-        cor.select(F.col("doc_id").alias("b"), F.col("toks").alias("b_toks")),
-        "b",
-    )
-    # exact verify in whole-stage codegen over the distinct-token
-    # arrays, |A ∪ B| = |A| + |B| - |A ∩ B| as in minhash_near_dups;
-    # jaccard(∅, ∅) = 1.0 replicates functions.textfns.jaccard.
-    inter = F.size(F.array_intersect("a_toks", "b_toks"))
-    uni = na + nb - inter
-    dup_ids = (
-        joined.select(
-            "a",
-            F.when(uni == 0, F.lit(1.0))
-            .otherwise(inter.cast("double") / uni)
-            .alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select(F.col("a").alias("doc_id"))
-        .distinct()
-    )
-    return incoming.join(dup_ids, "doc_id", "left_anti")
-
-
-def _span_sites(df: DataFrame, text_col: str, window: int) -> DataFrame:
-    """(doc_id, pos, span_hash): one row per length-``window``
-    whitespace-token run, hashed. Shared by ``duplicated_spans`` and
-    ``dup_span_stats`` so the tokenizer / slice bounds / hash cannot
-    drift between the site list and the per-doc stats."""
-    toks = df.select(
-        "doc_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("toks")
-    )
-    span_hashes = f"""
-        CASE WHEN size(toks) >= {window}
-             THEN transform(
-                    sequence(0, size(toks) - {window}),
-                    i -> xxhash64(concat_ws(' ', slice(toks, i + 1, {window}))))
-             ELSE CAST(array() AS array<bigint>)
-        END
-    """
-    return toks.select(
-        "doc_id", F.posexplode(F.expr(span_hashes)).alias("pos", "span_hash")
-    )
-
-
-def ngram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 5,
-    min_count: int = 3,
-) -> DataFrame:
-    """Corpus-wide token n-gram counts: (gram, n_occurrences) for
-    every whitespace-token n-gram appearing at least ``min_count``
-    times anywhere in the corpus.
-
-    The n-gram index behind decontamination sweeps and repeated-
-    boilerplate mining, and the textbook map-side-combine shape: the
-    exploded gram stream never materializes — partial aggregation
-    collapses within-partition repeats before the single shuffle, so
-    shuffle volume is O(distinct grams per partition), not O(total
-    grams). Same slice machinery as duplicated_spans but carrying the
-    gram STRINGS (this is the inventory view; the span view carries
-    hashes + positions)."""
-    toks = df.select(
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("toks")
-    )
-    grams = f"""
-        CASE WHEN size(toks) >= {n}
-             THEN transform(
-                    sequence(0, size(toks) - {n}),
-                    i -> concat_ws(' ', slice(toks, i + 1, {n})))
-             ELSE CAST(array() AS array<string>)
-        END
-    """
-    return (
-        toks.select(F.explode(F.expr(grams)).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .filter(F.col("n_occurrences") >= min_count)
-    )
-
-
-def duplicated_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 8,
-    min_occurrences: int = 2,
-) -> DataFrame:
-    """Substring-level dedup signal: every length-``window`` token run
-    is hashed, and a run whose hash occurs at >= ``min_occurrences``
-    (doc, pos) sites — within or across documents — marks each site as
-    a duplicated span. Returns (doc_id, pos, span_hash, n_sites).
-
-    This is the Spark-first re-expression of suffix-array duplicate-
-    substring detection for training corpora (Lee et al. 2022,
-    "Deduplicating Training Data Makes Language Models Better"): fixed
-    token windows instead of maximal repeats, which bounds state to one
-    64-bit hash per token position and keeps everything JVM-side —
-    split / sequence / slice / concat_ws / xxhash64 inside whole-stage
-    codegen, one groupBy(span_hash) shuffle of narrow rows, and a hash
-    join back to sites. No Python touches the hot path. A maximal
-    repeat of length L >= window is detected at every covered position,
-    so spans recoverable by merging adjacent flagged positions."""
-    sites = _span_sites(df, text_col, window)
-    dup_counts = (
-        sites.groupBy("span_hash")
-        .agg(F.count("*").alias("n_sites"))
-        .filter(F.col("n_sites") >= min_occurrences)
-    )
-    return sites.join(dup_counts, "span_hash").select(
-        "doc_id", "pos", "span_hash", "n_sites"
-    )
-
-
-def dup_span_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 8,
-    min_occurrences: int = 2,
-) -> DataFrame:
-    """Per-document duplicated-span fraction: (doc_id, n_windows,
-    n_dup_windows, dup_frac). The curation consumer of
-    ``duplicated_spans`` — docs whose windows are mostly shared with
-    the rest of the corpus are boilerplate/templates to drop or trim.
-    Documents with fewer than ``window`` tokens have no windows and are
-    excluded (no signal either way)."""
-    sites = _span_sites(df, text_col, window)
-    dup_counts = (
-        sites.groupBy("span_hash")
-        .agg(F.count("*").alias("n_sites"))
-        .filter(F.col("n_sites") >= min_occurrences)
-        .select("span_hash")
-    )
-    flagged = sites.join(
-        dup_counts.withColumn("is_dup", F.lit(1)), "span_hash", "left"
-    )
-    return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_windows"),
-            F.count("is_dup").alias("n_dup_windows"),
-        )
-        .withColumn(
-            "dup_frac",
-            F.round(F.col("n_dup_windows") / F.col("n_windows"), 4),
-        )
-    )
-
-
-def host_boilerplate_lines(
-    df: DataFrame,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = r"\|",
-    min_frac: float = 0.5,
-) -> DataFrame:
-    """Host-scoped boilerplate detection: a line (text split on the
-    ``sep`` regex) is boilerplate for a host when it occurs in more
-    than ``min_frac`` of that host's documents — navigation chrome,
-    cookie banners, footer terms: the text that survives per-document
-    dedup because every PAGE of a site repeats it, not every copy of
-    a story (CCNet removes such lines by within-shard paragraph-hash
-    frequency; this is the host-keyed variant a crawl layout makes
-    natural). Returns (host, line).
-
-    Scale shape: two map-side-combined aggregations — per-(host,
-    line) distinct-doc counts and per-host doc counts — joined on
-    host. Lines shuffle as narrow (host, line, id) rows; no windows.
-    """
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), sep)).alias("line"),
-    ).filter(F.length("line") > 0)
-    per_line = lines.groupBy("host", "line").agg(
-        F.countDistinct("id").alias("n_docs_with")
-    )
-    per_host = df.groupBy(F.col(host_col).alias("host")).agg(
-        F.countDistinct(F.col(id_col)).alias("n_docs")
-    )
-    return (
-        per_line.join(per_host, "host")
-        .filter(F.col("n_docs_with") / F.col("n_docs") > min_frac)
-        .select("host", "line")
-    )
-
-
-def remove_boilerplate(
-    df: DataFrame,
-    boiler: DataFrame | None = None,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = r"\|",
-    join_sep: str = "|",
-    min_frac: float = 0.5,
-) -> DataFrame:
-    """Strip each document's host-boilerplate lines and reassemble the
-    survivors in document order: (id, host, clean_text, n_lines,
-    n_removed).
-
-    ``boiler`` defaults to ``host_boilerplate_lines`` over the same
-    frame. Documents whose every line is boilerplate are dropped —
-    they carry no content (the curation consumer counts them via the
-    input-output id difference). Reassembly is collect_list of
-    (pos, line) structs sorted in-array — per-document state, never a
-    window over the corpus.
-    """
-    if boiler is None:
-        boiler = host_boilerplate_lines(
-            df, host_col, id_col, text_col, sep, min_frac
-        )
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
-    ).filter(F.length("line") > 0)
-    kept = lines.join(boiler, ["host", "line"], "left_anti")
-    totals = lines.groupBy("id").agg(F.count(F.lit(1)).alias("n_lines"))
-    out = (
-        kept.groupBy("id", "host")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "line"))
-                    ),
-                    lambda s: s.line,
-                ),
-                join_sep,
-            ).alias("clean_text"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    )
-    return out.join(totals, "id").select(
-        F.col("id").alias(id_col),
-        F.col("host").alias(host_col),
-        "clean_text",
-        "n_lines",
-        (F.col("n_lines") - F.col("n_kept")).alias("n_removed"),
-    )
-
-
-def canonical_consolidate(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html_str",
-) -> DataFrame:
-    """Collapse pages that declare the same ``rel=canonical`` target
-    into one row per canonical URL (the CC-pipeline counterpart of
-    exact URL dedup: mirrors/print-views/tracking variants all point
-    at one canonical, so they are duplicates BEFORE any text
-    comparison).
-
-    Per canonical group, the kept row is the canonical page itself
-    when present, else the lexicographically smallest member URL
-    (deterministic). Returns (canonical_url, kept_url, n_variants).
-
-    Scale shape: the canonical target is a per-row JVM regex
-    (functions/urls.canonical_href); consolidation is ONE map-side-
-    combined groupBy on canonical_url — same shuffle key downstream
-    exact dedup would use, no window, no self-join.
-    """
-    from ..functions.urls import canonical_href
-
-    eff = F.coalesce(canonical_href(html_col), F.col(url_col))
-    tagged = pages.select(
-        F.col(url_col).alias("url"), eff.alias("canonical_url")
-    )
-    # composite min-key: canonical page sorts before all variants
-    key = F.concat(
-        F.when(F.col("url") == F.col("canonical_url"), F.lit("0"))
-        .otherwise(F.lit("1")),
-        F.col("url"),
-    )
-    return tagged.groupBy("canonical_url").agg(
-        F.min_by("url", key).alias("kept_url"),
-        F.count(F.lit(1)).alias("n_variants"),
-    )
-
-
-def mirror_hosts(
-    fps: DataFrame,
-    threshold: float = 0.5,
-    host_col: str = "host",
-    fp_col: str = "fp",
-    max_hosts_per_fp: int = 64,
-) -> DataFrame:
-    """Host pairs serving largely the same CONTENT — mirrors a crawl
-    should collapse onto one member (and training dedup would
-    otherwise rediscover document by document). Input: one row per
-    (host, content fingerprint); output: (host_a, host_b, n_shared,
-    jaccard) for pairs whose fingerprint-set Jaccard >= threshold,
-    host_a < host_b.
-
-    Scale shape: the only join is fp = fp (content-blocked — a pair
-    of hosts meets once per SHARED document, so a true mirror costs
-    its shared-doc count and unrelated hosts cost ~0), followed by
-    map-side-combined counts; there is never an all-pairs host
-    comparison, and per-host set sizes come from one aggregate.
-
-    `max_hosts_per_fp` is the bucket-size guard this join needs at
-    web scale (same class as candidate_pairs' LSH guard): one
-    boilerplate fingerprint shared by 10^4 hosts would alone emit
-    ~10^8 pairs. A fp on more hosts than the cap is boilerplate, not
-    mirror evidence, and is dropped BEFORE the self-join AND before
-    the size aggregate, so the Jaccard denominator stays consistent
-    with the numerator."""
-    f = fps.select(
-        F.col(host_col).alias("host"), F.col(fp_col).alias("fp")
-    ).distinct()
-    if max_hosts_per_fp > 0:
-        freq = f.groupBy("fp").agg(F.count(F.lit(1)).alias("_nf"))
-        f = (
-            f.join(freq.filter(F.col("_nf") <= max_hosts_per_fp), "fp")
-            .drop("_nf")
-        )
-    sizes = f.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
-    shared = (
-        f.alias("a")
-        .join(f.alias("b"),
-              (F.col("a.fp") == F.col("b.fp"))
-              & (F.col("a.host") < F.col("b.host")))
-        .groupBy(
-            F.col("a.host").alias("host_a"),
-            F.col("b.host").alias("host_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.withColumnRenamed("host", "host_a").withColumnRenamed("n", "na")
-    sb = sizes.withColumnRenamed("host", "host_b").withColumnRenamed("n", "nb")
-    jac = F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
-    # plain equi-joins: host cardinality at web scale is 10^7-10^8, so
-    # the per-host size frames must NOT be forced broadcast (VERDICT r2
-    # finding #2) — AQE picks broadcast itself when they're small
-    return (
-        shared.join(sa, "host_a")
-        .join(sb, "host_b")
-        .filter(jac >= F.lit(threshold))
-        .select(
-            "host_a", "host_b", "n_shared",
-            F.round(jac, 4).alias("jaccard"),
-        )
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    n: int = 3,
-    min_containment: float = 0.9,
-    max_df: int | None = None,
-) -> DataFrame:
-    """ASYMMETRIC near-duplicate detection: (a, b, n_common, c_a_in_b,
-    c_b_in_a) for document pairs where either containment — shared
-    word n-shingles over one side's shingle count,
-    C(A in B) = |S(A) ∩ S(B)| / |S(A)| — reaches ``min_containment``.
-
-    Symmetric resemblance (MinHash Jaccard) misses the syndication-
-    with-additions shape: a wire story embedded in a longer page has
-    C(wire in page) ~= 1 while Jaccard can sit far below any dedup
-    threshold (Broder 1997 distinguishes exactly these two measures).
-    Containment is what a training pipeline needs to drop the
-    SUBSUMED copy and keep the superset document.
-
-    Scale shape: shingles are built with JVM array expressions (no
-    Python), deduplicated per doc, and candidate pairs come from an
-    equi-join on the shingle — with ``max_df`` dropping shingles that
-    occur in more than that many documents BEFORE the join (the same
-    saturated-key guard as minhash banding's max_bucket: a boilerplate
-    shingle would otherwise produce a df^2/2 pair blow-up). Leaving
-    ``max_df`` None keeps the join lossless for oracle-scale inputs.
-    The exact intersection count then touches only candidate pairs'
-    shingle rows, and every aggregation is map-side combined.
-    """
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.expr("array()").cast("array<string>"))
-    sh = (
-        df.select(F.col(doc_col).alias("doc"), F.explode(grams).alias("sh"))
-        .dropDuplicates(["doc", "sh"])
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    shf = sh
-    if max_df is not None:
-        rare = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("sh")
-        )
-        shf = sh.join(rare, "sh", "semi")
-    cand = (
-        shf.alias("x")
-        .join(shf.alias("y"), "sh")
-        .filter(F.col("x.doc") < F.col("y.doc"))
-        .select(F.col("x.doc").alias("a"), F.col("y.doc").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    inter = (
-        cand.join(sh.select(F.col("doc").alias("a"), "sh"), "a")
-        .join(sh.select(F.col("doc").alias("b"), "sh"), ["b", "sh"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    scored = (
-        inter.join(
-            sizes.select(F.col("doc").alias("a"), F.col("n_sh").alias("n_a")),
-            "a",
-        )
-        .join(
-            sizes.select(F.col("doc").alias("b"), F.col("n_sh").alias("n_b")),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            "n_common",
-            F.round(F.col("n_common") / F.col("n_a"), 6).alias("c_a_in_b"),
-            F.round(F.col("n_common") / F.col("n_b"), 6).alias("c_b_in_a"),
-        )
-    )
-    return scored.filter(
-        F.greatest("c_a_in_b", "c_b_in_a") >= min_containment
     )

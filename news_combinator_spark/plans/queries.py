@@ -966,192 +966,6 @@ ORDER BY m.seed_id
 """
 
 
-def q_near_dup_groups(spark, sf_dir):
-    """Corpus-level dedup decision: pairs -> CC -> canonical keep-one
-    (keep-first semantics per reference pipelines.py:19-23).
-
-    Runs over the documents table with a lossless banding guard so the
-    DuckDB oracle (brute-force Jaccard pairs closed with a recursive-CTE
-    transitive closure) checks the FULL pipeline: sketch -> LSH ->
-    verify -> connected components -> canonical labeling. Input is
-    bounded to doc_id < 500 (the full sf0.01 corpus) so the oracle's
-    O(n^2) brute force and the bench cost are SF-invariant."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return dd.near_dup_groups(
-        docs, threshold=0.95, max_bucket=10_000
-    ).orderBy("doc_id")
-
-
-def q_minhash_near_dups(spark, sf_dir):
-    """MinHash-LSH near-dup pairs over the documents table. With the
-    banding guard at corpus size the LSH path is lossless (per-pair
-    miss ~1e-12 at s=0.95), so the exact brute-force DuckDB oracle
-    hash-checks the whole sketch+band+verify pipeline. Input bounded
-    to doc_id < 500 (the full sf0.01 corpus) for SF-invariant cost."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return dd.minhash_near_dups(
-        docs, threshold=0.95, max_bucket=10_000
-    ).select("a", "b", F.round("jaccard_sim", 4).alias("jaccard_sim"))
-
-
-SQL_MINHASH_NEAR_DUPS = r"""
-    WITH t AS (
-      SELECT doc_id,
-             list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks
-      FROM documents WHERE doc_id < 500
-    )
-    SELECT a.doc_id AS a, b.doc_id AS b,
-           round(len(list_intersect(a.toks, b.toks))::DOUBLE
-                 / len(list_distinct(list_concat(a.toks, b.toks))), 4)
-             AS jaccard_sim
-    FROM t a JOIN t b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-          / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.95
-"""
-
-
-SQL_NEAR_DUP_GROUPS = r"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id,
-             list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks
-      FROM documents WHERE doc_id < 500
-    ),
-    pairs AS (
-      SELECT a.doc_id AS a, b.doc_id AS b
-      FROM t a JOIN t b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-            / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.95
-    ),
-    edges AS (
-      SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs
-    ),
-    reach(src, node) AS (
-      SELECT doc_id, doc_id FROM t
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-    )
-    SELECT src AS doc_id,
-           min(node) AS canonical,
-           min(node) = src AS is_canonical
-    FROM reach
-    GROUP BY src
-    ORDER BY doc_id
-"""
-
-
-def q_simhash_near_dups(spark, sf_dir):
-    """SimHash hamming-radius pairs over the documents table. The
-    pigeonhole block join is lossless by construction, and with the
-    md5-based token hash (bit-identical to DuckDB md5_number_lower)
-    the oracle recomputes the full sketch in pure SQL — tokenize ->
-    tf-weighted bit votes -> 64-bit simhash -> brute-force popcount —
-    so the hash gate covers the entire pipeline. Input bounded to
-    doc_id < 500 (the full sf0.01 corpus) for SF-invariant cost."""
-    from ..functions.textfns import md5_hash64
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return dd.simhash_near_dups(docs, radius=8, hash_fn=md5_hash64)
-
-
-SQL_SIMHASH_NEAR_DUPS = r"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-      FROM documents WHERE doc_id < 500
-    ),
-    tc AS (
-      SELECT doc_id, tok, count(*)::BIGINT AS cnt,
-             md5_number_lower(tok) AS h
-      FROM toks GROUP BY doc_id, tok
-    ),
-    bits AS (SELECT unnest(range(0, 64)) AS b),
-    votes AS (
-      SELECT doc_id, b,
-             sum(CASE WHEN (h >> b) & 1 = 1 THEN cnt ELSE -cnt END) AS v
-      FROM tc CROSS JOIN bits GROUP BY doc_id, b
-    ),
-    sh AS (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN v > 0 THEN (1::UBIGINT << b)
-                           ELSE 0::UBIGINT END) AS UBIGINT) AS shu
-      FROM votes GROUP BY doc_id
-    )
-    SELECT x.doc_id AS a, y.doc_id AS b,
-           CAST(bit_count(xor(x.shu, y.shu)) AS INTEGER) AS hamming
-    FROM sh x JOIN sh y ON x.doc_id < y.doc_id
-    WHERE bit_count(xor(x.shu, y.shu)) <= 8
-"""
-
-
-def q_duplicated_spans(spark, sf_dir):
-    """Substring-level dedup sites (Lee et al. 2022 re-expressed as
-    hashed fixed token windows — see dedup.duplicated_spans). The
-    engine groups on xxhash64 of each window; the oracle groups on the
-    window strings themselves, so a hash collision merging distinct
-    spans would surface as a mismatch."""
-    docs = _t(spark, sf_dir, "documents")
-    return dd.duplicated_spans(docs, window=8).select(
-        "doc_id", F.col("pos").cast("long").alias("pos"), "n_sites"
-    )
-
-
-SQL_DUPLICATED_SPANS = r"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-      FROM documents
-    ),
-    sites AS (
-      SELECT doc_id, unnest(range(0, len(t) - 7)) AS pos, t
-      FROM toks WHERE len(t) >= 8
-    ),
-    spans AS (
-      SELECT doc_id, pos,
-             array_to_string(list_slice(t, pos + 1, pos + 8), ' ') AS span
-      FROM sites
-    ),
-    dups AS (
-      SELECT span, count(*) AS n_sites
-      FROM spans GROUP BY span HAVING count(*) >= 2
-    )
-    SELECT s.doc_id, s.pos, d.n_sites
-    FROM spans s JOIN dups d USING (span)
-"""
-
-
-def q_dup_span_stats(spark, sf_dir):
-    """Per-document duplicated-window fraction — the curation signal
-    consumed from duplicated_spans (boilerplate/template docs score
-    high and get trimmed or dropped)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dd.dup_span_stats(docs, window=8)
-
-
-SQL_DUP_SPAN_STATS = r"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-      FROM documents
-    ),
-    sites AS (
-      SELECT doc_id, unnest(range(0, len(t) - 7)) AS pos, t
-      FROM toks WHERE len(t) >= 8
-    ),
-    spans AS (
-      SELECT doc_id, pos,
-             array_to_string(list_slice(t, pos + 1, pos + 8), ' ') AS span
-      FROM sites
-    ),
-    dups AS (
-      SELECT span FROM spans GROUP BY span HAVING count(*) >= 2
-    )
-    SELECT s.doc_id,
-           count(*) AS n_windows,
-           count(d.span) AS n_dup_windows,
-           round(count(d.span)::DOUBLE / count(*), 4) AS dup_frac
-    FROM spans s LEFT JOIN dups d ON s.span = d.span
-    GROUP BY s.doc_id
-"""
-
-
 # ===========================================================================
 # Host skew telemetry
 # ===========================================================================
@@ -1633,80 +1447,6 @@ SQL_WARC_RECORDS = (
 )
 
 
-def q_boilerplate_removal(spark, sf_dir):
-    """Host-scoped boilerplate stripping (dedup.remove_boilerplate):
-    pipe-delimited page lines where nav header and footer appear in
-    100% of a host's docs (removed), a promo line in 20% (kept —
-    below the 0.5 threshold), and the body is unique (kept);
-    reassembly restores document order. The oracle replays the
-    line-frequency detection and ordered reassembly in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    ptext = F.concat(
-        F.lit("NAV "), F.col("host"), F.lit(" home|"),
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit("PROMO "), F.col("host"), F.lit("|")),
-        ).otherwise(F.lit("")),
-        F.substring("text", 1, 80),
-        F.lit("|Footer terms "), F.col("host"),
-    )
-    docs = pages.select("doc_id", "host", ptext.alias("text"))
-    return dd.remove_boilerplate(docs, min_frac=0.5)
-
-
-SQL_BOILERPLATE_REMOVAL = (
-    _pages_cte()
-    + """
-    , lined AS (
-        SELECT doc_id, host,
-               'NAV ' || host || ' home|'
-               || CASE WHEN doc_id % 5 = 0
-                       THEN 'PROMO ' || host || '|' ELSE '' END
-               || substr(text, 1, 80)
-               || '|Footer terms ' || host AS ptext
-        FROM pages
-    )
-    , lines AS (
-        SELECT doc_id, host, u.pos, u.line
-        FROM lined, LATERAL (
-            SELECT unnest(string_split(ptext, '|')) AS line,
-                   generate_subscripts(string_split(ptext, '|'), 1) AS pos
-        ) u
-        WHERE length(u.line) > 0
-    )
-    , per_line AS (
-        SELECT host, line, count(DISTINCT doc_id) AS nw
-        FROM lines GROUP BY host, line
-    )
-    , per_host AS (
-        SELECT host, count(DISTINCT doc_id) AS nd FROM lined GROUP BY host
-    )
-    , boiler AS (
-        SELECT l.host, l.line
-        FROM per_line l JOIN per_host h ON l.host = h.host
-        WHERE nw / CAST(nd AS DOUBLE) > 0.5
-    )
-    , kept AS (
-        SELECT l.doc_id, l.host, l.pos, l.line
-        FROM lines l ANTI JOIN boiler b
-          ON l.host = b.host AND l.line = b.line
-    )
-    , assembled AS (
-        SELECT doc_id, host,
-               string_agg(line, '|' ORDER BY pos) AS clean_text,
-               count(*) AS n_kept
-        FROM kept GROUP BY doc_id, host
-    )
-    , totals AS (
-        SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id
-    )
-    SELECT a.doc_id, a.host, a.clean_text, t.n_lines,
-           t.n_lines - a.n_kept AS n_removed
-    FROM assembled a JOIN totals t ON a.doc_id = t.doc_id
-"""
-)
-
-
 def q_priority_boosts(spark, sf_dir):
     """Signal-to-scheduler glue (frontier.apply_priority_boosts):
     fold a host-level boost (every 4th host — the per-host tier
@@ -2100,91 +1840,6 @@ SQL_ADAPTIVE_BUDGETS = (
     FROM (SELECT DISTINCT host FROM pages) h
     LEFT JOIN b ON h.host = b.host
     ORDER BY h.host
-"""
-)
-
-
-def q_canonical_consolidate(spark, sf_dir):
-    """rel=canonical consolidation (dedup.canonical_consolidate over
-    urls.canonical_href): docs with doc_id%5 in (1,2) declare the
-    group base (doc_id - doc_id%5) as canonical — %5==1 in
-    rel-then-href attribute order, %5==2 href-then-rel — so each base
-    absorbs up to two variants and keeps its own URL (self before
-    lexicographic min); %5 in (0,3,4) pages stay singletons. The
-    oracle replays injection, extraction (both orders), and the
-    keep rule in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    b = F.col("doc_id") - F.col("doc_id") % 5
-    base_url = F.concat(
-        F.lit("http://h"), (b % 4).cast("string"), F.lit(".test/a/"),
-        (F.lit(20240101) + b % 14).cast("string"), F.lit("/"),
-        F.lpad(b.cast("string"), 9, "0"), F.lit(".htm"),
-    )
-    rel_first = F.concat(
-        F.lit('<link rel="canonical" href="'), base_url, F.lit('"/></head>')
-    )
-    href_first = F.concat(
-        F.lit('<link href="'), base_url, F.lit('" rel="canonical"/></head>')
-    )
-    fx = pages.select(
-        "url",
-        F.when(
-            F.col("doc_id") % 5 == 1,
-            F.replace("html_str", F.lit("</head>"), rel_first),
-        )
-        .when(
-            F.col("doc_id") % 5 == 2,
-            F.replace("html_str", F.lit("</head>"), href_first),
-        )
-        .otherwise(F.col("html_str"))
-        .alias("html_str"),
-    )
-    return dd.canonical_consolidate(fx)
-
-
-SQL_CANONICAL_CONSOLIDATE = (
-    _pages_cte()
-    + """
-    , fx AS (
-        SELECT url,
-               'http://h' || CAST((doc_id - doc_id % 5) % 4 AS VARCHAR)
-               || '.test/a/'
-               || CAST(20240101 + (doc_id - doc_id % 5) % 14 AS VARCHAR)
-               || '/' || lpad(CAST(doc_id - doc_id % 5 AS VARCHAR), 9, '0')
-               || '.htm' AS base_url,
-               doc_id % 5 AS m, html_str
-        FROM pages
-    )
-    , inj AS (
-        SELECT url,
-               CASE WHEN m = 1 THEN replace(html_str, '</head>',
-                        '<link rel="canonical" href="' || base_url
-                        || '"/></head>')
-                    WHEN m = 2 THEN replace(html_str, '</head>',
-                        '<link href="' || base_url
-                        || '" rel="canonical"/></head>')
-                    ELSE html_str END AS html_str
-        FROM fx
-    )
-    , tagged AS (
-        SELECT url,
-               coalesce(
-                   nullif(coalesce(
-                       nullif(regexp_extract(html_str,
-                           '<link[^>]*rel="canonical"[^>]*href="([^"]*)"',
-                           1), ''),
-                       nullif(regexp_extract(html_str,
-                           '<link[^>]*href="([^"]*)"[^>]*rel="canonical"',
-                           1), '')), ''),
-                   url) AS canonical_url
-        FROM inj
-    )
-    SELECT canonical_url,
-           min(CASE WHEN url = canonical_url THEN '0' ELSE '1' END
-               || url)[2:] AS kept_url,
-           count(*) AS n_variants
-    FROM tagged
-    GROUP BY canonical_url
 """
 )
 
@@ -2952,183 +2607,9 @@ SQL_IP_POLITENESS = (
 )
 
 
-def q_mirror_hosts(spark, sf_dir):
-    """Mirror-host detection (operators/dedup.mirror_hosts): hosts
-    serving largely the same content should be crawled once — the
-    fixture makes h2.test a PARTIAL mirror of h0.test (h2 docs with
-    doc_id%3 != 0 carry the text of the h0 doc two ids below; the
-    rest stay original), so (h0, h2) lands at Jaccard ~0.5 — above
-    the 0.4 threshold but far from the degenerate 1.0 — while every
-    other pair stays 0.
-    Host-level Jaccard = shared distinct text fingerprints /
-    union — computed from one fp equi-join plus per-host counts,
-    never an all-pairs host comparison. The oracle replays fp
-    derivation, the shared-fp join, and the Jaccard in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    fx = pages.select(
-        "host",
-        F.when(
-            (F.col("doc_id") % 4 == 2) & (F.col("doc_id") % 3 != 0),
-            F.md5(F.concat(F.lit("mirror:"),
-                           (F.col("doc_id") - 2).cast("string"))),
-        )
-        .otherwise(
-            F.md5(F.concat(F.lit("mirror:"), F.col("doc_id").cast("string")))
-        )
-        .alias("fp"),
-    )
-    # make h0's fps the mirror source: h0 docs are doc_id%4==0, and
-    # h2 docs (%4==2) point at doc_id-2 (%4==0) -> same fp values
-    return dd.mirror_hosts(fx, threshold=0.4)
-
-
-SQL_MIRROR_HOSTS = (
-    _pages_cte()
-    + """
-    , fps AS (
-        SELECT DISTINCT host,
-               CASE WHEN doc_id % 4 = 2 AND doc_id % 3 <> 0
-                    THEN md5('mirror:' || CAST(doc_id - 2 AS VARCHAR))
-                    ELSE md5('mirror:' || CAST(doc_id AS VARCHAR)) END
-                   AS fp
-        FROM pages
-    )
-    , sizes AS (SELECT host, count(*) AS n FROM fps GROUP BY host)
-    , shared AS (
-        SELECT a.host AS host_a, b.host AS host_b, count(*) AS n_shared
-        FROM fps a JOIN fps b ON a.fp = b.fp AND a.host < b.host
-        GROUP BY a.host, b.host
-    )
-    SELECT s.host_a, s.host_b, s.n_shared,
-           round(s.n_shared /
-               CAST(sa.n + sb.n - s.n_shared AS DOUBLE), 4) AS jaccard
-    FROM shared s
-    JOIN sizes sa ON s.host_a = sa.host
-    JOIN sizes sb ON s.host_b = sb.host
-    WHERE s.n_shared / CAST(sa.n + sb.n - s.n_shared AS DOUBLE) >= 0.4
-"""
-)
-
-
 # ===========================================================================
-# Round-3 additions: incremental dedup, quality-aware canonicals,
-# n-gram inventory, WAT export, frontier merge
+# Round-3 additions: WAT export, frontier merge
 # ===========================================================================
-
-def q_delta_admit(spark, sf_dir):
-    """Incremental near-dup admission (dedup.delta_admit): docs
-    doc_id%5==0 are this round's DELTA, the rest the already-admitted
-    corpus; a delta doc is admitted only if no corpus doc reaches
-    token Jaccard >= 0.95. Banding is lossless at this scale
-    (max_bucket >= corpus), so the brute-force NOT EXISTS oracle
-    hash-checks the banded path exactly — the rolling-corpus form of
-    minhash_near_dups."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    incoming = docs.filter(F.col("doc_id") % 5 == 0)
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    return dd.delta_admit(
-        corpus, incoming, threshold=0.95, max_bucket=10_000
-    ).select("doc_id")
-
-
-SQL_DELTA_ADMIT = r"""
-    WITH t AS (
-      SELECT doc_id,
-             list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks
-      FROM documents WHERE doc_id < 500
-    ),
-    inc AS (SELECT * FROM t WHERE doc_id % 5 = 0),
-    cor AS (SELECT * FROM t WHERE doc_id % 5 <> 0)
-    SELECT i.doc_id FROM inc i
-    WHERE NOT EXISTS (
-      SELECT 1 FROM cor c
-      WHERE len(list_intersect(i.toks, c.toks))::DOUBLE
-            / len(list_distinct(list_concat(i.toks, c.toks))) >= 0.95)
-"""
-
-
-def q_canonical_best(spark, sf_dir):
-    """Quality-aware canonical selection (dedup.keep_best_in_groups):
-    near-dup components keep their LONGEST member (token count,
-    tie -> min doc_id) instead of near_dup_groups' min-id survivor —
-    at corpus scale the min-id copy is often the truncated
-    syndication. The oracle replays the recursive-CTE closure and the
-    argmax in SQL."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    scored = docs.withColumn(
-        "n_tok", F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
-    )
-    groups = dd.near_dup_groups(scored, threshold=0.95, max_bucket=10_000)
-    return dd.keep_best_in_groups(scored, "n_tok", groups=groups)
-
-
-SQL_CANONICAL_BEST = r"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id,
-             list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks,
-             CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-                 AS n_tok
-      FROM documents WHERE doc_id < 500
-    ),
-    pairs AS (
-      SELECT a.doc_id AS a, b.doc_id AS b
-      FROM t a JOIN t b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-            / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.95
-    ),
-    edges AS (
-      SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs
-    ),
-    reach(src, node) AS (
-      SELECT doc_id, doc_id FROM t
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-    ),
-    comp AS (
-      SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src
-    ),
-    ranked AS (
-      SELECT c.component, c.doc_id AS best_id,
-             row_number() OVER (PARTITION BY c.component
-                                ORDER BY t.n_tok DESC, c.doc_id ASC) AS rn
-      FROM comp c JOIN t ON c.doc_id = t.doc_id
-    ),
-    best AS (SELECT component, best_id FROM ranked WHERE rn = 1)
-    SELECT c.doc_id, b.best_id AS canonical,
-           c.doc_id = b.best_id AS is_canonical
-    FROM comp c JOIN best b ON c.component = b.component
-"""
-
-
-def q_ngram_counts(spark, sf_dir):
-    """Corpus-wide 5-gram inventory (dedup.ngram_counts): every
-    whitespace 5-gram occurring >= 3 times — the index behind
-    decontamination sweeps and boilerplate mining, and the textbook
-    map-side-combine aggregation (partial agg collapses repeats
-    before the only shuffle). The oracle replays slice + count in
-    SQL over the gram STRINGS, so a hash/slice drift in the engine
-    path cannot hide."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return dd.ngram_counts(docs, n=5, min_count=3)
-
-
-SQL_NGRAM_COUNTS = r"""
-    WITH toks AS (
-      SELECT regexp_split_to_array(trim(text), '\s+') AS t
-      FROM documents WHERE doc_id < 500
-    ),
-    sites AS (
-      SELECT unnest(range(0, len(t) - 4)) AS pos, t
-      FROM toks WHERE len(t) >= 5
-    ),
-    g AS (
-      SELECT array_to_string(list_slice(t, pos + 1, pos + 5), ' ') AS gram
-      FROM sites
-    )
-    SELECT gram, count(*) AS n_occurrences
-    FROM g GROUP BY gram HAVING count(*) >= 3
-"""
-
 
 def q_wat_export(spark, sf_dir):
     """WAT serialization (warc.wat_records + wet_blob): per-page
@@ -3376,78 +2857,8 @@ SQL_STALE_ROBOTS = (
 
 
 # ===========================================================================
-# Round-3 additions, fifth batch: containment dedup, frontier drain
-# forecast
+# Round-3 additions, fifth batch: frontier drain forecast
 # ===========================================================================
-
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric containment dedup (dedup.containment_pairs): the
-    corpus is 200 originals plus a syndicated-with-additions copy of
-    every fifth doc (same text + a fixed appended tail under doc_id
-    +10000). C(original in copy) ~= 1 while Jaccard sits below any
-    symmetric threshold, so the pairs this query returns are exactly
-    the ones MinHash-style resemblance dedup misses. max_df is left
-    None — the shingle join is lossless at oracle scale, so the hash
-    gate covers the full pipeline (shingling, candidate join, exact
-    intersection, both containment directions)."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-    )
-    ext = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat(
-            F.col("text"), F.lit(" zz1 zz2 zz3 zz4 zz5 zz6")
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(ext)
-    return dd.containment_pairs(corpus, n=3, min_containment=0.9)
-
-
-SQL_CONTAINMENT_PAIRS = r"""
-    WITH base AS (
-      SELECT doc_id, text FROM documents WHERE doc_id < 200
-    ),
-    corpus AS (
-      SELECT doc_id, text FROM base
-      UNION ALL
-      SELECT doc_id + 10000, text || ' zz1 zz2 zz3 zz4 zz5 zz6'
-      FROM base WHERE doc_id % 5 = 0
-    ),
-    t AS (
-      SELECT doc_id AS doc,
-             regexp_split_to_array(lower(trim(text)), '\s+') AS arr
-      FROM corpus
-    ),
-    sh AS (
-      SELECT DISTINCT doc, array_to_string(arr[i:i+2], ' ') AS sh
-      FROM t, LATERAL (
-        SELECT unnest(range(1, len(arr) - 1)) AS i
-      ) g
-    ),
-    sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-    cand AS (
-      SELECT DISTINCT x.doc AS a, y.doc AS b
-      FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc < y.doc
-    ),
-    inter AS (
-      SELECT c.a, c.b, count(*) AS n_common
-      FROM cand c
-      JOIN sh sa ON sa.doc = c.a
-      JOIN sh sb ON sb.doc = c.b AND sb.sh = sa.sh
-      GROUP BY c.a, c.b
-    )
-    SELECT i.a, i.b, i.n_common,
-           round(i.n_common / CAST(za.n_sh AS DOUBLE), 6) AS c_a_in_b,
-           round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6) AS c_b_in_a
-    FROM inter i
-    JOIN sizes za ON za.doc = i.a
-    JOIN sizes zb ON zb.doc = i.b
-    WHERE greatest(round(i.n_common / CAST(za.n_sh AS DOUBLE), 6),
-                   round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6)) >= 0.9
-"""
-
 
 def q_drain_forecast(spark, sf_dir):
     """Crawl-horizon forecast (frontier.drain_forecast): per (host,
@@ -3727,11 +3138,6 @@ _QUERIES_BY_FAMILY = {
         q_v1_cross_source_clusters,
         SQL_V1_CROSS_SOURCE_CLUSTERS,
     ),
-    "minhash_near_dups": (q_minhash_near_dups, SQL_MINHASH_NEAR_DUPS),
-    "near_dup_groups": (q_near_dup_groups, SQL_NEAR_DUP_GROUPS),
-    "simhash_near_dups": (q_simhash_near_dups, SQL_SIMHASH_NEAR_DUPS),
-    "duplicated_spans": (q_duplicated_spans, SQL_DUPLICATED_SPANS),
-    "dup_span_stats": (q_dup_span_stats, SQL_DUP_SPAN_STATS),
     # skew telemetry
     "hot_hosts": (q_hot_hosts, SQL_HOT_HOSTS),
     # crawl policy, fetch and archive operators
@@ -3741,7 +3147,6 @@ _QUERIES_BY_FAMILY = {
     "fetch_retries": (q_fetch_retries, SQL_FETCH_RETRIES),
     "redirect_resolution": (q_redirect_resolution, SQL_REDIRECT_RESOLUTION),
     "warc_records": (q_warc_records, SQL_WARC_RECORDS),
-    "boilerplate_removal": (q_boilerplate_removal, SQL_BOILERPLATE_REMOVAL),
     "priority_boosts": (q_priority_boosts, SQL_PRIORITY_BOOSTS),
     "global_cap": (q_global_cap, SQL_GLOBAL_CAP),
     "url_templates": (q_url_templates, SQL_URL_TEMPLATES),
@@ -3749,8 +3154,6 @@ _QUERIES_BY_FAMILY = {
     "soft404_filter": (q_soft404_filter, SQL_SOFT404_FILTER),
     "mojibake_repair": (q_mojibake_repair, SQL_MOJIBAKE_REPAIR),
     "adaptive_budgets": (q_adaptive_budgets, SQL_ADAPTIVE_BUDGETS),
-    "canonical_consolidate": (q_canonical_consolidate,
-                              SQL_CANONICAL_CONSOLIDATE),
     "registered_domains": (q_registered_domains, SQL_REGISTERED_DOMAINS),
     "normalize_text": (q_normalize_text, SQL_NORMALIZE_TEXT),
     "admission_funnel": (q_admission_funnel, SQL_ADMISSION_FUNNEL),
@@ -3763,18 +3166,13 @@ _QUERIES_BY_FAMILY = {
     "hreflang_alternates": (q_hreflang_alternates, SQL_HREFLANG_ALTERNATES),
     "wet_export": (q_wet_export, SQL_WET_EXPORT),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
-    "mirror_hosts": (q_mirror_hosts, SQL_MIRROR_HOSTS),
     # round-3 additions (attestation candidates for the r4 window;
     # locally hash-gated by test_queries_vs_duckdb from day one)
-    "delta_admit": (q_delta_admit, SQL_DELTA_ADMIT),
-    "canonical_best": (q_canonical_best, SQL_CANONICAL_BEST),
-    "ngram_counts": (q_ngram_counts, SQL_NGRAM_COUNTS),
     "wat_export": (q_wat_export, SQL_WAT_EXPORT),
     "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
     "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
-    "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
     "drain_forecast": (q_drain_forecast, SQL_DRAIN_FORECAST),
     "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
 }
@@ -3816,51 +3214,51 @@ _R5_ROTATION = [
     # _ALWAYS_ATTEST + anything whose Spark fn or oracle CHANGES in
     # round 5 + the OLDEST still-valid attestations refilled
     # oldest-first (bounding attestation age at two rounds for
-    # unchanged implementations: the r2 rows are now the oldest
-    # standing and every one still registered rotates through here).
+    # unchanged implementations).
     #
     # Changed in r5 — MUST re-attest (standing rule: a change ships
-    # only inside the next window): the candidate_pairs rewrite
-    # (bucket guard + pair expansion as one hash aggregation) flows
-    # into the whole minhash near-dup family; the crawl loop's
-    # checkpoint-fold/Observation changes flow into every crawl
-    # query (crawl_frontier/crawl_seen_set sit in _ALWAYS_ATTEST;
-    # the host-lineage variant re-enters here);
-    # robots_longest_match and robots_wildcards now run through the
-    # one robots gate, apply_robots, and robots_rules through the one
-    # parser, whose rules carry Allow rows; and delta_admit now bands
-    # through candidate_pairs' signature-slice rows over one sketch
-    # pass per side (its Python band hashing is gone). front_page_ranking,
-    # entry_lookup and comments_sort now run through
-    # operators/serving.py's rank_front_page, entry_lookup and
-    # paginate instead of inline copies of W4/J4/O3.
-    "minhash_near_dups", "near_dup_groups", "canonical_best",
-    "crawl_host_lineage", "robots_longest_match", "delta_admit",
+    # only inside the next window): the crawl loop's
+    # checkpoint-fold/Observation changes flow into every crawl query
+    # (crawl_frontier/crawl_seen_set sit in _ALWAYS_ATTEST; the
+    # host-lineage variant re-enters here); robots_longest_match and
+    # robots_wildcards now run through the one robots gate,
+    # apply_robots, and robots_rules through the one parser, whose
+    # rules carry Allow rows; front_page_ranking, entry_lookup and
+    # comments_sort now run through operators/serving.py's
+    # rank_front_page, entry_lookup and paginate. (The candidate_pairs
+    # rewrite reaches news_clusters_lsh, already in _ALWAYS_ATTEST.)
+    "crawl_host_lineage", "robots_longest_match",
     "front_page_ranking", "entry_lookup", "comments_sort",
     "robots_rules", "robots_wildcards",
     #
-    # Oldest-first refill: the 12 entries still registered whose
-    # latest green row was CORRECTNESS_r02.json when this window was
-    # first drawn and that did not change since (the registry diets
-    # deleted 21 of the original 36: the LM-training, embedding-ANN,
-    # warehouse, link-graph and training-data text-analysis entries).
+    # Refill rule, oldest latest-green row first: every unchanged
+    # entry outside the blocks above is ranked by the file holding its
+    # latest green row among CORRECTNESS_r02..r04.json (the files this
+    # window is drawn from) — all r02 entries, then the r03 ties, then
+    # the r04 entries, each file's entries in _QUERIES_BY_FAMILY order
+    # — and taken until the window holds exactly 50. Slots a registry
+    # diet frees go to the next entries by this rule.
+    #
+    # r02: the 10 entries still registered.
     "index_daterange", "group_by_day",
     "token_count", "fingerprint", "dedup_stats", "dedup_first",
-    "ngram_overlap", "merge_upsert", "pos_tags",
-    "duplicated_spans", "dup_span_stats", "hot_hosts",
+    "ngram_overlap", "merge_upsert", "pos_tags", "hot_hosts",
     #
-    # The freed slots refill by the same rule: every remaining entry
-    # outside the blocks above has its latest green row at r03 or
-    # newer, and the r03 ties are taken in _QUERIES_BY_FAMILY order
-    # (robots_longest_match and robots_rules, two of them, already sit
-    # in the changed block above).
+    # r03 ties: every one still registered and outside the changed
+    # block (robots_longest_match and robots_rules sit there).
     "crawl_delay_budgets", "host_quality_filter",
     "fetch_retries", "redirect_resolution", "warc_records",
-    "boilerplate_removal", "priority_boosts", "global_cap",
+    "priority_boosts", "global_cap",
     "url_templates", "soft404_filter", "mojibake_repair",
-    "adaptive_budgets", "canonical_consolidate", "registered_domains",
+    "adaptive_budgets", "registered_domains",
     "normalize_text", "politeness_composition", "content_sniff",
-    "meta_robots_gate",
+    "meta_robots_gate", "hreflang_alternates", "wet_export",
+    "ip_politeness",
+    #
+    # r04: the first five in _QUERIES_BY_FAMILY order (robots_wildcards
+    # sits in the changed block).
+    "admission_funnel", "request_rate_budgets", "wat_export",
+    "frontier_merge", "shard_rendezvous",
 ]
 
 QUERIES = {

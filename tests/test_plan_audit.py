@@ -227,24 +227,22 @@ _LAZY_QUERIES = [
     "index_daterange", "front_page_ranking", "entry_lookup",
     "comments_sort", "group_by_day", "token_count", "fingerprint",
     "dedup_stats", "dedup_first", "ngram_overlap", "summarize",
-    "merge_upsert", "pos_tags", "minhash_near_dups",
-    "simhash_near_dups", "pii_scrub", "v1_cross_source_clusters",
-    "duplicated_spans", "dup_span_stats",
+    "merge_upsert", "pos_tags", "pii_scrub", "v1_cross_source_clusters",
     # round-2 additions
     "hot_hosts", "robots_rules", "crawl_delay_budgets",
     "host_quality_filter", "fetch_retries", "redirect_resolution",
-    "warc_records", "boilerplate_removal",
+    "warc_records",
     "priority_boosts", "global_cap", "url_templates",
     "robots_longest_match", "soft404_filter", "mojibake_repair",
-    "adaptive_budgets", "canonical_consolidate", "registered_domains",
+    "adaptive_budgets", "registered_domains",
     "normalize_text", "admission_funnel", "politeness_composition",
     "content_sniff", "request_rate_budgets",
     "meta_robots_gate", "hreflang_alternates",
-    "wet_export", "ip_politeness", "mirror_hosts",
+    "wet_export", "ip_politeness",
     # round-3 additions
-    "delta_admit", "ngram_counts", "wat_export", "frontier_merge",
+    "wat_export", "frontier_merge",
     "shard_rendezvous", "cdx_export",
-    "stale_robots", "containment_pairs", "drain_forecast",
+    "stale_robots", "drain_forecast",
     "robots_wildcards",
 ]
 
@@ -256,8 +254,7 @@ _EAGER_AUDITED_ELSEWHERE = {
     # crawl loop: test_frontier_fetch_order_no_global_window
     "crawl_frontier", "crawl_host_lineage", "crawl_seen_set",
     # CC / greedy iteration loops: test_clustering
-    # (canonical_best = near_dup_groups' CC + one lazy argmax groupBy)
-    "news_clusters_lsh", "near_dup_groups", "canonical_best",
+    "news_clusters_lsh",
 }
 
 
@@ -396,54 +393,6 @@ def test_verify_pairs_is_one_projection_per_pair(spark):
     assert edges.count() > 0
 
 
-def _has_ancestor(lines: list[str], i: int, marker: str) -> bool:
-    """True when some ancestor node of plan line ``i`` contains
-    ``marker`` (ancestors are the earlier lines of smaller depth)."""
-    depth = _node_depth(lines[i])
-    for ln in reversed(lines[:i]):
-        d = _node_depth(ln)
-        if d < depth:
-            if marker in ln:
-                return True
-            depth = d
-    return False
-
-
-def test_delta_admit_one_arrow_pass_per_side(spark):
-    """delta_admit sketches each side in ONE Arrow pass and persists
-    it: every MapInPandas in the plan sits inside a cached sketch
-    relation (band rows and verify tokens both read the cache), and
-    there are exactly two distinct passes — incoming and corpus. A
-    cached relation is printed once per scan, so each pass may appear
-    more than once."""
-    from news_combinator_spark.datagen import reference_grammar_pages
-    from news_combinator_spark.operators import dedup as dd
-
-    pages = reference_grammar_pages(n_pages=60, seed=3, dup_rate=0.4)
-    docs = spark.createDataFrame(
-        [(i, p["text"]) for i, p in enumerate(pages)], "doc_id long, text string"
-    )
-    reg: list = []
-    out = dd.delta_admit(
-        docs.filter("doc_id % 3 <> 0"),
-        docs.filter("doc_id % 3 = 0"),
-        max_bucket=10_000,
-        cache_registry=reg,
-    )
-    lines = _simple(out).splitlines()
-    passes = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
-    outside = [
-        lines[i].strip()
-        for i in passes
-        if not _has_ancestor(lines, i, "InMemoryRelation")
-    ]
-    assert not outside, "\n".join(lines)
-    nodes = {lines[i][lines[i].index("MapInPandas"):] for i in passes}
-    assert len(nodes) == 2, "\n".join(lines)
-    for f in reg:
-        f.unpersist()
-
-
 def test_greedy_membership_small_graph_is_local_table_scan(spark):
     """The driver greedy's membership frame is built from Arrow: it
     plans as a LocalTableScan, not a scan of parallelized rows."""
@@ -535,29 +484,8 @@ def test_bench_battery_covers_all_oracle_queries():
         "crawl_host_lineage",     # same loop + per-host audit frames
         "news_clusters_lsh", "v1_cross_source_clusters",  # bench_cluster
         "url_parse",  # sub-second scalar pass, folded into extract
-        "minhash_near_dups", "simhash_near_dups", "duplicated_spans",
         "dedup_stats",
     }
     dual = {n for n, (_f, s) in Q.QUERIES.items() if s is not None}
     missing = sorted(dual - battery - phase_benched)
     assert not missing, f"oracle queries not benched: {missing}"
-
-
-def test_mirror_hosts_size_frames_not_forced_broadcast(spark):
-    """The per-host fingerprint-count frames joined back onto the
-    mirror pair aggregate must NOT carry a forced broadcast hint:
-    host cardinality is 10^7-10^8 at web scale, so the plan (AQE off,
-    so hints are the only broadcast source) must contain no
-    BroadcastHashJoin — AQE may still choose one at runtime when the
-    frames turn out small (VERDICT r2 finding #2)."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # below the autoBroadcast threshold everything COULD broadcast;
-    # disable it so only explicit hints would surface
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _simple(Q.q_mirror_hosts(spark, SF_MED))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert "BroadcastHashJoin" not in plan, plan

@@ -101,3 +101,24 @@ def test_coverage_table_matches_registry():
         f"registry entries without a COVERAGE row: {unlisted}; "
         f"COVERAGE rows without a registry entry: {stale}"
     )
+
+
+def test_coverage_registry_counts_sentence_matches_table():
+    """COVERAGE.md's "N entries: X cite §2 rows, Y are next-diet
+    candidates." sentence states the counts of its Registry table: a
+    diet that deletes rows without restating the counts fails here."""
+    cov = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
+    section = cov.split("\n## Registry\n", 1)[1].split("\n## ", 1)[0]
+    m = re.search(
+        r"^(\d+) entries: (\d+) cite §2 rows, (\d+) are next-diet "
+        r"candidates\.$",
+        section,
+        re.M,
+    )
+    assert m, "Registry counts sentence not found in COVERAGE.md"
+    rows = re.findall(r"^\| `[a-z0-9_]+` \| (.+?) \|$", section, re.M)
+    candidates = sum(
+        r == "engine addition: next-diet candidate" for r in rows
+    )
+    stated = tuple(int(g) for g in m.groups())
+    assert stated == (len(rows), len(rows) - candidates, candidates)

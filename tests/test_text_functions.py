@@ -4,12 +4,9 @@ summarizer, v1 parity quirks)."""
 import math
 
 from news_combinator_spark.functions.textfns import (
-    char_ngrams,
     cosine_guarded,
-    hamming64,
     jaccard,
     minhash_signature,
-    simhash64,
     tokenize,
 )
 from news_combinator_spark.operators.summarize import (
@@ -48,22 +45,6 @@ def test_minhash_estimates_jaccard():
     assert abs(est - true) < 0.15
     # identical inputs -> identical signatures (deterministic)
     assert minhash_signature(a, 128) == sa
-
-
-def test_simhash_near_for_near_texts():
-    base = [f"w{i}" for i in range(60)]
-    variant = list(base)
-    variant[3] = "CHANGED"
-    h1, h2 = simhash64(base), simhash64(variant)
-    assert hamming64(h1, h2) <= 12
-    far = simhash64([f"z{i}" for i in range(60)])
-    assert hamming64(h1, far) > 12
-
-
-def test_char_ngrams():
-    assert char_ngrams("abcdef", 5) == {"abcde", "bcdef"}
-    assert char_ngrams("ab", 5) == {"ab"}
-    assert char_ngrams("", 5) == set()
 
 
 def test_split_sentences_v2_reference_semantics():
@@ -113,15 +94,12 @@ def test_trim_spaces_v1_off_by_one():
 
 def test_sketch_batch_bit_identical_to_per_doc_kernels():
     """The batched vocab-matrix kernel must produce EXACTLY the per-doc
-    kernels' values — same affine MinHash, same bit-vote SimHash —
-    including empty/None/CJK/single-token edge cases and both SimHash
-    hash_fn variants (blake2b and the DuckDB-reproducible md5)."""
+    kernel's values — same affine MinHash — including
+    empty/None/CJK/single-token edge cases."""
     from collections import Counter
 
     from news_combinator_spark.functions.textfns import (
-        md5_hash64,
         minhash_signature,
-        simhash64,
         sketch_batch,
         sketch_counts,
         tokenize,
@@ -138,31 +116,22 @@ def test_sketch_batch_bit_identical_to_per_doc_kernels():
     ] + [f"doc {i} shares many common tokens alpha beta {i % 3}"
          for i in range(50)]
 
-    sigs, shs = sketch_batch(texts)
+    sigs = sketch_batch(texts)
     for i, t in enumerate(texts):
         toks = tokenize(t or "")
         assert sigs[i] == minhash_signature(toks, 64), i
-        assert shs[i] == simhash64(toks), i
-
-    # md5 hash_fn variant (used by the SQL-reproducible simhash oracle)
-    _, shs_md5 = sketch_batch(texts, minhash=False, hash_fn=md5_hash64)
-    assert sigs is not None and shs_md5 is not None
-    for i, t in enumerate(texts):
-        assert shs_md5[i] == simhash64(tokenize(t or ""), md5_hash64), i
 
     # counts-level API agrees with the text-level wrapper
-    sigs2, shs2 = sketch_counts(
-        [Counter(tokenize(t or "")) for t in texts]
-    )
-    assert sigs2 == sigs and shs2 == shs
+    sigs2 = sketch_counts([Counter(tokenize(t or "")) for t in texts])
+    assert sigs2 == sigs
 
     # vocab flush boundary cannot change values: the flush check runs
     # per 1024-doc chunk, so >1024 docs + a tiny cap forces a real
     # mid-batch flush and re-hash of repeated tokens
     many = texts + [f"tail doc {i} gamma delta" for i in range(1100)]
-    ref_sigs, ref_shs = sketch_batch(many)
-    sigs3, shs3 = sketch_batch(many, max_vocab=8)
-    assert sigs3 == ref_sigs and shs3 == ref_shs
+    ref_sigs = sketch_batch(many)
+    sigs3 = sketch_batch(many, max_vocab=8)
+    assert sigs3 == ref_sigs
 
 
 def test_sketch_vocab_cap_holds_inside_a_chunk():
@@ -179,6 +148,6 @@ def test_sketch_vocab_cap_holds_inside_a_chunk():
         " ".join(f"tok{d}_{i}" for i in range(200)) + " shared common"
         for d in range(60)
     ]
-    ref_sigs, ref_shs = sketch_batch(texts)
-    cap_sigs, cap_shs = sketch_batch(texts, max_vocab=64)
-    assert cap_sigs == ref_sigs and cap_shs == ref_shs
+    ref_sigs = sketch_batch(texts)
+    cap_sigs = sketch_batch(texts, max_vocab=64)
+    assert cap_sigs == ref_sigs

@@ -1,7 +1,7 @@
-"""Canonical-link consolidation, eTLD+1 extraction, normalization.
+"""Canonical-link extraction, eTLD+1 extraction, normalization.
 
-Edges the driver oracles' fixtures don't reach: dangling canonical
-targets, suffix shadowing with a custom PSL, normalization
+Edges the DuckDB oracles' fixtures don't reach: canonical attribute
+orders, suffix shadowing with a custom PSL, normalization
 idempotence.
 """
 
@@ -12,7 +12,6 @@ from news_combinator_spark.functions.urls import (
     canonical_href,
     registered_domain,
 )
-from news_combinator_spark.operators.dedup import canonical_consolidate
 
 
 def test_canonical_href_orders_and_absence(spark):
@@ -27,30 +26,6 @@ def test_canonical_href_orders_and_absence(spark):
     )
     got = [r.c for r in df.select(canonical_href("html_str").alias("c")).collect()]
     assert got == ["http://c/1", "http://c/2", None, None]
-
-
-def test_canonical_consolidate_keep_rule(spark):
-    mk = lambda c: f'<html><link rel="canonical" href="{c}"/></html>'
-    rows = [
-        # group A: canonical page itself present -> kept over smaller url
-        ("http://h/a", mk("http://h/a")),
-        ("http://h/A-variant", mk("http://h/a")),
-        # group B: DANGLING canonical (target never crawled) -> lexi min
-        ("http://h/b2", mk("http://h/b")),
-        ("http://h/b1", mk("http://h/b")),
-        # singleton, no canonical declared
-        ("http://h/solo", "<html></html>"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html_str string")
-    got = {
-        r.canonical_url: (r.kept_url, r.n_variants)
-        for r in canonical_consolidate(df).collect()
-    }
-    assert got == {
-        "http://h/a": ("http://h/a", 2),
-        "http://h/b": ("http://h/b1", 2),
-        "http://h/solo": ("http://h/solo", 1),
-    }
 
 
 def test_registered_domain_longest_suffix_wins(spark):
