@@ -96,12 +96,14 @@ SQL_BENCH_QUERIES = [
     "hreflang_alternates",
     "wet_export",
     "ip_politeness",
+    "mirror_hosts",
     # added round 3
     "wat_export",
     "frontier_merge",
     "shard_rendezvous",
     "cdx_export",
     "stale_robots",
+    "containment_pairs",
     "drain_forecast",
     "pii_scrub",
     "robots_wildcards",

@@ -1,4 +1,5 @@
-"""Exact deduplication: the reference's keep-first policy.
+"""Exact deduplication: the reference's keep-first policy, plus two
+exact set-overlap joins.
 
 The reference deduplicates exactly (file-exists / UNIQUE keys,
 pipelines.py:19-23, reetsee_news.sql:15,33): a page whose content was
@@ -6,6 +7,11 @@ already stored is skipped. `exact_dedup` keeps the first row (lowest
 key) per content hash, in pure built-ins. Near-duplicate news is the
 cluster path's job (operators/clustering.py: MinHash-LSH candidates,
 exact cosine verify).
+
+- mirror_hosts:       host pairs whose content-fingerprint sets overlap
+                      (fingerprint equi-join, never all-pairs)
+- containment_pairs:  asymmetric word-shingle containment between
+                      documents (shingle equi-join, exact counts)
 """
 
 from __future__ import annotations
@@ -24,4 +30,157 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_cols=None) -> DataFra
         with_hash.withColumn("rn", F.row_number().over(w))
         .filter("rn = 1")
         .drop("rn")
+    )
+
+
+def mirror_hosts(
+    fps: DataFrame,
+    threshold: float = 0.5,
+    host_col: str = "host",
+    fp_col: str = "fp",
+    max_hosts_per_fp: int = 64,
+) -> DataFrame:
+    """Host pairs serving largely the same CONTENT — mirrors a crawl
+    should collapse onto one member (and training dedup would
+    otherwise rediscover document by document). Input: one row per
+    (host, content fingerprint); output: (host_a, host_b, n_shared,
+    jaccard) for pairs whose fingerprint-set Jaccard >= threshold,
+    host_a < host_b.
+
+    Scale shape: the only join is fp = fp (content-blocked — a pair
+    of hosts meets once per SHARED document, so a true mirror costs
+    its shared-doc count and unrelated hosts cost ~0), followed by
+    map-side-combined counts; there is never an all-pairs host
+    comparison, and per-host set sizes come from one aggregate.
+
+    `max_hosts_per_fp` is the bucket-size guard this join needs at
+    web scale (same class as candidate_pairs' LSH guard): one
+    boilerplate fingerprint shared by 10^4 hosts would alone emit
+    ~10^8 pairs. A fp on more hosts than the cap is boilerplate, not
+    mirror evidence, and is dropped BEFORE the self-join AND before
+    the size aggregate, so the Jaccard denominator stays consistent
+    with the numerator."""
+    f = fps.select(
+        F.col(host_col).alias("host"), F.col(fp_col).alias("fp")
+    ).distinct()
+    if max_hosts_per_fp > 0:
+        freq = f.groupBy("fp").agg(F.count(F.lit(1)).alias("_nf"))
+        f = (
+            f.join(freq.filter(F.col("_nf") <= max_hosts_per_fp), "fp")
+            .drop("_nf")
+        )
+    sizes = f.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
+    shared = (
+        f.alias("a")
+        .join(f.alias("b"),
+              (F.col("a.fp") == F.col("b.fp"))
+              & (F.col("a.host") < F.col("b.host")))
+        .groupBy(
+            F.col("a.host").alias("host_a"),
+            F.col("b.host").alias("host_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    sa = sizes.withColumnRenamed("host", "host_a").withColumnRenamed("n", "na")
+    sb = sizes.withColumnRenamed("host", "host_b").withColumnRenamed("n", "nb")
+    jac = F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
+    # plain equi-joins: host cardinality at web scale is 10^7-10^8, so
+    # the per-host size frames must NOT be forced broadcast (VERDICT r2
+    # finding #2) — AQE picks broadcast itself when they're small
+    return (
+        shared.join(sa, "host_a")
+        .join(sb, "host_b")
+        .filter(jac >= F.lit(threshold))
+        .select(
+            "host_a", "host_b", "n_shared",
+            F.round(jac, 4).alias("jaccard"),
+        )
+    )
+
+
+def containment_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    doc_col: str = "doc_id",
+    n: int = 3,
+    min_containment: float = 0.9,
+    max_df: int | None = None,
+) -> DataFrame:
+    """ASYMMETRIC near-duplicate detection: (a, b, n_common, c_a_in_b,
+    c_b_in_a) for document pairs where either containment — shared
+    word n-shingles over one side's shingle count,
+    C(A in B) = |S(A) ∩ S(B)| / |S(A)| — reaches ``min_containment``.
+
+    Symmetric resemblance (MinHash Jaccard) misses the syndication-
+    with-additions shape: a wire story embedded in a longer page has
+    C(wire in page) ~= 1 while Jaccard can sit far below any dedup
+    threshold (Broder 1997 distinguishes exactly these two measures).
+    Containment is what a training pipeline needs to drop the
+    SUBSUMED copy and keep the superset document.
+
+    Scale shape: shingles are built with JVM array expressions (no
+    Python), deduplicated per doc, and candidate pairs come from an
+    equi-join on the shingle — with ``max_df`` dropping shingles that
+    occur in more than that many documents BEFORE the join (the same
+    saturated-key guard as minhash banding's max_bucket: a boilerplate
+    shingle would otherwise produce a df^2/2 pair blow-up). Leaving
+    ``max_df`` None keeps the join lossless for oracle-scale inputs.
+    The exact intersection count then touches only candidate pairs'
+    shingle rows, and every aggregation is map-side combined.
+    """
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    grams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.expr("array()").cast("array<string>"))
+    sh = (
+        df.select(F.col(doc_col).alias("doc"), F.explode(grams).alias("sh"))
+        .dropDuplicates(["doc", "sh"])
+    )
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+
+    shf = sh
+    if max_df is not None:
+        rare = (
+            sh.groupBy("sh")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= max_df)
+            .select("sh")
+        )
+        shf = sh.join(rare, "sh", "semi")
+    cand = (
+        shf.alias("x")
+        .join(shf.alias("y"), "sh")
+        .filter(F.col("x.doc") < F.col("y.doc"))
+        .select(F.col("x.doc").alias("a"), F.col("y.doc").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
+    inter = (
+        cand.join(sh.select(F.col("doc").alias("a"), "sh"), "a")
+        .join(sh.select(F.col("doc").alias("b"), "sh"), ["b", "sh"])
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    scored = (
+        inter.join(
+            sizes.select(F.col("doc").alias("a"), F.col("n_sh").alias("n_a")),
+            "a",
+        )
+        .join(
+            sizes.select(F.col("doc").alias("b"), F.col("n_sh").alias("n_b")),
+            "b",
+        )
+        .select(
+            "a",
+            "b",
+            "n_common",
+            F.round(F.col("n_common") / F.col("n_a"), 6).alias("c_a_in_b"),
+            F.round(F.col("n_common") / F.col("n_b"), 6).alias("c_b_in_a"),
+        )
+    )
+    return scored.filter(
+        F.greatest("c_a_in_b", "c_b_in_a") >= min_containment
     )

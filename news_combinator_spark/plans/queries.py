@@ -2607,6 +2607,64 @@ SQL_IP_POLITENESS = (
 )
 
 
+def q_mirror_hosts(spark, sf_dir):
+    """Mirror-host detection (operators/dedup.mirror_hosts): hosts
+    serving largely the same content should be crawled once — the
+    fixture makes h2.test a PARTIAL mirror of h0.test (h2 docs with
+    doc_id%3 != 0 carry the text of the h0 doc two ids below; the
+    rest stay original), so (h0, h2) lands at Jaccard ~0.5 — above
+    the 0.4 threshold but far from the degenerate 1.0 — while every
+    other pair stays 0.
+    Host-level Jaccard = shared distinct text fingerprints /
+    union — computed from one fp equi-join plus per-host counts,
+    never an all-pairs host comparison. The oracle replays fp
+    derivation, the shared-fp join, and the Jaccard in SQL."""
+    pages = pages_from_documents(spark, sf_dir)
+    fx = pages.select(
+        "host",
+        F.when(
+            (F.col("doc_id") % 4 == 2) & (F.col("doc_id") % 3 != 0),
+            F.md5(F.concat(F.lit("mirror:"),
+                           (F.col("doc_id") - 2).cast("string"))),
+        )
+        .otherwise(
+            F.md5(F.concat(F.lit("mirror:"), F.col("doc_id").cast("string")))
+        )
+        .alias("fp"),
+    )
+    # make h0's fps the mirror source: h0 docs are doc_id%4==0, and
+    # h2 docs (%4==2) point at doc_id-2 (%4==0) -> same fp values
+    return dd.mirror_hosts(fx, threshold=0.4)
+
+
+SQL_MIRROR_HOSTS = (
+    _pages_cte()
+    + """
+    , fps AS (
+        SELECT DISTINCT host,
+               CASE WHEN doc_id % 4 = 2 AND doc_id % 3 <> 0
+                    THEN md5('mirror:' || CAST(doc_id - 2 AS VARCHAR))
+                    ELSE md5('mirror:' || CAST(doc_id AS VARCHAR)) END
+                   AS fp
+        FROM pages
+    )
+    , sizes AS (SELECT host, count(*) AS n FROM fps GROUP BY host)
+    , shared AS (
+        SELECT a.host AS host_a, b.host AS host_b, count(*) AS n_shared
+        FROM fps a JOIN fps b ON a.fp = b.fp AND a.host < b.host
+        GROUP BY a.host, b.host
+    )
+    SELECT s.host_a, s.host_b, s.n_shared,
+           round(s.n_shared /
+               CAST(sa.n + sb.n - s.n_shared AS DOUBLE), 4) AS jaccard
+    FROM shared s
+    JOIN sizes sa ON s.host_a = sa.host
+    JOIN sizes sb ON s.host_b = sb.host
+    WHERE s.n_shared / CAST(sa.n + sb.n - s.n_shared AS DOUBLE) >= 0.4
+"""
+)
+
+
 # ===========================================================================
 # Round-3 additions: WAT export, frontier merge
 # ===========================================================================
@@ -2857,8 +2915,78 @@ SQL_STALE_ROBOTS = (
 
 
 # ===========================================================================
-# Round-3 additions, fifth batch: frontier drain forecast
+# Round-3 additions, fifth batch: containment dedup, frontier drain
+# forecast
 # ===========================================================================
+
+def q_containment_pairs(spark, sf_dir):
+    """Asymmetric containment dedup (dedup.containment_pairs): the
+    corpus is 200 originals plus a syndicated-with-additions copy of
+    every fifth doc (same text + a fixed appended tail under doc_id
+    +10000). C(original in copy) ~= 1 while Jaccard sits below any
+    symmetric threshold, so the pairs this query returns are exactly
+    the ones MinHash-style resemblance dedup misses. max_df is left
+    None — the shingle join is lossless at oracle scale, so the hash
+    gate covers the full pipeline (shingling, candidate join, exact
+    intersection, both containment directions)."""
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "text")
+    )
+    ext = docs.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + 10000).alias("doc_id"),
+        F.concat(
+            F.col("text"), F.lit(" zz1 zz2 zz3 zz4 zz5 zz6")
+        ).alias("text"),
+    )
+    corpus = docs.unionByName(ext)
+    return dd.containment_pairs(corpus, n=3, min_containment=0.9)
+
+
+SQL_CONTAINMENT_PAIRS = r"""
+    WITH base AS (
+      SELECT doc_id, text FROM documents WHERE doc_id < 200
+    ),
+    corpus AS (
+      SELECT doc_id, text FROM base
+      UNION ALL
+      SELECT doc_id + 10000, text || ' zz1 zz2 zz3 zz4 zz5 zz6'
+      FROM base WHERE doc_id % 5 = 0
+    ),
+    t AS (
+      SELECT doc_id AS doc,
+             regexp_split_to_array(lower(trim(text)), '\s+') AS arr
+      FROM corpus
+    ),
+    sh AS (
+      SELECT DISTINCT doc, array_to_string(arr[i:i+2], ' ') AS sh
+      FROM t, LATERAL (
+        SELECT unnest(range(1, len(arr) - 1)) AS i
+      ) g
+    ),
+    sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
+    cand AS (
+      SELECT DISTINCT x.doc AS a, y.doc AS b
+      FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc < y.doc
+    ),
+    inter AS (
+      SELECT c.a, c.b, count(*) AS n_common
+      FROM cand c
+      JOIN sh sa ON sa.doc = c.a
+      JOIN sh sb ON sb.doc = c.b AND sb.sh = sa.sh
+      GROUP BY c.a, c.b
+    )
+    SELECT i.a, i.b, i.n_common,
+           round(i.n_common / CAST(za.n_sh AS DOUBLE), 6) AS c_a_in_b,
+           round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6) AS c_b_in_a
+    FROM inter i
+    JOIN sizes za ON za.doc = i.a
+    JOIN sizes zb ON zb.doc = i.b
+    WHERE greatest(round(i.n_common / CAST(za.n_sh AS DOUBLE), 6),
+                   round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6)) >= 0.9
+"""
+
 
 def q_drain_forecast(spark, sf_dir):
     """Crawl-horizon forecast (frontier.drain_forecast): per (host,
@@ -3166,6 +3294,7 @@ _QUERIES_BY_FAMILY = {
     "hreflang_alternates": (q_hreflang_alternates, SQL_HREFLANG_ALTERNATES),
     "wet_export": (q_wet_export, SQL_WET_EXPORT),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
+    "mirror_hosts": (q_mirror_hosts, SQL_MIRROR_HOSTS),
     # round-3 additions (attestation candidates for the r4 window;
     # locally hash-gated by test_queries_vs_duckdb from day one)
     "wat_export": (q_wat_export, SQL_WAT_EXPORT),
@@ -3173,6 +3302,7 @@ _QUERIES_BY_FAMILY = {
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
     "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
+    "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
     "drain_forecast": (q_drain_forecast, SQL_DRAIN_FORECAST),
     "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
 }
@@ -3253,12 +3383,12 @@ _R5_ROTATION = [
     "adaptive_budgets", "registered_domains",
     "normalize_text", "politeness_composition", "content_sniff",
     "meta_robots_gate", "hreflang_alternates", "wet_export",
-    "ip_politeness",
+    "ip_politeness", "mirror_hosts",
     #
-    # r04: the first five in _QUERIES_BY_FAMILY order (robots_wildcards
+    # r04: the first four in _QUERIES_BY_FAMILY order (robots_wildcards
     # sits in the changed block).
     "admission_funnel", "request_rate_budgets", "wat_export",
-    "frontier_merge", "shard_rendezvous",
+    "frontier_merge",
 ]
 
 QUERIES = {
