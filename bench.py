@@ -78,7 +78,6 @@ SQL_BENCH_QUERIES = [
     "host_quality_filter",
     "fetch_retries",
     "redirect_resolution",
-    "warc_records",
     "priority_boosts",
     "global_cap",
     "url_templates",
@@ -94,16 +93,11 @@ SQL_BENCH_QUERIES = [
     "request_rate_budgets",
     "meta_robots_gate",
     "hreflang_alternates",
-    "wet_export",
     "ip_politeness",
-    "mirror_hosts",
     # added round 3
-    "wat_export",
     "frontier_merge",
     "shard_rendezvous",
-    "cdx_export",
     "stale_robots",
-    "containment_pairs",
     "drain_forecast",
     "pii_scrub",
     "robots_wildcards",

@@ -147,22 +147,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize_url(u or ""))
 
 
-def canonical_href(html_col) -> F.Column:
-    """First ``<link rel="canonical" href="...">`` target in the html,
-    or NULL. Handles both attribute orders (rel-then-href and
-    href-then-rel) with two anchored regexes — per-row JVM
-    expressions, no parser."""
-    c = F.col(html_col) if isinstance(html_col, str) else html_col
-    rel_first = F.regexp_extract(
-        c, r'<link[^>]*rel="canonical"[^>]*href="([^"]*)"', 1
-    )
-    href_first = F.regexp_extract(
-        c, r'<link[^>]*href="([^"]*)"[^>]*rel="canonical"', 1
-    )
-    return F.nullif(F.coalesce(F.nullif(rel_first, F.lit("")),
-                               F.nullif(href_first, F.lit(""))), F.lit(""))
-
-
 def hreflang_links(df, html_col: str = "html_str", url_col: str = "url"):
     """Explode ``<link rel="alternate" hreflang=.. href=..>`` tags into
     (url, hreflang, alt_url) rows — the translation graph a

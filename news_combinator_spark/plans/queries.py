@@ -35,7 +35,6 @@ from ..operators import dedup as dd
 from ..functions.posfilter import _FUNCTION_WORDS, _PRONOUNS, doc_pos_tags
 from ..operators import serving
 from ..functions import robots as rb
-from ..functions import warc as wc
 from ..functions.robots import rules_from_robots_txt
 from ..operators import frontier as fr
 from ..operators.bucketing import reshard_moves
@@ -1343,110 +1342,6 @@ SQL_REDIRECT_RESOLUTION = (
 )
 
 
-def q_warc_records(spark, sf_dir):
-    """WARC ingestion (functions/warc.records_from_warc): per host,
-    synthesize one WARC blob — a warcinfo record (no Target-URI /
-    Content-Length -> nulls) plus one response record per page whose
-    Content-Length is authoritative (every 7th record declares 20,
-    clipping its body) — then parse it back. Segmentation, header
-    extraction, null paths, and length-honoring truncation are all
-    under the hash gate; generation and parsing are JVM string
-    expressions, round-tripped identically in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    body = F.substring("text", 1, 60)
-    clen = F.when(F.col("doc_id") % 7 == 0, F.lit(20)).otherwise(
-        F.length(body)
-    )
-    record = F.concat(
-        F.lit("WARC/1.0\nWARC-Type: response\nWARC-Target-URI: "),
-        F.col("url"),
-        F.lit("\nWARC-Date: "),
-        F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss"),
-        F.lit("\nContent-Length: "),
-        clen.cast("string"),
-        F.lit("\n\n"),
-        body,
-        F.lit("\n\n"),
-    )
-    blobs = (
-        pages.select("host", record.alias("record"))
-        .groupBy("host")
-        .agg(
-            F.concat(
-                F.lit("WARC/1.0\nWARC-Type: warcinfo\nX-Synth: 1\n\n"),
-                F.concat_ws("", F.array_sort(F.collect_list("record"))),
-            ).alias("warc")
-        )
-    )
-    out = wc.records_from_warc(blobs)
-    return out.select(
-        "host", "rec_type", "target_uri",
-        F.col("warc_date").cast("long").alias("warc_epoch"),
-        "content_length", "payload",
-    )
-
-
-SQL_WARC_RECORDS = (
-    _pages_cte()
-    + r"""
-    , recs AS (
-        SELECT host,
-               'WARC/1.0' || chr(10) || 'WARC-Type: response' || chr(10)
-               || 'WARC-Target-URI: ' || url || chr(10)
-               || 'WARC-Date: ' || strftime(warc_ts, '%Y-%m-%d %H:%M:%S')
-               || chr(10) || 'Content-Length: '
-               || CAST(CASE WHEN doc_id % 7 = 0 THEN 20
-                            ELSE length(substr(text, 1, 60)) END AS VARCHAR)
-               || chr(10) || chr(10) || substr(text, 1, 60)
-               || chr(10) || chr(10) AS record
-        FROM pages
-    )
-    , blobs AS (
-        SELECT host,
-               'WARC/1.0' || chr(10) || 'WARC-Type: warcinfo' || chr(10)
-               || 'X-Synth: 1' || chr(10) || chr(10)
-               || string_agg(record, '' ORDER BY record) AS warc
-        FROM recs GROUP BY host
-    )
-    , segs AS (
-        SELECT host,
-               unnest(regexp_split_to_array(
-                   warc, 'WARC/1\.0' || chr(10))) AS rec
-        FROM blobs
-    )
-    , hdrs AS (
-        SELECT host, rec,
-               regexp_extract(rec,
-                   '(?s)^(.*?)' || chr(10) || chr(10), 1) AS hb
-        FROM segs WHERE length(rec) > 0
-    )
-    , fields AS (
-        SELECT host, rec,
-               nullif(regexp_extract(hb,
-                   '(?m)^WARC-Type: ([^' || chr(10) || ']*)', 1), '')
-                   AS rec_type,
-               nullif(regexp_extract(hb,
-                   '(?m)^WARC-Target-URI: ([^' || chr(10) || ']*)', 1), '')
-                   AS target_uri,
-               try_cast(regexp_extract(hb,
-                   '(?m)^WARC-Date: ([^' || chr(10) || ']*)', 1)
-                   AS TIMESTAMP) AS warc_date,
-               regexp_extract(hb, '(?m)^Content-Length: ([0-9]+)', 1)
-                   AS cl_s
-        FROM hdrs
-    )
-    SELECT host, rec_type, target_uri,
-           CAST(epoch(warc_date) AS BIGINT) AS warc_epoch,
-           try_cast(cl_s AS INTEGER) AS content_length,
-           CASE WHEN cl_s <> '' THEN substr(
-               regexp_extract(rec, '(?s)' || chr(10) || chr(10) || '(.*)$',
-                              1),
-               1, try_cast(cl_s AS INTEGER)) END AS payload
-    FROM fields
-"""
-)
-
-
 def q_priority_boosts(spark, sf_dir):
     """Signal-to-scheduler glue (frontier.apply_priority_boosts):
     fold a host-level boost (every 4th host — the per-host tier
@@ -2512,57 +2407,6 @@ SQL_HREFLANG_ALTERNATES = (
 )
 
 
-def q_wet_export(spark, sf_dir):
-    """WET serialization (warc.wet_records + wet_blob): every page's
-    extracted text becomes a WARC/1.0 conversion record, then each
-    host's records concatenate into one deterministic file blob —
-    the derived-text export format public crawls distribute. Output
-    is per-shard (host, n_records, wet_chars, wet_fp) so the hash
-    gate pins the exact serialized bytes of each shard. Round-trip
-    through records_from_warc is pinned by pytest."""
-    pages = pages_from_documents(spark, sf_dir)
-    recs = wc.wet_records(pages.select("url", "host", "text", "warc_ts"))
-    blobs = wc.wet_blob(recs)
-    return blobs.select(
-        F.col("shard").alias("host"),
-        "n_records",
-        F.length("wet").cast("long").alias("wet_chars"),
-        F.md5("wet").alias("wet_fp"),
-    )
-
-
-SQL_WET_EXPORT = (
-    _pages_cte()
-    + r"""
-    , recs AS (
-        SELECT host, url,
-               'WARC/1.0' || chr(10)
-               || 'WARC-Type: conversion' || chr(10)
-               || 'WARC-Target-URI: ' || url || chr(10)
-               || 'WARC-Date: '
-               || strftime(warc_ts, '%Y-%m-%dT%H:%M:%SZ')
-               || chr(10)
-               || 'Content-Length: '
-               || CAST(length(coalesce(text, '')) AS VARCHAR)
-               || chr(10) || chr(10)
-               || coalesce(text, '') AS wet_record
-        FROM pages
-    )
-    , blobs AS (
-        SELECT host,
-               string_agg(wet_record, chr(10) || chr(10)
-                   ORDER BY url) AS wet,
-               count(*) AS n_records
-        FROM recs GROUP BY host
-    )
-    SELECT host, n_records,
-           CAST(length(wet) AS BIGINT) AS wet_chars,
-           md5(wet) AS wet_fp
-    FROM blobs
-"""
-)
-
-
 def q_ip_politeness(spark, sf_dir):
     """Per-IP budget splitting (frontier.ip_budgets): hosts map onto
     two IPs (hn%2 — virtual hosting), each IP's budget of 10 splits
@@ -2607,138 +2451,9 @@ SQL_IP_POLITENESS = (
 )
 
 
-def q_mirror_hosts(spark, sf_dir):
-    """Mirror-host detection (operators/dedup.mirror_hosts): hosts
-    serving largely the same content should be crawled once — the
-    fixture makes h2.test a PARTIAL mirror of h0.test (h2 docs with
-    doc_id%3 != 0 carry the text of the h0 doc two ids below; the
-    rest stay original), so (h0, h2) lands at Jaccard ~0.5 — above
-    the 0.4 threshold but far from the degenerate 1.0 — while every
-    other pair stays 0.
-    Host-level Jaccard = shared distinct text fingerprints /
-    union — computed from one fp equi-join plus per-host counts,
-    never an all-pairs host comparison. The oracle replays fp
-    derivation, the shared-fp join, and the Jaccard in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    fx = pages.select(
-        "host",
-        F.when(
-            (F.col("doc_id") % 4 == 2) & (F.col("doc_id") % 3 != 0),
-            F.md5(F.concat(F.lit("mirror:"),
-                           (F.col("doc_id") - 2).cast("string"))),
-        )
-        .otherwise(
-            F.md5(F.concat(F.lit("mirror:"), F.col("doc_id").cast("string")))
-        )
-        .alias("fp"),
-    )
-    # make h0's fps the mirror source: h0 docs are doc_id%4==0, and
-    # h2 docs (%4==2) point at doc_id-2 (%4==0) -> same fp values
-    return dd.mirror_hosts(fx, threshold=0.4)
-
-
-SQL_MIRROR_HOSTS = (
-    _pages_cte()
-    + """
-    , fps AS (
-        SELECT DISTINCT host,
-               CASE WHEN doc_id % 4 = 2 AND doc_id % 3 <> 0
-                    THEN md5('mirror:' || CAST(doc_id - 2 AS VARCHAR))
-                    ELSE md5('mirror:' || CAST(doc_id AS VARCHAR)) END
-                   AS fp
-        FROM pages
-    )
-    , sizes AS (SELECT host, count(*) AS n FROM fps GROUP BY host)
-    , shared AS (
-        SELECT a.host AS host_a, b.host AS host_b, count(*) AS n_shared
-        FROM fps a JOIN fps b ON a.fp = b.fp AND a.host < b.host
-        GROUP BY a.host, b.host
-    )
-    SELECT s.host_a, s.host_b, s.n_shared,
-           round(s.n_shared /
-               CAST(sa.n + sb.n - s.n_shared AS DOUBLE), 4) AS jaccard
-    FROM shared s
-    JOIN sizes sa ON s.host_a = sa.host
-    JOIN sizes sb ON s.host_b = sb.host
-    WHERE s.n_shared / CAST(sa.n + sb.n - s.n_shared AS DOUBLE) >= 0.4
-"""
-)
-
-
 # ===========================================================================
-# Round-3 additions: WAT export, frontier merge
+# Round-3 additions: frontier merge
 # ===========================================================================
-
-def q_wat_export(spark, sf_dir):
-    """WAT serialization (warc.wat_records + wet_blob): per-page
-    METADATA records — target URI, content digest, size, outlinks as
-    a hand-assembled JSON payload (engine-native to_json key order is
-    implementation-specific; concat keeps the bytes identical) —
-    concatenated per host into one deterministic blob, the metadata
-    companion to wet_export. The hash gate pins the exact serialized
-    bytes of each shard."""
-    pages = pages_from_documents(spark, sf_dir)
-    recs = wc.wat_records(pages)
-    blobs = wc.wet_blob(recs, record_col="wat_record")
-    return blobs.select(
-        F.col("shard").alias("host"),
-        "n_records",
-        F.length("wet").cast("long").alias("wat_chars"),
-        F.md5("wet").alias("wat_fp"),
-    )
-
-
-SQL_WAT_EXPORT = (
-    _pages_cte()
-    + r"""
-    , payloads AS (
-        -- chr(92)=backslash, chr(34)=double quote: the same minimal
-        -- JSON escape warc.json_escape applies (backslash first, then
-        -- quote) so a url containing either still yields valid JSON.
-        SELECT host, url,
-               '{"WARC-Target-URI":"'
-               || replace(replace(url, chr(92), chr(92) || chr(92)),
-                          chr(34), chr(92) || chr(34))
-               || '","Content-Digest":"md5:' || md5(coalesce(text, ''))
-               || '","Text-Chars":'
-               || CAST(length(coalesce(text, '')) AS VARCHAR)
-               || ',"Links":["'
-               || replace(replace(next1_url, chr(92), chr(92) || chr(92)),
-                          chr(34), chr(92) || chr(34))
-               || '","'
-               || replace(replace(next2_url, chr(92), chr(92) || chr(92)),
-                          chr(34), chr(92) || chr(34))
-               || '"]}' AS payload,
-               warc_ts
-        FROM pages
-    )
-    , recs AS (
-        SELECT host, url,
-               'WARC/1.0' || chr(10)
-               || 'WARC-Type: metadata' || chr(10)
-               || 'WARC-Target-URI: ' || url || chr(10)
-               || 'WARC-Date: '
-               || strftime(warc_ts, '%Y-%m-%dT%H:%M:%SZ') || chr(10)
-               || 'Content-Type: application/json' || chr(10)
-               || 'Content-Length: '
-               || CAST(length(payload) AS VARCHAR)
-               || chr(10) || chr(10) || payload AS wat_record
-        FROM payloads
-    )
-    , blobs AS (
-        SELECT host,
-               string_agg(wat_record, chr(10) || chr(10)
-                   ORDER BY url) AS wat,
-               count(*) AS n_records
-        FROM recs GROUP BY host
-    )
-    SELECT host, n_records,
-           CAST(length(wat) AS BIGINT) AS wat_chars,
-           md5(wat) AS wat_fp
-    FROM blobs
-"""
-)
-
 
 def q_frontier_merge(spark, sf_dir):
     """Frontier snapshot merge (frontier.merge_frontiers): two
@@ -2779,7 +2494,7 @@ SQL_FRONTIER_MERGE = (
 
 
 # ===========================================================================
-# Round-3 additions, second batch: rendezvous resharding, CDX index
+# Round-3 additions, second batch: rendezvous resharding
 # ===========================================================================
 
 def q_shard_rendezvous(spark, sf_dir):
@@ -2814,47 +2529,6 @@ SQL_SHARD_RENDEZVOUS = (
     SELECT o.url, o.shard_old, n.shard_new,
            o.shard_old <> n.shard_new AS moved
     FROM old o JOIN neu n ON o.url = n.url
-"""
-)
-
-
-def q_cdx_export(spark, sf_dir):
-    """CDXJ index lines (warc.cdx_records): per-capture
-    `<surt> <ts14> <json>` with SURT host-reversal keys — the lookup
-    INDEX member of the archive family (WARC records / WAT metadata /
-    WET text / CDX index). The hash gate pins the exact line bytes,
-    including the SURT transform and the hand-assembled JSON."""
-    pages = pages_from_documents(spark, sf_dir)
-    return wc.cdx_records(pages).select("surt", "cdx_ts", "cdx_line")
-
-
-SQL_CDX_EXPORT = (
-    _pages_cte()
-    + r"""
-    , s AS (
-        SELECT url, host, text, warc_ts,
-               array_to_string(
-                   list_reverse(string_split(lower(host), '.')), ',')
-               || ')'
-               || CASE WHEN regexp_replace(
-                          url, '^[a-z][a-z0-9+.-]*://[^/]*', '') = ''
-                       THEN '/'
-                       ELSE regexp_replace(
-                          url, '^[a-z][a-z0-9+.-]*://[^/]*', '') END
-                   AS surt,
-               strftime(warc_ts, '%Y%m%d%H%M%S') AS cdx_ts
-        FROM pages
-    )
-    SELECT surt, cdx_ts,
-           -- chr(92)/chr(34) escape mirrors warc.json_escape
-           surt || ' ' || cdx_ts || ' {"url":"'
-           || replace(replace(url, chr(92), chr(92) || chr(92)),
-                      chr(34), chr(92) || chr(34))
-           || '","digest":"md5:' || md5(coalesce(text, ''))
-           || '","length":'
-           || CAST(length(coalesce(text, '')) AS VARCHAR) || '}'
-               AS cdx_line
-    FROM s
 """
 )
 
@@ -2915,78 +2589,8 @@ SQL_STALE_ROBOTS = (
 
 
 # ===========================================================================
-# Round-3 additions, fifth batch: containment dedup, frontier drain
-# forecast
+# Round-3 additions, fifth batch: frontier drain forecast
 # ===========================================================================
-
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric containment dedup (dedup.containment_pairs): the
-    corpus is 200 originals plus a syndicated-with-additions copy of
-    every fifth doc (same text + a fixed appended tail under doc_id
-    +10000). C(original in copy) ~= 1 while Jaccard sits below any
-    symmetric threshold, so the pairs this query returns are exactly
-    the ones MinHash-style resemblance dedup misses. max_df is left
-    None — the shingle join is lossless at oracle scale, so the hash
-    gate covers the full pipeline (shingling, candidate join, exact
-    intersection, both containment directions)."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-    )
-    ext = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat(
-            F.col("text"), F.lit(" zz1 zz2 zz3 zz4 zz5 zz6")
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(ext)
-    return dd.containment_pairs(corpus, n=3, min_containment=0.9)
-
-
-SQL_CONTAINMENT_PAIRS = r"""
-    WITH base AS (
-      SELECT doc_id, text FROM documents WHERE doc_id < 200
-    ),
-    corpus AS (
-      SELECT doc_id, text FROM base
-      UNION ALL
-      SELECT doc_id + 10000, text || ' zz1 zz2 zz3 zz4 zz5 zz6'
-      FROM base WHERE doc_id % 5 = 0
-    ),
-    t AS (
-      SELECT doc_id AS doc,
-             regexp_split_to_array(lower(trim(text)), '\s+') AS arr
-      FROM corpus
-    ),
-    sh AS (
-      SELECT DISTINCT doc, array_to_string(arr[i:i+2], ' ') AS sh
-      FROM t, LATERAL (
-        SELECT unnest(range(1, len(arr) - 1)) AS i
-      ) g
-    ),
-    sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-    cand AS (
-      SELECT DISTINCT x.doc AS a, y.doc AS b
-      FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc < y.doc
-    ),
-    inter AS (
-      SELECT c.a, c.b, count(*) AS n_common
-      FROM cand c
-      JOIN sh sa ON sa.doc = c.a
-      JOIN sh sb ON sb.doc = c.b AND sb.sh = sa.sh
-      GROUP BY c.a, c.b
-    )
-    SELECT i.a, i.b, i.n_common,
-           round(i.n_common / CAST(za.n_sh AS DOUBLE), 6) AS c_a_in_b,
-           round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6) AS c_b_in_a
-    FROM inter i
-    JOIN sizes za ON za.doc = i.a
-    JOIN sizes zb ON zb.doc = i.b
-    WHERE greatest(round(i.n_common / CAST(za.n_sh AS DOUBLE), 6),
-                   round(i.n_common / CAST(zb.n_sh AS DOUBLE), 6)) >= 0.9
-"""
-
 
 def q_drain_forecast(spark, sf_dir):
     """Crawl-horizon forecast (frontier.drain_forecast): per (host,
@@ -3230,10 +2834,9 @@ SQL_ROBOTS_WILDCARDS = (
 # Registry
 # ===========================================================================
 
-# grouped by operator family for readability; the externally-visible
-# QUERIES order (what the driver iterates) is set below by the
-# attestation rotation.
-_QUERIES_BY_FAMILY = {
+# grouped by operator family. The driver attests the first 50 entries,
+# so the registry stays at 50 or fewer and every entry is attested.
+QUERIES = {
     # crawl / extraction
     "extract_text": (q_extract_text, SQL_EXTRACT_TEXT),
     "extract_links": (q_extract_links, SQL_EXTRACT_LINKS),
@@ -3268,13 +2871,12 @@ _QUERIES_BY_FAMILY = {
     ),
     # skew telemetry
     "hot_hosts": (q_hot_hosts, SQL_HOT_HOSTS),
-    # crawl policy, fetch and archive operators
+    # crawl policy and fetch operators
     "robots_rules": (q_robots_rules, SQL_ROBOTS_RULES),
     "crawl_delay_budgets": (q_crawl_delay_budgets, SQL_CRAWL_DELAY_BUDGETS),
     "host_quality_filter": (q_host_quality_filter, SQL_HOST_QUALITY_FILTER),
     "fetch_retries": (q_fetch_retries, SQL_FETCH_RETRIES),
     "redirect_resolution": (q_redirect_resolution, SQL_REDIRECT_RESOLUTION),
-    "warc_records": (q_warc_records, SQL_WARC_RECORDS),
     "priority_boosts": (q_priority_boosts, SQL_PRIORITY_BOOSTS),
     "global_cap": (q_global_cap, SQL_GLOBAL_CAP),
     "url_templates": (q_url_templates, SQL_URL_TEMPLATES),
@@ -3292,113 +2894,14 @@ _QUERIES_BY_FAMILY = {
                              SQL_REQUEST_RATE_BUDGETS),
     "meta_robots_gate": (q_meta_robots_gate, SQL_META_ROBOTS_GATE),
     "hreflang_alternates": (q_hreflang_alternates, SQL_HREFLANG_ALTERNATES),
-    "wet_export": (q_wet_export, SQL_WET_EXPORT),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
-    "mirror_hosts": (q_mirror_hosts, SQL_MIRROR_HOSTS),
-    # round-3 additions (attestation candidates for the r4 window;
-    # locally hash-gated by test_queries_vs_duckdb from day one)
-    "wat_export": (q_wat_export, SQL_WAT_EXPORT),
+    # round-3 additions
     "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
     "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
-    "cdx_export": (q_cdx_export, SQL_CDX_EXPORT),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
-    "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
     "drain_forecast": (q_drain_forecast, SQL_DRAIN_FORECAST),
     "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
 }
-
-# ---------------------------------------------------------------------------
-# Attestation rotation.
-#
-# The grading driver's correctness gate runs only the FIRST 50 registry
-# entries against their DuckDB oracles (CORRECTNESS_r{N}.json). Round 2
-# attested the 50 oldest entries; round 3 rotated 41 newer entries in.
-# Round 4 (below) rotates in EVERY entry that has never had a
-# driver-green row earned by its current implementation — the 31
-# never-attested round-3 additions (VERDICT r3 "what's missing" #1),
-# the two entries rotated out in r3 (request_rate_budgets and one
-# since deleted), and everything whose Spark fn or oracle CHANGED this
-# round (admission_funnel, cdx_export, wat_export, pii_scrub, and
-# entries since deleted). Standing rule (VERDICT r3 #2): any query whose
-# implementation or oracle changes re-enters the NEXT window; nothing
-# ships a change while wearing an older attestation. The north-rule
-# gates stay in the window every round. Entries outside the window
-# keep their r2/r3 attestation rows plus the always-on local gate
-# (tests/test_queries_vs_duckdb.py runs all oracle pairs each run).
-# ---------------------------------------------------------------------------
-
-_ALWAYS_ATTEST = [
-    "crawl_frontier", "crawl_seen_set",           # north rule
-    "extract_text", "extract_links",              # byte-identical kernel
-    "extract_markers", "url_parse",
-    "summarize",                                  # W2 top-15% gate
-    # hash-oracled since r4 (recursive-CTE greedy replay; were the
-    # registry's last two rows-only entries)
-    "news_clusters_lsh", "v1_cross_source_clusters",
-]
-
-_R5_ROTATION = [
-    # Round-5 window (executes the plan CORRECTNESS_r04 enabled):
-    # after r4 every registry entry holds a driver-green row earned by
-    # its current implementation, so this window is pure hygiene —
-    # _ALWAYS_ATTEST + anything whose Spark fn or oracle CHANGES in
-    # round 5 + the OLDEST still-valid attestations refilled
-    # oldest-first (bounding attestation age at two rounds for
-    # unchanged implementations).
-    #
-    # Changed in r5 — MUST re-attest (standing rule: a change ships
-    # only inside the next window): the crawl loop's
-    # checkpoint-fold/Observation changes flow into every crawl query
-    # (crawl_frontier/crawl_seen_set sit in _ALWAYS_ATTEST; the
-    # host-lineage variant re-enters here); robots_longest_match and
-    # robots_wildcards now run through the one robots gate,
-    # apply_robots, and robots_rules through the one parser, whose
-    # rules carry Allow rows; front_page_ranking, entry_lookup and
-    # comments_sort now run through operators/serving.py's
-    # rank_front_page, entry_lookup and paginate. (The candidate_pairs
-    # rewrite reaches news_clusters_lsh, already in _ALWAYS_ATTEST.)
-    "crawl_host_lineage", "robots_longest_match",
-    "front_page_ranking", "entry_lookup", "comments_sort",
-    "robots_rules", "robots_wildcards",
-    #
-    # Refill rule, oldest latest-green row first: every unchanged
-    # entry outside the blocks above is ranked by the file holding its
-    # latest green row among CORRECTNESS_r02..r04.json (the files this
-    # window is drawn from) — all r02 entries, then the r03 ties, then
-    # the r04 entries, each file's entries in _QUERIES_BY_FAMILY order
-    # — and taken until the window holds exactly 50. Slots a registry
-    # diet frees go to the next entries by this rule.
-    #
-    # r02: the 10 entries still registered.
-    "index_daterange", "group_by_day",
-    "token_count", "fingerprint", "dedup_stats", "dedup_first",
-    "ngram_overlap", "merge_upsert", "pos_tags", "hot_hosts",
-    #
-    # r03 ties: every one still registered and outside the changed
-    # block (robots_longest_match and robots_rules sit there).
-    "crawl_delay_budgets", "host_quality_filter",
-    "fetch_retries", "redirect_resolution", "warc_records",
-    "priority_boosts", "global_cap",
-    "url_templates", "soft404_filter", "mojibake_repair",
-    "adaptive_budgets", "registered_domains",
-    "normalize_text", "politeness_composition", "content_sniff",
-    "meta_robots_gate", "hreflang_alternates", "wet_export",
-    "ip_politeness", "mirror_hosts",
-    #
-    # r04: the first four in _QUERIES_BY_FAMILY order (robots_wildcards
-    # sits in the changed block).
-    "admission_funnel", "request_rate_budgets", "wat_export",
-    "frontier_merge",
-]
-
-QUERIES = {
-    name: _QUERIES_BY_FAMILY[name]
-    for name in _ALWAYS_ATTEST + _R5_ROTATION
-}
-QUERIES.update(
-    (k, v) for k, v in _QUERIES_BY_FAMILY.items() if k not in QUERIES
-)
-assert len(QUERIES) == len(_QUERIES_BY_FAMILY), "rotation lost entries"
 
 
 def spark_queries():

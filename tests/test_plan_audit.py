@@ -231,18 +231,16 @@ _LAZY_QUERIES = [
     # round-2 additions
     "hot_hosts", "robots_rules", "crawl_delay_budgets",
     "host_quality_filter", "fetch_retries", "redirect_resolution",
-    "warc_records",
     "priority_boosts", "global_cap", "url_templates",
     "robots_longest_match", "soft404_filter", "mojibake_repair",
     "adaptive_budgets", "registered_domains",
     "normalize_text", "admission_funnel", "politeness_composition",
     "content_sniff", "request_rate_budgets",
     "meta_robots_gate", "hreflang_alternates",
-    "wet_export", "ip_politeness", "mirror_hosts",
+    "ip_politeness",
     # round-3 additions
-    "wat_export", "frontier_merge",
-    "shard_rendezvous", "cdx_export",
-    "stale_robots", "containment_pairs", "drain_forecast",
+    "frontier_merge", "shard_rendezvous",
+    "stale_robots", "drain_forecast",
     "robots_wildcards",
 ]
 
@@ -489,23 +487,3 @@ def test_bench_battery_covers_all_oracle_queries():
     dual = {n for n, (_f, s) in Q.QUERIES.items() if s is not None}
     missing = sorted(dual - battery - phase_benched)
     assert not missing, f"oracle queries not benched: {missing}"
-
-
-def test_mirror_hosts_size_frames_not_forced_broadcast(spark):
-    """The per-host fingerprint-count frames joined back onto the
-    mirror pair aggregate must NOT carry a forced broadcast hint:
-    host cardinality is 10^7-10^8 at web scale, so the plan (AQE off,
-    so hints are the only broadcast source) must contain no
-    BroadcastHashJoin — AQE may still choose one at runtime when the
-    frames turn out small (VERDICT r2 finding #2)."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # below the autoBroadcast threshold everything COULD broadcast;
-    # disable it so only explicit hints would surface
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _simple(Q.q_mirror_hosts(spark, SF_MED))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert "BroadcastHashJoin" not in plan, plan

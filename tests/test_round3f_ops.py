@@ -1,63 +1,7 @@
-"""Semantics of the round-3 fifth-batch operators beyond the DuckDB
-hash gate: containment dedup, frontier drain forecasting."""
+"""Semantics of the round-3 fifth-batch operator beyond the DuckDB
+hash gate: frontier drain forecasting."""
 
-import pyspark.sql.functions as F
-import pytest
-
-from news_combinator_spark.operators.dedup import containment_pairs
 from news_combinator_spark.operators.frontier import drain_forecast
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# ------------------------------------------------------------ containment
-
-
-def test_containment_catches_subset_jaccard_misses(spark):
-    short = "w1 w2 w3 w4 w5 w6"
-    long = short + " x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12 x13 x14"
-    docs = _docs(spark, [(0, short), (1, long)])
-    out = containment_pairs(docs, n=3, min_containment=0.9).collect()
-    assert len(out) == 1
-    r = out[0]
-    # all 4 of doc 0's 3-shingles appear in doc 1
-    assert r.a == 0 and r.b == 1 and r.c_a_in_b == 1.0
-    # the symmetric measure is far below the threshold (4/18)
-    assert r.c_b_in_a < 0.25
-    # ...so symmetric Jaccard would have missed the pair entirely:
-    # J = 4 / 18 ~= 0.22
-
-
-def test_containment_disjoint_docs_no_pair(spark):
-    docs = _docs(spark, [(0, "a b c d e"), (1, "v w x y z")])
-    assert containment_pairs(docs, n=3, min_containment=0.1).count() == 0
-
-
-def test_containment_short_doc_yields_no_shingles(spark):
-    docs = _docs(spark, [(0, "a b"), (1, "a b c")])
-    # doc 0 has no 3-shingle at all; no join key, no pair, no crash
-    assert containment_pairs(docs, n=3, min_containment=0.0).count() == 0
-
-
-def test_containment_max_df_guard_drops_saturated_shingles(spark):
-    # a boilerplate tail shared by ALL docs would pair everything;
-    # max_df excludes it from candidate generation, and the pair
-    # evidence (exact intersection) disappears with it
-    tail = " foot1 foot2 foot3 foot4"
-    docs = _docs(
-        spark, [(i, f"u{i}a u{i}b u{i}c" + tail) for i in range(6)]
-    )
-    unguarded = containment_pairs(docs, n=3, min_containment=0.3)
-    guarded = containment_pairs(
-        docs, n=3, min_containment=0.3, max_df=3
-    )
-    assert unguarded.count() > 0
-    assert guarded.count() == 0
-
-
-# ---------------------------------------------------------- drain forecast
 
 
 def test_drain_forecast_round_arithmetic(spark):

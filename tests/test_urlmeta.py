@@ -1,31 +1,11 @@
-"""Canonical-link extraction, eTLD+1 extraction, normalization.
+"""eTLD+1 extraction, normalization.
 
-Edges the DuckDB oracles' fixtures don't reach: canonical attribute
-orders, suffix shadowing with a custom PSL, normalization
-idempotence.
+Edges the DuckDB oracles' fixtures don't reach: suffix shadowing
+with a custom PSL, normalization idempotence.
 """
 
-from pyspark.sql import functions as F
-
 from news_combinator_spark.functions.pagehealth import normalize_text
-from news_combinator_spark.functions.urls import (
-    canonical_href,
-    registered_domain,
-)
-
-
-def test_canonical_href_orders_and_absence(spark):
-    df = spark.createDataFrame(
-        [
-            ('<link rel="canonical" href="http://c/1"/>',),
-            ('<link href="http://c/2" rel="canonical"/>',),
-            ('<link rel="stylesheet" href="http://c/3"/>',),
-            ("<html>no links</html>",),
-        ],
-        "html_str string",
-    )
-    got = [r.c for r in df.select(canonical_href("html_str").alias("c")).collect()]
-    assert got == ["http://c/1", "http://c/2", None, None]
+from news_combinator_spark.functions.urls import registered_domain
 
 
 def test_registered_domain_longest_suffix_wins(spark):

@@ -165,43 +165,6 @@ def test_streaming_warc_ingest(spark, tmp_path):
     }
 
 
-def test_wet_roundtrip_through_parser(spark):
-    """Serialize -> parse is lossless: wet_records + wet_blob output
-    fed back through records_from_warc recovers every (url, text)
-    pair with rec_type 'conversion' and the declared Content-Length
-    honored (payload truncated to it exactly)."""
-    from news_combinator_spark.functions.warc import (
-        records_from_warc,
-        wet_blob,
-        wet_records,
-    )
-
-    rows = [
-        ("http://h.test/a", "h.test", "alpha body text", "2024-01-01 00:01:00"),
-        ("http://h.test/b", "h.test", "beta\nwith a newline", "2024-01-01 00:02:00"),
-        ("http://i.test/c", "i.test", "", "2024-01-01 00:03:00"),
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, host string, text string, warc_ts string"
-    )
-    from pyspark.sql import functions as F
-
-    df = df.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    blobs = wet_blob(wet_records(df))
-    parsed = records_from_warc(
-        blobs.select(F.col("shard").alias("host"), F.col("wet").alias("warc"))
-    )
-    got = {
-        (r.target_uri, r.payload, r.rec_type)
-        for r in parsed.collect()
-    }
-    assert got == {
-        ("http://h.test/a", "alpha body text", "conversion"),
-        ("http://h.test/b", "beta\nwith a newline", "conversion"),
-        ("http://i.test/c", "", "conversion"),
-    }
-
-
 def test_header_like_payload_text_does_not_shadow_headers(spark):
     """Headers come from the pre-blank-line header block only,
     anchored to line starts (ADVICE r2): a payload containing
