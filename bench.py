@@ -75,30 +75,21 @@ SQL_BENCH_QUERIES = [
     "hot_hosts",
     "robots_rules",
     "crawl_delay_budgets",
-    "host_quality_filter",
-    "fetch_retries",
-    "redirect_resolution",
     "priority_boosts",
-    "global_cap",
-    "url_templates",
     "robots_longest_match",
     "soft404_filter",
     "mojibake_repair",
     "adaptive_budgets",
-    "registered_domains",
     "normalize_text",
     "admission_funnel",
     "politeness_composition",
     "content_sniff",
     "request_rate_budgets",
     "meta_robots_gate",
-    "hreflang_alternates",
     "ip_politeness",
     # added round 3
     "frontier_merge",
-    "shard_rendezvous",
     "stale_robots",
-    "drain_forecast",
     "pii_scrub",
     "robots_wildcards",
 ]

@@ -1,14 +1,12 @@
-"""URL canonicalization, grammar rules, and hashing.
+"""URL canonicalization and the reference's URL grammar rules.
 
 The reference's per-source URL grammars (crawlernewsspider.py:16,39,62;
 reconstruction/crawler/crawler.php:232-236,292-296,364-368) become
 regex rules with capture groups that turn into columns (date, news id).
 Canonicalization + dedup is Scrapy's implicit dupefilter / the file-
-exists check (pipelines.py:19-23) re-expressed as an explicit kernel.
-
-Engine-side hashing uses Spark's built-in ``xxhash64`` (JVM, codegen).
-The pure-Python oracle uses the same Spark function through a local
-session, so hashes agree by construction.
+exists check (pipelines.py:19-23) re-expressed as an explicit kernel:
+`canonicalize_url` is the C1 seen-set key, run per row in Spark by
+`canonicalize_udf` and inside the crawl's link-extraction UDF.
 """
 
 from __future__ import annotations
@@ -145,90 +143,6 @@ def url_host(url: str) -> str:
 @F.pandas_udf(T.StringType())
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize_url(u or ""))
-
-
-def hreflang_links(df, html_col: str = "html_str", url_col: str = "url"):
-    """Explode ``<link rel="alternate" hreflang=.. href=..>`` tags into
-    (url, hreflang, alt_url) rows — the translation graph a
-    multilingual crawl needs (language variants are near-dups BY
-    DECLARATION; training pipelines keep one per language or link
-    them as parallel text). Tags missing either attribute are
-    dropped; both attribute orders inside the tag work because the
-    per-tag extraction runs on the isolated tag text. Per-row JVM
-    regexes; one explode, no parser."""
-    tags = F.regexp_extract_all(
-        F.coalesce(F.col(html_col), F.lit("")),
-        F.lit(r'(?i)<link[^>]*rel="alternate"[^>]*>'),
-        0,
-    )
-    out = df.select(
-        F.col(url_col).alias("url"), F.explode(tags).alias("tag")
-    ).select(
-        "url",
-        F.regexp_extract("tag", r'hreflang="([^"]*)"', 1).alias("hreflang"),
-        F.regexp_extract("tag", r'href="([^"]*)"', 1).alias("alt_url"),
-    )
-    return out.filter(
-        (F.col("hreflang") != "") & (F.col("alt_url") != "")
-    )
-
-
-# A deliberately small built-in public-suffix set: the multi-label
-# suffixes a crawl actually needs to split correctly plus the common
-# gTLDs. A production deployment swaps in the full Mozilla PSL — the
-# operator takes any (suffix) frame; only the DATA is stubbed, the
-# longest-match machinery is the real thing.
-DEFAULT_PUBLIC_SUFFIXES = (
-    "com", "org", "net", "edu", "gov", "io", "dev", "test",
-    "co.uk", "org.uk", "ac.uk", "com.au", "net.au", "com.cn",
-    "com.br", "co.jp", "or.jp", "co.kr",
-)
-
-
-def registered_domain(
-    df, host_col: str = "host", suffixes=DEFAULT_PUBLIC_SUFFIXES
-):
-    """Append ``public_suffix`` and ``registered_domain`` (eTLD+1):
-    the LONGEST suffix from `suffixes` that terminates the host on a
-    label boundary wins ('a.b.co.uk' -> co.uk, not uk); the
-    registered domain is the label before it plus the suffix. Hosts
-    matching no suffix fall back to their last two labels (the PSL
-    wildcard-* convention), so the column is never NULL.
-
-    Scale shape: the suffix table broadcasts (the full PSL is ~9k
-    rows); the longest match is a map-side-combined groupBy over at
-    most len(suffixes) matches per distinct host — no window, and
-    the join key stays the caller's host column.
-    """
-    spark = df.sparkSession
-    sfx = F.broadcast(
-        spark.createDataFrame([(s,) for s in suffixes], "suffix string")
-    )
-    h = F.col(host_col)
-    matched = df.join(
-        sfx,
-        (h == F.col("suffix"))
-        | h.endswith(F.concat(F.lit("."), F.col("suffix"))),
-        "left",
-    )
-    best = matched.groupBy(*df.columns).agg(
-        F.max_by("suffix", F.length("suffix")).alias("public_suffix")
-    )
-    # label immediately before the suffix (empty when host == suffix):
-    # strip '.<suffix>' off the end, keep the last remaining label
-    prefix = h.substr(
-        F.lit(1), F.length(h) - F.length("public_suffix") - F.lit(1)
-    )
-    owner = F.regexp_extract(prefix, r"([^.]+)$", 1)
-    fallback = F.regexp_extract(h, r"([^.]+\.[^.]+)$", 1)
-    return best.withColumn(
-        "registered_domain",
-        F.when(
-            F.col("public_suffix").isNull() | (owner == ""), fallback
-        ).otherwise(
-            F.concat(owner, F.lit("."), F.col("public_suffix"))
-        ),
-    )
 
 
 def match_source(url: str) -> tuple[str, str, str] | None:

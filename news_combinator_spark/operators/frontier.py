@@ -224,7 +224,6 @@ def adaptive_budgets(
     max_budget: int = 64,
     alpha: float = 2.0,
     quantile: float = 0.95,
-    exact: bool = True,
     hosts: DataFrame | None = None,
 ) -> DataFrame:
     """Adaptive politeness from OBSERVED fetch latency: per host,
@@ -244,18 +243,12 @@ def adaptive_budgets(
     in `hosts` with no observations get `default_budget`.
 
     Scale shape: one groupBy(host) — the only shuffle, keyed on the
-    same column the scheduler partitions by. `exact=True` computes an
-    exact interpolated percentile (ObjectHashAggregate, fine for
-    per-round logs and required for the DuckDB hash oracle);
-    `exact=False` switches to `approx_percentile` (partial-agg,
-    map-side combined) for 10^10-row cumulative logs.
+    same column the scheduler partitions by. The percentile is the
+    exact interpolated one (ObjectHashAggregate, fine for per-round
+    logs and what the DuckDB hash oracle replays).
     """
     lat = F.col("latency_ms").cast("double")
-    p = (
-        F.percentile(lat, F.lit(float(quantile)))
-        if exact
-        else F.approx_percentile(lat, F.lit(float(quantile)), F.lit(10000))
-    )
+    p = F.percentile(lat, F.lit(float(quantile)))
     per_host = fetch_log.groupBy("host").agg(p.alias("p_ms"))
     budget = F.least(
         F.greatest(
@@ -329,46 +322,6 @@ def ip_budgets(
                 F.coalesce("_ip_b", "_h_b"), F.coalesce("_h_b", "_ip_b")
             ).cast("int").alias("budget"),
         )
-    )
-
-
-def schedule_with_global_cap(
-    frontier: DataFrame,
-    budgets: DataFrame,
-    global_cap: int,
-    salt_buckets: int = 0,
-) -> DataFrame:
-    """Politeness budgets + a GLOBAL per-round fetch cap.
-
-    Per-host budgets bound what each host tolerates; the cluster's
-    fetch capacity per round (egress, proxy pool) is a separate global
-    bound. Of the budget-taken rows, keep the first ``global_cap`` in
-    the crawl's total order (priority, host, url); the rest defer to
-    the next round exactly like budget-deferred rows.
-
-    The cap rank reuses `ranking.partitioned_global_rank` — per-
-    (priority, host) local ranks plus a broadcast prefix-sum over the
-    tiny counts frame — so no data-sized single-partition stage exists
-    here either (same machinery as fetch_order).
-    """
-    # both output branches and the cap rank re-read these frames;
-    # lazy local checkpoints materialize each once at first action
-    # instead of re-running the politeness window per branch
-    sched = schedule_per_host(frontier, budgets, salt_buckets).localCheckpoint(
-        eager=False
-    )
-    taken = sched.filter("taken").drop("taken")
-    deferred = sched.filter("NOT taken").drop("taken")
-    ranked = partitioned_global_rank(
-        taken,
-        part_cols=["priority", "host"],
-        order_cols=["url"],
-        out_col="_gr",
-    ).localCheckpoint(eager=False)
-    kept = ranked.filter(F.col("_gr") <= global_cap).drop("_gr")
-    over = ranked.filter(F.col("_gr") > global_cap).drop("_gr")
-    return kept.withColumn("taken", F.lit(True)).unionByName(
-        over.unionByName(deferred).withColumn("taken", F.lit(False))
     )
 
 
@@ -793,162 +746,6 @@ def apply_priority_boosts(
     return out.drop("_hb", "_ub")
 
 
-def _fail_threshold_hex(fail_frac: float) -> str:
-    """fail_frac in [0,1] -> 13-hex-digit lowercase threshold: the
-    first 13 hex digits of an md5 are a uniform 52-bit integer, exact
-    in a double, so md5 prefix < threshold holds with probability
-    fail_frac and compares as a string in any engine."""
-    return format(int(fail_frac * (1 << 52)), "013x")
-
-
-def fetch_with_retry(
-    scheduled: DataFrame,
-    max_attempts: int = 3,
-    fail_frac: float = 0.2,
-    seed: str = "r",
-) -> DataFrame:
-    """Transient-failure retry waves over a scheduled fetch batch.
-
-    A production fetcher sees timeouts/5xx on a fraction of URLs and
-    re-enqueues them into later waves with exponential backoff instead
-    of dropping them (the reference's php fetcher just blocks per URL,
-    crawler.php:420-444 — retry scheduling is what that becomes when
-    fetches are batched). The sandbox stand-in for "attempt k on url
-    failed transiently" is deterministic: md5(url:seed:k) below the
-    fail_frac threshold (its first 13 hex digits read as a uniform
-    52-bit integer, see `_fail_threshold_hex`, so the oracle can
-    recompute the exact outcome per URL).
-
-    Input: (url, host, priority) scheduled rows. Output one row per
-    input: (url, host, priority, n_attempts, fetched, backoff_rounds)
-    where n_attempts is attempts actually made (first success, or
-    max_attempts if all failed), fetched marks success, and
-    backoff_rounds = sum(2^j for failed attempts j) is the total
-    exponential-backoff delay the URL waited, in scheduling rounds.
-
-    Scale shape: wave k is a narrow filter over wave k-1's failures —
-    no shuffle at all (the failure test is a per-row expression), so
-    the whole retry ladder is one whole-stage-codegen pass per wave
-    over a geometrically shrinking frame.
-    """
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    thr = F.lit(_fail_threshold_hex(fail_frac))
-
-    def failed(k: int) -> F.Column:
-        key = F.concat_ws(":", F.col("url"), F.lit(seed), F.lit(str(k)))
-        return F.substring(F.md5(key), 1, 13) < thr
-
-    pending = scheduled.select("url", "host", "priority").withColumn(
-        "backoff_rounds", F.lit(0).cast("long")
-    )
-    waves: list[DataFrame] = []
-    for k in range(max_attempts):
-        ok = pending.withColumn("_fail", failed(k))
-        waves.append(
-            ok.filter(~F.col("_fail")).select(
-                "url", "host", "priority",
-                F.lit(k + 1).alias("n_attempts"),
-                F.lit(True).alias("fetched"),
-                "backoff_rounds",
-            )
-        )
-        pending = (
-            ok.filter(F.col("_fail"))
-            .drop("_fail")
-            .withColumn(
-                "backoff_rounds", F.col("backoff_rounds") + F.lit(2 ** k)
-            )
-        )
-    waves.append(
-        pending.select(
-            "url", "host", "priority",
-            F.lit(max_attempts).alias("n_attempts"),
-            F.lit(False).alias("fetched"),
-            "backoff_rounds",
-        )
-    )
-    out = waves[0]
-    for w in waves[1:]:
-        out = out.unionByName(w)
-    return out
-
-
-def resolve_redirects(
-    urls: DataFrame,
-    redirects: DataFrame,
-    max_hops: int = 3,
-) -> DataFrame:
-    """Follow a redirect map (src -> dst) from each url for up to
-    ``max_hops`` hops, with cycle detection.
-
-    Canonicalization's dynamic sibling: 3xx chains are why the same
-    page appears under several URLs, and the frontier must fetch the
-    terminal URL and attribute the seen-set entry to it. Returns one
-    row per input url: (url, final_url, hops, status) with status
-    'ok'        — reached a URL with no redirect entry (final_url is
-                  terminal, hops = chain length),
-    'loop'      — the next hop revisited a URL already on this chain
-                  (final_url = the revisited URL, hops counts the
-                  closing hop),
-    'truncated' — still redirecting after max_hops (final_url = where
-                  the walk stopped).
-
-    Scale shape: one equi-join per hop on the current cursor against
-    the redirect map — a plain shuffle join (the map at web scale is
-    too big to broadcast), max_hops bounded, each row's state is a
-    <= max_hops string array. Rows settle (status non-null) as soon
-    as they terminate; settled rows join on a null key (never
-    matching), so a redirect entry for a loop's revisited URL cannot
-    fan the row out again. `redirects` must be unique per src (one
-    Location per URL) — dedupe upstream if the map is multi-version.
-    """
-    r = redirects.select(
-        F.col("src").alias("_src"), F.col("dst").alias("_dst")
-    )
-    state = urls.select("url").withColumn(
-        "cur", F.col("url")
-    ).withColumn("path", F.array(F.col("url"))).withColumn(
-        "hops", F.lit(0)
-    ).withColumn("status", F.lit(None).cast("string"))
-    for _ in range(max_hops):
-        walk_key = F.when(F.col("status").isNull(), F.col("cur"))
-        joined = state.join(
-            r, walk_key == r["_src"], "left"
-        )
-        advanced = joined.select(
-            "url",
-            F.when(
-                F.col("status").isNotNull(), F.col("cur")  # settled
-            ).when(
-                F.col("_dst").isNull(), F.col("cur")       # terminal
-            ).otherwise(F.col("_dst")).alias("cur"),
-            F.when(
-                F.col("status").isNotNull() | F.col("_dst").isNull(),
-                F.col("path"),
-            ).otherwise(
-                F.array_append("path", F.col("_dst"))
-            ).alias("path"),
-            F.when(
-                F.col("status").isNotNull() | F.col("_dst").isNull(),
-                F.col("hops"),
-            ).otherwise(F.col("hops") + 1).alias("hops"),
-            F.when(F.col("status").isNotNull(), F.col("status"))
-            .when(F.col("_dst").isNull(), F.lit("ok"))
-            .when(
-                F.array_contains("path", F.col("_dst")), F.lit("loop")
-            )
-            .otherwise(F.lit(None).cast("string")).alias("status"),
-        )
-        state = advanced
-    return state.select(
-        "url",
-        F.col("cur").alias("final_url"),
-        "hops",
-        F.coalesce("status", F.lit("truncated")).alias("status"),
-    )
-
-
 # --------------------------------------------------------------------------
 # Checkpoint / resume (Iceberg-snapshot stand-in; SURVEY.md §2.9)
 # --------------------------------------------------------------------------
@@ -1106,71 +903,6 @@ def stale_robots(
         F.when(F.col("last_fetch").isNull(), F.lit("never_fetched"))
         .otherwise(F.lit("expired"))
         .alias("reason"),
-    )
-
-
-def drain_forecast(
-    frontier: DataFrame,
-    budgets: DataFrame,
-    host_col: str = "host",
-    prio_col: str = "priority",
-    default_budget: int | None = None,
-) -> DataFrame:
-    """Crawl-horizon forecast: for every (host, priority class), the
-    first and last politeness round in which its URLs get fetched —
-    (host, priority, n_urls, budget, first_round, last_round).
-
-    The scheduler drains each host strictly in priority order at
-    ``budget`` URLs per round, so class p starts once all
-    higher-priority URLs are through: first_round =
-    floor(cum_before / budget) + 1, last_round =
-    ceil((cum_before + n) / budget). This is the capacity question a
-    crawl operator actually asks ("when does priority-2 backlog for
-    this host start moving?") and the input to round-count SLAs.
-
-    Shape: one map-side-combined groupBy to (host, priority)
-    cardinality, a cumulative window PARTITIONED BY HOST (bounded by
-    the priority-class count, never a global window), one
-    host-cardinality budget join.
-
-    A host with no budget row is DROPPED by default (same contract as
-    schedule_per_host: budgets define the crawlable set) — pass
-    ``default_budget`` to instead forecast it at that rate, avoiding
-    the silent-omission trap a partial budget table springs on the
-    unwary (the ip_budgets lesson).
-    """
-    from pyspark.sql import Window
-
-    counts = frontier.groupBy(host_col, prio_col).agg(
-        F.count(F.lit(1)).alias("n_urls")
-    )
-    w = (
-        Window.partitionBy(host_col)
-        .orderBy(prio_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = counts.withColumn(
-        "cum_before", F.coalesce(F.sum("n_urls").over(w), F.lit(0))
-    )
-    if default_budget is None:
-        joined = cum.join(budgets, host_col)
-    else:
-        joined = cum.join(budgets, host_col, "left").withColumn(
-            "budget",
-            F.coalesce(F.col("budget"), F.lit(int(default_budget))),
-        )
-    b = F.col("budget").cast("double")
-    return joined.select(
-        host_col,
-        prio_col,
-        "n_urls",
-        "budget",
-        (F.floor(F.col("cum_before") / b) + 1)
-        .cast("long")
-        .alias("first_round"),
-        F.ceil((F.col("cum_before") + F.col("n_urls")) / b)
-        .cast("long")
-        .alias("last_round"),
     )
 
 

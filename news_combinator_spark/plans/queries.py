@@ -37,7 +37,6 @@ from ..operators import serving
 from ..functions import robots as rb
 from ..functions.robots import rules_from_robots_txt
 from ..operators import frontier as fr
-from ..operators.bucketing import reshard_moves
 from ..operators.frontier import crawl
 from ..operators.merge import merge_into
 from ..operators.summarize import add_abstract_column
@@ -1002,7 +1001,7 @@ SQL_HOT_HOSTS = (
 
 
 # ===========================================================================
-# Crawl policy, fetch and archive operators
+# Crawl policy and fetch operators
 # ===========================================================================
 
 def q_robots_rules(spark, sf_dir):
@@ -1155,193 +1154,6 @@ SQL_CRAWL_DELAY_BUDGETS = (
 )
 
 
-def q_host_quality_filter(spark, sf_dir):
-    """Domain-level curation (C4/RefinedWeb-style): keep documents
-    whose HOST's mean token count reaches the corpus-wide per-doc
-    mean — whole low-quality domains drop at once. Two map-side-
-    combined aggregations (per-host and 1-row corpus), both broadcast
-    back; the doc-level pass is a broadcast semi-join, so nothing
-    data-sized shuffles."""
-    pages = pages_from_documents(spark, sf_dir).select("url", "host", "text")
-    n_tok = F.size(F.split("text", " ")).cast("long")
-    toks = pages.select("url", "host", n_tok.alias("n_tok"))
-    per_host = toks.groupBy("host").agg(
-        F.sum("n_tok").alias("tok_h"), F.count(F.lit(1)).alias("n_h")
-    )
-    corpus = toks.agg(
-        F.sum("n_tok").alias("tok_all"), F.count(F.lit(1)).alias("n_all")
-    )
-    passing = (
-        per_host.crossJoin(F.broadcast(corpus))
-        .filter(
-            F.col("tok_h") / F.col("n_h")
-            >= F.col("tok_all") / F.col("n_all")
-        )
-        .select("host")
-    )
-    return toks.join(F.broadcast(passing), "host", "semi").select(
-        "url", "host", "n_tok"
-    )
-
-
-SQL_HOST_QUALITY_FILTER = (
-    _pages_cte()
-    + """
-    , toks AS (
-        SELECT url, host,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        FROM pages
-    )
-    , per_host AS (
-        SELECT host, sum(n_tok) AS tok_h, count(*) AS n_h
-        FROM toks GROUP BY host
-    )
-    , corpus AS (SELECT sum(n_tok) AS tok_all, count(*) AS n_all FROM toks)
-    , passing AS (
-        SELECT host FROM per_host CROSS JOIN corpus
-        WHERE tok_h / CAST(n_h AS DOUBLE)
-              >= tok_all / CAST(n_all AS DOUBLE)
-    )
-    SELECT url, t.host, n_tok
-    FROM toks t JOIN passing p ON t.host = p.host
-"""
-)
-
-
-def q_fetch_retries(spark, sf_dir):
-    """Transient-failure retry scheduling (frontier.fetch_with_retry):
-    3 attempts, 20% deterministic per-attempt failure, exponential
-    backoff. The operator runs the production wave loop (failures of
-    wave k re-enqueue into wave k+1); the oracle computes the SAME
-    outcome in closed form per URL — first attempt whose md5 key
-    clears the threshold — so loop-vs-closed-form equality is exactly
-    what the hash gate checks. Every output class (success at each
-    attempt, exhausted) occurs at 20%."""
-    pages = pages_from_documents(spark, sf_dir)
-    return fr.fetch_with_retry(
-        pages.select("url", "host", "priority"),
-        max_attempts=3, fail_frac=0.2, seed="r",
-    )
-
-
-# fail(k) iff substr(md5(url:r:k),1,13) < hex(0.2 * 2^52); thresholds
-# and key layout match operators/frontier._fail_threshold_hex +
-# fetch_with_retry(seed='r').
-SQL_FETCH_RETRIES = (
-    _pages_cte()
-    + """
-    , f AS (
-        SELECT url, host, priority,
-               substr(md5(url || ':r:0'), 1, 13) < '3333333333333' AS f0,
-               substr(md5(url || ':r:1'), 1, 13) < '3333333333333' AS f1,
-               substr(md5(url || ':r:2'), 1, 13) < '3333333333333' AS f2
-        FROM pages
-    )
-    SELECT url, host, priority,
-           CASE WHEN NOT f0 THEN 1 WHEN NOT f1 THEN 2 ELSE 3 END
-               AS n_attempts,
-           (NOT f0 OR NOT f1 OR NOT f2) AS fetched,
-           CAST(CASE WHEN NOT f0 THEN 0
-                     WHEN NOT f1 THEN 1
-                     WHEN NOT f2 THEN 3
-                     ELSE 7 END AS BIGINT) AS backoff_rounds
-    FROM f
-"""
-)
-
-
-def _redirect_map(spark, sf_dir):
-    """Deterministic redirect fixture over the pages table, unique per
-    src: doc_id % 3 == 0 and % 5 != 0 chain forward (+3 mod n, so a
-    walk terminates at the first doc_id % 15 == 0 — 'ok' within 1-4
-    hops, 'truncated' past 3); doc_id % 30 in (10, 20) form 2-cycles
-    (+10 / -10) — 'loop' at hop 2. Targets resolve via self-join on
-    doc_id, so a rule exists only when its target page exists."""
-    pages = pages_from_documents(spark, sf_dir)
-    n = pages.count()
-    d = F.col("doc_id")
-    target = (
-        F.when((d % 3 == 0) & (d % 5 != 0), (d + 3) % n)
-        .when(d % 30 == 10, d + 10)
-        .when(d % 30 == 20, d - 10)
-    )
-    srcs = pages.select("url", target.alias("t_id")).filter(
-        F.col("t_id").isNotNull()
-    )
-    tgt = pages.select(
-        F.col("doc_id").alias("t_id"), F.col("url").alias("dst")
-    )
-    return srcs.join(tgt, "t_id").select(F.col("url").alias("src"), "dst")
-
-
-def q_redirect_resolution(spark, sf_dir):
-    """3xx chain resolution (frontier.resolve_redirects): follow a
-    deterministic redirect map from every page URL for up to 3 hops
-    with cycle detection. The fixture produces all four row classes —
-    no-redirect (hops 0), terminal chains (1-3 hops, 'ok'), chains
-    still walking at 3 ('truncated'), and 2-cycles ('loop'). The
-    oracle unrolls the 3 hops as left joins with the same
-    settle/advance/cycle logic."""
-    pages = pages_from_documents(spark, sf_dir)
-    rmap = _redirect_map(spark, sf_dir)
-    return fr.resolve_redirects(pages.select("url"), rmap, max_hops=3)
-
-
-SQL_REDIRECT_RESOLUTION = (
-    _pages_cte()
-    + """
-    , n AS (SELECT count(*) AS n FROM pages)
-    , rmap AS (
-        SELECT p.url AS src, q.url AS dst
-        FROM pages p CROSS JOIN n
-        JOIN pages q ON q.doc_id = CASE
-            WHEN p.doc_id % 3 = 0 AND p.doc_id % 5 <> 0
-                THEN (p.doc_id + 3) % n.n
-            WHEN p.doc_id % 30 = 10 THEN p.doc_id + 10
-            WHEN p.doc_id % 30 = 20 THEN p.doc_id - 10
-        END
-    )
-    , s1 AS (
-        SELECT u.url,
-               coalesce(r.dst, u.url) AS cur,
-               CASE WHEN r.dst IS NULL THEN 0 ELSE 1 END AS hops,
-               CASE WHEN r.dst IS NULL THEN 'ok'
-                    WHEN r.dst = u.url THEN 'loop' END AS status
-        FROM pages u LEFT JOIN rmap r ON r.src = u.url
-    )
-    , s2 AS (
-        SELECT s.url,
-               CASE WHEN s.status IS NOT NULL OR r.dst IS NULL
-                    THEN s.cur ELSE r.dst END AS cur,
-               CASE WHEN s.status IS NOT NULL OR r.dst IS NULL
-                    THEN s.hops ELSE s.hops + 1 END AS hops,
-               CASE WHEN s.status IS NOT NULL THEN s.status
-                    WHEN r.dst IS NULL THEN 'ok'
-                    WHEN r.dst IN (s.url, s.cur) THEN 'loop' END AS status,
-               s.cur AS p1
-        FROM s1 s LEFT JOIN rmap r
-          ON s.status IS NULL AND r.src = s.cur
-    )
-    , s3 AS (
-        SELECT s.url,
-               CASE WHEN s.status IS NOT NULL OR r.dst IS NULL
-                    THEN s.cur ELSE r.dst END AS cur,
-               CASE WHEN s.status IS NOT NULL OR r.dst IS NULL
-                    THEN s.hops ELSE s.hops + 1 END AS hops,
-               CASE WHEN s.status IS NOT NULL THEN s.status
-                    WHEN r.dst IS NULL THEN 'ok'
-                    WHEN r.dst IN (s.url, s.p1, s.cur) THEN 'loop'
-               END AS status
-        FROM s2 s LEFT JOIN rmap r
-          ON s.status IS NULL AND r.src = s.cur
-    )
-    SELECT url, cur AS final_url, hops,
-           coalesce(status, 'truncated') AS status
-    FROM s3
-"""
-)
-
-
 def q_priority_boosts(spark, sf_dir):
     """Signal-to-scheduler glue (frontier.apply_priority_boosts):
     fold a host-level boost (every 4th host — the per-host tier
@@ -1380,113 +1192,6 @@ SQL_PRIORITY_BOOSTS = (
     FROM pages p
     LEFT JOIN hb ON p.host = hb.host
     LEFT JOIN ub ON p.url = ub.url
-"""
-)
-
-
-def q_global_cap(spark, sf_dir):
-    """Global per-round fetch cap (frontier.schedule_with_global_cap):
-    per-host budget 50 takes 200 rows at sf0.01, the global cap 100
-    then defers the back half of the crawl's total order (priority,
-    host, url) — both defer reasons (budget and cap) are in the
-    output. The engine's cap rank is the two-level prefix-sum
-    machinery; the oracle uses a plain global window (fine at oracle
-    scale) over the same order."""
-    pages = pages_from_documents(spark, sf_dir)
-    frontier = pages.select("url", "host", "priority")
-    budgets = pages.select("host").distinct().withColumn(
-        "budget", F.lit(50)
-    )
-    return fr.schedule_with_global_cap(frontier, budgets, global_cap=100)
-
-
-SQL_GLOBAL_CAP = (
-    _pages_cte()
-    + """
-    , t AS (
-        SELECT url, host, priority,
-               row_number() OVER (
-                   PARTITION BY host ORDER BY priority, url
-               ) <= 50 AS btaken
-        FROM pages
-    )
-    , g AS (
-        SELECT url, host, priority,
-               row_number() OVER (ORDER BY priority, host, url) AS gr
-        FROM t WHERE btaken
-    )
-    SELECT url, host, priority, gr <= 100 AS taken FROM g
-    UNION ALL
-    SELECT url, host, priority, false AS taken FROM t WHERE NOT btaken
-"""
-)
-
-
-def q_url_templates(spark, sf_dir):
-    """URL template mining / crawler-trap detection: collapse numeric
-    runs in the path to '{n}' and count URLs per (host, template) —
-    calendar pages, session ids, and faceted search produce templates
-    whose URL counts explode, the classic infinite-space trap a
-    frontier must down-prioritize. A template is flagged when it
-    covers more than 20% of its host's URLs. The candidate set is the
-    page URLs plus a sparse paginated variant (every 20th doc), so the
-    dominant article template flags and the rare pagination template
-    does not. Pure JVM regexp + two map-side-combined aggregations;
-    the oracle replays both."""
-    pages = pages_from_documents(spark, sf_dir)
-    cand = pages.select("host", "url").unionByName(
-        pages.filter(F.col("doc_id") % 20 == 0).select(
-            "host",
-            F.concat(
-                "url", F.lit("?page="), F.col("doc_id").cast("string")
-            ).alias("url"),
-        )
-    )
-    path = F.regexp_replace(
-        "url", r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", ""
-    )
-    tmpl = F.regexp_replace(path, "[0-9]+", "{n}")
-    per_tmpl = (
-        cand.select("host", tmpl.alias("template"))
-        .groupBy("host", "template")
-        .agg(F.count(F.lit(1)).alias("n_urls"))
-    )
-    per_host = cand.groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_host_urls")
-    )
-    return per_tmpl.join(per_host, "host").select(
-        "host", "template", "n_urls",
-        (F.col("n_urls") / F.col("n_host_urls") > 0.2).alias("is_trap"),
-    )
-
-
-SQL_URL_TEMPLATES = (
-    _pages_cte()
-    + r"""
-    , cand AS (
-        SELECT host, url FROM pages
-        UNION ALL
-        SELECT host, url || '?page=' || CAST(doc_id AS VARCHAR)
-        FROM pages WHERE doc_id % 20 = 0
-    )
-    , t AS (
-        SELECT host,
-               regexp_replace(
-                   regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/]*',
-                                  ''),
-                   '[0-9]+', '{n}', 'g') AS template
-        FROM cand
-    )
-    , per_tmpl AS (
-        SELECT host, template, count(*) AS n_urls
-        FROM t GROUP BY host, template
-    )
-    , per_host AS (
-        SELECT host, count(*) AS n_host_urls FROM cand GROUP BY host
-    )
-    SELECT p.host, p.template, p.n_urls,
-           p.n_urls / CAST(h.n_host_urls AS DOUBLE) > 0.2 AS is_trap
-    FROM per_tmpl p JOIN per_host h ON p.host = h.host
 """
 )
 
@@ -1737,69 +1442,6 @@ SQL_ADAPTIVE_BUDGETS = (
     ORDER BY h.host
 """
 )
-
-
-def q_registered_domains(spark, sf_dir):
-    """eTLD+1 extraction (urls.registered_domain): hosts cycle through
-    multi-label public suffixes (co.uk beats uk-style shadowing),
-    plain gTLDs, unknown TLDs (PSL-wildcard fallback to the last two
-    labels), and a bare-suffix host ('co.uk' itself -> fallback). The
-    oracle replays broadcast longest-suffix match, owner-label strip,
-    and both fallbacks in SQL."""
-    from ..functions.urls import registered_domain
-
-    hostlist = [
-        "news.example.com", "example.com", "sub.news.example.co.uk",
-        "example.co.uk", "static.cdn.example.net", "example.internal",
-        "deep.example.internal", "co.uk",
-    ]
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.element_at(
-            F.array(*[F.lit(h) for h in hostlist]),
-            (F.col("doc_id") % 8 + 1).cast("int"),
-        ).alias("host"),
-    )
-    return registered_domain(docs)
-
-
-SQL_REGISTERED_DOMAINS = """
-    WITH hosts AS (
-        SELECT doc_id,
-               (['news.example.com', 'example.com',
-                 'sub.news.example.co.uk', 'example.co.uk',
-                 'static.cdn.example.net', 'example.internal',
-                 'deep.example.internal', 'co.uk'])
-                   [CAST(doc_id % 8 + 1 AS INT)] AS host
-        FROM documents
-    )
-    , sfx AS (
-        SELECT unnest(['com', 'org', 'net', 'edu', 'gov', 'io', 'dev',
-                       'test', 'co.uk', 'org.uk', 'ac.uk', 'com.au',
-                       'net.au', 'com.cn', 'com.br', 'co.jp', 'or.jp',
-                       'co.kr']) AS suffix
-    )
-    , best AS (
-        SELECT h.doc_id, h.host,
-               arg_max(s.suffix, length(s.suffix)) AS public_suffix
-        FROM hosts h LEFT JOIN sfx s
-          ON h.host = s.suffix OR ends_with(h.host, '.' || s.suffix)
-        GROUP BY h.doc_id, h.host
-    )
-    SELECT doc_id, host, public_suffix,
-           CASE WHEN public_suffix IS NULL OR owner = ''
-                THEN regexp_extract(host, '([^.]+\\.[^.]+)$', 1)
-                ELSE owner || '.' || public_suffix END
-               AS registered_domain
-    FROM (
-        SELECT *,
-               regexp_extract(
-                   substr(host, 1,
-                          length(host) - length(public_suffix) - 1),
-                   '([^.]+)$', 1) AS owner
-        FROM best
-    )
-"""
 
 
 def q_normalize_text(spark, sf_dir):
@@ -2348,65 +1990,6 @@ SQL_META_ROBOTS_GATE = (
 )
 
 
-def q_hreflang_alternates(spark, sf_dir):
-    """hreflang alternate extraction (urls.hreflang_links): docs with
-    doc_id%3==0 declare a French variant (href-first attribute
-    order) and an x-default pointing at themselves (hreflang-first
-    order), one malformed tag without href is dropped; other docs
-    have no alternates. The oracle replays tag explosion and per-tag
-    attribute extraction in SQL."""
-    from ..functions.urls import hreflang_links
-
-    pages = pages_from_documents(spark, sf_dir)
-    fr_url = F.concat(F.lit("http://fr.h/"), F.col("doc_id").cast("string"))
-    inj = F.concat(
-        F.lit('<link href="'), fr_url,
-        F.lit('" rel="alternate" hreflang="fr"/>'),
-        F.lit('<link rel="alternate" hreflang="x-default" href="'),
-        F.col("url"), F.lit('"/>'),
-        F.lit('<link rel="alternate" hreflang="de"/>'),  # no href: drop
-        F.lit("</head>"),
-    )
-    fx = pages.select(
-        "url",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.replace("html_str", F.lit("</head>"), inj),
-        ).otherwise(F.col("html_str")).alias("html_str"),
-    )
-    return hreflang_links(fx)
-
-
-SQL_HREFLANG_ALTERNATES = (
-    _pages_cte()
-    + r"""
-    , fx AS (
-        SELECT url,
-               CASE WHEN doc_id % 3 = 0 THEN replace(html_str, '</head>',
-                   '<link href="http://fr.h/' || CAST(doc_id AS VARCHAR)
-                   || '" rel="alternate" hreflang="fr"/>'
-                   || '<link rel="alternate" hreflang="x-default" href="'
-                   || url || '"/>'
-                   || '<link rel="alternate" hreflang="de"/>'
-                   || '</head>')
-                    ELSE html_str END AS html_str
-        FROM pages
-    )
-    , tags AS (
-        SELECT url, unnest(regexp_extract_all(html_str,
-                   '(?i)<link[^>]*rel="alternate"[^>]*>', 0)) AS tag
-        FROM fx
-    )
-    SELECT url,
-           regexp_extract(tag, 'hreflang="([^"]*)"', 1) AS hreflang,
-           regexp_extract(tag, 'href="([^"]*)"', 1) AS alt_url
-    FROM tags
-    WHERE regexp_extract(tag, 'hreflang="([^"]*)"', 1) <> ''
-      AND regexp_extract(tag, 'href="([^"]*)"', 1) <> ''
-"""
-)
-
-
 def q_ip_politeness(spark, sf_dir):
     """Per-IP budget splitting (frontier.ip_budgets): hosts map onto
     two IPs (hn%2 — virtual hosting), each IP's budget of 10 splits
@@ -2494,46 +2077,6 @@ SQL_FRONTIER_MERGE = (
 
 
 # ===========================================================================
-# Round-3 additions, second batch: rendezvous resharding
-# ===========================================================================
-
-def q_shard_rendezvous(spark, sf_dir):
-    """Rendezvous resharding audit (bucketing.reshard_moves): every
-    page url placed by HRW hashing under a 16-shard and a 20-shard
-    seen-set fleet, with the moved flag. HRW's guarantee — an
-    unmoved key keeps its EXACT shard and the moved fraction
-    concentrates at (20-16)/20 — is what lets the sharded
-    bloom seen-set grow without a full rebuild; the hash gate
-    pins every placement, and the oracle replays the argmax over
-    md5(url || ':' || shard) in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    return reshard_moves(pages.select("url"), "url", 16, 20)
-
-
-SQL_SHARD_RENDEZVOUS = (
-    _pages_cte()
-    + """
-    , s AS (SELECT CAST(unnest(range(0, 20)) AS INT) AS s)
-    , h AS (
-        SELECT url, s,
-               md5(url || ':' || CAST(s AS VARCHAR)) AS hh
-        FROM pages CROSS JOIN s
-    )
-    , old AS (
-        SELECT url, max_by(s, hh) AS shard_old
-        FROM h WHERE s < 16 GROUP BY url
-    )
-    , neu AS (
-        SELECT url, max_by(s, hh) AS shard_new FROM h GROUP BY url
-    )
-    SELECT o.url, o.shard_old, n.shard_new,
-           o.shard_old <> n.shard_new AS moved
-    FROM old o JOIN neu n ON o.url = n.url
-"""
-)
-
-
-# ===========================================================================
 # Round-3 additions, fourth batch: robots TTL refresh gate
 # ===========================================================================
 
@@ -2584,67 +2127,6 @@ SQL_STALE_ROBOTS = (
            CASE WHEN last_fetch IS NULL THEN 'never_fetched'
                 ELSE 'expired' END AS reason
     FROM aged WHERE last_fetch IS NULL OR age_h > 12.0
-"""
-)
-
-
-# ===========================================================================
-# Round-3 additions, fifth batch: frontier drain forecast
-# ===========================================================================
-
-def q_drain_forecast(spark, sf_dir):
-    """Crawl-horizon forecast (frontier.drain_forecast): per (host,
-    priority class), the first and last politeness round in which its
-    frontier URLs get fetched under per-host budgets of 50+25*i —
-    floor/ceil over the host-partitioned priority cumsum. The window
-    is PARTITIONED BY HOST (bounded by the 3 priority classes), so
-    the audit's no-single-partition-exchange rule holds; the oracle
-    replays the same window arithmetic."""
-    pages = pages_from_documents(spark, sf_dir)
-    budgets = (
-        pages.select("host")
-        .dropDuplicates(["host"])
-        .select(
-            "host",
-            (
-                F.lit(50)
-                + F.lit(25)
-                * F.regexp_extract("host", r"h(\d+)", 1).cast("int")
-            ).alias("budget"),
-        )
-    )
-    return fr.drain_forecast(
-        pages.select("host", "priority"), budgets
-    )
-
-
-SQL_DRAIN_FORECAST = (
-    _pages_cte()
-    + r"""
-    , counts AS (
-        SELECT host, priority, count(*) AS n_urls
-        FROM pages GROUP BY host, priority
-    )
-    , cum AS (
-        SELECT host, priority, n_urls,
-               coalesce(sum(n_urls) OVER (
-                   PARTITION BY host ORDER BY priority
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS cum_before
-        FROM counts
-    )
-    , budgets AS (
-        SELECT DISTINCT host,
-               50 + 25 * CAST(regexp_extract(host, 'h(\d+)', 1) AS INT)
-                   AS budget
-        FROM pages
-    )
-    SELECT c.host, c.priority, c.n_urls, b.budget,
-           CAST(floor(cum_before / CAST(budget AS DOUBLE)) + 1
-                AS BIGINT) AS first_round,
-           CAST(ceil((cum_before + n_urls) / CAST(budget AS DOUBLE))
-                AS BIGINT) AS last_round
-    FROM cum c JOIN budgets b ON c.host = b.host
 """
 )
 
@@ -2860,8 +2342,6 @@ QUERIES = {
     "summarize": (q_summarize, SQL_SUMMARIZE),
     "merge_upsert": (q_merge_upsert, SQL_MERGE_UPSERT),
     "pos_tags": (q_pos_tags, SQL_POS_TAGS),
-    # "pii_scrub" is registered ONCE, in the round-3 additions below
-    # (the duplicate key that used to sit here silently shadowed it).
     "robots_wildcards": (q_robots_wildcards, SQL_ROBOTS_WILDCARDS),
     # sequential-consume clusterings — recursive-CTE oracles since r4
     "news_clusters_lsh": (q_news_clusters_lsh, SQL_NEWS_CLUSTERS_LSH),
@@ -2874,17 +2354,11 @@ QUERIES = {
     # crawl policy and fetch operators
     "robots_rules": (q_robots_rules, SQL_ROBOTS_RULES),
     "crawl_delay_budgets": (q_crawl_delay_budgets, SQL_CRAWL_DELAY_BUDGETS),
-    "host_quality_filter": (q_host_quality_filter, SQL_HOST_QUALITY_FILTER),
-    "fetch_retries": (q_fetch_retries, SQL_FETCH_RETRIES),
-    "redirect_resolution": (q_redirect_resolution, SQL_REDIRECT_RESOLUTION),
     "priority_boosts": (q_priority_boosts, SQL_PRIORITY_BOOSTS),
-    "global_cap": (q_global_cap, SQL_GLOBAL_CAP),
-    "url_templates": (q_url_templates, SQL_URL_TEMPLATES),
     "robots_longest_match": (q_robots_longest_match, SQL_ROBOTS_LONGEST_MATCH),
     "soft404_filter": (q_soft404_filter, SQL_SOFT404_FILTER),
     "mojibake_repair": (q_mojibake_repair, SQL_MOJIBAKE_REPAIR),
     "adaptive_budgets": (q_adaptive_budgets, SQL_ADAPTIVE_BUDGETS),
-    "registered_domains": (q_registered_domains, SQL_REGISTERED_DOMAINS),
     "normalize_text": (q_normalize_text, SQL_NORMALIZE_TEXT),
     "admission_funnel": (q_admission_funnel, SQL_ADMISSION_FUNNEL),
     "politeness_composition": (q_politeness_composition,
@@ -2893,13 +2367,10 @@ QUERIES = {
     "request_rate_budgets": (q_request_rate_budgets,
                              SQL_REQUEST_RATE_BUDGETS),
     "meta_robots_gate": (q_meta_robots_gate, SQL_META_ROBOTS_GATE),
-    "hreflang_alternates": (q_hreflang_alternates, SQL_HREFLANG_ALTERNATES),
     "ip_politeness": (q_ip_politeness, SQL_IP_POLITENESS),
     # round-3 additions
     "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
-    "shard_rendezvous": (q_shard_rendezvous, SQL_SHARD_RENDEZVOUS),
     "stale_robots": (q_stale_robots, SQL_STALE_ROBOTS),
-    "drain_forecast": (q_drain_forecast, SQL_DRAIN_FORECAST),
     "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
 }
 

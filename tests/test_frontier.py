@@ -408,82 +408,6 @@ def test_crawl_from_bucketed_table_matches(spark, tmp_path, crawl_result):
     assert got.reset_index(drop=True).equals(base.reset_index(drop=True))
 
 
-def test_fetch_with_retry_matches_closed_form(spark):
-    """The wave loop must equal the per-URL closed form: first
-    attempt k whose md5(url:r:k) 13-hex prefix clears the 20%
-    threshold; backoff = sum of 2^j over failed attempts."""
-    import hashlib
-
-    from news_combinator_spark.operators.frontier import fetch_with_retry
-
-    urls = [(f"http://h{i % 4}.test/p{i}", f"h{i % 4}.test", i % 3)
-            for i in range(300)]
-    sched = spark.createDataFrame(
-        urls, "url string, host string, priority int"
-    )
-    out = {
-        r.url: r
-        for r in fetch_with_retry(
-            sched, max_attempts=3, fail_frac=0.2, seed="r"
-        ).collect()
-    }
-    assert len(out) == 300
-    thr = format(int(0.2 * (1 << 52)), "013x")
-    seen_classes = set()
-    for url, host, prio in urls:
-        fails = [
-            hashlib.md5(f"{url}:r:{k}".encode()).hexdigest()[:13] < thr
-            for k in range(3)
-        ]
-        if not fails[0]:
-            exp = (1, True, 0)
-        elif not fails[1]:
-            exp = (2, True, 1)
-        elif not fails[2]:
-            exp = (3, True, 3)
-        else:
-            exp = (3, False, 7)
-        r = out[url]
-        assert (r.n_attempts, r.fetched, r.backoff_rounds) == exp, url
-        seen_classes.add(exp)
-    # the fixture is big enough that every outcome class occurs
-    assert len(seen_classes) == 4
-
-
-def test_resolve_redirects_statuses(spark):
-    """Crafted map covering every status: no rule (ok, 0 hops),
-    2-hop chain (ok), self-loop (loop at hop 1), 2-cycle (loop at
-    hop 2), 4-chain (truncated at max_hops=3)."""
-    from news_combinator_spark.operators.frontier import resolve_redirects
-
-    urls = spark.createDataFrame(
-        [("u:none",), ("u:chain0",), ("u:self",), ("u:cycA",),
-         ("u:long0",)],
-        "url string",
-    )
-    rmap = spark.createDataFrame(
-        [
-            ("u:chain0", "u:chain1"), ("u:chain1", "u:chain2"),
-            ("u:self", "u:self"),
-            ("u:cycA", "u:cycB"), ("u:cycB", "u:cycA"),
-            ("u:long0", "u:long1"), ("u:long1", "u:long2"),
-            ("u:long2", "u:long3"), ("u:long3", "u:long4"),
-        ],
-        "src string, dst string",
-    )
-    got = {
-        r.url: (r.final_url, r.hops, r.status)
-        for r in resolve_redirects(urls, rmap, max_hops=3).collect()
-    }
-    assert got == {
-        "u:none": ("u:none", 0, "ok"),
-        "u:chain0": ("u:chain2", 2, "ok"),
-        "u:self": ("u:self", 1, "loop"),
-        "u:cycA": ("u:cycA", 2, "loop"),
-        "u:long0": ("u:long3", 3, "truncated"),
-    }
-
-
 def test_apply_priority_boosts_clamps_and_composes(spark):
     """Host and url boosts subtract from priority, clamped to [0, 2];
     unmatched keys are unchanged; None inputs are identity."""
@@ -511,36 +435,6 @@ def test_apply_priority_boosts_clamps_and_composes(spark):
         for r in apply_priority_boosts(frontier).collect()
     }
     assert same == {"u1": 2, "u2": 0, "u3": 2, "u4": 1}
-
-
-def test_schedule_with_global_cap_order_and_defers(spark):
-    """Cap keeps exactly the first N of the total (priority, host,
-    url) order among budget-taken rows; budget-deferred rows stay
-    deferred regardless of cap headroom."""
-    from news_combinator_spark.operators.frontier import (
-        schedule_with_global_cap,
-    )
-
-    rows = [
-        ("u1", "hA", 0), ("u2", "hA", 0), ("u3", "hA", 1),
-        ("u4", "hB", 0), ("u5", "hB", 1),
-    ]
-    frontier = spark.createDataFrame(
-        rows, "url string, host string, priority int"
-    )
-    budgets = spark.createDataFrame(
-        [("hA", 2), ("hB", 2)], "host string, budget int"
-    )
-    out = {
-        r.url: r.taken
-        for r in schedule_with_global_cap(frontier, budgets, 3).collect()
-    }
-    # budget takes u1,u2 (hA best-2) u4,u5 (hB both); u3 budget-deferred.
-    # total order of taken: (0,hA,u1),(0,hA,u2),(0,hB,u4),(1,hB,u5)
-    # -> cap 3 keeps u1,u2,u4; u5 cap-deferred, u3 budget-deferred
-    assert out == {
-        "u1": True, "u2": True, "u4": True, "u5": False, "u3": False,
-    }
 
 
 def test_crawl_rfc9309_mode_allow_reopens(spark):

@@ -115,16 +115,6 @@ def test_adaptive_budgets_clamps_and_default(spark):
     assert set(alpha10) == {"slow.test", "fast.test", "mid.test"}
 
 
-def test_adaptive_budgets_approx_mode_runs(spark):
-    """exact=False (approx_percentile) is the at-scale path; on a
-    small uniform log it lands on the same budgets."""
-    log = spark.createDataFrame(
-        [("h.test", 250.0)] * 20, "host string, latency_ms double"
-    )
-    exact = adaptive_budgets(log, 60.0, 1).collect()[0].budget
-    approx = adaptive_budgets(log, 60.0, 1, exact=False).collect()[0].budget
-    assert exact == approx == 64  # 60000/(2*250)=120, capped at 64
-
 def test_sniff_content_type_edges(spark):
     """Classes the driver fixture doesn't inject: GIF87a, zip, a RIFF
     container that is neither WEBP nor WAV, an empty blob, and a

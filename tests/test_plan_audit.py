@@ -230,17 +230,13 @@ _LAZY_QUERIES = [
     "merge_upsert", "pos_tags", "pii_scrub", "v1_cross_source_clusters",
     # round-2 additions
     "hot_hosts", "robots_rules", "crawl_delay_budgets",
-    "host_quality_filter", "fetch_retries", "redirect_resolution",
-    "priority_boosts", "global_cap", "url_templates",
-    "robots_longest_match", "soft404_filter", "mojibake_repair",
-    "adaptive_budgets", "registered_domains",
+    "priority_boosts", "robots_longest_match", "soft404_filter",
+    "mojibake_repair", "adaptive_budgets",
     "normalize_text", "admission_funnel", "politeness_composition",
     "content_sniff", "request_rate_budgets",
-    "meta_robots_gate", "hreflang_alternates",
-    "ip_politeness",
+    "meta_robots_gate", "ip_politeness",
     # round-3 additions
-    "frontier_merge", "shard_rendezvous",
-    "stale_robots", "drain_forecast",
+    "frontier_merge", "stale_robots",
     "robots_wildcards",
 ]
 
@@ -459,14 +455,6 @@ def test_bucketed_fetch_join_shuffles_probe_side_only(spark, tmp_path):
     finally:
         spark.conf.unset(ordering_conf)
         spark.sql("DROP TABLE IF EXISTS web_meta_bucketed")
-
-
-def test_fetch_retry_ladder_is_shuffle_free(spark):
-    """The retry ladder is per-row arithmetic over a union of filters —
-    at 10^10 URLs any Exchange here would be pure waste. Pin: zero
-    Exchange nodes in the whole plan."""
-    plan = _simple(Q.q_fetch_retries(spark, SF_MED))
-    assert "Exchange" not in plan, plan
 
 
 def test_bench_battery_covers_all_oracle_queries():

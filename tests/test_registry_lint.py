@@ -80,13 +80,17 @@ def test_every_window_query_has_an_oracle_or_is_declared_rows_only():
     assert rows_only <= {"news_clusters_lsh", "v1_cross_source_clusters"}
 
 
+def _coverage_registry_section():
+    cov = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
+    return cov.split("\n## Registry\n", 1)[1].split("\n## ", 1)[0]
+
+
 def test_coverage_table_matches_registry():
     """COVERAGE.md's Registry table has one row per registry entry:
     an entry added without a row (naming its SURVEY.md §2 row or
     marking it an engine addition), or a row left behind by a deleted
     entry, fails here."""
-    cov = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
-    section = cov.split("\n## Registry\n", 1)[1].split("\n## ", 1)[0]
+    section = _coverage_registry_section()
     names = [
         m.group(1)
         for m in re.finditer(r"^\| `([a-z0-9_]+)` \|", section, re.M)
@@ -106,8 +110,7 @@ def test_coverage_registry_counts_sentence_matches_table():
     """COVERAGE.md's "N entries: X cite §2 rows, Y are next-diet
     candidates." sentence states the counts of its Registry table: a
     diet that deletes rows without restating the counts fails here."""
-    cov = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
-    section = cov.split("\n## Registry\n", 1)[1].split("\n## ", 1)[0]
+    section = _coverage_registry_section()
     m = re.search(
         r"^(\d+) entries: (\d+) cite §2 rows, (\d+) are next-diet "
         r"candidates\.$",
@@ -121,3 +124,48 @@ def test_coverage_registry_counts_sentence_matches_table():
     )
     stated = tuple(int(g) for g in m.groups())
     assert stated == (len(rows), len(rows) - candidates, candidates)
+
+
+def _survey_section2_rows():
+    survey = (Path(__file__).resolve().parents[1] / "SURVEY.md").read_text()
+    section = survey.split("\n## 2.", 1)[1].split("\n## 3.", 1)[0]
+    return set(re.findall(r"^\| ([A-Z]+\d+) \|", section, re.M))
+
+
+def _expand_citation(token):
+    """'C3' -> ['C3']; 'C1-C5' -> ['C1', ..., 'C5']; anything else
+    (a typo, a free-text note outside parentheses) -> None."""
+    m = re.fullmatch(r"([A-Z]+)(\d+)(?:-([A-Z]+)(\d+))?", token)
+    if not m:
+        return None
+    prefix, lo, end_prefix, hi = m.groups()
+    if end_prefix is None:
+        return [token]
+    if end_prefix != prefix or int(hi) <= int(lo):
+        return None
+    return [f"{prefix}{i}" for i in range(int(lo), int(hi) + 1)]
+
+
+def test_registry_citations_are_survey_rows():
+    """The keep rule, machine-checked: every Registry row that is not
+    a next-diet candidate cites at least one SURVEY.md §2 row, and
+    every row id it cites (ranges such as C1-C5 expanded) is a row of
+    §2's tables. Parenthesised notes after the ids are ignored."""
+    rows = _survey_section2_rows()
+    assert {"S1", "C5", "F12"} <= rows, sorted(rows)
+    section = _coverage_registry_section()
+    bad = []
+    for name, cite in re.findall(
+        r"^\| `([a-z0-9_]+)` \| (.+?) \|$", section, re.M
+    ):
+        if cite == "engine addition: next-diet candidate":
+            continue
+        tokens = [t.strip() for t in re.sub(r"\([^)]*\)", "", cite).split(",")]
+        ids = [_expand_citation(t) for t in tokens if t]
+        if not ids or None in ids:
+            bad.append((name, cite))
+            continue
+        unknown = sorted({i for group in ids for i in group} - rows)
+        if unknown:
+            bad.append((name, unknown))
+    assert bad == [], f"Registry rows citing no valid §2 row: {bad}"

@@ -1,42 +1,10 @@
-"""eTLD+1 extraction, normalization.
+"""Text and URL normalization.
 
-Edges the DuckDB oracles' fixtures don't reach: suffix shadowing
-with a custom PSL, normalization idempotence.
+Edges the DuckDB oracles' fixtures don't reach: normalization
+idempotence and RFC 3986 canonicalization.
 """
 
 from news_combinator_spark.functions.pagehealth import normalize_text
-from news_combinator_spark.functions.urls import registered_domain
-
-
-def test_registered_domain_longest_suffix_wins(spark):
-    df = spark.createDataFrame(
-        [("a.b.co.uk",), ("x.co.uk",), ("co.uk",), ("plain.uk",)],
-        "host string",
-    )
-    got = {
-        r.host: (r.public_suffix, r.registered_domain)
-        for r in registered_domain(df, suffixes=("uk", "co.uk")).collect()
-    }
-    # 'co.uk' beats 'uk' wherever both match on a label boundary
-    assert got["a.b.co.uk"] == ("co.uk", "b.co.uk")
-    assert got["x.co.uk"] == ("co.uk", "x.co.uk")
-    # host IS the suffix: no owner label -> last-two-labels fallback
-    assert got["co.uk"] == ("co.uk", "co.uk")
-    assert got["plain.uk"] == ("uk", "plain.uk")
-
-
-def test_registered_domain_no_false_label_match(spark):
-    """'notco.uk' must not match suffix 'co.uk' (label boundary) but
-    does match 'uk'; unknown TLDs fall back to last two labels."""
-    df = spark.createDataFrame(
-        [("notco.uk",), ("a.b.internal",)], "host string"
-    )
-    got = {
-        r.host: (r.public_suffix, r.registered_domain)
-        for r in registered_domain(df, suffixes=("uk", "co.uk")).collect()
-    }
-    assert got["notco.uk"] == ("uk", "notco.uk")
-    assert got["a.b.internal"] == (None, "b.internal")
 
 
 def test_normalize_text_idempotent_and_fixed_point(spark):
